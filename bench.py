@@ -1,8 +1,13 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR.
+"""Data-scale sweep: the headline queries at $SPARK_GRAFT_SF_DIR, then
+data-scale sections on synthesized tables (100M events, 2M docs, 1M
+vectors). The benchmark of record is ``perfbench/run.py``; this sweep
+measures the scales it does not.
 
-Prints ONE JSON line:
+Prints ONE JSON line (an early copy right after the headline, the
+final one at the end; consumers take the last line):
     {"metric": ..., "value": <total sec>, "unit": "sec",
-     "queries": {name: sec, ...}, "sf": <sf>}
+     "queries": {name: sec, ...}, "sf": <sf>, "cpus": <n>, ...}
+The full per-section payload goes to BENCH_SECTIONS[_c<cpus>].json.
 
 Each query is materialized through the ``noop`` sink so the full plan
 (including derived columns) executes — ``count()`` would let Catalyst
@@ -14,35 +19,25 @@ from __future__ import annotations
 import json
 import os
 import re
+import statistics
 import sys
 import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-# The bench drives 2M-doc curation batches, 100M-row rollups, and the
-# bucketed state store in ONE local[32] JVM; the 8g default heap OOMs in
-# the parquet reader under 32 concurrent wide-text tasks (measured in
-# the r6 curatebench all-gates run). The box is 128 GiB; on a cluster
-# this is per-executor memory sizing. Must be set before the JVM starts.
-# 24g: 16g survived every section standalone but OOMed when curatebench
-# ran after ~1000s of docs/vec sections' accumulated old-gen churn.
-# 31g (r11): the semantic flatness sweep at the sized 42x19+2 banding
-# holds ~3x the r10 key fan-out (126 bucket keys/doc persisted + a
-# ~2.6M-row state delta per commit); 24g OOMed mid-sweep (heap, with
-# a 6.3M-row broadcast since removed from the state join — the bump
-# is headroom for the rest of the fan-out). 31g, NOT 32g: -Xmx32g
-# crosses the JVM's zero-based compressed-oops ceiling (verified with
-# -XX:+PrintFlagsFinal on this JDK: UseCompressedOops=false at 32g,
-# true at 31g) — doubling every object pointer on a pointer-heavy
-# UTF8String/array workload for no usable headroom gain.
+# One local JVM runs 2M-doc curation batches and 100M-row rollups, and
+# the heap must be set before it starts. 31g, not 32g: -Xmx32g crosses
+# the JVM's zero-based compressed-oops ceiling, doubling every object
+# pointer on a pointer-heavy UTF8String/array workload.
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "31g")
 
 from nexus_processor_spark import queries as registry
 from nexus_processor_spark.session import get_spark
 
-# Headline set: flagship time-slice pipeline, heavy relational shapes, and
-# the training-data operators (dedup / similarity / text).
+# Headline set: flagship time-slice pipeline, heavy relational shapes, the
+# training-data operators (dedup / similarity / text) and the banded
+# perceptual-hash near-dup of the multimodal family.
 HEADLINE = (
     "timeslice_interval",
     "timeslice_bank_interval",
@@ -61,52 +56,36 @@ HEADLINE = (
     "semantic_dedup",
     "knn_graph",
     "lm_doc_score",
-    # multimodal representative (VERDICT r9 next #7): the banded
-    # perceptual-hash near-dup — the scale-shaped member of the family
     "image_neardup_dhash",
 )
 
-
+_BENCHDATA = Path(__file__).resolve().parent / ".benchdata"
 BIG_ROWS = int(os.environ.get("SPARK_GRAFT_BIG_ROWS", "100000000"))
-BIG_DIR = str(Path(__file__).resolve().parent / ".benchdata" / "sfbig")
-SNAP_DIR = str(Path(__file__).resolve().parent / ".benchdata" / "snapbig")
+BIG_DIR = str(_BENCHDATA / "sfbig")
+SNAP_DIR = str(_BENCHDATA / "snapbig")
+DOCS_ROWS = int(os.environ.get("SPARK_GRAFT_BIG_DOCS", "2000000"))
+DOCS_DIR = str(_BENCHDATA / "docsbig")
+VEC_ROWS = int(os.environ.get("SPARK_GRAFT_BIG_VECS", "1000000"))
+VEC_DIM = 64
+VEC_CELLS = 256
+VEC_DIR = str(_BENCHDATA / "vecbig")
+# Pinned, not sf-sized: at ~100k rows fixed job-startup cost dominated
+# the emit rate and the same code measured 2x apart between rounds.
+REPLAY_JSONL_ROWS = 1_000_000
+# Measured knee of the batched headline on local[32] at sf0.1: 8 and 12
+# workers tie, fewer leave AQE round-trips un-overlapped.
+BATCH_WORKERS = 8
 
-# Wall-clock budget for the OPTIONAL data-scale sections (big / docs /
-# replay / vecs). A fresh container pays one-time synthesis of ~8 GB of
-# bench tables; if that plus measurement would blow past the budget, the
-# remaining sections are skipped (recorded as {"skipped": ...}) and the
-# headline JSON still prints — a partial bench beats a killed one.
-# r6 grew the data-scale sections (multi-batch curation with byte
-# accounting + gate attribution, the ANN recall/latency sweep); the
-# full sweep measures ~45-50 min on a quiet box, so the default budget
-# covers it instead of silently skipping the tail sections.
-# r10 grew curatebench (recall ground truth + hot-skew variant) and
-# annbench1m (drift audit): the full sweep now measures ~56 min, so the
-# old 3600 default skipped vecbench. The early headline JSON still
-# prints within the first minute, so a harness kill past it loses only
-# tail sections.
-# r11 grew curatebench's semantic variant to a 5-batch flatness sweep
-# at the suggest_semantic_banding sizing and annbench1m's disk tier to
-# an interleaved 5-rep A/B (VERDICT r10 next #1/#4): +~10-15 min.
-# 7200 (r11): the first full r11 sweep measured 5390s on a ~1.6x-slower
-# box (curatebench alone 3099s) and skipped docsbench+tablebench at the
-# old 5400 budget; 7200 covers the measured total + tail sections.
-# 3000 (r12): BOTH r11 driver bench runs were timeout-killed (rc 124 in
-# BENCH_r11 and BENCH_r11_c8) because the default sweep outgrew the
-# driver's wall-clock budget (r10's 3272s sweep completed; r11's
-# 5200-9700s did not). The default budget now targets the r10-proven
-# envelope: sections that do not fit record a skip marker and carry
-# forward from the prior artifact instead of being killed mid-run.
-# Set SPARK_GRAFT_BENCH_BUDGET=10800 for the full unattended sweep.
+# Wall-clock budget for the data-scale sections. A section that would
+# not fit in what remains records a skip marker and carries forward from
+# the prior artifact instead of being killed mid-run. Set 10800 for the
+# full unattended sweep.
 BENCH_BUDGET_S = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET", "3000"))
 _T_START = time.monotonic()
 
-# Core count is part of the bench contract: the driver re-runs the
-# bench at a lower $SPARK_GRAFT_CPUS to measure scaling, and r11's
-# 8-core rerun overwrote the 32-core sections artifact. Sections now
-# land in a per-core-count artifact (below), and `cpus` is emitted in
-# the one-line JSON so the scaling probe can verify the env var is
-# honored (session.py builds local[$SPARK_GRAFT_CPUS]).
+# Core count is part of the contract: sections land in a per-core-count
+# artifact, and ``cpus`` is in the JSON line so a scaling rerun can check
+# that session.py's local[$SPARK_GRAFT_CPUS] honoured it.
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
@@ -119,37 +98,45 @@ def _note(msg: str) -> None:
           file=sys.stderr, flush=True)
 
 
-SECTION_NAMES = ("scaling", "bigbench", "curatebench", "annbench",
-                 "annbench1m", "docsbench", "opsbench", "replaybench",
-                 "vecbench", "tablebench")
+def sink(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
 
 
-def box_fingerprint() -> dict:
-    """Identify the box a sections artifact was measured on (VERDICT
-    r11 "What's wrong" #7: commit artifacts with a box fingerprint so
-    cross-box absolute totals are legibly non-comparable instead of
-    silently shopped). Two parts: the CPU model string and a fixed
-    single-thread pure-Python workload (best-of-3), which moves with
-    the box/VM-host speed the round logs keep re-measuring (the same
-    tree benched 11.7s and 18.2s twenty minutes apart on one box)."""
-    model = ""
-    try:
-        with open("/proc/cpuinfo") as fh:
-            for line in fh:
-                if line.startswith("model name"):
-                    model = line.split(":", 1)[1].strip()
-                    break
-    except OSError:
-        pass
+def measure(thunk, reps: int = 1, warmup: int = 0) -> float:
+    """Best wall-clock seconds of ``reps`` timed calls of ``thunk``,
+    after ``warmup`` untimed ones (the first run of a plan shape pays
+    JIT compilation of its generated code). The cache is cleared before
+    every call, outside the timed window, so one call's persisted
+    frames never feed the next; a thunk's own persists stay readable
+    after it returns."""
+    from pyspark.sql import SparkSession
+
+    spark = SparkSession.getActiveSession()
     best = float("inf")
-    for _ in range(3):
+    for rep in range(warmup + reps):
+        if spark is not None:
+            spark.catalog.clearCache()
         t0 = time.perf_counter()
-        acc = 0
-        for i in range(2_000_000):
-            acc += i * i
-        best = min(best, time.perf_counter() - t0)
-    return {"cpu_model": model, "nproc": os.cpu_count(),
-            "spin_ms": round(best * 1000, 1)}
+        thunk()
+        if rep >= warmup:
+            best = min(best, time.perf_counter() - t0)
+    return best
+
+
+def time_shapes(shapes: dict, **rates) -> dict:
+    """Best-of-2 noop-sink seconds for each DataFrame builder in
+    ``shapes``, plus each rate ``key=amount`` as amount / sec. An amount
+    is a number or a {shape: number} dict; whole amounts give whole
+    rates, fractional ones one decimal."""
+    out = {}
+    for name, build in shapes.items():
+        sec = measure(lambda: sink(build()), reps=2)
+        row: dict = {"sec": round(sec, 3)}
+        for key, amount in rates.items():
+            n = amount[name] if isinstance(amount, dict) else amount
+            row[key] = round(n / sec, None if isinstance(n, int) else 1)
+        out[name] = row
+    return out
 
 
 FOLD_EFF_K = 2.0
@@ -159,27 +146,19 @@ def fold_efficiency_pin(variants: dict) -> dict:
     """Compaction-regression pin for the curatebench variants, in
     SECONDS PER COMMITTED MB rather than raw wall-clock ratio.
 
-    The r10/r11-first-half pin (`fold_wallclock_pin`: worst batch
-    <= 3.5x the variant median) was calibrated with ~15% noise
-    headroom on a quiet box — and the r11 full sweep then measured a
-    STEADY batch at 2.4x its identical-work neighbors (132.5s vs
-    27-52s, fold_mb 0) on the round's noisy box, so any raw
-    wall-clock ratio with that headroom pins box noise, not
-    compaction behavior. What the pin is actually for: a size-tiered
-    fold must cost proportional to the bytes it rewrites (an O(state)
-    scan or a fold rewriting more than its tiers blows that up). So
-    pin the worst fold batch's sec-per-committed-MB against the
-    steady batches' median sec-per-committed-MB: measured gen-3 fold
-    0.34 s/MB vs steady ~0.77 s/MB (folds are CHEAPER per byte —
-    sequential rewrite vs probe+join work), bound at ``FOLD_EFF_K``x
-    — ~4.5x headroom against noise while an O(state) fold still
-    trips it immediately. Byte volume itself (fold rewrites <= a
-    fixed multiple of the delta) stays pinned deterministically in
+    A raw worst-batch/median ratio pins box noise: a steady batch once
+    measured 2.4x its identical-work neighbours (132.5 s vs 27-52 s,
+    fold_mb 0). What the pin is for: a size-tiered fold must cost in
+    proportion to the bytes it rewrites (an O(state) scan or a fold
+    rewriting more than its tiers blows that up). So the worst fold
+    batch's sec-per-committed-MB is bounded at ``FOLD_EFF_K``x the
+    steady batches' median: folds measured 0.34 s/MB against steady
+    ~0.77 s/MB (sequential rewrite vs probe+join work), so the bound
+    has ~4.5x headroom while an O(state) fold still trips it. Byte
+    volume itself stays pinned deterministically in
     tests/test_state_store.py. Raw max_batch_over_median is kept per
-    variant as informational context, with no ok-judgment attached.
+    variant as information, with no ok-judgment attached.
     """
-    import statistics as _st
-
     per_variant: dict = {}
     ok = True
     for name, v in variants.items():
@@ -191,7 +170,7 @@ def fold_efficiency_pin(variants: dict) -> dict:
         row: dict = {
             "max_batch_over_median": v.get("max_batch_over_median")}
         if steady and folds:
-            steady_spm = _st.median(
+            steady_spm = statistics.median(
                 b["sec"] / b["commit_mb"] for b in steady)
             worst = max(folds, key=lambda b: b["sec"] / b["commit_mb"])
             fold_spm = worst["sec"] / worst["commit_mb"]
@@ -206,76 +185,70 @@ def fold_efficiency_pin(variants: dict) -> dict:
     return {"k": FOLD_EFF_K, "variants": per_variant, "ok": ok}
 
 
+def _measured(entry) -> bool:
+    return isinstance(entry, dict) and not (
+        entry.keys() & {"skipped", "error", "context_lost"})
+
+
 def carry_sections(full: dict, prior: dict) -> dict:
-    """Sections this run did NOT execute (SPARK_GRAFT_BIGBENCH=0 debug
-    runs, or a budget skip) must not clobber a prior run's measured
-    values: r11 lost a completed 90-min sweep to a headline-only debug
-    rerun writing the same default artifact path. Carry each missing or
-    skipped section forward from ``prior`` with an explicit
-    ``carried_from_prior_run`` provenance marker (never carrying a
-    section that was itself a skip marker), mutating and returning
-    ``full``. Never carry across core counts (r12): a prior artifact
-    measured at a different $SPARK_GRAFT_CPUS is a different machine
-    shape, not a prior run of THIS measurement (artifacts missing the
-    ``cpus`` field predate the per-cpus split and were all 32-core)."""
+    """Carry each section this run did not measure (absent, skipped or
+    errored) forward from ``prior`` with a ``carried_from_prior_run``
+    marker, so a partial rerun never clobbers a finished sweep; an
+    errored section keeps its error as ``error_this_run``. Only measured
+    prior sections carry. A ``context_lost`` marker is never replaced:
+    the section was not measured and no prior value stands in for it.
+    Nothing carries across core counts (an artifact without ``cpus``
+    predates the per-cpus split and was 32-core). Mutates and returns
+    ``full``."""
     if int(prior.get("cpus", 32)) != CPUS:
         return full
     for name in SECTION_NAMES:
         entry = full.get(name)
-        ran_now = (isinstance(entry, dict) and "skipped" not in entry
-                   and "error" not in entry)
-        if not ran_now and name in prior:
-            carried = prior[name]
-            if isinstance(carried, dict) and "skipped" not in carried \
-                    and "error" not in carried:
-                replacement = {**carried, "carried_from_prior_run": True}
-                if isinstance(entry, dict) and "error" in entry:
-                    # keep the failure visible next to the carried data
-                    replacement["error_this_run"] = entry["error"]
-                full[name] = replacement
+        if (_measured(entry) or not _measured(prior.get(name))
+                or isinstance(entry, dict) and "context_lost" in entry):
+            continue
+        full[name] = {**prior[name], "carried_from_prior_run": True}
+        if isinstance(entry, dict) and "error" in entry:
+            full[name]["error_this_run"] = entry["error"]
     return full
 
 
-def ensure_big_events(spark) -> None:
-    """Synthesize a seeded ~100M-row events table once (reused across
-    rounds). Deterministic xxhash64-derived columns — no RNG state, so any
-    run regenerates identical data. At 100M rows the interval query is
-    scan-bound (GBs, not KBs), making throughput comparable to the
-    reference's 1B-event single-node envelope instead of extrapolated."""
-    from pyspark.sql import functions as F
-
-    marker = Path(BIG_DIR) / "events.parquet" / "_SUCCESS"
-    if marker.exists():
+def _synth_once(path: str, make) -> None:
+    """Write ``make()`` as zstd parquet at ``path`` unless an earlier run
+    finished it (its _SUCCESS marker); the data is seeded, so any
+    regeneration is identical."""
+    if (Path(path) / "_SUCCESS").exists():
         return
-    _note(f"synthesizing {BIG_ROWS} bench events (one-time)")
+    _note(f"synthesizing {path} (one-time)")
+    make().write.mode("overwrite").option("compression", "zstd").parquet(path)
+
+
+def ensure_big_events(spark) -> None:
+    """~100M seeded events: at this size the interval query is scan-bound
+    (GBs, not KBs), comparable to the reference's 1B-event single-node
+    envelope instead of extrapolated."""
     from nexus_processor_spark.sources.synth import synth_events
 
-    (synth_events(spark, BIG_ROWS).write.mode("overwrite")
-       .option("compression", "zstd").parquet(f"{BIG_DIR}/events.parquet"))
-
-
-DOCS_ROWS = int(os.environ.get("SPARK_GRAFT_BIG_DOCS", "2000000"))
-DOCS_DIR = str(Path(__file__).resolve().parent / ".benchdata" / "docsbig")
+    _synth_once(f"{BIG_DIR}/events.parquet",
+                lambda: synth_events(spark, BIG_ROWS))
 
 
 def ensure_big_docs(spark) -> None:
-    """Synthesize a seeded ~2M-doc corpus (~1.5 GB of text) once.
-
-    Tokens are xxhash64-derived with a harmonic-ish skew (id drawn modulo
-    a hashed cap), so the corpus has a Zipf-like vocabulary head — the
-    shape dedup/TF-IDF operators actually face — while staying fully
-    deterministic across regenerations.
-    """
-    from pyspark.sql import functions as F
-
-    marker = Path(DOCS_DIR) / "documents.parquet" / "_SUCCESS"
-    if marker.exists():
-        return
-    _note(f"synthesizing {DOCS_ROWS} bench docs (one-time)")
+    """~2M seeded docs (~1.5 GB of text) with a Zipf-like vocabulary
+    head, the shape dedup/TF-IDF operators face."""
     from nexus_processor_spark.sources.synth import synth_documents
 
-    (synth_documents(spark, DOCS_ROWS).write.mode("overwrite")
-       .option("compression", "zstd").parquet(f"{DOCS_DIR}/documents.parquet"))
+    _synth_once(f"{DOCS_DIR}/documents.parquet",
+                lambda: synth_documents(spark, DOCS_ROWS))
+
+
+def ensure_big_vecs(spark) -> None:
+    """~1M seeded 64-dim embeddings in [-1, 1) over 256 coarse cells."""
+    from nexus_processor_spark.sources.synth import synth_embeddings
+
+    _synth_once(f"{VEC_DIR}/embeddings.parquet",
+                lambda: synth_embeddings(spark, VEC_ROWS, dim=VEC_DIM,
+                                         cells=VEC_CELLS))
 
 
 def run_docs(spark) -> dict[str, object]:
@@ -353,9 +326,7 @@ def run_docs(spark) -> dict[str, object]:
         # docs): gate + in-batch exact dedup + verified near-dup
         "curate_batch_200k": lambda: curate.curate_batch(
             docs.sample(fraction=0.1, seed=11), None),
-        # same batch on the xxhash64 signature dial (hex-chunked xx
-        # band sigs; see curate._band_signatures) — the md5 gap, kept
-        # visible like minhash_signatures vs _xx
+        # same batch on the xxhash64 signature dial, md5 gap kept visible
         "curate_batch_200k_xx": lambda: curate.curate_batch(
             docs.sample(fraction=0.1, seed=11), None, hash_fn="xxhash64"),
         # snapshot delta at corpus scale: hash-width full-outer join
@@ -397,15 +368,14 @@ def run_docs(spark) -> dict[str, object]:
         "dup_spans_500k_mod4": lambda: spans.dup_spans(
             _dup_seeded(docs, 0.25), 5, hash_fn="xxhash64", sample_mod=4
         ),
-        # DSIR importance weights over the full 2M docs against a ~1%
+        # DSIR importance weights over the full corpus against a ~1%
         # target sample: one token explode + dim-row broadcast tables
         "dsir_weights_2m": lambda: pipeline.dsir_logweights(
             docs.select("doc_id", "text"),
             docs.filter(F.col("doc_id") % 97 == 0).select("doc_id", "text"),
         ),
-        # the REALISTIC bucket dimension (paper-scale hashed space,
-        # VERDICT r6 next #7): the log-ratio table is 8192 rows — still
-        # a broadcast — so the corpus-side cost should match dim=64
+        # the paper-scale hashed space: the log-ratio table is 8192 rows,
+        # still a broadcast, so the corpus-side cost should match dim=64
         "dsir_weights_2m_dim8k": lambda: pipeline.dsir_logweights(
             docs.select("doc_id", "text"),
             docs.filter(F.col("doc_id") % 97 == 0).select("doc_id", "text"),
@@ -425,45 +395,29 @@ def run_docs(spark) -> dict[str, object]:
             id_col="doc_id", text_col="prefix", max_dist=2,
         ),
     }
-    out: dict[str, object] = {
+    return {
         "rows": DOCS_ROWS,
         "mb": round(total_mb, 1),
-        "queries": {},
+        "queries": time_shapes(shapes, docs_per_sec=DOCS_ROWS,
+                               mb_per_sec=total_mb),
     }
-    for name, build in shapes.items():
-        best = float("inf")
-        for _ in range(2):
-            s = time.perf_counter()
-            build().write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - s)
-            spark.catalog.clearCache()
-        out["queries"][name] = {
-            "sec": round(best, 3),
-            "docs_per_sec": round(DOCS_ROWS / best),
-            "mb_per_sec": round(total_mb / best, 1),
-        }
-    return out
 
 
 def run_curate(spark) -> dict[str, object]:
     """Streaming-curation state scaling: 5 consecutive ~200k-doc batches
     through the gate pipeline, each curated AGAINST the state the
     earlier batches accumulated, through the bucketed + bloom-indexed
-    ``KeyedStateStore`` (VERDICT r5 next #1). Per batch it reports wall
-    seconds AND the store's byte accounting — ``probe_mb`` (bucket
-    parquet actually read by the three state probes) is THE pin: it
-    must track the batch's candidate keys, staying flat while
-    ``state_mb`` grows monotonically; ``commit_mb`` shows the tiered
-    folds (a bounded multiple of the delta, never a full-state
-    rewrite — r5 next #2). The ``gates`` variant re-runs the sweep
-    with every gate on (accumulated quality quantile, Gopher
-    repetition, benchmark decontamination — r5 next #4). The ``folds``
-    variant (VERDICT r6 next #1) runs 8 smaller batches at
-    fold_factor=2 so the state crosses >= 2 fold generations:
-    ``probe_mb`` must stay flat THROUGH the folds now that folded
-    directories re-size their bucket count to their rows (bucket-file
-    size is the invariant — r6 measured 1.1->21.9 MB here under the
-    old 256-bucket cap)."""
+    ``KeyedStateStore``. Per batch it reports wall seconds AND the
+    store's byte accounting — ``probe_mb`` (bucket parquet actually read
+    by the three state probes) is THE pin: it must track the batch's
+    candidate keys, staying flat while ``state_mb`` grows; ``commit_mb``
+    shows the tiered folds (a bounded multiple of the delta, never a
+    full-state rewrite). The ``gates`` variant re-runs the sweep with
+    every gate on (accumulated quality quantile, Gopher repetition,
+    benchmark decontamination). The ``folds`` variant runs 8 smaller
+    batches at fold_factor=2 so the state crosses >= 2 fold
+    generations: ``probe_mb`` must stay flat THROUGH the folds, as
+    folded directories re-size their bucket count to their rows."""
     import shutil
     import tempfile
 
@@ -484,31 +438,21 @@ def run_curate(spark) -> dict[str, object]:
         state_dir = tempfile.mkdtemp(prefix="curate_bench_state_")
         kept_dir = tempfile.mkdtemp(prefix="curate_bench_kept_")
         out: dict[str, object] = {"batches": []}
-        eval_df = (
-            docs.filter(F.col("doc_id") % 97 == 0).limit(500)
-            .select("doc_id", "text")
-            if gates else None
-        )
         kw: dict[str, object] = {}
         if gates:
             kw = {
                 "quality_q": 0.25, "quality_metric_col": "n_chars",
                 "max_dup_char_fraction": 0.9,
-                "eval_df": eval_df, "max_contamination_hits": 0,
+                "eval_df": docs.filter(F.col("doc_id") % 97 == 0)
+                .limit(500).select("doc_id", "text"),
+                "max_contamination_hits": 0,
             }
         if semantic:
-            # 16 planes keep random-pair collisions at 2^-16 per band
-            # (state-side candidates O(true dups), not O(state) — the
-            # 8x8 default's 256-bucket bands measured 39->280 s/batch
-            # here as EVERY doc collided with ~1/256 of the
-            # accumulated corpus per band). Round 10: 16 BANDS (r9 ran
-            # 4 — exact-twin-safe but measured 0.755 recall on true
-            # near-dups) + 2 multiprobes per band, the sizing the
-            # recall-floor test pins at >= 0.95; recall is MEASURED
-            # below against exact-cosine ground truth. ``sem_sizing``
-            # overrides with suggest_semantic_banding's output — the
-            # flatness sweep (VERDICT r10 next #1) runs at the sizing
-            # the helper prescribes for its FINAL kept corpus.
+            # 16 planes keep random-pair collisions at 2^-16 per band,
+            # so state-side candidates are O(true dups), not O(state).
+            # 16 bands + 2 multiprobes is the sizing the recall-floor
+            # test pins at >= 0.95; ``sem_sizing`` overrides it with
+            # suggest_semantic_banding's output.
             sz = sem_sizing or {"bands": 16, "planes": 16, "probes": 2}
             kw.update({
                 "embedding_col": "embedding", "semantic_threshold": 0.9,
@@ -518,23 +462,21 @@ def run_curate(spark) -> dict[str, object]:
             })
         # all-gates batches run at ~100k docs: the repetition +
         # decontamination plans hold the wide text column in several
-        # concurrent operators and a 200k batch overflows the 8g local
-        # driver+executor heap (measured; a real cluster sizes executor
-        # memory per core instead)
+        # concurrent operators, and a 200k batch overflowed an 8g heap
         if mod is None:
             mod = 20 if gates else 10
         store_kw: dict[str, object] = {}
         if fold_factor is not None:
             store_kw["fold_factor"] = fold_factor
+
         def _sem_recall(batch, audit, b):
-            """Cross-batch gate recall vs EXACT-cosine ground truth
-            (VERDICT r9 next #1): true set = this batch's docs whose
-            exact cosine against an already-KEPT doc reaches 0.91
-            (0.01 over the gate threshold keeps int8 boundary flips
-            out of the truth set); candidate pairs come from the twin
-            construction key ``_ek`` — cross-_ek cosines of these
-            near-isotropic 64-dim vectors sit ~7 sigma below 0.9, so
-            the blocking is exhaustive for this corpus."""
+            """Cross-batch gate recall vs EXACT-cosine ground truth:
+            true set = this batch's docs whose exact cosine against an
+            already-KEPT doc reaches 0.91 (0.01 over the gate threshold
+            keeps int8 boundary flips out of the truth set); candidate
+            pairs come from the twin construction key ``_ek`` —
+            cross-_ek cosines of these near-isotropic 64-dim vectors sit
+            ~7 sigma below 0.9, so the blocking is exhaustive."""
             if b == 0:
                 return None, 0
             kept = spark.read.parquet(kept_dir).select(
@@ -557,10 +499,9 @@ def run_curate(spark) -> dict[str, object]:
                 .select("doc_id").distinct().persist()
             )
             n_true = truth.count()
-            # a truth-set doc counts as caught when ANY dedup gate
-            # dropped it (ADVICE r10): a true near-dup removed as
-            # exact_dup/near_dup before the semantic stage is not a
-            # gate miss — the pipeline removed it
+            # a true near-dup removed by ANY dedup gate counts as caught:
+            # dropped as exact_dup/near_dup before the semantic stage is
+            # not a gate miss
             caught = audit.where(
                 "drop_reason IN "
                 "('exact_dup', 'near_dup', 'semantic_dup')"
@@ -570,81 +511,77 @@ def run_curate(spark) -> dict[str, object]:
             return (
                 round(n_hit / n_true, 4) if n_true else None, n_true)
 
+        def gate_batch(batch, b: int) -> tuple:
+            """The timed gate pipeline for one batch; the caller
+            unpersists the returned audit and handles."""
+            store = curate.open_state(spark, state_dir, **store_kw)
+            state = store if store.current_version() is not None else None
+            handles: list = []
+            metrics: dict = {}
+            audit = curate.curate_batch(
+                batch, state, _projection_out=handles,
+                _metrics_out=metrics if semantic else None, **kw
+            ).persist()
+            n_kept = audit.filter("keep").count()
+            sem_codes = [h for h in handles if "_q8" in h.columns]
+            sem_bkts = [h for h in handles if "_vkey" in h.columns]
+            delta = curate._survivor_state(
+                audit.filter("keep"),
+                text_col="text", id_col="doc_id",
+                sigs=handles[0] if handles else None,
+                embedding_col="embedding" if semantic else None,
+                # banding MUST match the probe keys even on the
+                # recompute fallback, or cross-batch recall is silently 0
+                semantic_bands=int(kw.get("semantic_bands",
+                                          curate.SEM_BANDS)),
+                semantic_planes=int(kw.get("semantic_planes",
+                                           curate.SEM_PLANES)),
+                sem_tables=(
+                    (sem_codes[0], sem_bkts[0])
+                    if sem_codes and sem_bkts else None),
+            )
+            if gates:
+                delta = delta.unionByName(curate._qhist_delta(
+                    batch, metric_col="n_chars"))
+            # curate._advance_state's sequence, on THIS store instance so
+            # its byte counters are readable (the app_meta banding stamp
+            # lets reband_semantic_state accept the state)
+            store.commit_delta(
+                delta, version=b, fold_fn=curate._compact_state,
+                app_meta=(
+                    {"hash_fn": "md5",
+                     "sem_bands": int(kw["semantic_bands"]),
+                     "sem_planes": int(kw["semantic_planes"])}
+                    if semantic else None))
+            store.expire(keep_last=2)
+            return store, audit, handles, metrics, n_kept
+
         try:
             for b in range(n_batches):
                 batch = source.filter(F.col("doc_id") % mod == b)
-                s = time.perf_counter()
-                store = curate.open_state(spark, state_dir, **store_kw)
-                state = (
-                    store if store.current_version() is not None else None
-                )
-                handles: list = []
-                metrics: dict = {}
-                audit = curate.curate_batch(
-                    batch, state, _projection_out=handles,
-                    _metrics_out=metrics if semantic else None, **kw
-                ).persist()
+                runs: list = []
+                t_batch = measure(lambda: runs.append(gate_batch(batch, b)))
+                store, audit, handles, metrics, n_kept = runs[-1]
+                # recall ground truth and candidate counts are bench-side
+                # instrumentation, outside the gate's wall clock
+                extra: dict = {}
                 try:
-                    n_kept = audit.filter("keep").count()
-                    sem_codes = [h for h in handles if "_q8" in h.columns]
-                    sem_bkts = [h for h in handles if "_vkey" in h.columns]
-                    delta = curate._survivor_state(
-                        audit.filter("keep"),
-                        text_col="text", id_col="doc_id",
-                        sigs=handles[0] if handles else None,
-                        embedding_col="embedding" if semantic else None,
-                        # banding MUST match the probe keys even on the
-                        # recompute fallback — defaults here wrote 8x8
-                        # state keys against 16x4 probes (silent zero
-                        # cross-batch recall, caught by the kept counts)
-                        semantic_bands=int(kw.get("semantic_bands",
-                                                  curate.SEM_BANDS)),
-                        semantic_planes=int(kw.get("semantic_planes",
-                                                   curate.SEM_PLANES)),
-                        sem_tables=(
-                            (sem_codes[0], sem_bkts[0])
-                            if sem_codes and sem_bkts else None),
-                    )
-                    if gates:
-                        delta = delta.unionByName(curate._qhist_delta(
-                            batch, metric_col="n_chars"))
-                    # same sequence as curate._advance_state, on THIS
-                    # store instance so its byte counters are readable
-                    # (incl. the app_meta banding stamp — without it
-                    # reband_semantic_state correctly refuses the state)
-                    store.commit_delta(
-                        delta, version=b, fold_fn=curate._compact_state,
-                        app_meta=(
-                            {"hash_fn": "md5",
-                             "sem_bands": int(kw["semantic_bands"]),
-                             "sem_planes": int(kw["semantic_planes"])}
-                            if semantic else None))
-                    store.expire(keep_last=2)
-                    # the gate pipeline's wall clock stops HERE — the
-                    # recall ground truth below is bench-side
-                    # instrumentation, not gate work
-                    t_batch = time.perf_counter() - s
-                    sem_recall, sem_true = (
-                        _sem_recall(batch, audit, b)
-                        if semantic else (None, 0))
-                    # verify-candidate volume (VERDICT r10 next #1):
-                    # counted OUTSIDE the gate's wall clock, off the
-                    # batch's persisted codes/bkts — the number that
-                    # must stay ~flat as kept state grows at a sized
-                    # banding (state-side collisions ~ true dups +
-                    # bands*(1+probes)*kept/2^planes random ones)
-                    sem_cands = {
-                        key: metrics[mk].count()
-                        for key, mk in (
-                            ("batch_pair_cands", "sem_batch_pairs"),
-                            ("state_cands", "sem_state_candidates"),
-                        ) if mk in metrics
-                    } if semantic else {}
                     if semantic:
-                        # accumulate the kept corpus's embeddings for
-                        # the next batch's ground truth (bench-side
-                        # instrumentation only — the GATE's state
-                        # stays hashes/codes, never raw vectors)
+                        sem_recall, sem_true = _sem_recall(batch, audit, b)
+                        # verify-candidate volume: must stay ~flat as kept
+                        # state grows at a sized banding
+                        extra = {
+                            "sem_recall": sem_recall,
+                            "sem_true_pairs": sem_true,
+                            **{key: metrics[mk].count()
+                               for key, mk in (
+                                   ("batch_pair_cands", "sem_batch_pairs"),
+                                   ("state_cands", "sem_state_candidates"),
+                               ) if mk in metrics},
+                        }
+                        # the kept corpus's embeddings feed the next
+                        # batch's ground truth; the GATE's state stays
+                        # hashes/codes, never raw vectors
                         audit.filter("keep").select(
                             "doc_id", "_ek", "embedding",
                         ).write.mode("append").parquet(kept_dir)
@@ -652,19 +589,13 @@ def run_curate(spark) -> dict[str, object]:
                     audit.unpersist()
                     for h in handles:
                         h.unpersist()
-                entry_extra = (
-                    {"sem_recall": sem_recall, "sem_true_pairs": sem_true,
-                     **sem_cands}
-                    if semantic else {})
                 out["batches"].append({
                     "sec": round(t_batch, 3),
                     "kept": n_kept,
-                    **entry_extra,
+                    **extra,
                     "probe_mb": round(store.probe_bytes_total / 1e6, 2),
-                    # ALL probes' sidecar loads this batch, not just the
-                    # final probe's (ADVICE r6: scope-consistent with
-                    # probe_mb — both are per-batch totals because the
-                    # store handle is re-opened per batch)
+                    # all probes' sidecar loads this batch, scoped like
+                    # probe_mb (the store is re-opened per batch)
                     "probe_meta_mb": round(
                         store.probe_meta_bytes_total / 1e6, 2),
                     "commit_mb": round(store.last_commit_bytes / 1e6, 2),
@@ -672,26 +603,18 @@ def run_curate(spark) -> dict[str, object]:
                     "state_mb": round(
                         state_store._dir_bytes(state_dir) / 1e6, 2),
                 })
-                spark.catalog.clearCache()
             st = curate.read_state(spark, state_dir)
             out["state_rows"] = st.count()
             secs = [x["sec"] for x in out["batches"]]
             out["batch_sec_first"] = secs[0]
             out["batch_sec_last"] = secs[-1]
-            # fold wall-clock bound (VERDICT r9 next #4): the max
-            # batch (usually a fold/compaction batch) as a multiple of
-            # the median — a compaction regression can no longer hide
-            # inside the "expected spike"
-            import statistics
             med = statistics.median(secs)
             out["batch_sec_median"] = round(med, 3)
             out["max_batch_over_median"] = round(max(secs) / med, 2)
             if fold_factor is not None:
-                # probe-twin comparison against the final multi-
-                # generation state: driver-side collect vs executor-
-                # side mapInPandas (probe_distributed), same keys, same
-                # superset contract — the number that says what the
-                # 100 TB probe shape costs TODAY
+                # probe twins against the final multi-generation state:
+                # driver-side collect vs executor-side mapInPandas, same
+                # keys, same superset contract
                 probe_keys = (
                     docs.filter(F.col("doc_id") % mod == 0)
                     .limit(20000)
@@ -703,36 +626,34 @@ def run_curate(spark) -> dict[str, object]:
                     ("driver", store.probe),
                     ("distributed", store.probe_distributed),
                 ):
-                    s = time.perf_counter()
-                    n = fn("md5", probe_keys).count()
+                    rows: list = []
+                    sec = measure(
+                        lambda: rows.append(fn("md5", probe_keys).count()))
                     twins[label] = {
-                        "sec": round(time.perf_counter() - s, 3),
-                        "rows": n,
+                        "sec": round(sec, 3),
+                        "rows": rows[-1],
                         "probe_mb": round(store.last_probe_bytes / 1e6, 2),
                         "meta_mb": round(
                             store.last_probe_meta_bytes / 1e6, 2),
                     }
                 out["probe_twins"] = twins
             if reband_to is not None:
-                # State-migration cost at bench scale (VERDICT r10
-                # next #3, artifact-level complement to the
-                # bit-identity tests): re-key the finished sweep's
-                # state to the sizing a 10x corpus would need — the
-                # ONE-batch-job alternative to re-ingesting every
-                # batch at the new banding. Runs AFTER the batch loop,
-                # so sweep timings are untouched.
+                # state-migration cost: re-key the finished state to the
+                # sizing a 10x corpus would need, the one-job alternative
+                # to re-ingesting every batch at the new banding
                 dest = tempfile.mkdtemp(prefix="curate_bench_reband_")
                 try:
-                    s = time.perf_counter()
-                    stats = curate.reband_semantic_state(
-                        spark, state_dir, dest,
-                        bands=int(reband_to["bands"]),
-                        planes=int(reband_to["planes"]))
+                    runs = []
+                    sec = measure(lambda: runs.append(
+                        curate.reband_semantic_state(
+                            spark, state_dir, dest,
+                            bands=int(reband_to["bands"]),
+                            planes=int(reband_to["planes"]))))
                     out["reband"] = {
-                        "sec": round(time.perf_counter() - s, 3),
+                        "sec": round(sec, 3),
                         "sizing": dict(reband_to),
-                        "vcode_docs": stats["vcode_docs"],
-                        "vbkt_rows": stats["vbkt_rows"],
+                        "vcode_docs": runs[-1]["vcode_docs"],
+                        "vbkt_rows": runs[-1]["vbkt_rows"],
                     }
                 except Exception as exc:  # instrumentation must not
                     # discard the finished sweep's measurements
@@ -746,14 +667,13 @@ def run_curate(spark) -> dict[str, object]:
         return out
 
     out = drive(gates=False)
-    # r12: the variants check the remaining budget like the top-level
-    # sections do — a curatebench that starts inside budget must not
-    # carry the whole run past the driver's timeout on a slow box.
+    # the variants check the remaining budget like the sections do, so a
+    # curatebench that starts inside budget cannot carry the whole run
+    # past it on a slow box
     out["gates"] = (drive(gates=True) if _remaining() > 400
                     else {"skipped": "budget"})
     # 8 x ~100k batches at T=2: gen-1 folds by commit 2, gen-2 by
-    # commit 4, gen-3 by commit 8 — probe_mb through the fold batches
-    # is the r6 next-#1 pin
+    # commit 4, gen-3 by commit 8
     out["folds"] = (
         drive(gates=False, n_batches=8, mod=20, fold_factor=2)
         if _remaining() > 500 else {"skipped": "budget"})
@@ -762,11 +682,10 @@ def run_curate(spark) -> dict[str, object]:
     # ≡ 1 (mod 40), so a doc's twin lands in the NEXT driven batch:
     # each later batch's twins must drop against the PREVIOUS batch's
     # kept vectors, exercising the vbkt/vcode state probes with real
-    # hits, never a full scan). Round 10: second-occurrence twins with
-    # an ODD doc_id are PERTURBED (deterministic per-component noise,
-    # exact cosine spread ~[0.92, 0.997]) so the variant measures true
-    # NEAR-dup recall against exact-cosine ground truth, not just the
-    # trivially-colliding exact-twin case; even twins stay exact.
+    # hits, never a full scan). Second-occurrence twins with an ODD
+    # doc_id are PERTURBED (deterministic per-component noise, exact
+    # cosine ~[0.92, 0.997]) so the variant measures true NEAR-dup
+    # recall, not just the trivially-colliding exact-twin case.
     if _remaining() > 1100:
         ensure_big_vecs(spark)
         emb = spark.read.parquet(
@@ -792,46 +711,32 @@ def run_curate(spark) -> dict[str, object]:
                 .cast("float")))
             .drop("_eps")
         )
-        # flatness sweep (VERDICT r10 next #1): batches at the
-        # sizing suggest_semantic_banding prescribes for the run's
-        # FINAL kept corpus (~n_batches * 2M/40 docs), so the last
-        # batch probes a state the banding was sized for. The r10
-        # 3-batch run at hand-picked 16x16+2 bought recall 0.998-1.0
-        # but left cost scaling unproven (26.6/205/160 s — not flat);
-        # r11 ran 5 batches and committed the flat result (max/median
-        # 1.08, recall 0.9998-1.0). r12 defaults back to 3 (still >= 3
-        # steady batches for the slope pin) so the default sweep fits
-        # the driver's wall budget — the 5-batch evidence stands in the
-        # committed r11 artifact, and SPARK_GRAFT_SEM_BATCHES=5 re-runs
-        # it in full for unattended sweeps.
+        # flatness sweep at the sizing suggest_semantic_banding gives for
+        # the run's FINAL kept corpus, so the last batch probes a state
+        # the banding was sized for; SPARK_GRAFT_SEM_BATCHES=5 runs the
+        # longer sweep
         sem_n_batches = int(os.environ.get("SPARK_GRAFT_SEM_BATCHES", "3"))
         sizing = curate.suggest_semantic_banding(
             int(DOCS_ROWS / 40 * sem_n_batches), 0.9)
         out["semantic"] = drive(
             gates=False, semantic=True, n_batches=sem_n_batches,
             mod=40, src=docs_sem, sem_sizing=sizing,
-            # migration-cost artifact: re-key the finished state to
-            # the sizing a 10x-grown corpus would need (VERDICT r10
-            # next #3's scale story)
+            # migration cost to the sizing a 10x-grown corpus would need
             reband_to=curate.suggest_semantic_banding(
                 int(DOCS_ROWS / 40 * sem_n_batches) * 10, 0.9))
         out["semantic"]["sizing"] = sizing
         batches = out["semantic"]["batches"]
         recalls = [x["sem_recall"] for x in batches
                    if x["sem_recall"] is not None]
-        # slope pin over STEADY batches: tier folds (fold_mb > 0) are
-        # bounded-amortized rewrites already pinned separately by
-        # fold_wallclock_pin at K=3.5 — a fold landing on the last
-        # batch must not masquerade as "cost grows with kept state".
-        # The steady last/median <= 1.3 bound plus per-batch recall
-        # >= 0.95 is the VERDICT r10 next-#1 done criterion.
-        import statistics as _st
+        # slope pin over STEADY batches: tier folds are bounded-amortized
+        # rewrites pinned by fold_efficiency_pin, and a fold landing on
+        # the last batch must not read as "cost grows with kept state"
         steady = [x["sec"] for x in batches if x["fold_mb"] == 0]
         if len(steady) >= 3:
-            slope = round(steady[-1] / _st.median(steady), 2)
+            slope = round(steady[-1] / statistics.median(steady), 2)
         else:  # folds everywhere: fall back to the full sequence
             allsec = [x["sec"] for x in batches]
-            slope = round(allsec[-1] / _st.median(allsec), 2)
+            slope = round(allsec[-1] / statistics.median(allsec), 2)
         out["semantic"]["flatness"] = {
             "steady_batches": len(steady),
             "last_over_median": slope,
@@ -839,14 +744,12 @@ def run_curate(spark) -> dict[str, object]:
             "ok": (slope <= 1.3
                    and bool(recalls) and min(recalls) >= 0.95),
         }
-        # hot-bucket skew variant (VERDICT r9 next #8): 20% of every
-        # batch shares ONE embedding — the viral-duplicate shape of
-        # real crawl data. The identical-code collapse must keep the
-        # batch cost flat (O(n) aggregation, not O(n^2) bucket pairs)
-        # and keep exactly one cluster member across the whole run.
-        # Hot membership hashes the doc id: a plain doc_id % 5 is
-        # CONSTANT within a doc_id % 40 batch (5 | 40 — the first cut
-        # of this variant silently selected zero hot docs).
+        # hot-bucket skew variant: 20% of every batch shares ONE
+        # embedding (the viral-duplicate shape of crawl data). The
+        # identical-code collapse must keep the batch cost flat (O(n)
+        # aggregation, not O(n^2) bucket pairs) and keep exactly one
+        # cluster member. Hot membership hashes the doc id: doc_id % 5
+        # would be CONSTANT within a doc_id % 40 batch (5 | 40).
         if _remaining() > 240:
             hot = emb.filter(F.col("_ek") == 777).select(
                 F.col("embedding").alias("_hotv"))
@@ -868,9 +771,9 @@ def run_curate(spark) -> dict[str, object]:
         out["semantic"] = {"skipped": "budget"}
         out["semantic_hot"] = {"skipped": "budget"}
 
-    # Per-gate cost attribution (VERDICT r5 next #4): one cold ~100k
-    # batch, gates enabled one at a time — the marginal seconds of each
-    # gate over the base (dedup-only) kernel.
+    # Per-gate cost attribution: one cold ~100k batch, gates enabled one
+    # at a time — the marginal seconds of each gate over the base
+    # (dedup-only) kernel.
     base = docs.filter(F.col("doc_id") % 20 == 7)
     eval_df = (docs.filter(F.col("doc_id") % 97 == 0).limit(500)
                .select("doc_id", "text"))
@@ -882,13 +785,11 @@ def run_curate(spark) -> dict[str, object]:
         "plus_decontamination": {
             "eval_df": eval_df, "max_contamination_hits": 0},
     }
-    gate_sec: dict[str, float] = {}
-    for name, kw in configs.items():
-        s = time.perf_counter()
-        curate.curate_batch(base, None, **kw).write.format(
-            "noop").mode("overwrite").save()
-        gate_sec[name] = round(time.perf_counter() - s, 3)
-        spark.catalog.clearCache()
+    gate_sec = {
+        name: round(measure(lambda: sink(
+            curate.curate_batch(base, None, **kw))), 3)
+        for name, kw in configs.items()
+    }
     out["gate_marginal_sec"] = {
         k: (round(v - gate_sec["base_dedup_only"], 3)
             if k != "base_dedup_only" else v)
@@ -907,19 +808,10 @@ def run_curate(spark) -> dict[str, object]:
     return out
 
 
-REPLAY_JSONL_ROWS = 1_000_000
-
-
-def run_replay(spark, sf_dir: str) -> dict[str, object]:
+def run_replay(spark) -> dict[str, object]:
     """Replay egress throughput against BASELINE.md rows 8-9: the
     reference documents ~100K events/s for stdout JSONL and ~10M events/s
-    for Arrow Flight (docs/event-replay.md:31-32).
-
-    The JSONL row count is PINNED at 1M (VERDICT r10 next #6): the old
-    sf-sized sample (~100k rows, ~1.4 s) was dominated by fixed
-    job-startup cost — the same code measured 153K ev/s in r9 and 72K
-    in r10 purely from that overhead's share of a too-short run. At 1M
-    rows the steady-state emit rate dominates and rounds compare."""
+    for Arrow Flight (docs/event-replay.md:31-32)."""
     import io
 
     from pyspark.sql import functions as F
@@ -944,13 +836,11 @@ def run_replay(spark, sf_dir: str) -> dict[str, object]:
     )
     out: dict[str, object] = {"rows": n, "queries": {}}
 
-    el = float("inf")
-    for _ in range(2):  # best-of-2: first run pays sort-plan JIT
-        sink = io.StringIO()
-        s = time.perf_counter()
-        emitted = replay.replay_to_jsonl(ev, sink)
-        el = min(el, time.perf_counter() - s)
+    def emit_jsonl() -> None:
+        emitted = replay.replay_to_jsonl(ev, io.StringIO())
         assert emitted == n, (emitted, n)
+
+    el = measure(emit_jsonl, reps=2)  # the first run pays sort-plan JIT
     out["queries"]["replay_jsonl"] = {
         "sec": round(el, 3), "events_per_sec": round(n / el)
     }
@@ -960,35 +850,32 @@ def run_replay(spark, sf_dir: str) -> dict[str, object]:
             EventFlightServer,
             read_flight,
         )
-
-        # Flight is the bulk channel (baseline: ~10M events/s) — measure
-        # at 5M rows from the synthesized big table so gRPC stream
-        # throughput, not job-startup cost, dominates.
-        nf = 5_000_000
-        big = (
-            spark.read.parquet(f"{BIG_DIR}/events.parquet")
-            .select("event_id", "ts", "user_id", "value")
-            .filter(F.col("event_id") < nf)
-        )
-        server = EventFlightServer({"events": lambda: big})
-        try:
-            read_flight(server.endpoint, "events")  # warm: plan + JIT
-            s = time.perf_counter()
-            tbl = read_flight(server.endpoint, "events")
-            el = time.perf_counter() - s
-            assert tbl.num_rows == nf
-            out["queries"]["replay_flight"] = {
-                "rows": nf, "sec": round(el, 3),
-                "events_per_sec": round(nf / el),
-            }
-        finally:
-            server.shutdown()
     except ImportError:
-        pass  # flight absent in this environment — metric omitted
+        return out  # flight absent in this environment — metric omitted
+    # Flight is the bulk channel: 5M rows, so gRPC stream throughput,
+    # not job-startup cost, dominates.
+    nf = 5_000_000
+    big = (
+        spark.read.parquet(f"{BIG_DIR}/events.parquet")
+        .select("event_id", "ts", "user_id", "value")
+        .filter(F.col("event_id") < nf)
+    )
+    server = EventFlightServer({"events": lambda: big})
+
+    def fetch() -> None:
+        assert read_flight(server.endpoint, "events").num_rows == nf
+
+    try:
+        el = measure(fetch, warmup=1)
+    finally:
+        server.shutdown()
+    out["queries"]["replay_flight"] = {
+        "rows": nf, "sec": round(el, 3), "events_per_sec": round(nf / el),
+    }
     return out
 
 
-def run_big(spark, qs) -> dict[str, object]:
+def run_big(spark) -> dict[str, object]:
     """Scan-bound throughput on the synthesized table, reported as
     events/s for two shapes:
 
@@ -1002,12 +889,15 @@ def run_big(spark, qs) -> dict[str, object]:
 
     from nexus_processor_spark.functions.core import event_seconds
     from nexus_processor_spark.operators import timeslice
+    from nexus_processor_spark.plans.layout import write_zordered
+    from nexus_processor_spark.sources import snapshots
 
     ensure_big_events(spark)
+    qs = registry.queries()
+    raw_big = lambda path: spark.read.parquet(f"{BIG_DIR}/{path}")  # noqa: E731
 
-    def _events(sf_dir):
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        return ev.select(
+    def _events(raw):
+        return raw.select(
             "event_id",
             event_seconds("ts").alias("absolute_time"),
             F.col("event_type").alias("bank"),
@@ -1015,124 +905,74 @@ def run_big(spark, qs) -> dict[str, object]:
         )
 
     # 10-day slice in the middle of the synthetic 30-day domain.
-    t0 = 1_700_000_000.0
-    day = 86_400.0
+    lo_s = 1_700_000_000.0 + 5 * 86_400.0
+    hi_s = lo_s + 10 * 86_400.0
 
-    def _ensure_sorted():
-        # Time-sorted twin of the big table (written once): row-group
-        # min/max stats on ts become selective, so the pushed time
-        # predicate SKIPS row groups instead of scanning them.
-        marker = Path(BIG_DIR) / "events_sorted.parquet" / "_SUCCESS"
-        if not marker.exists():
-            (spark.read.parquet(f"{BIG_DIR}/events.parquet")
-             .repartitionByRange(64, "ts").sortWithinPartitions("ts")
-             .write.mode("overwrite").option("compression", "zstd")
-             .parquet(f"{BIG_DIR}/events_sorted.parquet"))
+    # Time-sorted twin: row-group min/max stats on ts become selective,
+    # so the pushed time predicate SKIPS row groups instead of scanning.
+    _synth_once(f"{BIG_DIR}/events_sorted.parquet", lambda: (
+        raw_big("events.parquet")
+        .repartitionByRange(64, "ts").sortWithinPartitions("ts")))
+    # Z-ordered twin (ts x user_id): both columns get selective row-group
+    # envelopes, so time ranges AND user slices prune.
+    if not (Path(BIG_DIR) / "events_zorder.parquet" / "_SUCCESS").exists():
+        write_zordered(raw_big("events.parquet"),
+                       f"{BIG_DIR}/events_zorder.parquet",
+                       ["ts", "user_id"], num_files=64)
+    # Snapshot-table twin: 16 time-ranged manifest directories with ts
+    # min/max stats — the range query then skips 10 of 16 directories at
+    # the MANIFEST (no listing, no footer reads). Complete iff all 16
+    # commits landed; a killed partial build is rebuilt from scratch.
+    if snapshots.current_version(SNAP_DIR) != 15:
+        import shutil
 
-    def _ensure_zordered():
-        # Z-ordered twin (ts x user_id): BOTH columns get selective
-        # row-group envelopes, so time ranges AND user slices prune —
-        # the ts-sorted layout prunes only time.
-        from nexus_processor_spark.plans.layout import write_zordered
-
-        marker = Path(BIG_DIR) / "events_zorder.parquet" / "_SUCCESS"
-        if not marker.exists():
-            write_zordered(
-                spark.read.parquet(f"{BIG_DIR}/events.parquet"),
-                f"{BIG_DIR}/events_zorder.parquet",
-                ["ts", "user_id"], num_files=64,
+        shutil.rmtree(SNAP_DIR, ignore_errors=True)
+        raw = raw_big("events_sorted.parquet")
+        lo_hi = raw.agg(F.min("ts"), F.max("ts")).first()
+        lo, hi = lo_hi[0], lo_hi[1] + 1
+        step = (hi - lo) // 16 + 1
+        for i in range(16):
+            snapshots.write_snapshot(
+                raw.filter((F.col("ts") >= lo + i * step)
+                           & (F.col("ts") < lo + (i + 1) * step)),
+                SNAP_DIR, mode="overwrite" if i == 0 else "append",
+                stats_cols=("ts",),
             )
 
     def _user_slice(path: str):
         # 1% user slice: pushed long-range predicate on user_id; prunes
         # on the z-ordered layout, scans everything on the ts-sorted one
         return (
-            spark.read.parquet(f"{BIG_DIR}/{path}")
+            raw_big(path)
             .filter((F.col("user_id") >= 500_000) & (F.col("user_id") < 510_000))
             .groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("v"))
         )
 
-    def _range_pushdown(path: str):
-        raw = spark.read.parquet(f"{BIG_DIR}/{path}")
-        pushed = timeslice.push_time_range(raw, t0 + 5 * day, t0 + 15 * day)
-        ev = pushed.select(
-            "event_id",
-            event_seconds("ts").alias("absolute_time"),
-            F.col("event_type").alias("bank"),
-            F.col("user_id").alias("pulse_index"),
-        )
-        return timeslice.count_in_time_range(ev, t0 + 5 * day, t0 + 15 * day)
+    def _range_pushdown(raw):
+        pushed = timeslice.push_time_range(raw, lo_s, hi_s)
+        return timeslice.count_in_time_range(_events(pushed), lo_s, hi_s)
 
     def _enrich_join():
-        # Broadcast-enrich 100M events with a 1M-row dim (16 MB — inside
+        # Broadcast-enrich the events with a 1M-row dim (16 MB — inside
         # the autoBroadcast threshold) and aggregate per dim attribute:
         # the J1 enrichment chain at data scale, zero shuffle on events.
         dim = spark.range(1_000_000).select(
             F.col("id").alias("d_user"),
             F.pmod(F.xxhash64("id", F.lit("c")), F.lit(16)).alias("cohort"),
         )
-        ev = spark.read.parquet(f"{BIG_DIR}/events.parquet")
+        ev = raw_big("events.parquet")
         return (
             ev.join(F.broadcast(dim), ev.user_id == dim.d_user)
             .groupBy("cohort")
             .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("v"))
         )
 
-    def _ensure_snapshot_table():
-        # Snapshot-table twin (written once): 16 time-ranged manifest
-        # directories with ts min/max stats — the range query then skips
-        # 10 of 16 directories at the MANIFEST (no listing, no footer
-        # reads), the lakehouse layer above row-group pruning.
-        import shutil
-
-        from nexus_processor_spark.sources import snapshots
-
-        # complete iff all 16 ranged commits landed (versions 0..15);
-        # a killed partial build self-heals by rebuilding from scratch
-        if snapshots.current_version(SNAP_DIR) == 15:
-            return
-        shutil.rmtree(SNAP_DIR, ignore_errors=True)
-        raw = spark.read.parquet(f"{BIG_DIR}/events_sorted.parquet")
-        lo_hi = raw.agg(F.min("ts"), F.max("ts")).first()
-        lo, hi = lo_hi[0], lo_hi[1] + 1
-        step = (hi - lo) // 16 + 1
-        for i in range(16):
-            part = raw.filter(
-                (F.col("ts") >= lo + i * step)
-                & (F.col("ts") < lo + (i + 1) * step)
-            )
-            snapshots.write_snapshot(
-                part, SNAP_DIR, mode="overwrite" if i == 0 else "append",
-                stats_cols=("ts",),
-            )
-
-    def _range_snapshot():
-        from nexus_processor_spark.sources import snapshots
-
-        lo_s, hi_s = t0 + 5 * day, t0 + 15 * day
-        raw = snapshots.read_snapshot(
-            spark, SNAP_DIR,
-            prune={"ts": (int(lo_s * 1e9), int(hi_s * 1e9))},
-        )
-        pushed = timeslice.push_time_range(raw, lo_s, hi_s)
-        ev = pushed.select(
-            "event_id",
-            event_seconds("ts").alias("absolute_time"),
-            F.col("event_type").alias("bank"),
-            F.col("user_id").alias("pulse_index"),
-        )
-        return timeslice.count_in_time_range(ev, lo_s, hi_s)
-
-    _ensure_sorted()
-    _ensure_zordered()
-    _ensure_snapshot_table()
     def _interval_sorted():
-        # The flagship rollup on the TIME-SORTED layout (the reference's
-        # store is written time-ordered): rows cluster by bucket, so the
-        # map-combine exact distinct collapses the shuffle to occupied
-        # (bucket, word) masks instead of one row per event.
-        ev = spark.read.parquet(f"{BIG_DIR}/events_sorted.parquet").select(
+        # The flagship rollup on the time-sorted layout (the reference's
+        # store order): rows cluster by bucket, so the map-combine exact
+        # distinct collapses the shuffle to occupied (bucket, word) masks.
+        ev = raw_big("events_sorted.parquet").select(
             "ts",
             F.col("event_type").alias("bank"),
             F.col("user_id").alias("pulse_index"),
@@ -1145,85 +985,43 @@ def run_big(spark, qs) -> dict[str, object]:
         "timeslice_interval": lambda: qs["timeslice_interval"](spark, BIG_DIR),
         "timeslice_interval_sorted": _interval_sorted,
         "timeslice_range": lambda: timeslice.count_in_time_range(
-            _events(BIG_DIR), t0 + 5 * day, t0 + 15 * day
+            _events(raw_big("events.parquet")), lo_s, hi_s
         ),
-        "timeslice_range_pushdown": lambda: _range_pushdown("events.parquet"),
-        "timeslice_range_sorted": lambda: _range_pushdown("events_sorted.parquet"),
-        "timeslice_range_zorder": lambda: _range_pushdown("events_zorder.parquet"),
-        "timeslice_range_snapshot": _range_snapshot,
+        "timeslice_range_pushdown":
+            lambda: _range_pushdown(raw_big("events.parquet")),
+        "timeslice_range_sorted":
+            lambda: _range_pushdown(raw_big("events_sorted.parquet")),
+        "timeslice_range_zorder":
+            lambda: _range_pushdown(raw_big("events_zorder.parquet")),
+        "timeslice_range_snapshot": lambda: _range_pushdown(
+            snapshots.read_snapshot(
+                spark, SNAP_DIR,
+                prune={"ts": (int(lo_s * 1e9), int(hi_s * 1e9))})),
         "user_slice_sorted": lambda: _user_slice("events_sorted.parquet"),
         "user_slice_zorder": lambda: _user_slice("events_zorder.parquet"),
         "enrich_join": _enrich_join,
     }
-    out: dict[str, object] = {"rows": BIG_ROWS, "queries": {}}
-    for name, build in shapes.items():
-        best = float("inf")
-        for _ in range(2):
-            s = time.perf_counter()
-            build().write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - s)
-            spark.catalog.clearCache()
-        out["queries"][name] = {
-            "sec": round(best, 3),
-            "events_per_sec": round(BIG_ROWS / best),
-        }
-    return out
+    return {"rows": BIG_ROWS,
+            "queries": time_shapes(shapes, events_per_sec=BIG_ROWS)}
 
 
-def run_scaling(spark, qs) -> dict[str, object]:
-    """Cheap data-scale core-scaling probe (VERDICT r11 next #7): the
-    flagship rollup at 100M rows at THIS run's core count, recorded
-    with ``cpus`` so the driver's low-core rerun produces a directly
-    comparable entry in its own per-cpus artifact (r11 had to
-    reconstruct core scaling from a clobbered file). Runs FIRST so even
-    a timeout-killed sweep carries it (artifacts write incrementally);
-    the one-time 100M-row synthesis happens outside the timed reps and
-    is reused by every later section."""
+def run_scaling(spark) -> dict[str, object]:
+    """Data-scale core-scaling probe: the flagship rollup at 100M rows at
+    THIS run's core count, recorded with ``cpus`` so a low-core rerun
+    yields a comparable entry in its own per-cpus artifact. Runs FIRST
+    so even a killed sweep has it. One untimed rep: right after the
+    one-time synthesis the first run also pays cold page cache and
+    writeback (measured 22.2 s vs 6.2 s steady for the same plan)."""
     ensure_big_events(spark)
-    best = float("inf")
-    # Rep 0 is untimed (same methodology as the headline loop): this
-    # section runs FIRST, immediately after the one-time 8 GB synthesis,
-    # so its first execution pays JIT + cold page cache + synthesis
-    # writeback — measured 22.2s vs the 6.2s steady state bigbench saw
-    # for the IDENTICAL plan minutes later in the same JVM. The scaling
-    # ratio must compare steady states, not cold starts.
-    for rep in range(3):
-        s = time.perf_counter()
-        qs["timeslice_interval"](spark, BIG_DIR).write.format(
-            "noop").mode("overwrite").save()
-        if rep > 0:
-            best = min(best, time.perf_counter() - s)
-        spark.catalog.clearCache()
+    q = registry.queries()["timeslice_interval"]
+    best = measure(lambda: sink(q(spark, BIG_DIR)), reps=2, warmup=1)
     return {"cpus": CPUS, "rows": BIG_ROWS,
             "flagship_sec": round(best, 3),
             "flagship_events_per_sec": round(BIG_ROWS / best)}
 
 
-VEC_ROWS = int(os.environ.get("SPARK_GRAFT_BIG_VECS", "1000000"))
-VEC_DIM = 64
-VEC_CELLS = 256
-VEC_DIR = str(Path(__file__).resolve().parent / ".benchdata" / "vecbig")
-
-
-def ensure_big_vecs(spark) -> None:
-    """Synthesize a seeded ~1M x 64-dim embedding corpus once
-    (xxhash64-derived floats in [-1, 1), 256 coarse cells) — the vector
-    analog of ensure_big_events, fully deterministic."""
-    from pyspark.sql import functions as F
-
-    marker = Path(VEC_DIR) / "embeddings.parquet" / "_SUCCESS"
-    if marker.exists():
-        return
-    _note(f"synthesizing {VEC_ROWS} bench vectors (one-time)")
-    from nexus_processor_spark.sources.synth import synth_embeddings
-
-    (synth_embeddings(spark, VEC_ROWS, dim=VEC_DIM, cells=VEC_CELLS)
-       .write.mode("overwrite")
-       .option("compression", "zstd").parquet(f"{VEC_DIR}/embeddings.parquet"))
-
-
 def run_ops(spark) -> dict[str, object]:
-    """The round-3 operator families at 100M-event scale, events/s:
+    """The event-analytics operator families at 100M-event scale, events/s:
 
     * ``funnel_stages`` — 3 chained per-user min-aggregates (view ->
       click -> purchase), the heaviest new shuffle shape (user-key).
@@ -1273,19 +1071,8 @@ def run_ops(spark) -> dict[str, object]:
             refs=[quality.Referential("user_id", dim, "k")],
         ),
     }
-    out: dict[str, object] = {"rows": BIG_ROWS, "queries": {}}
-    for name, build in shapes.items():
-        best = float("inf")
-        for _ in range(2):
-            s = time.perf_counter()
-            build().write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - s)
-            spark.catalog.clearCache()
-        out["queries"][name] = {
-            "sec": round(best, 3),
-            "events_per_sec": round(BIG_ROWS / best),
-        }
-    return out
+    return {"rows": BIG_ROWS,
+            "queries": time_shapes(shapes, events_per_sec=BIG_ROWS)}
 
 
 def run_vecs(spark) -> dict[str, object]:
@@ -1315,77 +1102,87 @@ def run_vecs(spark) -> dict[str, object]:
     # path wins by an order of magnitude — both are measured so the gap
     # stays visible.
     shapes = {
-        "vector_quantize": (VEC_ROWS, lambda: emb.select(
+        "vector_quantize": lambda: emb.select(
             "vec_id",
             vector.quant_scale(v).alias("scale"),
             vector.quantize_int8(v).alias("q8"),
             vector.l2_normalize(v).alias("unit"),
-        )),
-        "vector_quantize_arrow": (VEC_ROWS, lambda: vector_arrow.quantize_arrow(emb)),
-        "kmeans_assign": (VEC_ROWS, lambda: similarity.kmeans_assign(
+        ),
+        "vector_quantize_arrow": lambda: vector_arrow.quantize_arrow(emb),
+        "kmeans_assign": lambda: similarity.kmeans_assign(
             emb, emb.filter(F.col("vec_id") < 32)
-        )),
-        "kmeans_assign_arrow": (VEC_ROWS, lambda: vector_arrow.kmeans_assign_arrow(
+        ),
+        "kmeans_assign_arrow": lambda: vector_arrow.kmeans_assign_arrow(
             emb, emb.filter(F.col("vec_id") < 32)
-        )),
-        "knn_graph": (knn_rows, lambda: similarity.knn_graph(
+        ),
+        "knn_graph": lambda: similarity.knn_graph(
             emb.filter(F.col("vec_id") < knn_rows), 5
-        )),
-        "knn_graph_arrow": (knn_rows, lambda: vector_arrow.knn_graph_arrow(
+        ),
+        "knn_graph_arrow": lambda: vector_arrow.knn_graph_arrow(
             emb.filter(F.col("vec_id") < knn_rows), 5
-        )),
+        ),
         # arrow-only at this size: the native pair stage is the
         # correctness baseline (headline bench), ~100x slower here
-        "semantic_dedup_arrow": (sem_rows, lambda: vector_arrow.semantic_dedup_arrow(
+        "semantic_dedup_arrow": lambda: vector_arrow.semantic_dedup_arrow(
             emb.filter(F.col("vec_id") < sem_rows),
             emb.filter(F.col("vec_id") < 64), 0.7,
-        )),
+        ),
         # the composed FAISS shape: 100 queries ADC-scored against the
         # 1M corpus, restricted to each query's coarse cell
-        "ivf_pq_topk": (VEC_ROWS, lambda: similarity.ivf_pq_topk(
+        "ivf_pq_topk": lambda: similarity.ivf_pq_topk(
             emb.filter(F.col("vec_id") < 100), emb,
             similarity.pq_codebooks(emb.filter(F.col("vec_id") < 32), 4), 5, 4,
-        )),
+        ),
         # same search with the Arrow encode kernel (the cost is the
         # corpus encode; scoring joins are JVM-side either way)
-        "ivf_pq_topk_arrow": (VEC_ROWS, lambda: similarity.ivf_pq_topk(
+        "ivf_pq_topk_arrow": lambda: similarity.ivf_pq_topk(
             emb.filter(F.col("vec_id") < 100), emb,
             (cb := similarity.pq_codebooks(
                 emb.filter(F.col("vec_id") < 32), 4)), 5, 4,
             encoded=vector_arrow.pq_encode_arrow(emb, cb, 4),
-        )),
+        ),
     }
-    out: dict[str, object] = {"rows": VEC_ROWS, "dim": VEC_DIM, "queries": {}}
-    for name, (n, build) in shapes.items():
-        best = float("inf")
-        for _ in range(2):
-            s = time.perf_counter()
-            build().write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - s)
-            spark.catalog.clearCache()
-        out["queries"][name] = {
-            "sec": round(best, 3),
-            "vecs_per_sec": round(n / best),
-        }
-    return out
+    rows = dict.fromkeys(shapes, VEC_ROWS)
+    rows.update(knn_graph=knn_rows, knn_graph_arrow=knn_rows,
+                semantic_dedup_arrow=sem_rows)
+    return {"rows": VEC_ROWS, "dim": VEC_DIM,
+            "queries": time_shapes(shapes, vecs_per_sec=rows)}
+
+
+def _mean_recall(approx, gt, k: int) -> float:
+    from pyspark.sql import functions as F
+
+    from nexus_processor_spark.operators import similarity
+
+    r = similarity.recall_at_k(approx, gt, k).agg(
+        F.avg("recall").alias("r")).first()["r"]
+    return round(float(r), 4)
+
+
+def _search_row(build, n_q: int, recall=None) -> dict:
+    """One search config: a single timed noop-sink run, then recall@10
+    of a fresh run (an eval, outside the timed window; exact search
+    without ``recall`` reads 1.0)."""
+    t = measure(lambda: sink(build()))
+    return {"sec": round(t, 3),
+            "recall_at_10": recall(build()) if recall else 1.0,
+            "qps": round(n_q / t, 1)}
 
 
 def run_ann(spark) -> dict[str, object]:
-    """The ANN quality-cost curve (VERDICT r5 next #3): recall@10 vs
-    latency at 250k x 64-dim, 100 queries, against brute-force ground
-    truth. The nprobe dial (1..16 of 64 coarse cells) is THE 100 TB
-    cost model — single-probe scans ~1/64 of the corpus, brute force
-    scans all of it; this section measures what each step of the dial
-    actually buys. ``int8`` is the 4x-shrunk full scan; ``ivf_pq`` is
-    the composed FAISS shape (own-cell probe + ADC). Recall is computed
-    OUTSIDE the timed window (it's an eval, not part of the search).
-    250k rows + single timed runs keep the whole sweep inside the bench
+    """The ANN quality-cost curve: recall@10 vs latency at 250k x 64-dim,
+    100 queries, against brute-force ground truth. The nprobe dial
+    (1..16 of 64 coarse cells) is THE 100 TB cost model — single-probe
+    scans ~1/64 of the corpus, brute force scans all of it; this section
+    measures what each step of the dial buys. ``int8`` is the 4x-shrunk
+    full scan; ``ivf_pq`` is the composed FAISS shape (own-cell probe +
+    ADC). 250k rows + single timed runs keep the sweep inside the bench
     budget — the dial positions, not absolute throughput, are the
     artifact (vecbench carries the 1M-row throughput rows)."""
     from pyspark.sql import functions as F
 
     from nexus_processor_spark.functions import vector
-    from nexus_processor_spark.operators import similarity
+    from nexus_processor_spark.operators import similarity, vector_arrow
 
     ensure_big_vecs(spark)
     ann_rows = 250_000
@@ -1402,40 +1199,20 @@ def run_ann(spark) -> dict[str, object]:
         "vec_id", F.col("centroid_id").alias("cell")
     ).localCheckpoint(eager=True)
 
-    def timed(build):
-        s = time.perf_counter()
-        build().write.format("noop").mode("overwrite").save()
-        el = time.perf_counter() - s
-        spark.catalog.clearCache()
-        return el
-
-    def mean_recall(approx) -> float:
-        r = similarity.recall_at_k(approx, gt, k).agg(
-            F.avg("recall").alias("r")).first()["r"]
-        return round(float(r), 4)
-
-    out: dict[str, object] = {
-        "rows": ann_rows, "dim": VEC_DIM, "k": k, "n_queries": n_q,
-        "configs": [],
-    }
-    t_brute = timed(lambda: similarity.brute_force_topk(queries, emb, k))
+    configs = [{"config": "brute_force", **_search_row(
+        lambda: similarity.brute_force_topk(queries, emb, k), n_q)}]
     gt = spark.createDataFrame(
         similarity.brute_force_topk(queries, emb, k)
         .select("query_id", "vec_id").toPandas()
     )
-    out["configs"].append({
-        "config": "brute_force", "sec": round(t_brute, 3),
-        "recall_at_10": 1.0, "qps": round(n_q / t_brute, 1),
-    })
+    recall = lambda approx: _mean_recall(approx, gt, k)  # noqa: E731
+
+    def add(config: str, build) -> None:
+        configs.append({"config": config, **_search_row(build, n_q, recall)})
+
     for nprobe in (1, 2, 4, 8, 16):
-        build = lambda: similarity.ivf_multiprobe_topk(  # noqa: E731
-            queries, emb, centroids, k, nprobe=nprobe, cells=cells)
-        t = timed(build)
-        out["configs"].append({
-            "config": f"ivf_nprobe_{nprobe}", "sec": round(t, 3),
-            "recall_at_10": mean_recall(build()),
-            "qps": round(n_q / t, 1),
-        })
+        add(f"ivf_nprobe_{nprobe}", lambda: similarity.ivf_multiprobe_topk(
+            queries, emb, centroids, k, nprobe=nprobe, cells=cells))
     # int8 scores by the raw integer dot, which orders like cosine only
     # over unit vectors — quantize the NORMALIZED corpus. MATERIALIZE
     # the normalized vectors (production stores them): leaving
@@ -1446,64 +1223,38 @@ def run_ann(spark) -> dict[str, object]:
         "vec_id", vector.l2_normalize(F.col("embedding")).alias("embedding")
     ).localCheckpoint(eager=True)
     nq = nemb.filter(F.col("vec_id") < 100)
-    t = timed(lambda: similarity.int8_topk(nq, nemb, k))
-    out["configs"].append({
-        "config": "int8_scan", "sec": round(t, 3),
-        "recall_at_10": mean_recall(similarity.int8_topk(nq, nemb, k)),
-        "qps": round(n_q / t, 1),
-    })
-    # the PRODUCTION int8 shape (VERDICT r6 next #3): binary-packed
-    # codes built at ingest (64 B/vector — the 8x-shrunk scan tier),
-    # float32-GEMM integer candidate scan, exact float re-rank of the
-    # top-C only. int8_scan above is the oracle-exactness form; this is
-    # the one that must beat brute-force qps at >= nprobe_16 recall.
-    from nexus_processor_spark.operators import vector_arrow
-
+    add("int8_scan", lambda: similarity.int8_topk(nq, nemb, k))
+    # the production int8 shape: binary-packed codes built at ingest
+    # (64 B/vector — the 8x-shrunk scan tier), float32-GEMM integer
+    # candidate scan, exact float re-rank of the top-C only. int8_scan
+    # above is the oracle-exactness form; this is the one that must beat
+    # brute-force qps at >= nprobe_16 recall.
     codes = vector_arrow.pack_int8_codes(nemb).localCheckpoint(eager=True)
     for cand in (50, 100):
-        build = lambda: similarity.int8_rerank_topk(  # noqa: E731
-            nq, nemb, k, candidates=cand, codes=codes)
-        t = timed(build)
-        out["configs"].append({
-            "config": f"int8_rerank_cand{cand}", "sec": round(t, 3),
-            "recall_at_10": mean_recall(build()),
-            "qps": round(n_q / t, 1),
-        })
-    # IVF x int8 COMPOSED (VERDICT r8 next #6): the packed candidate
-    # scan restricted to each query's nprobe nearest coarse cells, then
-    # the same float re-rank — cell pruning and byte shrink multiply.
-    # Cells/codes built on the NORMALIZED corpus (int8 dot orders like
-    # cosine only over unit vectors; probe selection must live in the
-    # same space as the cell assignment), both at ingest time, outside
-    # the timed window like every other index above.
+        add(f"int8_rerank_cand{cand}", lambda: similarity.int8_rerank_topk(
+            nq, nemb, k, candidates=cand, codes=codes))
+    # IVF x int8 composed: the packed candidate scan restricted to each
+    # query's nprobe nearest coarse cells, then the same float re-rank —
+    # cell pruning and byte shrink multiply. Cells/codes are built on the
+    # NORMALIZED corpus (probe selection must live in the same space as
+    # the cell assignment), at ingest time, outside the timed window.
     ncents = nemb.filter(F.col("vec_id") < 64)
     cells_n = similarity.kmeans_assign(nemb, ncents).select(
         "vec_id", F.col("centroid_id").alias("cell")
     ).localCheckpoint(eager=True)
     codes_c = codes.join(cells_n, "vec_id").localCheckpoint(eager=True)
     for nprobe in (16, 32):
-        build = lambda: similarity.ivf_int8_rerank_topk(  # noqa: E731
-            nq, nemb, ncents, k, nprobe=nprobe, candidates=100,
-            cells=cells_n, codes=codes_c)
-        t = timed(build)
-        out["configs"].append({
-            "config": f"ivf_int8_nprobe{nprobe}_cand100",
-            "sec": round(t, 3),
-            "recall_at_10": mean_recall(build()),
-            "qps": round(n_q / t, 1),
-        })
+        add(f"ivf_int8_nprobe{nprobe}_cand100",
+            lambda: similarity.ivf_int8_rerank_topk(
+                nq, nemb, ncents, k, nprobe=nprobe, candidates=100,
+                cells=cells_n, codes=codes_c))
     # composed IVF-PQ, the FAISS recipe end to end: per-subspace
     # codebooks TRAINED on a 5k sample (seed-based codebooks measured
     # recall ~0.1 — quantization error on random seeds is as big as the
     # distances), corpus PQ-encoded at INGEST time (Arrow kernel,
-    # outside the timed window, like the cell assignment), own-cell
-    # probe (recall capped by ivf_nprobe_1's)
-    from nexus_processor_spark.operators import vector_arrow
-
-    # PQ ranks by L2 of the reconstructed vectors; over UNIT vectors L2
-    # order == cosine order exactly (||a-b||^2 = 2 - 2cos), so encode
-    # the normalized corpus — unnormalized PQ against the cosine ground
-    # truth measured recall ~0.1 regardless of codebook quality
+    # outside the timed window), own-cell probe. PQ ranks by L2 of the
+    # reconstructed vectors; over UNIT vectors L2 order == cosine order
+    # exactly (||a-b||^2 = 2 - 2cos), so encode the normalized corpus.
     sample = nemb.filter(F.col("vec_id") < 5000)
     m, dim = 8, VEC_DIM
     sub = dim // m
@@ -1535,30 +1286,30 @@ def run_ann(spark) -> dict[str, object]:
     # CANDIDATE GENERATOR: retrieve top-C by ADC, re-rank candidates
     # exactly. recall here = true top-10 captured in the candidate set.
     for cand in (10, 100, 500):
-        build = lambda: similarity.pq_topk(  # noqa: E731
-            nq, nemb, cb, cand, m, encoded=enc)
-        t = timed(build)
-        out["configs"].append({
-            "config": f"pq_m8_cand{cand}", "sec": round(t, 3),
-            "recall_at_10": mean_recall(build()),
-            "qps": round(n_q / t, 1),
-        })
-    return out
+        add(f"pq_m8_cand{cand}", lambda: similarity.pq_topk(
+            nq, nemb, cb, cand, m, encoded=enc))
+    return {"rows": ann_rows, "dim": VEC_DIM, "k": k, "n_queries": n_q,
+            "configs": configs}
 
 
 def run_ann_1m(spark) -> dict[str, object]:
-    """The rerank/composed story at FULL vecbench scale (VERDICT r8
-    next #9): 1M x 64-dim, 100 queries — 4x the annbench corpus, where
-    the packed-tier scan actually dominates the fixed per-query
-    overhead and cell pruning starts paying. Brute force is timed for
-    the ground truth AND as the exact-search baseline row; the
-    composed configs restrict the packed scan to nprobe/64 of the
-    corpus. Index artifacts (normalization, cells, packed codes) are
-    ingest-time, built outside every timed window."""
+    """The rerank/composed story at full vecbench scale: 1M x 64-dim,
+    100 queries — 4x the annbench corpus, where the packed-tier scan
+    dominates the fixed per-query overhead and cell pruning starts
+    paying. Brute force is timed for the ground truth AND as the
+    exact-search baseline row; the composed configs restrict the packed
+    scan to nprobe/64 of the corpus. Index artifacts (normalization,
+    cells, packed codes) are ingest-time, built outside every timed
+    window."""
+    import shutil
+    import tempfile
+
     from pyspark.sql import functions as F
 
     from nexus_processor_spark.functions import vector
-    from nexus_processor_spark.operators import similarity, vector_arrow
+    from nexus_processor_spark.operators import (
+        similarity, vector_arrow, vector_index,
+    )
 
     ensure_big_vecs(spark)
     emb = spark.read.parquet(f"{VEC_DIR}/embeddings.parquet")
@@ -1568,116 +1319,77 @@ def run_ann_1m(spark) -> dict[str, object]:
     ).localCheckpoint(eager=True)
     nq = nemb.filter(F.col("vec_id") < n_q)
 
-    def timed(build):
-        s = time.perf_counter()
-        build().write.format("noop").mode("overwrite").save()
-        el = time.perf_counter() - s
-        spark.catalog.clearCache()
-        return el
-
-    out: dict[str, object] = {
-        "rows": VEC_ROWS, "dim": VEC_DIM, "k": k, "n_queries": n_q,
-        "configs": [],
-    }
-    t_brute = timed(lambda: similarity.brute_force_topk(nq, nemb, k))
+    configs = [{"config": "brute_force", **_search_row(
+        lambda: similarity.brute_force_topk(nq, nemb, k), n_q)}]
     gt = spark.createDataFrame(
         similarity.brute_force_topk(nq, nemb, k)
         .select("query_id", "vec_id").toPandas()
     ).localCheckpoint(eager=True)
+    recall = lambda approx: _mean_recall(approx, gt, k)  # noqa: E731
 
-    def mean_recall(approx) -> float:
-        r = similarity.recall_at_k(approx, gt, k).agg(
-            F.avg("recall").alias("r")).first()["r"]
-        return round(float(r), 4)
+    def add(config: str, build) -> None:
+        configs.append({"config": config, **_search_row(build, n_q, recall)})
 
-    out["configs"].append({
-        "config": "brute_force", "sec": round(t_brute, 3),
-        "recall_at_10": 1.0, "qps": round(n_q / t_brute, 1),
-    })
+    out: dict[str, object] = {
+        "rows": VEC_ROWS, "dim": VEC_DIM, "k": k, "n_queries": n_q,
+        "configs": configs,
+    }
     ncents = nemb.filter(F.col("vec_id") < 64)
     cells_n = similarity.kmeans_assign(nemb, ncents).select(
         "vec_id", F.col("centroid_id").alias("cell")
     ).localCheckpoint(eager=True)
     codes = vector_arrow.pack_int8_codes(nemb).localCheckpoint(eager=True)
     codes_c = codes.join(cells_n, "vec_id").localCheckpoint(eager=True)
-    build = lambda: similarity.int8_rerank_topk(  # noqa: E731
-        nq, nemb, k, candidates=100, codes=codes)
-    t = timed(build)
-    out["configs"].append({
-        "config": "int8_rerank_cand100", "sec": round(t, 3),
-        "recall_at_10": mean_recall(build()),
-        "qps": round(n_q / t, 1),
-    })
+    add("int8_rerank_cand100", lambda: similarity.int8_rerank_topk(
+        nq, nemb, k, candidates=100, codes=codes))
     # nprobe 32 = the half-corpus dial position; 48 = the measured
     # recall>=0.98 point on this near-isotropic corpus (IVF's worst
     # case: cells barely concentrate neighbors, so high recall needs a
     # large probed fraction — real embedding corpora cluster far
     # harder and reach it at much smaller nprobe)
     for nprobe in (32, 48):
-        build = lambda: similarity.ivf_int8_rerank_topk(  # noqa: E731
-            nq, nemb, ncents, k, nprobe=nprobe, candidates=100,
-            cells=cells_n, codes=codes_c)
-        t = timed(build)
-        out["configs"].append({
-            "config": f"ivf_int8_nprobe{nprobe}_cand100",
-            "sec": round(t, 3),
-            "recall_at_10": mean_recall(build()),
-            "qps": round(n_q / t, 1),
-        })
+        add(f"ivf_int8_nprobe{nprobe}_cand100",
+            lambda: similarity.ivf_int8_rerank_topk(
+                nq, nemb, ncents, k, nprobe=nprobe, candidates=100,
+                cells=cells_n, codes=codes_c))
     # the PERSISTED tier (operators/vector_index): packed codes parquet
     # partitioned by cell on disk — the probe-union isin partition-
     # prunes, so the candidate scan READS ~nprobe/64 of the index bytes
     # (the other configs serve from memory via localCheckpoint). Build
     # is ingest-time, outside the timed window.
-    import shutil
-    import tempfile
-
-    from nexus_processor_spark.operators import vector_index
-
     idx_dir = tempfile.mkdtemp(prefix="bench_vidx_")
     try:
         vector_index.build_ivf_int8_index(nemb, ncents, idx_dir)
-        for nprobe in (48,):
-            build = lambda: vector_index.search(  # noqa: E731
-                spark, nq, nemb, idx_dir, k,
-                nprobe=nprobe, candidates=100)
-            t = timed(build)
-            out["configs"].append({
-                "config": f"ivf_int8_disk_nprobe{nprobe}_cand100",
-                "sec": round(t, 3),
-                "recall_at_10": mean_recall(build()),
-                "qps": round(n_q / t, 1),
-            })
-        # interleaved disk-vs-memory A/B (VERDICT r10 next #4): r10
-        # committed two CONTRADICTORY ratios for the same comparison
-        # (0.97x standalone vs 0.67x inside the full sweep) because
-        # sub-5s qps numbers swing with box state (JIT, page cache,
-        # GC). Alternating the two configs in one process, >= 5 reps
+        add("ivf_int8_disk_nprobe48_cand100", lambda: vector_index.search(
+            spark, nq, nemb, idx_dir, k, nprobe=48, candidates=100))
+        # interleaved disk-vs-memory A/B: sub-5 s qps numbers swing with
+        # box state (JIT, page cache, GC), and a standalone pair once
+        # read 0.97x where the full sweep read 0.67x. Alternating the
+        # two configs in one process, 5 reps each after one warm-up of
         # each, cancels that state pairwise; the PAIRED per-rep ratio
-        # is the number (target >= 0.85x disk/memory).
-        import statistics as _st
-        mem_build = lambda: similarity.ivf_int8_rerank_topk(  # noqa: E731
+        # is the number.
+        mem_build = lambda: sink(similarity.ivf_int8_rerank_topk(  # noqa: E731
             nq, nemb, ncents, k, nprobe=48, candidates=100,
-            cells=cells_n, codes=codes_c)
-        disk_build = lambda: vector_index.search(  # noqa: E731
-            spark, nq, nemb, idx_dir, k, nprobe=48, candidates=100)
-        timed(mem_build)  # warm both plan shapes outside the reps
-        timed(disk_build)
+            cells=cells_n, codes=codes_c))
+        disk_build = lambda: sink(vector_index.search(  # noqa: E731
+            spark, nq, nemb, idx_dir, k, nprobe=48, candidates=100))
+        measure(mem_build)
+        measure(disk_build)
         mem_secs, disk_secs, pair_ratio = [], [], []
         for _ in range(5):
-            m = timed(mem_build)
-            d = timed(disk_build)
-            mem_secs.append(round(m, 3))
-            disk_secs.append(round(d, 3))
-            pair_ratio.append(round(m / d, 3))  # disk qps / mem qps
+            mem = measure(mem_build)
+            disk = measure(disk_build)
+            mem_secs.append(round(mem, 3))
+            disk_secs.append(round(disk, 3))
+            pair_ratio.append(round(mem / disk, 3))  # disk qps / mem qps
         out["disk_vs_memory_ab"] = {
             "nprobe": 48, "candidates": 100, "reps": 5,
             "interleaved": True,
             "mem_sec": mem_secs, "disk_sec": disk_secs,
             "paired_qps_ratio": pair_ratio,
-            "median_qps_ratio": round(_st.median(pair_ratio), 3),
+            "median_qps_ratio": round(statistics.median(pair_ratio), 3),
         }
-        # ---- lifecycle drift audit (VERDICT r9 next #2) ----
+        # ---- lifecycle drift audit ----
         # 200k DISTRIBUTION-SHIFTED vectors append under the frozen
         # quantizer in 4 commits (files accrete; the shared shift pulls
         # them toward few cells). shifted = l2_normalize(g + s) with
@@ -1687,17 +1399,15 @@ def run_ann_1m(spark) -> dict[str, object]:
         # monotonically compressed, so the ground truth stays
         # SEPARABLE). Designs that let the shift dominate make all
         # 200k pairwise-near (~0.92-0.997) and the measurement
-        # collapses to prefilter tie-noise: recall ~0.07-0.42 for
+        # collapses to prefilter tie-noise (recall ~0.07-0.42 for
         # frozen AND retrained alike — a degenerate GT, not a drift
-        # signal (measured; kept here as a warning). Recall rows run
-        # candidates=1000 to ISOLATE the quantizer: cell probing is
-        # then the only approximation, so frozen-vs-retrained is pure
-        # drift cost — measured at 100k scale: nprobe=48 both 0.991;
-        # nprobe=8 frozen 0.80 vs retrained 0.97 (tight probing is
-        # where a stale quantizer bites; wide probing hides it). Cost
-        # rows (appended vs compacted) run the serving config
-        # (candidates=100) — the qps delta is what small-file
-        # accretion cost; results across compaction pinned by tests.
+        # signal). Recall rows run candidates=1000 to ISOLATE the
+        # quantizer: cell probing is then the only approximation, so
+        # frozen-vs-retrained is pure drift cost (tight probing is where
+        # a stale quantizer bites; wide probing hides it). Cost rows
+        # (appended vs compacted) run the serving config
+        # (candidates=100) — the qps delta is what small-file accretion
+        # costs; results across compaction are pinned by tests.
         n_shift = 200_000
         s_dim = 1.0 / (8 ** 0.5)  # |s| = 1 over dims 0-7
         shifted = nemb.filter(F.col("vec_id") < n_shift).select(
@@ -1722,39 +1432,33 @@ def run_ann_1m(spark) -> dict[str, object]:
             similarity.brute_force_topk(sq, union, k)
             .select("query_id", "vec_id").toPandas()
         ).localCheckpoint(eager=True)
+        recall_s = lambda approx: _mean_recall(approx, gt_s, k)  # noqa: E731
 
-        def recall_s(approx) -> float:
-            r = similarity.recall_at_k(approx, gt_s, k).agg(
-                F.avg("recall").alias("r")).first()["r"]
-            return round(float(r), 4)
+        def search(index_dir, nprobe, candidates):
+            return lambda: vector_index.search(
+                spark, sq, union, index_dir, k,
+                nprobe=nprobe, candidates=candidates)
 
         drift: dict[str, object] = {
             "appended_rows": n_shift,
             "cell_skew_after_appends": stats_drift["cell_skew"],
             "files_per_cell_max_after_appends":
                 stats_drift["files_per_cell_max"],
-            # the r11 maintenance advice (index_stats recommendation),
-            # evaluated on the audit's own drifted tier — the audit's
-            # measured cliffs are exactly what the field encodes
+            # index_stats' maintenance advice, evaluated on the audit's
+            # own drifted tier
             "recommendation_after_appends": stats_drift["recommendation"],
         }
         for nprobe in (48, 8):
-            build = lambda: vector_index.search(  # noqa: E731
-                spark, sq, union, idx_dir, k,
-                nprobe=nprobe, candidates=1000)
-            t_app = timed(build)
-            drift[f"frozen_appended_nprobe{nprobe}"] = {
-                "sec": round(t_app, 3), "recall_at_10": recall_s(build()),
-                "qps": round(n_q / t_app, 1)}
+            drift[f"frozen_appended_nprobe{nprobe}"] = _search_row(
+                search(idx_dir, nprobe, 1000), n_q, recall_s)
         # serving-config cost before/after compaction (cand=100)
-        build = lambda: vector_index.search(  # noqa: E731
-            spark, sq, union, idx_dir, k, nprobe=48, candidates=100)
-        t_acc = timed(build)
+        serve = search(idx_dir, 48, 100)
+        t_acc = measure(lambda: sink(serve()))
         drift["serving_cost_accreted"] = {
             "sec": round(t_acc, 3), "qps": round(n_q / t_acc, 1),
             "files": stats_drift["files"]}
         stats_comp = vector_index.compact_index(spark, idx_dir)
-        t_cmp = timed(build)
+        t_cmp = measure(lambda: sink(serve()))
         drift["serving_cost_compacted"] = {
             "sec": round(t_cmp, 3), "qps": round(n_q / t_cmp, 1),
             "files": stats_comp["files"]}
@@ -1771,14 +1475,8 @@ def run_ann_1m(spark) -> dict[str, object]:
                     F.pmod(F.col("vec_id"), F.lit(25_000)) == 0))
             vector_index.build_ivf_int8_index(union, rcents, rebuild_dir)
             for nprobe in (48, 8):
-                build_rb = lambda: vector_index.search(  # noqa: E731
-                    spark, sq, union, rebuild_dir, k,
-                    nprobe=nprobe, candidates=1000)
-                t_rb = timed(build_rb)
-                drift[f"rebuilt_retrained_nprobe{nprobe}"] = {
-                    "sec": round(t_rb, 3),
-                    "recall_at_10": recall_s(build_rb()),
-                    "qps": round(n_q / t_rb, 1)}
+                drift[f"rebuilt_retrained_nprobe{nprobe}"] = _search_row(
+                    search(rebuild_dir, nprobe, 1000), n_q, recall_s)
         finally:
             shutil.rmtree(rebuild_dir, ignore_errors=True)
         out["drift_audit"] = drift
@@ -1816,17 +1514,18 @@ def run_tables(spark) -> dict[str, object]:
             (F.pmod(F.xxhash64("id", F.lit(1)), F.lit(100_000)) / 100.0)
             .alias("x"),
         )
-        s = time.perf_counter()
         step = n // 8
-        for i in range(8):
-            snapshots.write_snapshot(
-                rows.filter((F.col("id") >= i * step)
-                            & (F.col("id") < (i + 1) * step)),
-                base_dir, mode="overwrite" if i == 0 else "append",
-                stats_cols=("id",),
-            )
-        out["snapshot_write_10m"] = {
-            "sec": round(time.perf_counter() - s, 3)}
+
+        def write_base() -> None:
+            for i in range(8):
+                snapshots.write_snapshot(
+                    rows.filter((F.col("id") >= i * step)
+                                & (F.col("id") < (i + 1) * step)),
+                    base_dir, mode="overwrite" if i == 0 else "append",
+                    stats_cols=("id",),
+                )
+
+        out["snapshot_write_10m"] = {"sec": round(measure(write_base), 3)}
         measures = [
             F.count("*").cast("long").alias("n"),
             F.round(F.sum("x"), 4).alias("sx"),
@@ -1838,12 +1537,10 @@ def run_tables(spark) -> dict[str, object]:
                 .withColumn("x", F.col("x") * 2)
                 .withColumn("deleted", F.lit(False))
             )
-            s = time.perf_counter()
-            cdc.maintain_agg_batch(
+            batch_secs.append(round(measure(lambda: cdc.maintain_agg_batch(
                 spark, base_dir, agg_dir, ch, "id", "grp", measures,
                 delete_col="deleted", version=b,
-            )
-            batch_secs.append(round(time.perf_counter() - s, 3))
+            )), 3))
         # batch 1 includes the agg view's cold full build
         out["ivm_trickle_10k_changes"] = {
             "cold_sec": batch_secs[0], "batch_secs": batch_secs[1:]}
@@ -1858,12 +1555,11 @@ def run_tables(spark) -> dict[str, object]:
         .alias("status"),
         (F.col("id") >= log_n // 2).cast("long").alias("seq"),
     )
-    s = time.perf_counter()
-    cnt = scd.scd2_history(log, "key", "seq",
-                           attr_cols=["status"]).count()
-    el = time.perf_counter() - s
+    counts: list = []
+    el = measure(lambda: counts.append(
+        scd.scd2_history(log, "key", "seq", attr_cols=["status"]).count()))
     out["scd2_history_5m"] = {
-        "sec": round(el, 3), "rows": cnt,
+        "sec": round(el, 3), "rows": counts[-1],
         "log_rows_per_sec": round(log_n / el),
     }
 
@@ -1872,25 +1568,99 @@ def run_tables(spark) -> dict[str, object]:
         F.col("id").alias("t"),
         (F.pmod(F.xxhash64("id"), F.lit(1000)) / 100.0).alias("x"),
     )
-    s = time.perf_counter()
-    smoothing.ewma_scan(series, "t", "x", 0.25, grid=100_000.0) \
-        .write.format("noop").mode("overwrite").save()
-    el = time.perf_counter() - s
+    el = measure(lambda: sink(
+        smoothing.ewma_scan(series, "t", "x", 0.25, grid=100_000.0)))
     out["ewma_scan_20m"] = {
         "sec": round(el, 3), "points_per_sec": round(series_n / el)}
     return out
 
 
+# (name, fn(spark), est): ordered by signal value. ``est`` is the skip
+# threshold — a section starts only when at least that much budget
+# remains — calibrated to measured section walls. curatebench/annbench
+# run early: the wide-text doc sections leave old-gen churn behind that
+# OOMed a later multi-batch curation sweep.
+SECTIONS = (
+    ("scaling", run_scaling, 600.0),
+    ("bigbench", run_big, 700.0),
+    ("curatebench", run_curate, 1500.0),
+    ("annbench", run_ann, 400.0),
+    ("annbench1m", run_ann_1m, 700.0),
+    ("docsbench", run_docs, 800.0),
+    ("opsbench", run_ops, 300.0),
+    ("replaybench", run_replay, 150.0),
+    ("vecbench", run_vecs, 360.0),
+    ("tablebench", run_tables, 300.0),
+)
+SECTION_NAMES = tuple(name for name, _, _ in SECTIONS)
+
+
+def _context_stopped(spark) -> bool:
+    try:
+        return bool(spark.sparkContext._jsc.sc().isStopped())
+    except Exception:  # the JVM or its gateway is gone altogether
+        return True
+
+
+def run_sections(spark, sections, results: dict, persist,
+                 only=frozenset(), is_stopped=None) -> str | None:
+    """Run each ``(name, fn, est)`` section into ``results`` in order,
+    calling ``persist(results)`` after each. A section ``only`` omits is
+    left out (it carries from the prior artifact); one that would
+    overrun the budget gets a skip marker; one that raises gets an
+    error marker and the rest still run — unless the failure stopped the
+    SparkContext. Then every later section would fail at once, so that
+    section and all later ones get a ``{"context_lost": <section>}``
+    marker and are not attempted. Returns the section that lost the
+    context, or None."""
+    if is_stopped is None:
+        is_stopped = lambda: _context_stopped(spark)  # noqa: E731
+    lost = None
+    for name, fn, est in sections:
+        if only and name not in only:
+            continue
+        if lost is not None:
+            results[name] = {"context_lost": lost}
+        elif _remaining() < est:
+            _note(f"skip {name}: {_remaining():.0f}s left < est {est:.0f}s")
+            results[name] = {"skipped": f"budget ({BENCH_BUDGET_S:.0f}s)"}
+        else:
+            s = time.monotonic()
+            try:
+                results[name] = fn(spark)
+            except Exception as exc:
+                _note(f"{name} FAILED after {time.monotonic() - s:.1f}s: "
+                      f"{exc!r:.300}")
+                results[name] = {"error": f"{type(exc).__name__}: "
+                                          f"{str(exc)[:500]}"}
+                if is_stopped():
+                    lost = name
+                    results[name] = {"context_lost": name, **results[name]}
+                    _note(f"SparkContext stopped in {name}; "
+                          "later sections not attempted")
+            else:
+                _note(f"{name} done in {time.monotonic() - s:.1f}s")
+        persist(results)
+    return lost
+
+
 def main() -> None:
+    from concurrent.futures import ThreadPoolExecutor
+
+    from nexus_processor_spark import codegen_guard
+    from nexus_processor_spark.sources.tables import TESTDATA_TABLES, load_table
+    from perfbench import env
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
+    # spin moves with box and interpreter speed; taken at both ends of
+    # the sweep because the box drifts within a run
+    box = {**env.fingerprint(), "spin_ms_start": round(env.spin_ms(), 1)}
 
-    # codegen-fallback guard (VERDICT r10 next #2): route driver-JVM
-    # WARN+ logs to a file and grep it at the end — a janino bailout
-    # (64 KB method limit) runs interpreted while passing every
-    # correctness gate, so only the logs carry the signal
-    from nexus_processor_spark import codegen_guard
+    # codegen-fallback guard: a janino bailout (64 KB method limit) runs
+    # interpreted while passing every correctness gate, so only the
+    # driver-JVM log carries the signal
     guard_confs, guard_log = codegen_guard.capture_confs()
     spark = get_spark("nexus-bench", extra_confs=guard_confs)
     qs = registry.queries()
@@ -1898,103 +1668,59 @@ def main() -> None:
     # Warm the JVM/session so the first measured query isn't paying one-time
     # startup: codegen infra, Hadoop FS classes, and each table's footer.
     spark.range(1000).selectExpr("sum(id)").collect()
-    from nexus_processor_spark.sources.tables import TESTDATA_TABLES, load_table
     for t in TESTDATA_TABLES:
         load_table(spark, sf_dir, t).limit(1).count()
 
-    # One UNTIMED warm-up rep, then best-of-3 per query: the first
-    # executions of a plan shape pay JIT compilation of its generated
-    # code; later reps are the steady-state number a long-running
-    # cluster job actually sees. (Best-of-2 left ~20% JIT noise on the
-    # sub-second queries — r03's apparent timeslice_bank_interval/
-    # text_profile "drift" vs r01 reproduced as run-to-run variance,
-    # not a plan change; see COVERAGE.md. r11: a slower-JIT box showed
-    # even 3 reps insufficient for the widest HOF plans — a 10-rep
-    # probe measured dedup_minhash_pairs at 4.6/2.4/2.9/2.2/1.8...,
-    # i.e. rep 1 still ~2.5x steady state, so it is excluded outright.)
-    timings: dict[str, float] = {}
-    for name in HEADLINE:
-        best = float("inf")
-        for rep in range(4):
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            if rep > 0:  # rep 0 is the JIT warm-up, never recorded
-                best = min(best, time.perf_counter() - t0)
-            # Queries are timed independently: drop operator-internal
-            # persisted frames so one run's cache doesn't feed the next.
-            spark.catalog.clearCache()
-        timings[name] = round(best, 3)
-
-    _note(f"headline done: {round(sum(timings.values()), 3)}s over "
-          f"{len(timings)} queries")
-    # Emit the headline metric NOW: if a harness kills the optional
-    # data-scale sections below, this line already carries the contract
-    # JSON. The final print supersedes it (consumers take the last line).
-    print(json.dumps({
+    # One untimed JIT warm-up rep, then best-of-3 per query: the widest
+    # HOF plans still run ~2.5x steady state on their first rep.
+    timings = {
+        name: round(measure(lambda: sink(qs[name](spark, sf_dir)),
+                            reps=3, warmup=1), 3)
+        for name in HEADLINE
+    }
+    line = {
         "metric": "headline_queries_total_runtime",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "sf": sf,
         "cpus": CPUS,
-    }), flush=True)
+    }
+    _note(f"headline done: {line['value']}s over {len(timings)} queries")
+    # Emitted NOW so a harness kill during the sections still leaves the
+    # contract line on stdout.
+    print(json.dumps(line), flush=True)
 
-    # Headline BATCHED wall-clock (r12, guide §2.6): the 18 queries are
-    # independent, and at sf0.1 most are 3-15 AQE job round-trips of
-    # ~50-100 ms each — the orchestration floor, not compute. A bounded
-    # thread pool overlaps those round-trips (job N+1's tasks back-fill
-    # executors idled by job N's tail), which is how a real multi-query
-    # workload would drive this engine. This is an ADDITIONAL
-    # measurement with a DIFFERENT methodology (concurrent wall-clock,
-    # no per-query isolation): ``value`` and ``queries`` above keep the
-    # sequential warm-up + best-of-3 methodology of every prior round,
-    # so round-over-round comparisons are untouched; the batched total
-    # is reported as its own field. clearCache runs once per rep, not
-    # per query — a per-query clear would unpersist a CONCURRENT
-    # query's operator-internal projection mid-flight.
-    # 8 workers measured as the knee on local[32] at sf0.1 (batched
-    # wall: 2 workers 6.05s, 4 3.3-4.1s, 6 3.44s, 8 2.85s, 12 2.86s vs
-    # ~10s sequential): these are AQE-floor jobs of a few tasks each,
-    # so far more than the guide's 2-3 in-flight heavy jobs overlap
-    # profitably before the scheduler saturates.
-    batch_workers = int(os.environ.get("SPARK_GRAFT_BATCH_WORKERS", "8"))
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _run_one(name: str) -> None:
+    # Batched headline: the queries are independent and at sf0.1 mostly
+    # AQE job round-trips, so a thread pool overlaps them the way a
+    # multi-query workload drives the engine. A separate figure:
+    # ``value``/``queries`` keep the sequential method. The cache is
+    # cleared per rep, never per query: that would unpersist a
+    # concurrent query's operator-internal frame mid-flight.
+    def run_one(name: str) -> None:
         spark.sparkContext.setJobDescription(f"batched: {name}")
-        qs[name](spark, sf_dir).write.format("noop").mode(
-            "overwrite").save()
+        sink(qs[name](spark, sf_dir))
 
-    batched_best = float("inf")
-    for _ in range(2):  # best-of-2: plans are already JIT-warm from the
-        t0 = time.perf_counter()  # sequential reps above
-        with ThreadPoolExecutor(max_workers=batch_workers) as pool:
-            list(pool.map(_run_one, HEADLINE))
-        batched_best = min(batched_best, time.perf_counter() - t0)
-        spark.catalog.clearCache()
+    def run_batch() -> None:
+        with ThreadPoolExecutor(max_workers=BATCH_WORKERS) as pool:
+            list(pool.map(run_one, HEADLINE))
+
     batched = {
-        "wall_sec": round(batched_best, 3),
-        "workers": batch_workers,
+        "wall_sec": round(measure(run_batch, reps=2), 3),
+        "workers": BATCH_WORKERS,
         "reps": 2,
-        "sequential_sec": round(sum(timings.values()), 3),
+        "sequential_sec": line["value"],
         "note": "concurrent wall-clock over the same queries; "
                 "'value'/'queries' keep the sequential methodology",
     }
-    _note(f"headline batched ({batch_workers} workers): "
+    _note(f"headline batched ({BATCH_WORKERS} workers): "
           f"{batched['wall_sec']}s wall vs "
           f"{batched['sequential_sec']}s sequential")
 
-    # Artifact persistence is INCREMENTAL: rewrite the sidecar after the
-    # headline and again after every completed section, so a harness
-    # kill mid-sweep (the driver's bench timeout, an OOM in a later
-    # section) keeps everything measured so far — sections not yet run
-    # carry forward from the pre-run artifact with provenance markers.
-    # `prior` is snapshotted ONCE so our own intermediate writes are
-    # never mistaken for a previous run's measurements.
-    # Per-core-count artifact (r12, VERDICT r11 next #2): the 8-core
-    # scaling rerun must never clobber the 32-core sweep. 32 cores keeps
-    # the legacy name (every committed artifact so far); any other core
-    # count gets its own file.
+    # The artifact is rewritten after every section, so a kill mid-sweep
+    # keeps everything measured so far. ``prior`` is read ONCE so our own
+    # intermediate writes are never mistaken for a previous run. 32 cores
+    # keeps the legacy file name; other core counts get their own file.
     default_sections = ("BENCH_SECTIONS.json" if CPUS == 32
                         else f"BENCH_SECTIONS_c{CPUS}.json")
     sections_path = os.environ.get(
@@ -2007,32 +1733,16 @@ def main() -> None:
     except (OSError, ValueError):
         prior = {}
 
-    box = box_fingerprint()
-
     def persist_artifact(results: dict, guard: dict | None = None) -> None:
-        full: dict = {
-            "metric": "headline_queries_total_runtime",
-            "value": round(sum(timings.values()), 3),
-            "unit": "sec",
-            "queries": timings,
-            "sf": sf,
-            "cpus": CPUS,
-            "box": box,
-            "headline_batched": batched,
-        }
+        full: dict = {**line, "box": box, "headline_batched": batched}
         if guard is not None:
             full["codegen_fallbacks"] = len(guard["hits"])
             full["codegen_fallbacks_allowed"] = len(guard["allowed"])
-        # EVERY section lands in the artifact keyed by its name (r5
-        # shipped a hand-maintained copy list that silently dropped
-        # tablebench)
-        for name, val in results.items():
-            if val is not None:
-                full[name] = val
+        full.update((k, v) for k, v in results.items() if v is not None)
         carry_sections(full, prior)
         try:
             # atomic: a kill mid-write must not truncate the artifact
-            # the next write's carry pass (or the judge) reads
+            # the next write's carry pass reads
             tmp = sections_path + ".tmp"
             with open(tmp, "w") as fh:
                 json.dump(full, fh, indent=1)
@@ -2041,86 +1751,33 @@ def main() -> None:
             _note(f"could not write {sections_path}: {exc}")
 
     # SPARK_GRAFT_BENCH_ONLY=curatebench,annbench1m reruns just those
-    # sections; the others carry forward from the prior artifact with
-    # provenance markers instead of being dropped — the safe form of
-    # the headline-only debug rerun that cost r11 a finished sweep.
+    # sections; the others carry forward from the prior artifact
+    # (``=headline`` matches none: a headline-only run).
     only = {s.strip()
             for s in os.environ.get("SPARK_GRAFT_BENCH_ONLY", "").split(",")
             if s.strip()}
     results: dict[str, object] = {}
     persist_artifact(results)
-    if os.environ.get("SPARK_GRAFT_BIGBENCH", "1") != "0":
-        # Ordered by signal value; each checks the remaining budget and
-        # records a skip marker instead of risking a hard kill.
-        # curatebench/annbench run EARLY: they are the round's headline
-        # artifacts, and the wide-text doc sections leave enough old-gen
-        # churn behind to OOM a later multi-batch curation sweep
-        # (measured at 16g)
-        # Estimates are skip thresholds (a section only starts when at
-        # least this much budget remains); r12 re-calibrated them to
-        # measured section walls so a section no longer starts at
-        # remaining ~= a third of its real cost and blows through the
-        # driver's timeout.
-        sections = (
-            ("scaling", lambda: run_scaling(spark, qs), 600.0),
-            ("bigbench", lambda: run_big(spark, qs), 700.0),
-            ("curatebench", lambda: run_curate(spark), 1500.0),
-            ("annbench", lambda: run_ann(spark), 400.0),
-            # r10: +drift/compaction audit (~3-4 min)
-            ("annbench1m", lambda: run_ann_1m(spark), 700.0),
-            ("docsbench", lambda: run_docs(spark), 800.0),
-            ("opsbench", lambda: run_ops(spark), 300.0),
-            ("replaybench", lambda: run_replay(spark, sf_dir), 150.0),
-            ("vecbench", lambda: run_vecs(spark), 360.0),
-            ("tablebench", lambda: run_tables(spark), 300.0),
-        )
-        for name, fn, est in sections:
-            if only and name not in only:
-                continue  # absent from results -> carried from prior
-            if _remaining() < est:
-                _note(f"skip {name}: {_remaining():.0f}s left < est {est:.0f}s")
-                results[name] = {"skipped": f"budget ({BENCH_BUDGET_S:.0f}s)"}
-                continue
-            s = time.monotonic()
-            try:
-                results[name] = fn()
-            except Exception as exc:  # one section must not kill the rest
-                # (the headline contract line is already on stdout, and
-                # completed sections are already persisted — record the
-                # failure in the artifact instead of aborting the run)
-                _note(f"{name} FAILED after {time.monotonic() - s:.1f}s: "
-                      f"{exc!r:.300}")
-                results[name] = {"error": f"{type(exc).__name__}: "
-                                          f"{str(exc)[:500]}"}
-            else:
-                _note(f"{name} done in {time.monotonic() - s:.1f}s")
-            persist_artifact(results)
+    lost = run_sections(spark, SECTIONS, results, persist_artifact, only)
 
-    total = round(sum(timings.values()), 3)
-    # the guard reads the log BEFORE spark.stop() flushes/loses it;
-    # hits are flagged in the artifact (the oracle harness is the
-    # red/green gate — tools/check_oracle.py exits 1 on a hit)
+    # the guard reads the log BEFORE spark.stop() flushes/loses it; hits
+    # are flagged in the artifact (tools/check_oracle.py is the gate)
     guard = codegen_guard.scan(guard_log)
     if guard["hits"]:
         _note(f"CODEGEN FALLBACK DETECTED ({len(guard['hits'])} lines) "
               f"— see {guard_log}")
-        for line in guard["hits"][:10]:
-            _note(f"  {line[:200]}")
-    # The driver's tail capture parses only the LAST stdout line; the full
-    # per-section payload overflows it (BENCH_r03 came back parsed:null).
-    # The sidecar holds the full result; the final line stays compact.
+        for hit in guard["hits"][:10]:
+            _note(f"  {hit[:200]}")
+    box["spin_ms_end"] = round(env.spin_ms(), 1)
     persist_artifact(results, guard)
     _note(f"full bench sections written to {sections_path}")
-    print(json.dumps({
-        "metric": "headline_queries_total_runtime",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "sf": sf,
-        "cpus": CPUS,
-        "batched_wall_sec": batched["wall_sec"],
-        "codegen_fallbacks": len(guard["hits"]),
-    }), flush=True)
+    # Consumers parse only the LAST stdout line, so it stays compact;
+    # the sidecar holds the full result.
+    final = {**line, "batched_wall_sec": batched["wall_sec"],
+             "codegen_fallbacks": len(guard["hits"])}
+    if lost is not None:
+        final["context_lost"] = lost
+    print(json.dumps(final), flush=True)
     spark.stop()
 
 

@@ -94,15 +94,21 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_topk_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape: 3-way join -> agg -> deterministic top-10 (O4)."""
+    """TPC-H Q3 shape: 3-way join -> agg -> deterministic top-10 (O4).
+
+    Revenue is summed exactly in DECIMAL: a double sum rounded to 2
+    places depends on accumulation order at an exact .xx5 tie, so the
+    partitioning could flip the last cent."""
     cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < _ntz("1998-03-15"))
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > _ntz("1998-03-15"))
+    price = F.col("l_extendedprice").cast("decimal(15,2)")
+    disc = F.col("l_discount").cast("decimal(15,2)")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
         .groupBy("l_orderkey", "o_orderdate")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
+        .agg(F.round(F.sum(price * (1 - disc)), 2).cast("double").alias("revenue"))
         .orderBy(F.desc("revenue"), "l_orderkey")
         .limit(10)
     )
@@ -1690,7 +1696,9 @@ ORACLE = {
     """,
     "topk_revenue": """
         SELECT l_orderkey, o_orderdate,
-               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+               CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
+                              * (1 - CAST(l_discount AS DECIMAL(15,2)))), 2)
+                    AS DOUBLE) AS revenue
         FROM lineitem
         JOIN orders ON l_orderkey = o_orderkey
         JOIN customer ON o_custkey = c_custkey

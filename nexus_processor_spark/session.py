@@ -62,6 +62,10 @@ DEFAULT_CONFS: dict[str, str] = {
     "spark.sql.cteRecursionLevelLimit": "256",
     # local[] has no dynamic executors; partition counts come from cores.
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+}
+
+# Read only when the JVM starts: a live session refuses to set them.
+LAUNCH_CONFS: dict[str, str] = {
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     "spark.ui.enabled": "false",
 }
@@ -97,22 +101,21 @@ def get_spark(app_name: str = "nexus-processor-spark", master: str | None = None
         master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
     if master:
         builder = builder.master(master)
-    for k, v in {**DEFAULT_CONFS, **(extra_confs or {})}.items():
+    confs = {**LAUNCH_CONFS, **DEFAULT_CONFS, **(extra_confs or {})}
+    for k, v in confs.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
 
 def configure(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable engine defaults to an existing session.
+    """Apply the engine's runtime defaults (``DEFAULT_CONFS``, including
+    ``nanosAsLong``) to an existing session.
 
-    Used when the caller (e.g. the verification driver) owns session
-    construction. Static confs (nanosAsLong) cannot be set here; the
-    readers in ``sources.tables`` cope by reading events via an explicit
-    arrow fallback when needed.
+    Used when the caller owns session construction (a harness that
+    builds its own session); ``LAUNCH_CONFS`` are the caller's to choose. Every
+    default is runtime-settable, so a failed set raises instead of
+    leaving the session silently half-configured.
     """
     for k, v in DEFAULT_CONFS.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # static conf on a live session — reader-level fallbacks apply
+        spark.conf.set(k, v)
     return spark

@@ -10,7 +10,9 @@ overwritten by stale data.
 import bench
 
 
-def test_missing_sections_carried_with_marker():
+def test_missing_sections_carried_with_marker(monkeypatch):
+    # the prior artifacts below carry no ``cpus``, which reads as 32-core
+    monkeypatch.setattr(bench, "CPUS", 32)
     full = {"metric": "headline_queries_total_runtime", "value": 1.0}
     prior = {"curatebench": {"batches": [1, 2], "state_rows": 10},
              "bigbench": {"rows": 5}}
@@ -22,7 +24,9 @@ def test_missing_sections_carried_with_marker():
     assert full["bigbench"] == {"rows": 5, "carried_from_prior_run": True}
 
 
-def test_budget_skip_marker_is_replaced_by_prior_measurement():
+def test_budget_skip_marker_is_replaced_by_prior_measurement(monkeypatch):
+    # the prior artifacts below carry no ``cpus``, which reads as 32-core
+    monkeypatch.setattr(bench, "CPUS", 32)
     full = {"docsbench": {"skipped": "budget (5400s)"}}
     prior = {"docsbench": {"qps": 12.0}}
     bench.carry_sections(full, prior)
@@ -45,7 +49,9 @@ def test_prior_skip_marker_is_not_carried():
     assert "tablebench" not in full
 
 
-def test_carry_survives_chained_reruns():
+def test_carry_survives_chained_reruns(monkeypatch):
+    # the prior artifacts below carry no ``cpus``, which reads as 32-core
+    monkeypatch.setattr(bench, "CPUS", 32)
     # a carried section carries again (marker stays a single bool)
     full = {}
     prior = {"vecbench": {"qps": 3.0, "carried_from_prior_run": True}}
@@ -95,7 +101,9 @@ def test_fold_efficiency_pin_skips_variants_without_folds():
     assert "ratio" not in pin["variants"]["gates"]
 
 
-def test_errored_section_carries_prior_and_keeps_error_visible():
+def test_errored_section_carries_prior_and_keeps_error_visible(monkeypatch):
+    # the prior artifacts below carry no ``cpus``, which reads as 32-core
+    monkeypatch.setattr(bench, "CPUS", 32)
     full = {"opsbench": {"error": "Py4JJavaError: boom"}}
     prior = {"opsbench": {"qps": 9.0}}
     bench.carry_sections(full, prior)
@@ -135,3 +143,80 @@ def test_scaling_section_is_carryable():
              "scaling": {"cpus": bench.CPUS, "flagship_sec": 5.0}}
     bench.carry_sections(full, prior)
     assert full["scaling"]["carried_from_prior_run"] is True
+
+
+def _fake_sweep(monkeypatch, sections, stopped_after=None):
+    """Drive bench.run_sections with fake sections and no JVM; the fake
+    context reads as stopped once the section ``stopped_after`` ran."""
+    monkeypatch.setattr(bench, "BENCH_BUDGET_S", float("inf"))
+    calls, persisted = [], []
+
+    def fake(name, fail=False):
+        def fn(spark):
+            calls.append(name)
+            if fail:
+                raise RuntimeError(f"{name} broke")
+            return {"sec": 1.0}
+        return fn
+
+    table = [(name, fake(name, fail), 0.0) for name, fail in sections]
+    results: dict = {}
+    lost = bench.run_sections(
+        None, table, results, lambda r: persisted.append(dict(r)),
+        is_stopped=lambda: stopped_after in calls)
+    return lost, results, calls, persisted
+
+
+def test_dead_context_marks_later_sections_without_running_them(monkeypatch):
+    lost, results, calls, persisted = _fake_sweep(monkeypatch, [
+        ("scaling", False), ("curatebench", True),
+        ("annbench", False), ("docsbench", False)],
+        stopped_after="curatebench")
+    assert lost == "curatebench"
+    assert calls == ["scaling", "curatebench"]
+    assert results["scaling"] == {"sec": 1.0}
+    assert results["curatebench"]["context_lost"] == "curatebench"
+    assert "curatebench broke" in results["curatebench"]["error"]
+    assert results["annbench"] == {"context_lost": "curatebench"}
+    assert results["docsbench"] == {"context_lost": "curatebench"}
+    assert len(persisted) == 4  # the artifact is rewritten per section
+
+
+def test_context_lost_markers_are_never_carried(monkeypatch):
+    monkeypatch.setattr(bench, "CPUS", 32)
+    _, results, _, _ = _fake_sweep(monkeypatch, [
+        ("curatebench", True), ("annbench", False)],
+        stopped_after="curatebench")
+    prior = {"curatebench": {"batches": [1]}, "annbench": {"qps": 2.0},
+             "vecbench": {"qps": 3.0}}
+    full = bench.carry_sections(dict(results), prior)
+    assert full["curatebench"]["context_lost"] == "curatebench"
+    assert "carried_from_prior_run" not in full["curatebench"]
+    assert full["annbench"] == {"context_lost": "curatebench"}
+    # a section this run never reached still carries as before
+    assert full["vecbench"]["carried_from_prior_run"] is True
+
+
+def test_prior_context_lost_marker_is_not_carried(monkeypatch):
+    monkeypatch.setattr(bench, "CPUS", 32)
+    full = {}
+    bench.carry_sections(full, {"annbench": {"context_lost": "curatebench"}})
+    assert "annbench" not in full
+
+
+def test_failure_on_a_live_context_keeps_the_sweep_going(monkeypatch):
+    lost, results, calls, _ = _fake_sweep(monkeypatch, [
+        ("opsbench", True), ("vecbench", False)])
+    assert lost is None
+    assert calls == ["opsbench", "vecbench"]
+    assert "context_lost" not in results["opsbench"]
+    assert results["vecbench"] == {"sec": 1.0}
+
+
+def test_unreachable_jvm_reads_as_stopped():
+    class Gone:
+        @property
+        def sparkContext(self):
+            raise ConnectionError("gateway closed")
+
+    assert bench._context_stopped(Gone()) is True

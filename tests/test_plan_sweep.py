@@ -151,13 +151,12 @@ def test_no_session_conf_mutation_in_registry_queries():
     assert not offenders, f"session conf mutation in queries: {offenders}"
 
 
-@pytest.mark.slow
-def test_no_plan_antipatterns_across_registry(spark):
+def _assert_no_plan_antipatterns(spark, names) -> None:
     qs = registry.queries()
     cartesian, py_udf, bnlj_new, win_new, errors = [], [], [], [], []
-    for name, fn in sorted(qs.items()):
+    for name in sorted(names):
         try:
-            exec_plan = fn(spark, SF)._jdf.queryExecution().executedPlan()
+            exec_plan = qs[name](spark, SF)._jdf.queryExecution().executedPlan()
             plan = exec_plan.toString()
         except Exception as e:  # a query failing to PLAN is itself a bug
             errors.append((name, str(e)[:120]))
@@ -186,3 +185,15 @@ def test_no_plan_antipatterns_across_registry(spark):
         "head), add to WINDOW_ALLOWED with a justification; otherwise "
         "use the two-phase pattern in operators/prefix.py"
     )
+
+
+def test_no_plan_antipatterns_in_headline(spark):
+    """The cheap default-gate guard: the bench headline's plans only."""
+    import bench
+
+    _assert_no_plan_antipatterns(spark, bench.HEADLINE)
+
+
+@pytest.mark.slow
+def test_no_plan_antipatterns_across_registry(spark):
+    _assert_no_plan_antipatterns(spark, registry.queries())
