@@ -852,9 +852,9 @@ def run_replay(spark) -> dict[str, object]:
         )
     except ImportError:
         return out  # flight absent in this environment — metric omitted
-    # Flight is the bulk channel: 5M rows, so gRPC stream throughput,
-    # not job-startup cost, dominates.
-    nf = 5_000_000
+    # Flight is the bulk channel: up to 5M rows, so gRPC stream
+    # throughput, not job-startup cost, dominates.
+    nf = min(5_000_000, BIG_ROWS)
     big = (
         spark.read.parquet(f"{BIG_DIR}/events.parquet")
         .select("event_id", "ts", "user_id", "value")
@@ -863,7 +863,8 @@ def run_replay(spark) -> dict[str, object]:
     server = EventFlightServer({"events": lambda: big})
 
     def fetch() -> None:
-        assert read_flight(server.endpoint, "events").num_rows == nf
+        got = read_flight(server.endpoint, "events").num_rows
+        assert got == nf, f"flight returned {got} rows, expected {nf}"
 
     try:
         el = measure(fetch, warmup=1)
@@ -1611,8 +1612,10 @@ def run_sections(spark, sections, results: dict, persist,
     error marker and the rest still run — unless the failure stopped the
     SparkContext. Then every later section would fail at once, so that
     section and all later ones get a ``{"context_lost": <section>}``
-    marker and are not attempted. Returns the section that lost the
-    context, or None."""
+    marker and are not attempted. On a live context the cache is cleared
+    after every attempted section, failed ones included, so frames a
+    section left persisted never hold the next section's heap. Returns
+    the section that lost the context, or None."""
     if is_stopped is None:
         is_stopped = lambda: _context_stopped(spark)  # noqa: E731
     lost = None
@@ -1640,6 +1643,8 @@ def run_sections(spark, sections, results: dict, persist,
                           "later sections not attempted")
             else:
                 _note(f"{name} done in {time.monotonic() - s:.1f}s")
+            if lost is None:
+                spark.catalog.clearCache()
         persist(results)
     return lost
 

@@ -311,9 +311,7 @@ def main(argv: list[str] | None = None) -> int:
                         _c[batch_id] = df.count()
 
                 q = rp.stream_foreach_batch(
-                    stream, _count, checkpoint=args.checkpoint,
-                    available_now=True,
-                )
+                    stream, _count, checkpoint=args.checkpoint)
                 q.awaitTermination()
                 print(f"streamed {sum(counted.values())} events",
                       file=sys.stderr)

@@ -12,9 +12,10 @@ ingest: per (run, bank, fine-interval) partial aggregates that are
                    across buckets and report with bounded error
 
 Query routing: same-or-coarser intervals hit the rollup; finer intervals
-fall through to the fact table. Streaming ingest maintains the rollup via
-``foreachBatch`` upsert (each micro-batch re-aggregates only the touched
-buckets).
+fall through to the fact table. Streaming ingest maintains the rollup as
+a snapshot table (``sources/snapshots.py``): each micro-batch merges its
+own partials into the current version and commits the result pinned to
+its batch id (see :func:`maintain_rollup_stream`).
 """
 
 from __future__ import annotations
@@ -50,6 +51,17 @@ def build_interval_rollup(
     )
 
 
+def _merge_partials(rollup: DataFrame, *keys: str) -> DataFrame:
+    """Re-aggregate rollup partials on ``keys``: counts add, min/max
+    fold, HLL sketches union."""
+    return rollup.groupBy(*keys).agg(
+        F.sum("event_count").alias("event_count"),
+        F.min("min_time").alias("min_time"),
+        F.max("max_time").alias("max_time"),
+        F.hll_union_agg("pulse_sketch").alias("pulse_sketch"),
+    )
+
+
 def rollup_to_coarser(
     rollup: DataFrame,
     fine_seconds: float,
@@ -65,15 +77,8 @@ def rollup_to_coarser(
     if factor * fine_seconds != coarse_seconds:
         raise ValueError("coarse interval must be a multiple of the fine one")
     coarse = F.floor(F.col("interval") / factor).cast("long")
-    return (
-        rollup.withColumn("interval", coarse)
-        .groupBy(*key_cols, bank_col, "interval")
-        .agg(
-            F.sum("event_count").alias("event_count"),
-            F.min("min_time").alias("min_time"),
-            F.max("max_time").alias("max_time"),
-            F.hll_union_agg("pulse_sketch").alias("pulse_sketch"),
-        )
+    return _merge_partials(
+        rollup.withColumn("interval", coarse), *key_cols, bank_col, "interval"
     )
 
 
@@ -122,26 +127,19 @@ def incremental_update(
     to the BATCH), then merge: counts add, min/max fold, HLL sketches
     union. The merge groups on the rollup key whose cardinality is
     bucket-count, not event-count, so nightly/streaming refresh cost is
-    O(batch + touched buckets). This is the ``foreachBatch`` upsert body
-    for streaming maintenance; equivalence to a full rebuild is pinned by
-    tests (exact measures equal, sketch estimates equal — HLL union is
-    associative, so incremental == rebuild even on the sketch bytes'
-    estimates).
+    O(batch + touched buckets). :func:`maintain_rollup_stream` commits
+    the same merge per micro-batch. Equivalence to a full rebuild is
+    pinned by tests (exact measures equal, sketch estimates equal — HLL
+    union is associative, so incremental == rebuild even on the sketch
+    bytes' estimates).
     """
     delta = build_interval_rollup(
         new_events, interval_seconds,
         time_col=time_col, bank_col=bank_col, pulse_col=pulse_col,
         key_cols=key_cols,
     )
-    return (
-        rollup.unionByName(delta)
-        .groupBy(*key_cols, bank_col, "interval")
-        .agg(
-            F.sum("event_count").alias("event_count"),
-            F.min("min_time").alias("min_time"),
-            F.max("max_time").alias("max_time"),
-            F.hll_union_agg("pulse_sketch").alias("pulse_sketch"),
-        )
+    return _merge_partials(
+        rollup.unionByName(delta), *key_cols, bank_col, "interval"
     )
 
 
@@ -154,27 +152,21 @@ def maintain_rollup_stream(
     time_col: str = "absolute_time",
     bank_col: str = "bank",
     pulse_col: str = "pulse_index",
-    trigger_available_now: bool = True,
 ):
     """Maintain the continuous aggregate FROM a stream: each micro-batch
-    merges into the versioned rollup state — the wiring for the module
+    merges into the rollup state — the wiring for the module
     docstring's "streaming ingest maintains the rollup" path.
 
-    Work per batch is O(batch + touched buckets). Exactly-once comes
-    from the versioned state store (streaming/sketches.py): the merge
-    sums event counts, so a REPLAYED micro-batch must not re-apply —
-    the per-batch-id version check skips it, and writes never touch the
-    version they read (crash-safe). At warehouse scale, swap for a
-    MERGE INTO on an Iceberg/Delta rollup table keyed by batch id.
+    Work per batch is O(batch + touched buckets). The state is a
+    snapshot table committed by ``streaming/sketches.py`` with the batch
+    id as its version: the merge sums event counts, so a REPLAYED
+    micro-batch finds its version published and skips, and a failed
+    write publishes nothing (crash-safe). At warehouse scale, swap for
+    a MERGE INTO on an Iceberg/Delta rollup table keyed by batch id.
 
     Returns the started ``StreamingQuery``; read the maintained rollup
-    with ``streaming.sketches.read_state``.
+    with ``snapshots.read_snapshot``.
     """
-    # Delegates to the versioned state store (streaming/sketches.py):
-    # rollup merges SUM counts, so a replayed micro-batch must not
-    # re-apply — the per-batch-id version check gives exactly-once, and
-    # writes never overwrite the version they read (crash-safe). Read
-    # the maintained rollup with ``streaming.sketches.read_state``.
     from nexus_processor_spark.streaming.sketches import maintain_sketch_stream
 
     return maintain_sketch_stream(
@@ -184,17 +176,9 @@ def maintain_rollup_stream(
             b, interval_seconds,
             time_col=time_col, bank_col=bank_col, pulse_col=pulse_col,
         ),
-        merge=lambda cur, delta: (
-            cur.unionByName(delta)
-            .groupBy(bank_col, "interval")
-            .agg(
-                F.sum("event_count").alias("event_count"),
-                F.min("min_time").alias("min_time"),
-                F.max("max_time").alias("max_time"),
-                F.hll_union_agg("pulse_sketch").alias("pulse_sketch"),
-            )
+        merge=lambda cur, delta: _merge_partials(
+            cur.unionByName(delta), bank_col, "interval"
         ),
-        trigger_available_now=trigger_available_now,
     )
 
 

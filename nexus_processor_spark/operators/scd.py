@@ -152,15 +152,11 @@ def scd2_apply_batch(
     (same contract as cdc.apply_cdc_batch). Returns the committed
     version, or None for a replayed batch.
     """
-    import os
-
     from pyspark.sql import functions as F
 
     from nexus_processor_spark.sources import snapshots
 
-    if version is not None and os.path.exists(
-        os.path.join(hist_path, f"manifest.{version}.json")
-    ):
+    if version is not None and snapshots.has_version(hist_path, version):
         return None
     attrs = _attr_cols(changes, key_col, seq_col, attr_cols)
     if snapshots.current_version(hist_path) is None:
@@ -189,13 +185,13 @@ def scd2_stream(
     *,
     checkpoint_dir: str,
     attr_cols: list[str] | None = None,
-    trigger_available_now: bool = True,
 ):
     """Streaming SCD2: every micro-batch of change rows advances the
     history table through :func:`scd2_apply_batch` (commit pinned to
     the batch id — replays skip). Read the dimension any time with
     ``snapshots.read_snapshot``; point-in-time via :func:`scd2_as_of`."""
     from nexus_processor_spark.sources import snapshots
+    from nexus_processor_spark.streaming import replay
 
     spark = stream.sparkSession
 
@@ -208,14 +204,8 @@ def scd2_stream(
             return
         snapshots.expire_snapshots(hist_path, keep_last=2)
 
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_step)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return replay.stream_foreach_batch(
+        stream, _step, checkpoint=checkpoint_dir)
 
 
 def temporal_join(

@@ -13,20 +13,10 @@ def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def has_pushed_filter(df: DataFrame, fragment: str) -> bool:
     """True when ``fragment`` appears in the scan's PushedFilters list."""
     plan = executed_plan(df)
     return any("PushedFilters" in line and fragment in line
-               for line in plan.splitlines())
-
-
-def has_partition_filter(df: DataFrame, fragment: str = "") -> bool:
-    plan = executed_plan(df)
-    return any("PartitionFilters" in line and fragment in line
                for line in plan.splitlines())
 
 

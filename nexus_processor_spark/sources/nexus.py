@@ -577,18 +577,3 @@ def ingest_table(
     files = files.repartition(max(len(path_list), 1))
     return files.mapInPandas(parse, schema=schema)
 
-
-def ingest_all(
-    spark: SparkSession,
-    paths: Iterable[str],
-    *,
-    ingestion_time: str = "",
-    tables: tuple[str, ...] = tuple(TABLES),
-    skip_bad_files: bool = False,
-) -> dict[str, DataFrame]:
-    path_list = list(paths)
-    return {
-        t: ingest_table(spark, path_list, t, ingestion_time=ingestion_time,
-                        skip_bad_files=skip_bad_files)
-        for t in tables
-    }

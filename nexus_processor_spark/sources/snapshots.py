@@ -102,6 +102,13 @@ def current_version(table_path: str) -> int | None:
     return vs[-1] if vs else None
 
 
+def has_version(table_path: str, version: int) -> bool:
+    """Whether ``version`` is committed — how a commit pinned to a
+    streaming batch id tells a replayed batch from a new one."""
+    return os.path.exists(
+        os.path.join(table_path, f"manifest.{version}.json"))
+
+
 def _publish_manifest(table_path: str, version: int, manifest: dict) -> bool:
     """Put-if-absent publication of ``manifest.<version>.json``: write to
     a commit-private tmp name, then ``os.link`` it into place — link
@@ -315,9 +322,7 @@ def write_snapshot(
     _require_local(table_path)
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append or overwrite, got {mode!r}")
-    if version is not None and os.path.exists(
-        os.path.join(table_path, f"manifest.{version}.json")
-    ):
+    if version is not None and has_version(table_path, version):
         return None
     os.makedirs(table_path, exist_ok=True)
     commit_dir = f"data/{uuid.uuid4().hex}"
@@ -494,9 +499,7 @@ def upsert_snapshot(
     _require_local(table_path)
     if current_version(table_path) is None:
         raise FileNotFoundError(f"no committed snapshot under {table_path}")
-    if version is not None and os.path.exists(
-        os.path.join(table_path, f"manifest.{version}.json")
-    ):
+    if version is not None and has_version(table_path, version):
         return None
     stats_cols = tuple(dict.fromkeys((key_col, *stats_cols)))
 

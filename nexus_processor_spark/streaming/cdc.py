@@ -34,8 +34,18 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nexus_processor_spark.sources import snapshots
+from nexus_processor_spark.streaming import replay
 
 COMPACT_EVERY = 16
+
+
+def _compaction_due(table_path: str, compact_every: int) -> bool:
+    """Whether the next commit folds the table into one directory: it
+    would otherwise leave ``compact_every`` or more data directories."""
+    cur = snapshots.current_version(table_path)
+    return cur is not None and len(
+        snapshots._read_manifest(table_path, cur)["data_dirs"]
+    ) + 1 >= compact_every
 
 
 def apply_cdc_batch(
@@ -113,7 +123,6 @@ def apply_cdc_stream(
     delete_col: str | None = None,
     stats_cols: tuple[str, ...] = (),
     compact_every: int = COMPACT_EVERY,
-    trigger_available_now: bool = True,
 ):
     """Start the CDC-apply stream; returns the ``StreamingQuery``. Read
     the maintained table with ``snapshots.read_snapshot`` (any time, any
@@ -121,35 +130,18 @@ def apply_cdc_stream(
     spark = stream.sparkSession
 
     def _step(batch: DataFrame, batch_id: int) -> None:
-        cur = snapshots.current_version(table_path)
-        due = cur is not None and len(
-            snapshots._read_manifest(table_path, cur)["data_dirs"]
-        ) + 1 >= compact_every
         v = apply_cdc_batch(
             spark, table_path, batch, key_col,
-            seq_col=seq_col, delete_col=delete_col,
-            stats_cols=stats_cols, version=batch_id, compact=due,
+            seq_col=seq_col, delete_col=delete_col, stats_cols=stats_cols,
+            version=batch_id,
+            compact=_compaction_due(table_path, compact_every),
         )
         if v is None:
             return  # replayed batch: table + expiry already settled
         snapshots.expire_snapshots(table_path, keep_last=2)
 
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_step)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def _agg_settled(agg_path: str, version: int | None) -> bool:
-    import os
-
-    return version is not None and os.path.exists(
-        os.path.join(agg_path, f"manifest.{version}.json")
-    )
+    return replay.stream_foreach_batch(
+        stream, _step, checkpoint=checkpoint_dir)
 
 
 def maintain_agg_batch(
@@ -216,7 +208,7 @@ def maintain_agg_batch(
         seq_col=seq_col, delete_col=delete_col,
         stats_cols=stats_cols, version=version, compact=compact,
     )
-    if base_v is None and _agg_settled(agg_path, version):
+    if base_v is None and snapshots.has_version(agg_path, version):
         return None  # fully replayed batch
     post = snapshots.read_snapshot(spark, table_path)
 
@@ -266,7 +258,6 @@ def maintain_agg_stream(
     delete_col: str | None = None,
     stats_cols: tuple[str, ...] = (),
     compact_every: int = COMPACT_EVERY,
-    trigger_available_now: bool = True,
 ):
     """Streaming IVM: every micro-batch of changes flows through
     :func:`maintain_agg_batch` (base apply + touched-group refresh, both
@@ -275,28 +266,19 @@ def maintain_agg_stream(
     spark = stream.sparkSession
 
     def _step(batch: DataFrame, batch_id: int) -> None:
-        cur = snapshots.current_version(table_path)
-        due = cur is not None and len(
-            snapshots._read_manifest(table_path, cur)["data_dirs"]
-        ) + 1 >= compact_every
         v = maintain_agg_batch(
             spark, table_path, agg_path, batch, key_col, group_col,
             measures, seq_col=seq_col, delete_col=delete_col,
-            stats_cols=stats_cols, version=batch_id, compact=due,
+            stats_cols=stats_cols, version=batch_id,
+            compact=_compaction_due(table_path, compact_every),
         )
         if v is None:
             return
         snapshots.expire_snapshots(table_path, keep_last=2)
         snapshots.expire_snapshots(agg_path, keep_last=2)
 
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_step)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return replay.stream_foreach_batch(
+        stream, _step, checkpoint=checkpoint_dir)
 
 
 def extract_changes(

@@ -74,7 +74,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nexus_processor_spark.operators import dedup
-from nexus_processor_spark.streaming import state_store
+from nexus_processor_spark.streaming import replay, state_store
 
 NUM_BANDS = 8
 ROWS_PER_BAND = 2
@@ -1446,7 +1446,6 @@ def curate_stream(
     state_buckets: int = STATE_BUCKETS,
     fold_factor: int = FOLD_FACTOR,
     probe_mode: str = "driver",
-    trigger_available_now: bool = True,
 ):
     """Start the curation stream over a document source. Audit rows land
     in ``sink_path/batch=<id>`` (survivors = ``filter(keep)``); the
@@ -1553,11 +1552,5 @@ def curate_stream(
             for h in handles:
                 h.unpersist()
 
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_step)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return replay.stream_foreach_batch(
+        stream, _step, checkpoint=checkpoint_dir)

@@ -260,17 +260,15 @@ def stream_foreach_batch(
     fn: Callable[[DataFrame, int], None],
     *,
     checkpoint: str,
-    available_now: bool = False,
-    trigger_seconds: int = 10,
 ) -> StreamingQuery:
-    """T4 rate-limited/custom replay: micro-batch handoff to ``fn``.
-
-    ``available_now=True`` drains the current table contents then stops —
-    the testable, bounded form of replay.
+    """T4 custom replay: micro-batch handoff to ``fn`` — the package's
+    one ``foreachBatch`` driver, which every maintained stream starts
+    through. Drains the source's current contents, then stops
+    (``availableNow``); a restart on the same ``checkpoint`` resumes
+    from its committed offsets. After a crash ``fn`` may see a batch id
+    again, so callers that commit state key the commit on it.
     """
-    writer = events.writeStream.foreachBatch(fn).option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return (events.writeStream.foreachBatch(fn)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start())

@@ -6,27 +6,31 @@ distinct/frequency state with per-batch cost O(batch + sketch size) —
 no growing keyed state store, no watermark tuning: the sketch IS the
 state, bounded by construction.
 
-## The versioned state store (exactly-once for non-idempotent merges)
+## State is a snapshot table (exactly-once for non-idempotent merges)
 
-State lives in ``state_path/v<batch_id>`` version directories; the
-current state is the highest version containing Spark's ``_SUCCESS``
-marker. Each micro-batch writes ``merge(current, delta)`` to ITS OWN
-version dir (keyed by the foreachBatch batch id), never touching the
-version it read. That makes every failure mode safe:
+The state at ``state_path`` is a manifest-committed snapshot table
+(``sources/snapshots.py``), so it is local-filesystem only, like every
+snapshot table. Each micro-batch writes ``merge(current, delta)`` as an
+overwrite commit PINNED to the foreachBatch batch id: the data lands in
+a fresh directory and becomes visible only when ``manifest.<batch_id>``
+is published put-if-absent. That makes every failure mode safe:
 
-* crash mid-write: the half-written version has no ``_SUCCESS``; the
-  retry overwrites it, reading the intact previous version;
-* crash after ``_SUCCESS`` but before the checkpoint commits: the
-  replayed batch FINDS its version already complete and skips the
+* crash mid-write: no manifest is published, readers and the retry
+  both see the intact previous version, and the half-written directory
+  stays invisible;
+* crash after the commit but before the checkpoint commits: the
+  replayed batch finds its version already published and skips the
   merge — so sum-merges (CMS, rollup counts) apply exactly once, not
   just at-least-once (a naive overwrite sink would double them);
-* readers only ever see a complete version.
+* readers only ever see a committed version.
 
-The state directory is bound to its checkpoint (batch ids restart with
-a fresh checkpoint — point a new checkpoint at a new state dir, same
-rule as any stateful sink). Old versions are pruned, keeping the last
-two so a concurrent reader of the previous version never loses its
-files mid-scan.
+Read the state with ``snapshots.read_snapshot(spark, state_path)``;
+``version=`` time-travels to a retained batch id. The state directory
+is bound to its checkpoint (batch ids restart with a fresh checkpoint —
+point a new checkpoint at a new state dir, same rule as any stateful
+sink). Each commit expires all but the last two versions, so a
+concurrent reader of the previous version never loses its files
+mid-scan.
 """
 
 from __future__ import annotations
@@ -36,59 +40,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from nexus_processor_spark.operators import sketch as sk
-
-_KEEP_VERSIONS = 2
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
-
-
-def _versions(spark: SparkSession, state_path: str) -> list[int]:
-    """Complete (``_SUCCESS``-marked) version ids, ascending."""
-    fs, p, jvm = _fs(spark, state_path)
-    if not fs.exists(p):
-        return []
-    out = []
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("v"):
-            try:
-                vid = int(name[1:])
-            except ValueError:
-                continue
-            if fs.exists(jvm.org.apache.hadoop.fs.Path(
-                    f"{state_path}/{name}/_SUCCESS")):
-                out.append(vid)
-    return sorted(out)
-
-
-def current_state_dir(spark: SparkSession, state_path: str) -> str | None:
-    """Directory of the newest complete state version, or None."""
-    vs = _versions(spark, state_path)
-    return f"{state_path}/v{vs[-1]}" if vs else None
-
-
-def read_state(
-    spark: SparkSession, state_path: str, *, version: int | None = None
-) -> DataFrame:
-    """The current state as a DataFrame (raises if none published yet).
-    ``version`` time-travels to a specific retained batch id — the last
-    ``_KEEP_VERSIONS`` are readable, older ones are pruned."""
-    if version is not None:
-        vs = _versions(spark, state_path)
-        if version not in vs:
-            raise FileNotFoundError(
-                f"version {version} not retained under {state_path}; "
-                f"have {vs}"
-            )
-        return spark.read.parquet(f"{state_path}/v{version}")
-    d = current_state_dir(spark, state_path)
-    if d is None:
-        raise FileNotFoundError(f"no committed state under {state_path}")
-    return spark.read.parquet(d)
+from nexus_processor_spark.sources import snapshots
+from nexus_processor_spark.streaming import replay
 
 
 def apply_state_batch(
@@ -98,25 +51,20 @@ def apply_state_batch(
     delta: DataFrame,
     merge: Callable[[DataFrame, DataFrame], DataFrame],
 ) -> bool:
-    """Apply one batch's delta to the versioned state. Returns False
-    when version ``v<batch_id>`` is already complete (a replayed batch):
-    the merge is SKIPPED, which is what makes non-idempotent merges
-    (sums) exactly-once under foreachBatch's at-least-once redelivery."""
-    fs, _, jvm = _fs(spark, state_path)
-    target = f"{state_path}/v{batch_id}"
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(f"{target}/_SUCCESS")):
-        return False
-    current = current_state_dir(spark, state_path)
+    """Apply one batch's delta to the state as the snapshot version
+    ``batch_id``. Returns False when that version is already committed
+    (a replayed batch): the merge is SKIPPED, which is what makes
+    non-idempotent merges (sums) exactly-once under foreachBatch's
+    at-least-once redelivery."""
     merged = (
-        merge(spark.read.parquet(current), delta)
-        if current is not None else delta
+        merge(snapshots.read_snapshot(spark, state_path), delta)
+        if snapshots.current_version(state_path) is not None else delta
     )
-    # reads `current`, writes `target`: never overwrites its input, so a
-    # crash mid-write leaves an incomplete (ignored) target and the
-    # retry re-runs against the intact current version
-    merged.write.mode("overwrite").parquet(target)
-    for vid in _versions(spark, state_path)[:-_KEEP_VERSIONS]:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{state_path}/v{vid}"), True)
+    if snapshots.write_snapshot(
+        merged, state_path, mode="overwrite", version=batch_id
+    ) is None:
+        return False
+    snapshots.expire_snapshots(state_path, keep_last=2)
     return True
 
 
@@ -127,13 +75,12 @@ def maintain_sketch_stream(
     checkpoint_dir: str,
     build: Callable[[DataFrame], DataFrame],
     merge: Callable[[DataFrame, DataFrame], DataFrame],
-    trigger_available_now: bool = True,
 ):
     """Generic mergeable-state maintenance: per micro-batch, ``build``
-    the batch's state delta, ``merge`` with the current version, publish
-    as version ``v<batch_id>`` (see the module docstring for the
+    the batch's state delta, ``merge`` with the current version, commit
+    as version ``batch_id`` (see the module docstring for the
     exactly-once argument). Returns the started ``StreamingQuery``;
-    read results with :func:`read_state`."""
+    read results with ``snapshots.read_snapshot``."""
     spark = stream.sparkSession
 
     def _step(batch: DataFrame, batch_id: int) -> None:
@@ -141,14 +88,8 @@ def maintain_sketch_stream(
             spark, state_path, batch_id, build(batch), merge
         )
 
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_step)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return replay.stream_foreach_batch(
+        stream, _step, checkpoint=checkpoint_dir)
 
 
 def maintain_hll_stream(
@@ -158,7 +99,6 @@ def maintain_hll_stream(
     *,
     checkpoint_dir: str,
     by: str | None = None,
-    trigger_available_now: bool = True,
 ):
     """Streaming distinct-count state: HLL registers maintained by
     register-wise max. Drained state == batch registers over all data."""
@@ -167,7 +107,6 @@ def maintain_hll_stream(
         checkpoint_dir=checkpoint_dir,
         build=lambda b: sk.hll_registers(b, key_col, by=by),
         merge=lambda cur, new: sk.hll_merge(cur, new),
-        trigger_available_now=trigger_available_now,
     )
 
 
@@ -179,15 +118,13 @@ def maintain_cms_stream(
     checkpoint_dir: str,
     width: int = 8192,
     depth: int = 4,
-    trigger_available_now: bool = True,
 ):
     """Streaming frequency state: CMS bucket counts maintained by sum —
-    the non-idempotent merge the versioned store exists for (a replayed
+    the non-idempotent merge the pinned commit exists for (a replayed
     batch must NOT re-add its counts; the version check guarantees it)."""
     return maintain_sketch_stream(
         stream, state_path,
         checkpoint_dir=checkpoint_dir,
         build=lambda b: sk.cms_build(b, key_col, width=width, depth=depth),
         merge=lambda cur, new: sk.cms_merge(cur, new),
-        trigger_available_now=trigger_available_now,
     )

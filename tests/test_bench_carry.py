@@ -145,6 +145,18 @@ def test_scaling_section_is_carryable():
     assert full["scaling"]["carried_from_prior_run"] is True
 
 
+class _FakeSpark:
+    """A session stand-in: sections add to ``cached``, clearCache empties
+    it."""
+
+    def __init__(self):
+        self.cached: set = set()
+        self.catalog = self
+
+    def clearCache(self):
+        self.cached.clear()
+
+
 def _fake_sweep(monkeypatch, sections, stopped_after=None):
     """Drive bench.run_sections with fake sections and no JVM; the fake
     context reads as stopped once the section ``stopped_after`` ran."""
@@ -162,7 +174,7 @@ def _fake_sweep(monkeypatch, sections, stopped_after=None):
     table = [(name, fake(name, fail), 0.0) for name, fail in sections]
     results: dict = {}
     lost = bench.run_sections(
-        None, table, results, lambda r: persisted.append(dict(r)),
+        _FakeSpark(), table, results, lambda r: persisted.append(dict(r)),
         is_stopped=lambda: stopped_after in calls)
     return lost, results, calls, persisted
 
@@ -211,6 +223,30 @@ def test_failure_on_a_live_context_keeps_the_sweep_going(monkeypatch):
     assert calls == ["opsbench", "vecbench"]
     assert "context_lost" not in results["opsbench"]
     assert results["vecbench"] == {"sec": 1.0}
+
+
+def test_failed_section_leaves_no_cache_for_the_next(monkeypatch):
+    """A section that raises after persisting frames must not hand them
+    to the next section: the runner clears the cache between sections."""
+    monkeypatch.setattr(bench, "BENCH_BUDGET_S", float("inf"))
+    seen: dict = {}
+
+    def section(name, fail):
+        def fn(spark):
+            seen[name] = set(spark.cached)
+            spark.cached.add(name)
+            if fail:
+                raise RuntimeError(f"{name} broke")
+            return {"sec": 1.0}
+        return fn
+
+    table = [("curatebench", section("curatebench", True), 0.0),
+             ("annbench", section("annbench", False), 0.0)]
+    results: dict = {}
+    bench.run_sections(_FakeSpark(), table, results, lambda r: None,
+                       is_stopped=lambda: False)
+    assert "curatebench broke" in results["curatebench"]["error"]
+    assert seen["annbench"] == set()
 
 
 def test_unreachable_jvm_reads_as_stopped():

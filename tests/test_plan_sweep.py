@@ -136,8 +136,7 @@ def _collect_unpartitioned_windows(plan) -> list[str]:
 def test_no_session_conf_mutation_in_registry_queries():
     """Registry queries must not flip session-wide conf (a query that
     mutates global state surprises co-tenant queries). Session-level
-    knobs belong in session.DEFAULT_CONFS; source registration contracts
-    (nexus_datasource.register) are session-setup calls, not queries."""
+    knobs belong in session.DEFAULT_CONFS."""
     from pathlib import Path
 
     qdir = Path(__file__).resolve().parent.parent / \

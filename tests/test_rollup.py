@@ -123,9 +123,9 @@ def test_stream_maintained_rollup_matches_batch_rebuild(spark, tmp_path):
     )
     q.awaitTermination(120)
 
-    from nexus_processor_spark.streaming.sketches import read_state
+    from nexus_processor_spark.sources.snapshots import read_snapshot
 
-    maintained = read_state(spark, str(tmp_path / "rollup"))
+    maintained = read_snapshot(spark, str(tmp_path / "rollup"))
     served_stream = sorted(map(tuple, rollup.serve_count_by_interval(
         maintained, 3600.0).collect()))
     served_batch = sorted(map(tuple, rollup.serve_count_by_interval(

@@ -18,6 +18,32 @@ def test_views_and_parameterized_sql(spark):
     assert len(out) == 1 and out[0].event_type == "click" and out[0].n > 0
 
 
+def test_lake_views_answer_parameterized_sql(spark, tmp_path):
+    """S11 catalog table scan: tables written by ``catalog.write_table``
+    register as views and answer bound-parameter SQL, joins included."""
+    import json
+
+    from nexus_processor_spark.sources import catalog, nexus
+    from tests.test_nexus_ingest import fixture_tree
+
+    p = tmp_path / "run.json"
+    p.write_text(json.dumps(fixture_tree()))
+    root = str(tmp_path / "lake")
+    for t in ("events", "metadata"):
+        catalog.write_table(nexus.ingest_table(spark, [str(p)], t), root, t)
+    sqlmod.register_lake_views(spark, root, ("events", "metadata"))
+    rows = sqlmod.sql(
+        spark,
+        """
+        SELECT m.title, e.bank, count(*) AS n
+        FROM events e JOIN metadata m USING (run_id)
+        WHERE e.pulse_index = :p GROUP BY 1, 2
+        """,
+        p=1,
+    ).collect()
+    assert [tuple(r) for r in rows] == [("Test Run", "bank1_events", 2)]
+
+
 def test_injection_is_inert(spark):
     sqlmod.register_testdata_views(spark, SF, ("events",))
     # a value that would break an f-string query stays a plain value

@@ -59,7 +59,6 @@ def test_stream_drain_matches_batch(spark, tmp_path):
         stream,
         lambda df, epoch: got.append(df.count()),
         checkpoint=str(tmp_path / "ckpt"),
-        available_now=True,
     )
     q.awaitTermination(60)
     assert sum(got) == 4
@@ -111,7 +110,6 @@ def test_stream_start_timestamp_drops_earlier_files(spark, tmp_path):
         stream,
         lambda df, epoch: got.append([r.event_id for r in df.collect()]),
         checkpoint=str(tmp_path / "ckpt_ts"),
-        available_now=True,
     )
     q.awaitTermination(60)
     ids = sorted(x for batch in got for x in batch)
@@ -121,7 +119,7 @@ def test_stream_start_timestamp_drops_earlier_files(spark, tmp_path):
     total: list[int] = []
     q2 = replay.stream_foreach_batch(
         all_stream, lambda df, epoch: total.append(df.count()),
-        checkpoint=str(tmp_path / "ckpt_all"), available_now=True,
+        checkpoint=str(tmp_path / "ckpt_all"),
     )
     q2.awaitTermination(60)
     assert sum(total) == 8
@@ -164,7 +162,7 @@ def test_checkpoint_restart_exactly_once(spark, tmp_path):
         q = replay.stream_foreach_batch(
             replay.read_events_stream(spark, root),
             lambda df, e: got.append(df.count()),
-            checkpoint=ck, available_now=True,
+            checkpoint=ck,
         )
         q.awaitTermination(60)
         return got

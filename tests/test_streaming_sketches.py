@@ -6,12 +6,12 @@ import json
 
 from nexus_processor_spark.operators import sketch as sk
 from nexus_processor_spark.sources import catalog, nexus
+from nexus_processor_spark.sources.snapshots import read_snapshot as read_state
 from nexus_processor_spark.streaming import replay
 from nexus_processor_spark.streaming.sketches import (
     apply_state_batch,
     maintain_cms_stream,
     maintain_hll_stream,
-    read_state,
 )
 from tests.test_nexus_ingest import fixture_tree
 
@@ -84,14 +84,14 @@ def test_replayed_batch_is_skipped_not_double_merged(spark, tmp_path):
 
 def test_old_versions_pruned_but_previous_kept(spark, tmp_path):
     from nexus_processor_spark.operators.sketch import cms_build, cms_merge
-    from nexus_processor_spark.streaming.sketches import _versions
+    from nexus_processor_spark.sources.snapshots import _versions
 
     state = str(tmp_path / "state")
     items = spark.createDataFrame([("x",)], "key string")
     delta = cms_build(items, "key", width=8, depth=1)
     for bid in range(4):
         apply_state_batch(spark, state, bid, delta, cms_merge)
-    assert _versions(spark, state) == [2, 3]  # last two kept
+    assert _versions(state) == [2, 3]  # last two kept
 
 
 def test_read_state_time_travel(spark, tmp_path):
@@ -109,3 +109,34 @@ def test_read_state_time_travel(spark, tmp_path):
     assert (n2, n3) == (2, 3)
     with pytest.raises(FileNotFoundError):
         read_state(spark, state, version=0)  # pruned
+
+
+def test_failed_merge_keeps_previous_version_and_retry_applies_once(
+        spark, tmp_path):
+    """Crash safety: a merge that fails mid-write publishes nothing —
+    readers keep the previous version — and the retried batch adds its
+    counts exactly once (the failed attempt's files stay invisible)."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from nexus_processor_spark.operators.sketch import cms_build, cms_merge
+
+    state = str(tmp_path / "state")
+    items = spark.createDataFrame([("a",), ("a",), ("b",)], "key string")
+    delta = cms_build(items, "key", width=16, depth=2)
+    assert apply_state_batch(spark, state, 0, delta, cms_merge) is True
+    v0 = sorted(map(tuple, read_state(spark, state).collect()))
+
+    def failing_merge(cur, new):
+        merged = cms_merge(cur, new)
+        return merged.withColumn("n", F.when(
+            F.col("d") == 1, F.raise_error(F.lit("injected merge fault"))
+        ).otherwise(F.col("n")))
+
+    with pytest.raises(Exception, match="injected merge fault"):
+        apply_state_batch(spark, state, 1, delta, failing_merge)
+    assert sorted(map(tuple, read_state(spark, state).collect())) == v0
+
+    assert apply_state_batch(spark, state, 1, delta, cms_merge) is True
+    doubled = sorted(map(tuple, read_state(spark, state).collect()))
+    assert doubled == sorted((d, b, 2 * n) for d, b, n in v0)
