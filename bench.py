@@ -611,32 +611,6 @@ def run_curate(spark) -> dict[str, object]:
             med = statistics.median(secs)
             out["batch_sec_median"] = round(med, 3)
             out["max_batch_over_median"] = round(max(secs) / med, 2)
-            if fold_factor is not None:
-                # probe twins against the final multi-generation state:
-                # driver-side collect vs executor-side mapInPandas, same
-                # keys, same superset contract
-                probe_keys = (
-                    docs.filter(F.col("doc_id") % mod == 0)
-                    .limit(20000)
-                    .select(F.md5(F.col("text")).alias("key"))
-                )
-                store = curate.open_state(spark, state_dir, **store_kw)
-                twins = {}
-                for label, fn in (
-                    ("driver", store.probe),
-                    ("distributed", store.probe_distributed),
-                ):
-                    rows: list = []
-                    sec = measure(
-                        lambda: rows.append(fn("md5", probe_keys).count()))
-                    twins[label] = {
-                        "sec": round(sec, 3),
-                        "rows": rows[-1],
-                        "probe_mb": round(store.last_probe_bytes / 1e6, 2),
-                        "meta_mb": round(
-                            store.last_probe_meta_bytes / 1e6, 2),
-                    }
-                out["probe_twins"] = twins
             if reband_to is not None:
                 # state-migration cost: re-key the finished state to the
                 # sizing a 10x corpus would need, the one-job alternative

@@ -128,11 +128,6 @@ def _build_parser() -> argparse.ArgumentParser:
                          "of text length over the ACCUMULATED corpus")
     co.add_argument("--checkpoint", dest="corpus_checkpoint", default=None,
                     help="curate-stream: stream checkpoint directory")
-    co.add_argument("--probe-mode", dest="probe_mode", default="driver",
-                    choices=["driver", "distributed"],
-                    help="curate-stream: state-probe execution side "
-                         "(distributed = executor-side bloom test, no "
-                         "per-batch driver key collect)")
 
     ck = sub.add_parser(
         "check", help="data-quality expectation suite over a parquet table"
@@ -352,7 +347,6 @@ def main(argv: list[str] | None = None) -> int:
                     checkpoint_dir=args.corpus_checkpoint,
                     near_dup_threshold=args.threshold,
                     quality_q=args.quality_q,
-                    probe_mode=args.probe_mode,
                 )
                 q.awaitTermination()
                 print(f"curated into {args.output}", file=sys.stderr)

@@ -139,6 +139,11 @@ def _publish_manifest(table_path: str, version: int, manifest: dict) -> bool:
         os.remove(tmp)
 
 
+def _remove_manifest(table_path: str, version: int) -> None:
+    """Delete ``manifest.<version>.json`` (expiry's last step)."""
+    os.remove(os.path.join(table_path, f"manifest.{version}.json"))
+
+
 def _read_mapped(
     spark: SparkSession, table_path: str, m: dict, dirs: list
 ) -> DataFrame:
@@ -635,7 +640,7 @@ def expire_snapshots(table_path: str, *, keep_last: int = 2) -> list[int]:
         if os.path.isdir(full):
             shutil.rmtree(full)
     for v in expired:
-        os.remove(os.path.join(table_path, f"manifest.{v}.json"))
+        _remove_manifest(table_path, v)
     return expired
 
 

@@ -209,32 +209,24 @@ def suggest_semantic_banding(
 
 
 FOLD_FACTOR = state_store.DEFAULT_FOLD_FACTOR
-STATE_BUCKETS = state_store.DEFAULT_BUCKETS
 
 
 def open_state(
     spark: SparkSession,
     state_path: str,
     *,
-    buckets: int = STATE_BUCKETS,
     fold_factor: int = FOLD_FACTOR,
-    probe_mode: str = "driver",
 ) -> state_store.KeyedStateStore:
     """The curation state's store handle (see state_store docstring for
-    the bucketed + bloom-indexed layout and the tiered fold policy).
-    ``probe_mode="distributed"`` routes the three state probes through
-    ``state_store.probe_distributed`` (executor-side bloom test, no
-    O(batch-key) driver collect) — same superset results, pinned by
-    tests; the driver-side default wins at local[*] scale."""
-    if probe_mode not in ("driver", "distributed"):
-        raise ValueError(f"unknown probe_mode: {probe_mode!r}")
-    store = state_store.KeyedStateStore(
+    the bucketed + bloom-indexed layout, the tiered fold policy and the
+    ``snapshots`` commit protocol it publishes through). Every state
+    probe runs the store's driver-side bloom test
+    (:meth:`~state_store.KeyedStateStore.probe`)."""
+    return state_store.KeyedStateStore(
         spark, state_path,
         row_schema=STATE_ROW_SCHEMA, key_col="key", kind_col="kind",
-        bloom_kinds=BLOOM_KINDS, buckets=buckets, fold_factor=fold_factor,
+        bloom_kinds=BLOOM_KINDS, fold_factor=fold_factor,
     )
-    store.probe_mode = probe_mode
-    return store
 
 
 def read_state(spark: SparkSession, state_path: str) -> DataFrame | None:
@@ -266,15 +258,7 @@ def _state_kind(state, kind: str, keys_df: DataFrame | None = None):
         if keys_df is None:
             return state.read_kind(kind).select(
                 "kind", "key", "ref", "vals", "cnt")
-        # probe_mode "distributed" (open_state dial) runs the bloom
-        # test executor-side (state_store.probe_distributed) — same
-        # superset, no O(batch-key) driver collect
-        probe = (
-            state.probe_distributed
-            if getattr(state, "probe_mode", "driver") == "distributed"
-            else state.probe
-        )
-        return probe(kind, keys_df).select(
+        return state.probe(kind, keys_df).select(
             "kind", "key", "ref", "vals", "cnt")
     return state.filter(F.col("kind") == kind)
 
@@ -302,7 +286,6 @@ def _advance_state(
     batch_id: int,
     delta: DataFrame,
     *,
-    buckets: int = STATE_BUCKETS,
     fold_factor: int = FOLD_FACTOR,
     hash_fn: str = "md5",
     sem_meta: dict | None = None,
@@ -321,8 +304,7 @@ def _advance_state(
     ``manifest.N.json`` present and skips; it never needs manifests
     older than N-1, so retaining {N-1, N} suffices (pinned by
     tests/test_streaming_curate.py::test_retention_contract)."""
-    store = open_state(
-        spark, state_path, buckets=buckets, fold_factor=fold_factor)
+    store = open_state(spark, state_path, fold_factor=fold_factor)
     v = store.commit_delta(
         delta, version=batch_id, fold_fn=_compact_state,
         app_meta={"hash_fn": hash_fn, **(sem_meta or {})},
@@ -338,7 +320,6 @@ def reband_semantic_state(
     *,
     bands: int,
     planes: int,
-    buckets: int = STATE_BUCKETS,
     fold_factor: int = FOLD_FACTOR,
 ) -> dict:
     """Migrate a state's semantic-gate index to a new ``(bands,
@@ -369,8 +350,7 @@ def reband_semantic_state(
             f"state at {state_path!r} was built without the semantic "
             "gate: it has no vcode rows to re-key — rebuild from the "
             "corpus instead")
-    dest = open_state(
-        spark, dest_path, buckets=buckets, fold_factor=fold_factor)
+    dest = open_state(spark, dest_path, fold_factor=fold_factor)
     if dest.current_version() is not None:
         raise ValueError(
             f"destination {dest_path!r} already has committed state — "
@@ -1443,16 +1423,15 @@ def curate_stream(
     text_col: str = "text",
     id_col: str = "doc_id",
     hash_fn: str = "md5",
-    state_buckets: int = STATE_BUCKETS,
     fold_factor: int = FOLD_FACTOR,
-    probe_mode: str = "driver",
 ):
     """Start the curation stream over a document source. Audit rows land
     in ``sink_path/batch=<id>`` (survivors = ``filter(keep)``); the
     dedup state advances as one appended bucketed delta directory per
     batch under ``state_path`` (overflowing size tiers fold — see the
-    module docstring), and every state probe routes through the
-    store's bloom/bucket pruning. Every ``curate_batch`` gate is
+    module docstring) and publishes through ``sources/snapshots.py``'s
+    manifest commit pinned to the batch id; every state probe is the
+    store's driver-side bloom/bucket probe. Every ``curate_batch`` gate is
     exposed: repetition (``max_dup_char_fraction``), decontamination
     (``eval_df`` — a STATIC benchmark frame probed per batch), and the
     accumulated quality quantile (``quality_q``). Returns the
@@ -1460,11 +1439,7 @@ def curate_stream(
     spark = stream.sparkSession
 
     def _step(batch: DataFrame, batch_id: int) -> None:
-        store = open_state(
-            spark, state_path,
-            buckets=state_buckets, fold_factor=fold_factor,
-            probe_mode=probe_mode,
-        )
+        store = open_state(spark, state_path, fold_factor=fold_factor)
         if store.has_version(batch_id):
             return  # replayed batch: sink + state already published
         state = store if store.current_version() is not None else None
@@ -1540,8 +1515,7 @@ def curate_stream(
                 )
             _advance_state(
                 spark, state_path, batch_id, delta,
-                buckets=state_buckets, fold_factor=fold_factor,
-                hash_fn=hash_fn,
+                fold_factor=fold_factor, hash_fn=hash_fn,
                 sem_meta=(
                     {"sem_bands": semantic_bands,
                      "sem_planes": semantic_planes}

@@ -173,15 +173,9 @@ def kafka_options(
     return opts
 
 
-def trigger_spec(
-    *, trigger_seconds: int | None = None, available_now: bool = False
-) -> dict[str, object]:
-    """Kwargs for ``DataStreamWriter.trigger`` (pure). ``available_now``
-    drains-and-stops; otherwise a processing-time cadence."""
-    if available_now:
-        if trigger_seconds is not None:
-            raise ValueError("available_now excludes a processing-time trigger")
-        return {"availableNow": True}
+def trigger_spec(*, trigger_seconds: int | None = None) -> dict[str, object]:
+    """Kwargs for ``DataStreamWriter.trigger`` (pure): a processing-time
+    cadence."""
     if trigger_seconds is None or trigger_seconds <= 0:
         raise ValueError("trigger_seconds must be positive")
     return {"processingTime": f"{trigger_seconds} seconds"}

@@ -108,22 +108,19 @@ Streaming's replay contract.
 * **Filesystem assumptions.** Correctness needs exactly two
   primitives: a put-if-absent conditional write for the commit point
   and immutable files once a directory is referenced by a manifest.
-  The protocol-file seam is EXECUTED as ``streaming/objstore.py``:
-  ``backend="fs"`` publishes via create-exclusive ``os.link`` (POSIX
-  local filesystems, NFSv4); ``backend="objstore"`` is the S3/GCS
-  twin — conditional-create PUT for the manifest, whole-object
-  GET/PUT for sidecars, prefix listings — and the full state-store
-  test suite runs green over BOTH backends (parametrized fixture in
-  ``tests/test_state_store.py``), so a real object-store port only
-  swaps the HTTP client behind the same method contract. Probe
-  SEMANTICS (superset-of-matches) are backend-independent and pinned
-  by those tests. For the probe COMPUTE side, :meth:`probe` collects
-  the batch's key hashes driver-side (O(batch keys));
-  :meth:`probe_distributed` is the executed 100 TB twin — the bloom
-  test runs in ``mapInPandas`` over the batch's own partitions with
-  per-worker shard caches, and only the distinct candidate
-  (directory, bucket) pairs reach the driver. Both are pinned
-  row-identical.
+  The commit point is ``sources/snapshots.py``'s, the one commit
+  protocol of the package: versions, manifest reads,
+  ``_publish_manifest``'s create-exclusive ``os.link`` and manifest
+  removal all go through that module, so the root must be a local
+  (or mounted shared) filesystem — a URI root is refused at
+  construction (``_require_local``). Bloom sidecars land via
+  write-to-temp + ``os.replace``, so a retried writer republishes
+  identical bytes and readers never see a torn file. The fused
+  distributed bloom build writes its shards from executor tasks, so
+  on a cluster the root must be a path every executor shares.
+  :meth:`probe` collects the batch's key hashes driver-side —
+  O(batch keys), the same bound the probe's broadcast join already
+  pays.
 
 Reference scope: SURVEY.md §2 T3 (checkpointed exactly-once state);
 the probe/pruning design is original, from the public Bloom-filter /
@@ -134,8 +131,8 @@ implementation (which keeps no streaming dedup state at all).
 from __future__ import annotations
 
 import io
-import json
 import os
+import shutil
 import threading
 import time
 import uuid
@@ -145,13 +142,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nexus_processor_spark.sources.snapshots import (
-    _MANIFEST_RE,
-    _require_local,
-)
-from nexus_processor_spark.streaming.objstore import resolve_backend
+from nexus_processor_spark.sources import snapshots
 
-DEFAULT_BUCKETS = 256  # probe-time fallback for legacy manifests only
 MAX_BUCKETS = 1 << 20  # file-count valve, not a sizing knob
 DEFAULT_TARGET_ROWS_PER_BUCKET = 8192
 DEFAULT_FOLD_FACTOR = 4
@@ -230,6 +222,29 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
+def _du(path: str) -> int:
+    """Bytes of EVERY file under ``path`` (parquet, bloom sidecars,
+    Spark markers) — the commit/fold/probe byte accounting."""
+    return sum(
+        os.path.getsize(os.path.join(root, f))
+        for root, _, files in os.walk(path) for f in files
+    )
+
+
+def _listdir(path: str) -> list[str]:
+    return sorted(os.listdir(path)) if os.path.isdir(path) else []
+
+
+def _put_bytes(path: str, data: bytes) -> None:
+    """Atomic sidecar write: temp file + ``os.replace``, so a retried
+    task republishes identical bytes and readers never see a torn
+    file."""
+    tmp = path + f".tmp-{uuid.uuid4().hex}"
+    with open(tmp, "wb") as fh:
+        fh.write(data)
+    os.replace(tmp, path)
+
+
 def _bloom_m(max_bucket_rows: int) -> int:
     """Bits per bucket: next power of two >= bits/key * rows. A power
     of two plus an odd double-hashing step gives gcd(step, m) == 1 so
@@ -251,7 +266,6 @@ def _npz_bytes(bits: np.ndarray, m: int) -> bytes:
 
 def _make_shard_writer(
     dir_full: str, kind_col: str, kinds_m: dict[str, int], nb: int,
-    backend,
 ):
     """mapInPandas kernel: assemble and write the bloom ``.npz`` shards
     for every (kind, bucket-group) whose ``bit_or``-finished words land
@@ -259,9 +273,8 @@ def _make_shard_writer(
     :meth:`KeyedStateStore._build_blooms_distributed`. Each task's
     memory is its own groups' bitmaps (~one shard after the explicit
     per-group repartition), the driver only ever sees the one-row-per-
-    file summary. Requires the store root on a shared filesystem — the
-    same contract ``probe_distributed``'s executor-side sidecar reads
-    already carry (module docstring, deployment contract)."""
+    file summary. Requires the store root on a filesystem every
+    executor shares (module docstring, deployment contract)."""
     group = BLOOM_GROUP
 
     def writer(batches):
@@ -290,10 +303,7 @@ def _make_shard_writer(
         for (kind, g), bits in acc.items():
             name = (f"_bloom_{kind}.npz" if nb <= group
                     else f"_bloom_{kind}.g{g}.npz")
-            # atomic object PUT via the backend: a speculated/retried
-            # task republishes identical bytes, readers never see a
-            # torn file
-            backend.put_bytes(
+            _put_bytes(
                 os.path.join(dir_full, name),
                 _npz_bytes(bits, kinds_m[kind]))
             out.append((kind, g))
@@ -311,9 +321,9 @@ class KeyedStateStore:
 
     ``row_schema`` is the non-partition column schema (everything but
     the ``kind`` string column, which lives in the directory layout);
-    ``key_col`` is the bucketed/bloomed probe key. ``buckets`` is only
-    the probe-time fallback for manifests that predate per-directory
-    bucket counts; sizing is governed by ``target_rows_per_bucket``.
+    ``key_col`` is the bucketed/bloomed probe key. Each directory's
+    bucket count is sized by ``target_rows_per_bucket`` and recorded in
+    its manifest entry.
     """
 
     def __init__(
@@ -325,23 +335,17 @@ class KeyedStateStore:
         key_col: str = "key",
         kind_col: str = "kind",
         bloom_kinds: tuple[str, ...] = (),
-        buckets: int = DEFAULT_BUCKETS,
         target_rows_per_bucket: int = DEFAULT_TARGET_ROWS_PER_BUCKET,
         fold_factor: int = DEFAULT_FOLD_FACTOR,
         driver_build_max_rows: int = DEFAULT_DRIVER_BUILD_MAX_ROWS,
-        backend="fs",
     ) -> None:
-        _require_local(root)
+        snapshots._require_local(root)
         self.spark = spark
         self.root = root
-        # protocol-file backend: "fs" (POSIX, os.link commit point) or
-        # "objstore" (conditional-PUT twin) — see streaming/objstore.py
-        self.backend = resolve_backend(backend)
         self.row_schema = row_schema
         self.key_col = key_col
         self.kind_col = kind_col
         self.bloom_kinds = tuple(bloom_kinds)
-        self.buckets = int(buckets)
         self.target_rows_per_bucket = max(1, int(target_rows_per_bucket))
         self.fold_factor = max(2, int(fold_factor))
         self.driver_build_max_rows = int(driver_build_max_rows)
@@ -360,28 +364,17 @@ class KeyedStateStore:
     # ------------------------------------------------------------ meta
 
     def versions(self) -> list[int]:
-        out = [
-            int(m.group(1))
-            for name in self.backend.listdir(self.root)
-            if (m := _MANIFEST_RE.match(name))
-        ]
-        return sorted(out)
+        return snapshots._versions(self.root)
 
     def current_version(self) -> int | None:
         vs = self.versions()
         return vs[-1] if vs else None
 
     def has_version(self, version: int) -> bool:
-        return self.backend.exists(
-            os.path.join(self.root, f"manifest.{version}.json")
-        )
+        return snapshots.has_version(self.root, version)
 
     def _manifest(self, version: int) -> dict:
-        data = self.backend.get_bytes(
-            os.path.join(self.root, f"manifest.{version}.json"))
-        if data is None:
-            raise FileNotFoundError(f"manifest.{version}.json")
-        return json.loads(data)
+        return snapshots._read_manifest(self.root, version)
 
     def _dirs(self) -> list[dict]:
         v = self.current_version()
@@ -501,13 +494,13 @@ class KeyedStateStore:
         # write AND probe-side load
         bits = np.ascontiguousarray(bits.view(np.int64))
         if nb <= BLOOM_GROUP:
-            self.backend.put_bytes(
+            _put_bytes(
                 os.path.join(dir_full, f"_bloom_{kind}.npz"),
                 _npz_bytes(bits, m),
             )
             return
         for gi in range(-(-nb // BLOOM_GROUP)):
-            self.backend.put_bytes(
+            _put_bytes(
                 os.path.join(dir_full, f"_bloom_{kind}.g{gi}.npz"),
                 _npz_bytes(
                     bits[gi * BLOOM_GROUP:(gi + 1) * BLOOM_GROUP], m),
@@ -636,8 +629,7 @@ class KeyedStateStore:
             .repartition(
                 n_groups * len(kinds_m), F.col(kind_col), F.col("_g"))
             .mapInPandas(
-                _make_shard_writer(
-                    dir_full, kind_col, kinds_m, nb, self.backend),
+                _make_shard_writer(dir_full, kind_col, kinds_m, nb),
                 f"{kind_col} string, _g long",
             )
             .collect()
@@ -678,18 +670,17 @@ class KeyedStateStore:
         self.last_commit_bytes = 0
         self.last_fold_bytes = 0
         entry = self._write_delta_dir(delta, expected_rows=expected_rows)
-        self.last_commit_bytes = self.backend.du(
-            os.path.join(self.root, entry["path"]))
+        self.last_commit_bytes = _du(os.path.join(self.root, entry["path"]))
         dirs = self._dirs() + [entry]
         dirs = self._fold_tiers(dirs, fold_fn or (lambda df: df.distinct()))
         prev = self.current_version()
         v = version if version is not None else (
             0 if prev is None else prev + 1
         )
-        manifest = {"version": v, "dirs": dirs, "buckets": self.buckets}
+        manifest = {"version": v, "dirs": dirs}
         if app_meta is not None:
             manifest["app"] = app_meta
-        ok = self.backend.publish_manifest(self.root, v, manifest)
+        ok = snapshots._publish_manifest(self.root, v, manifest)
         return v if ok else None
 
     def app_meta(self) -> dict | None:
@@ -729,7 +720,7 @@ class KeyedStateStore:
             entry = self._write_delta_dir(
                 merged_df,
                 expected_rows=sum(dirs[i]["rows"] for i in idx))
-            folded = self.backend.du(os.path.join(self.root, entry["path"]))
+            folded = _du(os.path.join(self.root, entry["path"]))
             self.last_fold_bytes += folded
             self.last_commit_bytes += folded
             dirs = [e for i, e in enumerate(dirs) if i not in idx]
@@ -746,7 +737,7 @@ class KeyedStateStore:
                 self.root, e["path"], f"{self.kind_col}={kind}")
             out.extend(
                 os.path.join(base, b)
-                for b in self.backend.listdir(base)
+                for b in _listdir(base)
                 if b.startswith("_b=")
             )
         return out
@@ -796,8 +787,10 @@ class KeyedStateStore:
         cached = _cache_get(full)
         if cached is not None:
             return cached, 0
-        data = self.backend.get_bytes(full)
-        if data is None:
+        try:
+            with open(full, "rb") as fh:
+                data = fh.read()
+        except FileNotFoundError:
             return None, 0
         loaded_bytes = len(data)
         with np.load(io.BytesIO(data)) as z:
@@ -864,7 +857,7 @@ class KeyedStateStore:
             return self._read_paths([], kind)
         paths: list[str] = []
         for e in entries:
-            nb = int(e.get("buckets", self.buckets))
+            nb = int(e["buckets"])
             dir_full = os.path.join(self.root, e["path"])
             b = (h1 % np.int64(nb)).astype(np.int64)
             hit_buckets: list[np.ndarray] = []
@@ -906,142 +899,13 @@ class KeyedStateStore:
                 p = os.path.join(
                     dir_full,
                     f"{self.kind_col}={kind}", f"_b={int(bucket)}")
-                if self.backend.isdir(p):
+                if os.path.isdir(p):
                     paths.append(p)
         for p in paths:
-            self.last_probe_bytes += self.backend.du(p)
+            self.last_probe_bytes += _du(p)
         self.probe_bytes_total += self.last_probe_bytes
         self.probe_meta_bytes_total += self.last_probe_meta_bytes
         return self._read_paths(paths, kind)
-
-    def probe_distributed(
-        self, kind: str, keys_df: DataFrame, key_expr=None,
-    ) -> DataFrame:
-        """Executor-side twin of :meth:`probe` — same superset
-        contract, same blooms, but the membership test runs as a
-        ``mapInPandas`` over the batch's OWN key partitions: key hashes
-        never collect to the driver; only the DISTINCT candidate
-        (directory, bucket) pairs do (bounded by the buckets actually
-        hit — thousands — regardless of batch key count). This is the
-        100 TB deployment shape the driver-side probe's O(batch-key)
-        collect is documented against: executors read bloom shards
-        from the shared store path (process-cached per worker, so a
-        long-lived streaming job pays each shard's load once per
-        worker, not once per batch).
-
-        With sidecars present (every ``bloom_kinds`` directory),
-        results are IDENTICAL to :meth:`probe` (pinned by tests): both
-        sides evaluate the same bitmaps with the same arithmetic, so
-        the candidate sets match exactly. A sidecar-LESS directory
-        fails safe on both paths but prunes differently (driver reads
-        the whole kind; this reads every bucket the batch's keys map
-        to) — both are supersets of the matches, which is the contract
-        callers rely on. ``last_probe_meta_bytes`` aggregates the
-        executors' cold shard loads (summed across workers — each
-        worker warms its own cache)."""
-        self.last_probe_bytes = 0
-        self.last_probe_meta_bytes = 0
-        entries = [
-            e for e in self._dirs() if e.get("kind_rows", {}).get(kind, 0) > 0
-        ]
-        if not entries:
-            return self._read_paths([], kind)
-        k = key_expr if key_expr is not None else F.col(keys_df.columns[0])
-        hk = keys_df.select(
-            F.xxhash64(k).alias("_h1"),
-            F.xxhash64(k, F.lit(_H2_SALT)).alias("_h2"),
-        )
-        root = self.root
-        kind_col = self.kind_col
-        backend = self.backend
-        default_nb = self.buckets
-        meta = [
-            (e["path"], int(e.get("buckets", default_nb)))
-            for e in entries
-        ]
-        member_fn = KeyedStateStore._bloom_member
-
-        def kernel(batches):
-            import pandas as pd
-
-            for b in batches:
-                h1 = b["_h1"].to_numpy(dtype=np.int64)
-                h2 = b["_h2"].to_numpy(dtype=np.int64)
-                loaded = 0
-                out_dir: list[int] = []
-                out_bucket: list[int] = []
-                if h1.size:
-                    for di, (rel, nb) in enumerate(meta):
-                        dir_full = os.path.join(root, rel)
-                        bb = (h1 % np.int64(nb)).astype(np.int64)
-                        if nb <= BLOOM_GROUP:
-                            shards = [(os.path.join(
-                                dir_full, f"_bloom_{kind}.npz"),
-                                np.arange(h1.size), 0)]
-                        else:
-                            g = bb // BLOOM_GROUP
-                            shards = [
-                                (os.path.join(
-                                    dir_full,
-                                    f"_bloom_{kind}.g{int(gi)}.npz"),
-                                 np.flatnonzero(g == gi),
-                                 int(gi) * BLOOM_GROUP)
-                                for gi in np.unique(g)
-                            ]
-                        for path, sel, base_b in shards:
-                            ent = _cache_get(path)
-                            if ent is None:
-                                data = backend.get_bytes(path)
-                                if data is not None:
-                                    loaded += len(data)
-                                    with np.load(io.BytesIO(data)) as z:
-                                        ent = {
-                                            "bits":
-                                                z["bits"].view(np.uint64),
-                                            "m": int(z["m"]),
-                                        }
-                                    ent["nbytes"] = ent["bits"].nbytes
-                                    _cache_put(path, ent)
-                            if ent is None:
-                                # no sidecar: every bucket this batch's
-                                # keys map to is a candidate (fail safe)
-                                for bucket in np.unique(bb[sel]):
-                                    out_dir.append(di)
-                                    out_bucket.append(int(bucket))
-                                continue
-                            member = member_fn(
-                                ent["bits"], ent["m"],
-                                bb[sel] - base_b, h1[sel], h2[sel])
-                            if member.any():
-                                for bucket in np.unique(bb[sel][member]):
-                                    out_dir.append(di)
-                                    out_bucket.append(int(bucket))
-                yield pd.DataFrame({
-                    "_d": out_dir + [-1],
-                    "_bk": out_bucket + [-1],
-                    "_meta": [0] * len(out_dir) + [loaded],
-                })
-
-        rows = (
-            hk.mapInPandas(kernel, "_d int, _bk long, _meta long")
-            .groupBy("_d", "_bk").agg(F.sum("_meta").alias("_meta"))
-            .collect()
-        )
-        paths: list[str] = []
-        for r in rows:
-            if r["_d"] < 0:
-                self.last_probe_meta_bytes += int(r["_meta"])
-                continue
-            rel, _ = meta[r["_d"]]
-            p = os.path.join(
-                root, rel, f"{kind_col}={kind}", f"_b={int(r['_bk'])}")
-            if self.backend.isdir(p):
-                paths.append(p)
-        for p in paths:
-            self.last_probe_bytes += self.backend.du(p)
-        self.probe_bytes_total += self.last_probe_bytes
-        self.probe_meta_bytes_total += self.last_probe_meta_bytes
-        return self._read_paths(sorted(set(paths)), kind)
 
     # ---------------------------------------------------------- expiry
 
@@ -1071,24 +935,23 @@ class KeyedStateStore:
             removable.update(e["path"] for e in self._manifest(v)["dirs"])
         for d in removable - referenced:
             full = os.path.join(self.root, d)
-            if self.backend.isdir(full):
-                self.backend.delete_tree(full)
+            if os.path.isdir(full):
+                shutil.rmtree(full)
                 _cache_drop_under(full)
         for v in expired:
-            self.backend.delete(
-                os.path.join(self.root, f"manifest.{v}.json"))
+            snapshots._remove_manifest(self.root, v)
         if orphan_ttl_seconds is not None:
             data_root = os.path.join(self.root, "data")
             ever_referenced = referenced | removable
             cutoff = time.time() - orphan_ttl_seconds
-            for name in self.backend.listdir(data_root):
+            for name in _listdir(data_root):
                 rel = f"data/{name}"
                 full = os.path.join(data_root, name)
                 if (
                     rel not in ever_referenced
-                    and self.backend.isdir(full)
-                    and self.backend.mtime(full) <= cutoff
+                    and os.path.isdir(full)
+                    and os.path.getmtime(full) <= cutoff
                 ):
-                    self.backend.delete_tree(full)
+                    shutil.rmtree(full)
                     _cache_drop_under(full)
         return expired

@@ -298,3 +298,37 @@ def test_dominant_suppliers_semi_join_and_broadcast_totals(spark):
     plan = explain.executed_plan(relational_q.q_dominant_suppliers(spark, SF))
     assert "LeftSemi" in plan
     assert "CartesianProduct" not in plan
+
+
+def test_driver_side_dimension_reads_accept_directory_layout(tmp_path):
+    """``_region_nations``/``_all_nations`` read region and nation with
+    pyarrow on the driver. A Spark-written table is a DIRECTORY (part
+    files plus ``_SUCCESS``), not a single file: both helpers must
+    return exactly what the single-file layout returns. A URI
+    ``sf_dir`` is not a local path and must raise, never read a
+    literal local directory. JVM-free."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    for name in ("region", "nation"):
+        t = pq.read_table(f"{SF}/{name}.parquet")
+        d = tmp_path / f"{name}.parquet"
+        d.mkdir()
+        half = t.num_rows // 2
+        pq.write_table(t.slice(0, half), d / "part-00000.parquet")
+        pq.write_table(t.slice(half), d / "part-00001.parquet")
+        (d / "_SUCCESS").touch()
+    as_dir = str(tmp_path)
+    for region in ("ASIA", "EUROPE", "AMERICA"):
+        want = relational_q._region_nations(SF, region)
+        assert want  # every TPC-H region has nations
+        assert sorted(relational_q._region_nations(as_dir, region)) == \
+            sorted(want)
+    want = relational_q._all_nations(SF)
+    assert len(want) == 25
+    assert sorted(relational_q._all_nations(as_dir)) == sorted(want)
+    with pytest.raises(pa.ArrowInvalid, match="URI"):
+        relational_q._region_nations("s3a://bucket/sf", "ASIA")
+    with pytest.raises(pa.ArrowInvalid, match="URI"):
+        relational_q._all_nations("s3a://bucket/sf")

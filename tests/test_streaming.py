@@ -84,11 +84,8 @@ def test_kafka_option_plumbing():
     with pytest.raises(ValueError):
         replay.kafka_options(brokers="b", topic="")
     assert replay.trigger_spec(trigger_seconds=10) == {"processingTime": "10 seconds"}
-    assert replay.trigger_spec(available_now=True) == {"availableNow": True}
     with pytest.raises(ValueError):
         replay.trigger_spec(trigger_seconds=0)
-    with pytest.raises(ValueError):
-        replay.trigger_spec(trigger_seconds=5, available_now=True)
 
 
 def test_stream_start_timestamp_drops_earlier_files(spark, tmp_path):

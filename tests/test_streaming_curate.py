@@ -544,71 +544,6 @@ def test_stream_refuses_hash_fn_switch(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_curate_batch_distributed_probe_mode_equal(spark, tmp_path):
-    """open_state(probe_mode="distributed") routes the state probes
-    through the executor-side bloom test — curation decisions must be
-    IDENTICAL to the driver-probe store path."""
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet").select("doc_id", "text")
-    sd = str(tmp_path / "state")
-    a1 = curate.curate_batch(docs.filter("doc_id % 2 = 0"), None)
-    curate._advance_state(
-        spark, sd, 0,
-        curate._survivor_state(
-            a1.filter("keep"), text_col="text", id_col="doc_id"))
-    batch = docs.filter("doc_id % 2 = 1")
-
-    def decisions(mode):
-        st = curate.open_state(spark, sd, probe_mode=mode)
-        return {
-            r.doc_id: (r.keep, r.drop_reason)
-            for r in curate.curate_batch(batch, st).collect()
-        }
-
-    assert decisions("distributed") == decisions("driver")
-    import pytest
-
-    with pytest.raises(ValueError, match="probe_mode"):
-        curate.open_state(spark, sd, probe_mode="bogus")
-
-
-@pytest.mark.slow
-def test_curate_stream_distributed_probe_mode_end_to_end(spark, tmp_path):
-    """The probe_mode dial threads through curate_stream: a two-drain
-    run with executor-side probes makes the same decisions as the
-    driver-probe stream run pinned above (exact dup + near dup caught
-    against batch-1 state)."""
-    src = tmp_path / "incoming"
-    src.mkdir()
-    sink = str(tmp_path / "sink")
-    state = str(tmp_path / "state")
-    ck = str(tmp_path / "ck")
-    schema = "doc_id long, text string"
-
-    def add_file(name, rows):
-        spark.createDataFrame(rows, schema).coalesce(1) \
-            .write.mode("overwrite").parquet(str(src / name))
-
-    def drain():
-        stream = spark.readStream.schema(schema).parquet(str(src / "*"))
-        q = curate.curate_stream(
-            stream, state_path=state, sink_path=sink, checkpoint_dir=ck,
-            probe_mode="distributed")
-        q.awaitTermination(120)
-
-    add_file("b1", [(1, LONG_A), (2, OTHER)])
-    drain()
-    add_file("b2", [(10, LONG_A), (11, NEAR_A)])
-    drain()
-    got = {(r.doc_id, r.keep, r.drop_reason)
-           for r in spark.read.option("basePath", sink)
-           .parquet(f"{sink}/batch=*").collect()}
-    assert (10, False, "exact_dup") in got
-    assert (11, False, "near_dup") in got
-    assert (1, True, None) in got and (2, True, None) in got
-
-
-@pytest.mark.slow
 def test_all_gates_audit_cost_flat_as_state_grows(spark, tmp_path):
     """VERDICT r8 next #7: the all-gates audit cost is not
     state-coupled. With every gate on (accumulated quality quantile,
@@ -751,9 +686,10 @@ def test_semantic_gate_stream_end_to_end(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_semantic_gate_distributed_probe_mode_equal(spark, tmp_path):
-    """The semantic kinds (vbkt/vcode) through probe_mode="distributed"
-    must produce the same drop decisions as the driver-probe path."""
+def test_semantic_gate_store_probe_decisions(spark, tmp_path):
+    """The semantic kinds (vbkt/vcode) probed through the store handle
+    must drop the near-duplicate of a kept state doc and keep the
+    rest."""
     docs = _sem_docs(spark)
     kw = {"embedding_col": "embedding", "semantic_threshold": 0.9,
           "semantic_dim": 8}
@@ -766,16 +702,12 @@ def test_semantic_gate_distributed_probe_mode_equal(spark, tmp_path):
             embedding_col="embedding", semantic_dim=8))
     batch = docs.filter("doc_id IN (2, 4)")
 
-    def decisions(mode):
-        st = curate.open_state(spark, sd, probe_mode=mode)
-        return {
-            r.doc_id: (r.keep, r.drop_reason)
-            for r in curate.curate_batch(batch, st, **kw).collect()
-        }
-
-    want = {2: (False, "semantic_dup"), 4: (True, None)}
-    assert decisions("driver") == want
-    assert decisions("distributed") == want
+    st = curate.open_state(spark, sd)
+    got = {
+        r.doc_id: (r.keep, r.drop_reason)
+        for r in curate.curate_batch(batch, st, **kw).collect()
+    }
+    assert got == {2: (False, "semantic_dup"), 4: (True, None)}
 
 
 def test_sem_tables_arrow_equals_native(spark):
