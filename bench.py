@@ -403,6 +403,15 @@ def run_docs(spark) -> dict[str, object]:
     }
 
 
+def twin_modulus(docs: int, vecs: int) -> int:
+    """The semantic variants' twin offset: the largest ``m <= min(vecs,
+    docs // 2)`` with ``m ≡ 1 (mod 40)``. Every embedding key ``doc_id mod
+    m`` exists, every doc below ``docs - m`` has a twin ``m`` ids later —
+    in the NEXT 40-way batch — and the defaults (2M docs, 1M vectors)
+    give 999,961, the offset the committed artifacts were measured at."""
+    return 40 * ((min(vecs, docs // 2) - 1) // 40) + 1
+
+
 def run_curate(spark) -> dict[str, object]:
     """Streaming-curation state scaling: 5 consecutive ~200k-doc batches
     through the gate pipeline, each curated AGAINST the state the
@@ -652,8 +661,8 @@ def run_curate(spark) -> dict[str, object]:
         drive(gates=False, n_batches=8, mod=20, fold_factor=2)
         if _remaining() > 500 else {"skipped": "budget"})
     # semantic-dedup variant: ~50k docs/batch carrying a 64-dim
-    # embedding (vecbig joined on doc_id mod 999_961 — the offset is
-    # ≡ 1 (mod 40), so a doc's twin lands in the NEXT driven batch:
+    # embedding (vecbig joined on doc_id mod twin_modulus — the offset
+    # is ≡ 1 (mod 40), so a doc's twin lands in the NEXT driven batch:
     # each later batch's twins must drop against the PREVIOUS batch's
     # kept vectors, exercising the vbkt/vcode state probes with real
     # hits, never a full scan). Second-occurrence twins with an ODD
@@ -662,6 +671,7 @@ def run_curate(spark) -> dict[str, object]:
     # recall, not just the trivially-colliding exact-twin case.
     if _remaining() > 1100:
         ensure_big_vecs(spark)
+        twin = twin_modulus(DOCS_ROWS, VEC_ROWS)
         emb = spark.read.parquet(
             f"{VEC_DIR}/embeddings.parquet"
         ).select(F.col("vec_id").alias("_ek"), "embedding")
@@ -669,14 +679,14 @@ def run_curate(spark) -> dict[str, object]:
             F.pmod(F.xxhash64(F.col("doc_id"), i), F.lit(2001))
             - F.lit(1000)) / 1000.0
         eps = (
-            F.when(F.col("doc_id") < 999_961, F.lit(0.0))
+            F.when(F.col("doc_id") < twin, F.lit(0.0))
             .when(F.pmod("doc_id", F.lit(2)) == 0, F.lit(0.0))
             .otherwise(
                 F.lit(0.08)
                 + F.lit(0.34) * F.pmod("doc_id", F.lit(7)) / F.lit(6.0))
         )
         docs_sem = (
-            docs.withColumn("_ek", F.pmod("doc_id", F.lit(999_961)))
+            docs.withColumn("_ek", F.pmod("doc_id", F.lit(twin)))
             .join(emb, "_ek")
             .withColumn("_eps", eps)
             .withColumn("embedding", F.transform(
@@ -1577,6 +1587,15 @@ def _context_stopped(spark) -> bool:
         return True
 
 
+def _release_persisted(spark) -> None:
+    """Drop every cached frame AND every persisted RDD: a
+    ``localCheckpoint`` block is not a cache entry, so ``clearCache``
+    alone leaves it holding the heap."""
+    spark.catalog.clearCache()
+    for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+        rdd.unpersist(False)
+
+
 def run_sections(spark, sections, results: dict, persist,
                  only=frozenset(), is_stopped=None) -> str | None:
     """Run each ``(name, fn, est)`` section into ``results`` in order,
@@ -1587,9 +1606,10 @@ def run_sections(spark, sections, results: dict, persist,
     SparkContext. Then every later section would fail at once, so that
     section and all later ones get a ``{"context_lost": <section>}``
     marker and are not attempted. On a live context the cache is cleared
-    after every attempted section, failed ones included, so frames a
-    section left persisted never hold the next section's heap. Returns
-    the section that lost the context, or None."""
+    and every persisted RDD unpersisted after every attempted section,
+    failed ones included, so frames a section left persisted never hold
+    the next section's heap. Returns the section that lost the context,
+    or None."""
     if is_stopped is None:
         is_stopped = lambda: _context_stopped(spark)  # noqa: E731
     lost = None
@@ -1618,7 +1638,7 @@ def run_sections(spark, sections, results: dict, persist,
             else:
                 _note(f"{name} done in {time.monotonic() - s:.1f}s")
             if lost is None:
-                spark.catalog.clearCache()
+                _release_persisted(spark)
         persist(results)
     return lost
 

@@ -277,21 +277,14 @@ def band_signatures(
     rows_per_band: int = 2,
     shingle_words: int = 3,
     hash_fn: str = "md5",
-    projection: DataFrame | None = None,
 ) -> DataFrame:
     """The ``(id, band, sig)`` table :func:`minhash_dedup_pairs` buckets
     on, as a standalone output — the persistable near-dup INDEX: store it
     for the kept corpus and a new batch is near-dup-checked by one
     equi-join on ``(band, sig)`` (see ``streaming.curate``). At
     ``rows_per_band=1`` this is exactly :func:`minhash_signatures`
-    (pinned by tests).
-
-    ``projection`` supplies a pre-built (optionally persisted)
-    :func:`_shingle_hash_projection` with MATCHING num_bands /
-    rows_per_band / hash_fn, so several consumers (pair detection, index
-    build) share one expensive minhash pass; the caller owns its
-    lifecycle."""
-    sh = projection if projection is not None else _shingle_hash_projection(
+    (pinned by tests)."""
+    sh = _shingle_hash_projection(
         df, text_col=text_col, id_col=id_col, num_bands=num_bands,
         rows_per_band=rows_per_band, shingle_words=shingle_words,
         hash_fn=hash_fn,
@@ -322,16 +315,9 @@ def minhash_dedup_pairs(
     threshold: float = 0.5,
     max_bucket: int | None = None,
     persist_shingles: bool = True,
-    broadcast_verify: bool = True,
     hash_fn: str = "md5",
-    projection: DataFrame | None = None,
 ) -> DataFrame:
     """End-to-end near-dup pair detection: LSH candidates -> Jaccard gate.
-
-    ``projection`` supplies a pre-built :func:`_shingle_hash_projection`
-    (matching parameters; caller owns persistence — ``persist_shingles``
-    is ignored) so the expensive minhash pass is shared with other
-    consumers, e.g. ``band_signatures`` in ``streaming.curate``.
 
     Classic (b, r) banding: each of ``num_bands`` signatures concatenates
     ``rows_per_band`` independent minhashes, so two docs collide on a band
@@ -352,21 +338,18 @@ def minhash_dedup_pairs(
     # so each band would re-hash its salt's whole array — measured 2x worse.)
     # md5 is the cross-engine-checkable scheme; xxhash64 the scale path
     # (native long codegen, ~10x cheaper per shingle).
-    if projection is not None:
-        sh = projection
-    else:
-        sh = _shingle_hash_projection(
-            df, text_col=text_col, id_col=id_col, num_bands=num_bands,
-            rows_per_band=rows_per_band, shingle_words=shingle_words,
-            hash_fn=hash_fn,
-        )
-        if persist_shingles:
-            # Prime the cache with an explicit action: four plan branches
-            # read this projection, and a lazily-persisted DF would be
-            # recomputed by each branch racing within the first job
-            # (measured 3x slower).
-            sh = sh.persist()
-            sh.count()
+    sh = _shingle_hash_projection(
+        df, text_col=text_col, id_col=id_col, num_bands=num_bands,
+        rows_per_band=rows_per_band, shingle_words=shingle_words,
+        hash_fn=hash_fn,
+    )
+    if persist_shingles:
+        # Prime the cache with an explicit action: four plan branches
+        # read this projection, and a lazily-persisted DF would be
+        # recomputed by each branch racing within the first job
+        # (measured 3x slower).
+        sh = sh.persist()
+        sh.count()
 
     band_arr = F.array(*[
         _band_sig_col(b, rows_per_band, hash_fn) for b in range(num_bands)
@@ -379,17 +362,11 @@ def minhash_dedup_pairs(
     # Verification joins the per-doc shingle projection in twice. The SMALL
     # side of both joins is the candidate set (banding collapsed it), so
     # that's what broadcasts — the corpus-sized projection streams map-side
-    # through both joins and is never shuffled OR broadcast (broadcasting
-    # the projection would scale with the corpus and OOM at warehouse
-    # scale). ``broadcast_verify=False`` drops the hints for pathological
-    # runs where even the candidate pair set exceeds broadcast limits —
-    # joins then plan as shuffle joins.
+    # through both joins and is never shuffled OR broadcast (a broadcast
+    # projection would scale with the corpus and OOM at warehouse scale).
     a = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-    if broadcast_verify:
-        paired = F.broadcast(F.broadcast(cands).join(a, "id_a")).join(b, "id_b")
-    else:
-        paired = cands.join(a, "id_a").join(b, "id_b")
+    paired = F.broadcast(F.broadcast(cands).join(a, "id_a")).join(b, "id_b")
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - inter
     return (

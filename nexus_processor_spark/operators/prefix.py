@@ -81,16 +81,15 @@ def distributed_row_number(
     tiebreak_cols: tuple[str, ...] = (),
     grid: float,
     out_col: str = "row_index",
-    zero_based: bool = True,
 ) -> DataFrame:
-    """Global row ordinal in ``(order_col, *tiebreak_cols)`` order via the
-    same two-phase scan as :func:`distributed_running_sum` — per-bucket
-    ``row_number`` under ``PARTITION BY bucket`` (bounded partitions) plus
-    broadcast cumulative bucket counts, instead of the single-task
-    ``row_number() OVER (ORDER BY ...)`` global window. Equal full sort
-    keys get an arbitrary-but-stable order within the tie; pass a unique
-    tiebreak for full determinism. NULL order keys rank first (see
-    :func:`_bucket`)."""
+    """Zero-based global row ordinal in ``(order_col, *tiebreak_cols)``
+    order via the same two-phase scan as :func:`distributed_running_sum`:
+    per-bucket ``row_number`` under ``PARTITION BY bucket`` (bounded
+    partitions) plus broadcast cumulative bucket counts, instead of the
+    single-task ``row_number() OVER (ORDER BY ...)`` global window. Equal
+    full sort keys get an arbitrary-but-stable order within the tie; pass
+    a unique tiebreak for full determinism. NULL order keys rank first
+    (see :func:`_bucket`)."""
     order_keys = [order_col, *tiebreak_cols]
     rows = df.withColumn("_b", _bucket(order_col, grid))
     bucket_counts = rows.groupBy("_b").agg(F.count(F.lit(1)).alias("_bn"))
@@ -99,12 +98,11 @@ def distributed_row_number(
         "_b", F.coalesce(F.sum("_bn").over(w_b), F.lit(0)).alias("_off")
     )
     w_in = Window.partitionBy("_b").orderBy(*order_keys)
-    base = F.lit(1) if zero_based else F.lit(0)
     return (
         rows.join(F.broadcast(offsets), "_b")
         .withColumn(
             out_col,
-            (F.col("_off") + F.row_number().over(w_in) - base).cast("long"),
+            (F.col("_off") + F.row_number().over(w_in) - 1).cast("long"),
         )
         .drop("_b", "_off")
     )

@@ -55,21 +55,18 @@ def cms_build(
     width: int = 8192,
     depth: int = 4,
     weight_col: str | None = None,
-    pre_aggregate: bool = True,
 ) -> DataFrame:
     """Count-Min sketch of ``items[key_col]`` (one count per row, or
     ``weight_col`` summed): rows ``(d, bucket, n)``, at most
     ``depth x width`` of them.
 
-    ``pre_aggregate`` collapses the stream to per-key totals BEFORE the
-    x-depth bucket explode — for Zipfian key domains (tokens, domains,
-    ids-with-repeats) the explode then runs over |vocab| rows instead of
-    the corpus, a ~3x win measured at 2M docs. Disable for near-unique
-    keys, where the extra key shuffle buys nothing."""
+    The stream collapses to per-key totals BEFORE the x-depth bucket
+    explode — for Zipfian key domains (tokens, domains, ids-with-repeats)
+    the explode then runs over |vocab| rows instead of the corpus, a ~3x
+    win measured at 2M docs."""
     w = F.col(weight_col) if weight_col else F.lit(1)
-    rows = items.select(F.col(key_col).alias("_k"), w.alias("_w"))
-    if pre_aggregate:
-        rows = rows.groupBy("_k").agg(F.sum("_w").alias("_w"))
+    rows = items.select(F.col(key_col).alias("_k"), w.alias("_w")) \
+        .groupBy("_k").agg(F.sum("_w").alias("_w"))
     return (
         _explode_buckets(rows, F.col("_k"), depth, width)
         .groupBy("d", "bucket")
@@ -359,7 +356,7 @@ def hll_registers(
     the last bit (needs 53 > 52 mantissa bits), so cross-engine
     equality downgrades from guaranteed to observed.
 
-    No ``pre_aggregate`` knob on purpose: the partial aggregate already
+    No key pre-aggregation on purpose: the partial aggregate already
     collapses each task to <= 4096 register rows map-side, so a key
     dedup first only ADDS a vocab-wide shuffle (measured 26s vs 17.8s
     at 2M docs) — unlike ``cms_build``, whose win comes from shrinking

@@ -37,15 +37,12 @@ def pareto_frontier_2d(
     *,
     minimize: str,
     maximize: str,
-    broadcast_groups: bool = True,
 ) -> DataFrame:
     """Rows of ``df`` not dominated under (minimize ``minimize``,
     maximize ``maximize``). Null measures are excluded (SQL three-valued
-    dominance never selects them deterministically).
-
-    ``broadcast_groups`` joins the group-level frontier table broadcast
-    (right for every realistic cardinality of the minimized axis); pass
-    ``False`` to fall back to a shuffle join when distinct-m is huge.
+    dominance never selects them deterministically). The group-level
+    frontier table joins back broadcast: it has one row per distinct
+    minimized value, which every realistic cardinality keeps small.
     """
     base = df.filter(F.col(minimize).isNotNull() & F.col(maximize).isNotNull())
     groups = base.groupBy(minimize).agg(F.max(maximize).alias("_gmax"))
@@ -55,10 +52,8 @@ def pareto_frontier_2d(
         # strictly-cheaper rows must all be strictly worse on the max axis
         .filter(F.col("_prev").isNull() | (F.col("_gmax") > F.col("_prev")))
     )
-    if broadcast_groups:
-        frontier_groups = F.broadcast(frontier_groups)
     return (
-        base.join(frontier_groups, on=minimize, how="inner")
+        base.join(F.broadcast(frontier_groups), on=minimize, how="inner")
         # same-cost rows: only the group's best survive (ties all kept)
         .filter(F.col(maximize) == F.col("_gmax"))
         .drop("_gmax", "_prev")

@@ -6,6 +6,11 @@ Re-expresses the reference's ``spark_events_by_time(_parquet).py`` pipeline
     pulse_times -> with_absolute_time -> count_by_interval /
     count_in_time_range / count_by_bank_and_interval
 
+The four interval counts (``count_by_interval[_ns]``,
+``count_by_bank_and_interval[_ns]``) are one private kernel,
+``_slice_counts``; each entry point names its bucket rule (double seconds
+or long nanoseconds) and grain. ``count_in_time_range`` is the global grain.
+
 Differences from the reference, on purpose (SURVEY.md §7.3):
 
 * The pulse-ordinal window is **partitioned by run** — the reference's
@@ -31,7 +36,9 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from nexus_processor_spark.functions.core import interval_bounds, interval_floor
+from nexus_processor_spark.functions.core import (
+    event_seconds, interval_bounds, interval_floor,
+)
 
 # Reference fallback order: scripts/spark_events_by_time.py:84.
 PULSE_LOG_CANDIDATES: tuple[str, ...] = (
@@ -200,6 +207,56 @@ def bitmap_distinct(
     )
 
 
+def _slice_counts(
+    events: DataFrame,
+    interval_seconds: float,
+    *,
+    time_col: str,
+    bank_col: str,
+    pulse_col: str,
+    ns: bool,
+    by_bank: bool,
+    assume_clustered: bool = False,
+) -> DataFrame:
+    """The interval-count kernel behind the four public entry points.
+
+    ``ns`` is the bucket rule, named by the caller and never inferred
+    from the column type (a long column of epoch SECONDS is valid
+    ``count_by_interval`` input): the exact integer :func:`_ns_bucket`
+    with min/max converted to seconds once per group (monotone, so
+    exact), or ``interval_floor`` on double seconds. ``by_bank`` is the
+    grain: ``[interval]`` plus ``n_banks``, or ``[interval, bank]``.
+    Two aggregates join on the (tiny) bucket keys: the plain one carries
+    count/min/max and the small bank distinct; the data-scale pulse
+    distinct goes through :func:`bitmap_distinct`, so the shuffle carries
+    bucket bitmaps, not one row per (bucket, pulse).
+    """
+    t = F.col(time_col)
+    bucket = (_ns_bucket(time_col, _validate_interval_ns(interval_seconds))
+              if ns else interval_floor(t, interval_seconds))
+    bank = bank_col if by_bank else "_bank"
+    keys = ["interval", bank] if by_bank else ["interval"]
+    base = events.filter(t.isNotNull()).select(
+        bucket.alias("interval"), t.alias("_ts"),
+        F.col(bank_col).alias(bank), F.col(pulse_col).alias("_pulse"))
+    aggs = [F.count(F.lit(1)).alias("event_count"),
+            F.min("_ts").alias("_mn"), F.max("_ts").alias("_mx")]
+    if not by_bank:
+        aggs.append(F.count_distinct(F.col(bank)).alias("n_banks"))
+    plain = base.groupBy(*keys).agg(*aggs)
+    pulses = bitmap_distinct(base, keys, "_pulse", "n_pulses",
+                             assume_clustered=assume_clustered)
+    df = plain.join(pulses, keys)
+    start, end = interval_bounds(F.col("interval"), interval_seconds)
+    bounds = [start.alias("interval_start"), end.alias("interval_end")]
+    sec = event_seconds if ns else F.col
+    times = [sec("_mn").alias("min_time"), sec("_mx").alias("max_time")]
+    cols = (["interval", bank, "event_count", *times, "n_pulses", *bounds]
+            if by_bank else
+            ["interval", *bounds, "event_count", "n_banks", "n_pulses", *times])
+    return df.select(*cols).orderBy(*keys)
+
+
 def count_by_interval(
     events: DataFrame,
     interval_seconds: float,
@@ -208,38 +265,17 @@ def count_by_interval(
     bank_col: str = "bank",
     pulse_col: str = "pulse_index",
 ) -> DataFrame:
-    """Events per tumbling ``interval_seconds`` bucket (A1, SURVEY.md §2.4).
+    """Events per tumbling ``interval_seconds`` bucket of a double-seconds
+    column (A1, SURVEY.md §2.4).
 
     Output schema pinned to the reference's (spark_events_by_time.py:222-246):
     interval, interval_start, interval_end, event_count, n_banks, n_pulses,
     min_time, max_time. Buckets are half-open ``[kN, (k+1)N)``; events with
     null time fall out (null bucket dropped, matching the pandas path).
     """
-    t = F.col(time_col)
-    base = (
-        events
-        .filter(t.isNotNull())
-        .withColumn("interval", interval_floor(t, interval_seconds))
-    )
-    # Two aggs joined on the (tiny) interval key: the bank distinct stays
-    # inline (bank cardinality is small, its Expand dedups map-side), the
-    # pulse distinct — the data-scale one — goes through bitmaps so the
-    # shuffle carries bucket bitmaps, not one row per (interval, pulse).
-    plain = base.groupBy("interval").agg(
-        F.count(F.lit(1)).alias("event_count"),
-        F.min(t).alias("min_time"),
-        F.max(t).alias("max_time"),
-        F.count_distinct(F.col(bank_col)).alias("n_banks"),
-    )
-    pulses = bitmap_distinct(base, ["interval"], pulse_col, "n_pulses")
-    df = plain.join(pulses, "interval")
-    start, end = interval_bounds(F.col("interval"), interval_seconds)
-    return df.select(
-        "interval",
-        start.alias("interval_start"),
-        end.alias("interval_end"),
-        "event_count", "n_banks", "n_pulses", "min_time", "max_time",
-    ).orderBy("interval")
+    return _slice_counts(events, interval_seconds, time_col=time_col,
+                         bank_col=bank_col, pulse_col=pulse_col,
+                         ns=False, by_bank=False)
 
 
 def count_by_interval_ns(
@@ -251,50 +287,16 @@ def count_by_interval_ns(
     pulse_col: str = "pulse_index",
     assume_clustered: bool = False,
 ) -> DataFrame:
-    """Long-nanosecond specialization of ``count_by_interval``: same
-    output, less per-row work. ``assume_clustered`` passes through to
-    :func:`bitmap_distinct` — set it when the store is time-ordered
-    (the reference's layout), where the map-combine distinct roughly
-    halves the rollup.
-
-    The bucket id is ONE integer division on the stored ns column
-    (``ts div N·1e9`` — exact floor for the non-negative epoch domain),
-    and min/max aggregate the raw long then convert to seconds once per
-    GROUP (ns→µs→s is monotone, so ``min(sec(ts)) = sec(min(ts))``
-    exactly). The derived-seconds form pays the shift/mask/floor chain
-    per row; this pays it per bucket — measured ~7% on the 100M-row
-    rollup. Boundary equivalence to the generic form is pinned by
-    ``tests/test_timeslice.py``.
-    """
-    from nexus_processor_spark.functions.core import event_seconds
-
-    interval_ns = _validate_interval_ns(interval_seconds)
-    base = events.filter(F.col(ts_col).isNotNull()).select(
-        _ns_bucket(ts_col, interval_ns).alias("interval"),
-        F.col(ts_col).alias("_ts"),
-        F.col(bank_col).alias("_bank"),
-        F.col(pulse_col).alias("_pulse"),
-    )
-    plain = base.groupBy("interval").agg(
-        F.count(F.lit(1)).alias("event_count"),
-        F.min("_ts").alias("_mn"),
-        F.max("_ts").alias("_mx"),
-        F.count_distinct(F.col("_bank")).alias("n_banks"),
-    )
-    pulses = bitmap_distinct(
-        base, ["interval"], "_pulse", "n_pulses",
-        assume_clustered=assume_clustered,
-    )
-    df = plain.join(pulses, "interval")
-    start, end = interval_bounds(F.col("interval"), interval_seconds)
-    return df.select(
-        "interval",
-        start.alias("interval_start"),
-        end.alias("interval_end"),
-        "event_count", "n_banks", "n_pulses",
-        event_seconds("_mn").alias("min_time"),
-        event_seconds("_mx").alias("max_time"),
-    ).orderBy("interval")
+    """``count_by_interval`` over a long-nanosecond column (a
+    whole-nanosecond width): same output, less per-row work — one exact
+    integer bucket division, min/max converted per group (~7% on the
+    100M-row rollup). ``assume_clustered`` passes through to
+    :func:`bitmap_distinct`: set it for a time-ordered store (the
+    reference's layout), where the map-combine distinct roughly halves
+    the rollup. Equivalence to the seconds form is test-pinned."""
+    return _slice_counts(events, interval_seconds, time_col=ts_col,
+                         bank_col=bank_col, pulse_col=pulse_col, ns=True,
+                         by_bank=False, assume_clustered=assume_clustered)
 
 
 def count_by_bank_and_interval_ns(
@@ -304,39 +306,13 @@ def count_by_bank_and_interval_ns(
     ts_col: str = "ts",
     bank_col: str = "bank",
     pulse_col: str = "pulse_index",
-    assume_clustered: bool = False,
 ) -> DataFrame:
-    """Long-ns specialization of ``count_by_bank_and_interval`` — same
-    integer-division bucket and per-group time conversion as
-    ``count_by_interval_ns`` (A2 at the (interval, bank) grain), with
-    the same ``assume_clustered`` layout dial for time-ordered stores."""
-    from nexus_processor_spark.functions.core import event_seconds
-
-    interval_ns = _validate_interval_ns(interval_seconds)
-    base = events.filter(F.col(ts_col).isNotNull()).select(
-        _ns_bucket(ts_col, interval_ns).alias("interval"),
-        F.col(ts_col).alias("_ts"),
-        F.col(bank_col).alias(bank_col),
-        F.col(pulse_col).alias("_pulse"),
-    )
-    plain = base.groupBy("interval", bank_col).agg(
-        F.count(F.lit(1)).alias("event_count"),
-        F.min("_ts").alias("_mn"),
-        F.max("_ts").alias("_mx"),
-    )
-    pulses = bitmap_distinct(
-        base, ["interval", bank_col], "_pulse", "n_pulses",
-        assume_clustered=assume_clustered,
-    )
-    df = plain.join(pulses, ["interval", bank_col])
-    start, end = interval_bounds(F.col("interval"), interval_seconds)
-    return df.select(
-        "interval", bank_col, "event_count",
-        event_seconds("_mn").alias("min_time"),
-        event_seconds("_mx").alias("max_time"),
-        "n_pulses",
-        start.alias("interval_start"), end.alias("interval_end"),
-    ).orderBy("interval", bank_col)
+    """``count_by_bank_and_interval`` over a long-nanosecond column —
+    the same exact integer bucket and per-group time conversion as
+    :func:`count_by_interval_ns`, at the (interval, bank) grain."""
+    return _slice_counts(events, interval_seconds, time_col=ts_col,
+                         bank_col=bank_col, pulse_col=pulse_col,
+                         ns=True, by_bank=True)
 
 
 def push_time_range(
@@ -438,26 +414,13 @@ def count_by_bank_and_interval(
     bank_col: str = "bank",
     pulse_col: str = "pulse_index",
 ) -> DataFrame:
-    """Per-(interval, bank) slice counts (A2, reference
-    spark_events_by_time.py:304-318)."""
-    t = F.col(time_col)
-    base = (
-        events
-        .filter(t.isNotNull())
-        .withColumn("interval", interval_floor(t, interval_seconds))
-    )
-    plain = base.groupBy("interval", bank_col).agg(
-        F.count(F.lit(1)).alias("event_count"),
-        F.min(t).alias("min_time"),
-        F.max(t).alias("max_time"),
-    )
-    pulses = bitmap_distinct(base, ["interval", bank_col], pulse_col, "n_pulses")
-    df = plain.join(pulses, ["interval", bank_col])
-    start, end = interval_bounds(F.col("interval"), interval_seconds)
-    return df.select(
-        "interval", bank_col, "event_count", "min_time", "max_time", "n_pulses",
-        start.alias("interval_start"), end.alias("interval_end"),
-    ).orderBy("interval", bank_col)
+    """Per-(interval, bank) slice counts of a double-seconds column (A2,
+    reference spark_events_by_time.py:304-318): interval, bank,
+    event_count, min_time, max_time, n_pulses, interval_start,
+    interval_end."""
+    return _slice_counts(events, interval_seconds, time_col=time_col,
+                         bank_col=bank_col, pulse_col=pulse_col,
+                         ns=False, by_bank=True)
 
 
 def exclude_error_banks(events: DataFrame, bank_col: str = "bank") -> DataFrame:

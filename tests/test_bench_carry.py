@@ -147,14 +147,18 @@ def test_scaling_section_is_carryable():
 
 class _FakeSpark:
     """A session stand-in: sections add to ``cached``, clearCache empties
-    it."""
+    it; it holds no persisted RDDs."""
 
     def __init__(self):
         self.cached: set = set()
         self.catalog = self
+        self.sparkContext = self._jsc = self
 
     def clearCache(self):
         self.cached.clear()
+
+    def getPersistentRDDs(self):
+        return {}
 
 
 def _fake_sweep(monkeypatch, sections, stopped_after=None):
@@ -256,3 +260,37 @@ def test_unreachable_jvm_reads_as_stopped():
             raise ConnectionError("gateway closed")
 
     assert bench._context_stopped(Gone()) is True
+
+
+def test_failed_section_leaves_no_checkpoint_blocks_for_the_next(
+        spark, monkeypatch):
+    """``localCheckpoint`` blocks are persisted RDDs, not cache entries:
+    after a section that checkpoints a frame and then raises, the next
+    section must start with no persisted RDD at all."""
+    monkeypatch.setattr(bench, "BENCH_BUDGET_S", float("inf"))
+    seen: dict = {}
+
+    def checkpoint_then_fail(s):
+        s.range(1000).localCheckpoint(eager=True)
+        raise RuntimeError("curatebench broke")
+
+    def count_persisted(s):
+        seen["n"] = s.sparkContext._jsc.getPersistentRDDs().size()
+        return {"sec": 1.0}
+
+    results: dict = {}
+    bench.run_sections(
+        spark, [("curatebench", checkpoint_then_fail, 0.0),
+                ("annbench", count_persisted, 0.0)],
+        results, lambda r: None, is_stopped=lambda: False)
+    assert "curatebench broke" in results["curatebench"]["error"]
+    assert seen["n"] == 0
+
+
+def test_twin_modulus_keeps_twins_in_the_next_batch_at_any_size():
+    assert bench.twin_modulus(2_000_000, 1_000_000) == 999_961
+    assert bench.twin_modulus(20_000, 20_000) == 9_961
+    for docs, vecs in ((2_000_000, 1_000_000), (20_000, 20_000),
+                       (20_000, 3_000), (5_000_000, 1_000_000)):
+        m = bench.twin_modulus(docs, vecs)
+        assert m % 40 == 1 and m <= vecs and m < docs

@@ -119,62 +119,71 @@ def test_gapfill_zero_fills_missing_buckets(spark):
     assert rows[2].interval_start == 20.0 and rows[2].interval_end == 30.0
 
 
-def test_count_by_interval_ns_matches_generic_on_boundaries(spark):
-    """The ns-direct bucket (ts div N·1e9) must agree with the generic
-    derived-seconds form exactly at bucket edges ±1 ns and on fractional
-    microsecond content."""
+_HOUR_NS = 3_600 * 10**9
+_BASE_2024_NS = 1_704_844_800 * 10**9  # 2024-01-10T00:00:00Z
+
+
+def _around(edges, offsets):
+    return [e + o for e in edges for o in offsets]
+
+
+# long-ns event stamps at hour-bucket edges: each set lands rows exactly
+# on, and 1 ns either side of, several edges
+_EDGE_SETS = {
+    "hour_edges_2024": _around(
+        [_BASE_2024_NS + k * _HOUR_NS for k in (0, 1, 2, 5, 7)], (-1, 0, 1)),
+    "sub_us": _around(
+        [_BASE_2024_NS + k * _HOUR_NS for k in (0, 3)],
+        (-1_001, -999, 1, 999, 1_001, 123_456_789, 999_999_999)),
+    "pre_epoch": _around(
+        [-k * _HOUR_NS for k in (0, 1, 2, 25)], (-1_001, -1, 0, 1, 999)),
+}
+
+# (long-ns entry point, double-seconds twin, ns-only kwargs)
+_TWINS = {
+    "interval": (timeslice.count_by_interval_ns,
+                 timeslice.count_by_interval, {}),
+    "interval_clustered": (timeslice.count_by_interval_ns,
+                           timeslice.count_by_interval,
+                           {"assume_clustered": True}),
+    "bank_interval": (timeslice.count_by_bank_and_interval_ns,
+                      timeslice.count_by_bank_and_interval, {}),
+}
+
+
+def assert_ns_and_seconds_are_equal_collect(spark, ts_values, twin):
+    """The long-ns entry point over ``ts`` and its double-seconds twin
+    over ``event_seconds(ts)`` return the same columns and the same rows."""
     from nexus_processor_spark.functions.core import event_seconds
 
-    n_ns = 3_600 * 10**9
-    base = 1_704_844_800 * 10**9
-    ts_values = []
-    for k in (0, 1, 7):
-        edge = base + k * n_ns
-        ts_values += [edge - 1, edge, edge + 1, edge + 123_456_789]
+    ns_fn, seconds_fn, kwargs = _TWINS[twin]
     rows = [(t, f"b{i % 3}", i % 5) for i, t in enumerate(ts_values)]
     ev = spark.createDataFrame(rows, "ts long, bank string, pulse_index long")
-
-    generic = timeslice.count_by_interval(
+    fast = ns_fn(ev, 3600.0, **kwargs)
+    generic = seconds_fn(
         ev.select(event_seconds("ts").alias("absolute_time"), "bank",
                   "pulse_index"),
         3600.0,
-    ).select("interval", "interval_start", "interval_end", "event_count",
-             "n_banks", "n_pulses", "min_time", "max_time")
-    fast = timeslice.count_by_interval_ns(ev, 3600.0).select(
-        "interval", "interval_start", "interval_end", "event_count",
-        "n_banks", "n_pulses", "min_time", "max_time")
-    assert sorted(map(tuple, generic.collect())) == \
-           sorted(map(tuple, fast.collect()))
+    )
+    assert fast.columns == generic.columns
+    assert sorted(map(tuple, fast.collect())) == \
+           sorted(map(tuple, generic.collect()))
+
+
+@pytest.mark.parametrize("edges", sorted(_EDGE_SETS))
+@pytest.mark.parametrize("twin", sorted(_TWINS))
+def test_ns_entry_points_match_seconds_twins(spark, twin, edges):
+    """The exact integer ns bucket (floor division, so pre-epoch stamps
+    bucket down) agrees with ``interval_floor`` on derived seconds at
+    bucket edges ±1 ns, on sub-microsecond content, and before the
+    epoch, at both grains and with either ``bitmap_distinct`` form."""
+    assert_ns_and_seconds_are_equal_collect(spark, _EDGE_SETS[edges], twin)
 
 
 def test_count_by_interval_ns_rejects_fractional_ns_interval(spark):
     ev = spark.createDataFrame([(1, "b", 1)], "ts long, bank string, pulse_index long")
     with pytest.raises(ValueError):
         timeslice.count_by_interval_ns(ev, 1e-10)
-
-
-def test_count_by_bank_and_interval_ns_matches_generic(spark):
-    from nexus_processor_spark.functions.core import event_seconds
-
-    n_ns = 3_600 * 10**9
-    base = 1_704_844_800 * 10**9
-    ts_values = []
-    for k in (0, 2, 5):
-        edge = base + k * n_ns
-        ts_values += [edge - 1, edge, edge + 1, edge + 999_999_999]
-    rows = [(t, f"b{i % 2}", i % 4) for i, t in enumerate(ts_values)]
-    ev = spark.createDataFrame(rows, "ts long, bank string, pulse_index long")
-
-    cols = ["interval", "bank", "event_count", "min_time", "max_time",
-            "n_pulses", "interval_start", "interval_end"]
-    generic = timeslice.count_by_bank_and_interval(
-        ev.select(event_seconds("ts").alias("absolute_time"), "bank",
-                  "pulse_index"),
-        3600.0,
-    ).select(*cols)
-    fast = timeslice.count_by_bank_and_interval_ns(ev, 3600.0).select(*cols)
-    assert sorted(map(tuple, generic.collect())) == \
-           sorted(map(tuple, fast.collect()))
 
 
 def test_locf_resample_carries_last_observation(spark):
