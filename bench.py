@@ -60,15 +60,24 @@ HEADLINE = (
 )
 
 _BENCHDATA = Path(__file__).resolve().parent / ".benchdata"
+
+
+def _data_dir(name: str, rows: int) -> str:
+    """Where a synthesized set of ``rows`` rows lives. The row count is
+    part of the path, so a sweep at one size never reads a set that a
+    sweep at another size left behind."""
+    return str(_BENCHDATA / f"{name}-{rows}")
+
+
 BIG_ROWS = int(os.environ.get("SPARK_GRAFT_BIG_ROWS", "100000000"))
-BIG_DIR = str(_BENCHDATA / "sfbig")
-SNAP_DIR = str(_BENCHDATA / "snapbig")
+BIG_DIR = _data_dir("sfbig", BIG_ROWS)
+SNAP_DIR = _data_dir("snapbig", BIG_ROWS)
 DOCS_ROWS = int(os.environ.get("SPARK_GRAFT_BIG_DOCS", "2000000"))
-DOCS_DIR = str(_BENCHDATA / "docsbig")
+DOCS_DIR = _data_dir("docsbig", DOCS_ROWS)
 VEC_ROWS = int(os.environ.get("SPARK_GRAFT_BIG_VECS", "1000000"))
 VEC_DIM = 64
 VEC_CELLS = 256
-VEC_DIR = str(_BENCHDATA / "vecbig")
+VEC_DIR = _data_dir("vecbig", VEC_ROWS)
 # Pinned, not sf-sized: at ~100k rows fixed job-startup cost dominated
 # the emit rate and the same code measured 2x apart between rounds.
 REPLAY_JSONL_ROWS = 1_000_000
@@ -215,8 +224,9 @@ def carry_sections(full: dict, prior: dict) -> dict:
 
 def _synth_once(path: str, make) -> None:
     """Write ``make()`` as zstd parquet at ``path`` unless an earlier run
-    finished it (its _SUCCESS marker); the data is seeded, so any
-    regeneration is identical."""
+    finished it (its _SUCCESS marker); the data is seeded and its row
+    count is in the path (:func:`_data_dir`), so a finished set is the
+    one this run asks for."""
     if (Path(path) / "_SUCCESS").exists():
         return
     _note(f"synthesizing {path} (one-time)")

@@ -17,20 +17,12 @@ Scale design (the 100 TB shape):
   deterministically capped top-``max_words`` slice of that table, with
   incremental pair-count maintenance — O(cap) memory, like collecting k
   centroids in k-means. Thousands of merges cost no Spark jobs at all.
-* ``bpe_train_spark`` is the fully-distributed twin (one pair-count
-  aggregate + one 1-row argmax collect per merge) for word tables too
-  large to cap; it is equality-pinned to the driver form in tests.
-* ``bpe_encode`` segments the corpus by encoding each **distinct word
-  once** (Arrow-batched ``mapInPandas`` — per-word greedy loops are not
-  expressible in native expressions for unbounded merge tables) and
-  joining the pieces back to the exploded corpus — the word table
-  shuffles, never full documents.
-* ``merge_pair_col`` / ``encode_native`` are JVM-native (higher-order
-  function) forms for SMALL merge tables, used by the oracle-paired
-  registry queries so the checked path stays whole-stage-codegen.
+* ``merge_pair_col`` / ``encode_native`` segment documents with
+  JVM-native (higher-order function) expressions, one rewrite per merge,
+  so the registry queries stay whole-stage-codegen.
 
-Merge semantics (identical across all four implementations and the SQL
-oracle, test- and property-pinned):
+Merge semantics (identical across the driver trainer, the native
+encoder and the SQL oracle, test- and property-pinned):
 
 * Words never merge across boundaries; initial symbols are codepoints.
 * Pair choice per step: highest summed word-count, ties broken by
@@ -38,11 +30,7 @@ oracle, test- and property-pinned):
   merge table.
 * Applying one merge rewrites each word's symbol sequence greedily
   left-to-right, non-overlapping (``[a,a,a] -> [aa,a]``).
-* Encoding applies the learned merges in rank order. The rank-priority
-  loop in ``bpe_encode`` is equivalent: a merge can never create a new
-  occurrence of a LOWER-ranked pair (later merges only create
-  adjacencies involving their own newer symbol), so "repeatedly merge
-  the lowest-ranked pair present" replays the training order exactly.
+* Encoding applies the learned merges in rank order.
 
 Reference parity: the reference engine ships no tokenizer trainer; this
 family extends the corpus-curation surface (SURVEY.md "beyond the
@@ -51,9 +39,9 @@ reference" §text) the way its ETL extends ingest.
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator
+from typing import Iterable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from nexus_processor_spark.functions.text import tokens
@@ -126,60 +114,6 @@ def merge_pair_col(s: Column, left: str, right: str) -> Column:
     # guard BEFORE building sequence(0, n-1): Spark sequences count DOWN
     # when stop < start, so an empty array must short-circuit
     return F.when(n >= 2, rebuilt).otherwise(s)
-
-
-def _adjacent_pairs(s: Column) -> Column:
-    """``array<struct<l,r>>`` of adjacent symbol pairs (empty when the
-    word is a single symbol — guarded against Spark's descending
-    ``sequence``)."""
-    n = F.size(s)
-    return F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(0), n - 2),
-            lambda i: F.struct(
-                F.get(s, i).alias("l"), F.get(s, i + 1).alias("r")
-            ),
-        ),
-    ).otherwise(
-        F.array().cast("array<struct<l:string,r:string>>")
-    )
-
-
-def bpe_train_spark(
-    wc: DataFrame, n_merges: int
-) -> DataFrame:
-    """Fully-distributed BPE training over a word-count table
-    ``(word, wc)``: per merge, ONE (pair -> summed count) hash aggregate
-    and a 1-row argmax collect, then a native map-only rewrite of the
-    symbol column. The word table is eagerly localCheckpoint-ed each
-    step: :func:`merge_pair_col` references its input ~8 times, so
-    nesting rewrites multiplies the expression tree 8x per merge —
-    truncating to a materialized RDD keeps each step's analysis O(1).
-
-    Use when the distinct-word table exceeds driver memory; otherwise
-    :func:`bpe_train` (same result, test-pinned) costs no jobs per merge.
-    """
-    spark = wc.sparkSession
-    w = wc.select("word", "wc", _sym_split(F.col("word")).alias("s"))
-    rows = []
-    for rank in range(n_merges):
-        top = (
-            w.select(F.col("wc"), F.explode(_adjacent_pairs(F.col("s"))).alias("p"))
-            .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-            .agg(F.sum("wc").alias("c"))
-            .orderBy(F.desc("c"), "l", "r")
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        l, r, c = top[0].l, top[0].r, int(top[0].c)
-        rows.append((rank, l, r, l + r, c))
-        w = w.select(
-            "word", "wc", merge_pair_col(F.col("s"), l, r).alias("s")
-        ).localCheckpoint(eager=True)
-    return spark.createDataFrame(rows, MERGES_SCHEMA)
 
 
 def _merge_word(sym: list[str], left: str, right: str) -> list[str]:
@@ -258,8 +192,7 @@ def bpe_train(
     ``(wc desc, word asc)`` — deterministic, and the dropped tail is
     the words whose counts steer no merge decision at real vocabulary
     skew (the standard trainer approximation; pass ``None`` to keep
-    every word, which is exact and equality-pinned to
-    :func:`bpe_train_spark`).
+    every word, which is exact).
 
     Returns ``(merge_rank, left_sym, right_sym, merged, pair_count)``.
     """
@@ -272,84 +205,6 @@ def bpe_train(
     collected.sort(key=lambda t: (-t[1], t[0]))
     return spark.createDataFrame(
         train_dict(collected, n_merges), MERGES_SCHEMA
-    )
-
-
-def encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
-    """Segment one word: repeatedly apply the lowest-ranked merge whose
-    pair is present (greedy left-to-right per application) — equivalent
-    to replaying the merges in rank order (see module docstring), at
-    O(occurrences) instead of O(|merge table|) per word."""
-    sym = list(word)
-    while len(sym) >= 2:
-        best_rank: int | None = None
-        best_pair: tuple[str, str] | None = None
-        for p in zip(sym, sym[1:]):
-            rk = ranks.get(p)
-            if rk is not None and (best_rank is None or rk < best_rank):
-                best_rank, best_pair = rk, p
-        if best_pair is None:
-            break
-        sym = _merge_word(sym, best_pair[0], best_pair[1])
-    return sym
-
-
-def bpe_encode(
-    df: DataFrame,
-    merges: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Segment every document with a learned merge table.
-
-    Plan: distinct words (hash aggregate), Arrow-batched ``mapInPandas``
-    encode of each word ONCE (the merge table broadcasts to workers as a
-    plain rank dict — it is vocabulary-sized by construction), equi-join
-    the pieces back to the exploded corpus on the word key, re-assemble
-    per document in token order. Documents never carry through the
-    Python stage and the join shuffles (word, pieces) rows, not text.
-
-    Output: ``(id_col, pieces array<string>, n_pieces)``.
-    """
-    rank_list = [
-        (r.left_sym, r.right_sym, int(r.merge_rank))
-        for r in merges.select("left_sym", "right_sym", "merge_rank").collect()
-    ]
-    ranks = {(l, r): k for l, r, k in rank_list}
-
-    def _encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["pieces"] = [encode_word(w, ranks) for w in pdf["word"]]
-            yield pdf[["word", "pieces"]]
-
-    wdf = (
-        df.select(F.explode(tokens(text_col)).alias("word"))
-        .filter(F.col("word") != "")
-        .distinct()
-    )
-    encoded = wdf.mapInPandas(_encode, "word string, pieces array<string>")
-    tok = df.select(
-        F.col(id_col),
-        F.posexplode(tokens(text_col)).alias("pos", "word"),
-    ).filter(F.col("word") != "")
-    return (
-        tok.join(encoded, "word")
-        .groupBy(id_col)
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("pos", "pieces"))),
-                    lambda s: s["pieces"],
-                )
-            ).alias("pieces"),
-        )
-        .select(
-            id_col, "pieces", F.size("pieces").cast("long").alias("n_pieces")
-        )
     )
 
 
@@ -367,7 +222,7 @@ def encode_native(
     rewrite references its input ~8 times, so inlining would grow the
     tree 8x per merge, while chained projects stay linear (Catalyst's
     CollapseProject declines to inline non-cheap multiply-referenced
-    aliases). Use :func:`bpe_encode` beyond a few dozen merges."""
+    aliases). Plan size grows by one projection per merge."""
     encoded = (
         df.select(F.explode(tokens(text_col)).alias("word"))
         .filter(F.col("word") != "")

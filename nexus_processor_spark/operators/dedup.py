@@ -802,7 +802,7 @@ def prefix_filter_pairs(
     ``max_bucket`` (optional, recall-lossy) drops prefix entries of
     pathologically frequent shingles — only relevant when a boilerplate
     shingle floods an entire corpus shard; prefer stripping boilerplate
-    upstream (``textstats.strip_frequent_lines``) to keep exactness.
+    upstream to keep exactness.
     """
     sh = spread(df.select(F.col(id_col), F.col(text_col))).select(
         F.col(id_col), word_shingles_text(text_col, shingle_words).alias("sh")
@@ -1073,60 +1073,3 @@ def neardup_eval(
         rate("n_hit", "n_pred").alias("precision_e6"),
         rate("n_hit", "n_true").alias("recall_e6"),
     )
-
-
-def lsh_plan(
-    threshold: float,
-    max_hashes: int = 128,
-    *,
-    false_negative_weight: float = 1.0,
-    false_positive_weight: float = 1.0,
-) -> dict:
-    """Pick the (bands, rows_per_band) pair for banded MinHash LSH at a
-    target Jaccard ``threshold`` — the planning step behind the fixed
-    defaults :func:`minhash_signatures` ships (classic banding analysis,
-    Leskovec/Rajaraman/Ullman "Mining of Massive Datasets" ch. 3;
-    public literature).
-
-    For candidate probability ``p(s) = 1 - (1 - s^r)^b``, the planner
-    scans every (b, r) with ``b*r <= max_hashes`` and minimizes the
-    weighted error integral: false-negative mass above the threshold
-    (``∫_t^1 (1 - p(s)) ds``) plus false-positive mass below it
-    (``∫_0^t p(s) ds``), each integral evaluated on a 1000-point grid.
-    Returns the chosen plan, its s-curve midpoint
-    ``(1/b)^(1/r)`` (where p = 1 - (1-1/b)^b ≈ 0.63), and both error
-    masses — the numbers to quote when justifying a dial setting.
-
-    Driver-side pure arithmetic (<= ``max_hashes``^2 candidate pairs,
-    1000-point grids): nothing here touches data. Pair it with
-    :func:`neardup_eval` to MEASURE the chosen plan's precision/recall
-    on a real corpus slice.
-    """
-    if not 0.0 < threshold < 1.0:
-        raise ValueError("threshold must be in (0, 1)")
-    best: dict | None = None
-    grid_n = 1000
-    for r in range(1, max_hashes + 1):
-        for b in range(1, max_hashes // r + 1):
-            fn_mass = fp_mass = 0.0
-            for i in range(grid_n):
-                s = (i + 0.5) / grid_n
-                p = 1.0 - (1.0 - s ** r) ** b
-                if s >= threshold:
-                    fn_mass += (1.0 - p) / grid_n
-                else:
-                    fp_mass += p / grid_n
-            cost = (false_negative_weight * fn_mass
-                    + false_positive_weight * fp_mass)
-            if best is None or cost < best["cost"] - 1e-12:
-                best = {
-                    "bands": b, "rows_per_band": r,
-                    "hashes": b * r,
-                    "s_mid": (1.0 / b) ** (1.0 / r),
-                    "fn_mass": round(fn_mass, 6),
-                    "fp_mass": round(fp_mass, 6),
-                    "cost": cost,
-                }
-    assert best is not None
-    best["cost"] = round(best["cost"], 6)
-    return best

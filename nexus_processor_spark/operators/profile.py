@@ -190,43 +190,3 @@ def quantile_histogram(
         ).alias("bucket_hi"),
         "n",
     )
-
-
-def schema_diff(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Schema drift between two snapshots of a table: one row per column
-    that was added, removed, or changed type/nullability — the check an
-    ingest pipeline runs before appending a new vendor drop
-    (:func:`table_diff` is the row-level twin).
-
-    Driver-side metadata only (no jobs, no scans); returned as a
-    DataFrame so it composes with the quality gate like any other check.
-    Columns present in both with identical type and nullability are
-    omitted — an empty result means no drift.
-    """
-    spark = a.sparkSession
-
-    def fields(df: DataFrame) -> dict[str, tuple[str, bool]]:
-        return {f.name: (f.dataType.simpleString(), f.nullable)
-                for f in df.schema.fields}
-    fa, fb = fields(a), fields(b)
-    rows = []
-    for name in sorted(fa.keys() | fb.keys()):
-        ta, tb = fa.get(name), fb.get(name)
-        if ta == tb:
-            continue
-        if tb is None:
-            status = "removed"
-        elif ta is None:
-            status = "added"
-        else:
-            status = "type_changed" if ta[0] != tb[0] else "nullability_changed"
-        rows.append((
-            name, status,
-            ta[0] if ta else None, tb[0] if tb else None,
-            ta[1] if ta else None, tb[1] if tb else None,
-        ))
-    return spark.createDataFrame(
-        rows,
-        "column string, status string, type_a string, type_b string, "
-        "nullable_a boolean, nullable_b boolean",
-    )

@@ -259,43 +259,3 @@ def serve_percentile(
         F.col("total").alias("n"),
         F.round(est, 6).alias("p"),
     )
-
-
-def backfill_range(
-    rollup: DataFrame,
-    events: DataFrame,
-    interval_seconds: float,
-    start_seconds: float,
-    end_seconds: float,
-    *,
-    time_col: str = "absolute_time",
-    bank_col: str = "bank",
-    pulse_col: str = "pulse_index",
-    key_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Rebuild the continuous aggregate for ONE half-open time range
-    ``[start, end)`` — the late-data / bad-ingest repair path: drop the
-    affected buckets, re-aggregate only the events inside the range, and
-    splice. Buckets wholly outside the range are passed through
-    untouched (no history re-scan; with the events table partitioned on
-    time-correlated keys, the range filter prunes the raw scan too).
-
-    The range is snapped OUTWARD to bucket boundaries (a partial bucket
-    rebuild would double-count its out-of-range events' absence).
-    """
-    lo = int(start_seconds // interval_seconds)
-    hi = int(-(-end_seconds // interval_seconds))  # ceil
-    t = F.col(time_col)
-    fresh = build_interval_rollup(
-        events.filter(
-            (t >= F.lit(lo * interval_seconds))
-            & (t < F.lit(hi * interval_seconds))
-        ),
-        interval_seconds,
-        time_col=time_col, bank_col=bank_col, pulse_col=pulse_col,
-        key_cols=key_cols,
-    )
-    kept = rollup.filter(
-        (F.col("interval") < F.lit(lo)) | (F.col("interval") >= F.lit(hi))
-    )
-    return kept.unionByName(fresh)

@@ -123,83 +123,6 @@ def _probe_dim(df: DataFrame, vec_col: str, what: str) -> int | None:
     return None if row is None else int(row["_d"])
 
 
-def lsh_hyperplane_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_planes: int = 8,
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate top-k via random-hyperplane LSH bucketing.
-
-    Vectors hash to a sign-pattern bucket (one bit per hyperplane, the
-    classic SimHash-for-cosine construction); search compares only
-    bucket-mates, turning the full scan into an equi-join on the bucket
-    id — at scale, a corpus written partitioned by bucket prunes to the
-    probed buckets. Recall is tunable via ``n_planes`` (fewer planes =
-    bigger buckets = higher recall, more compute). Deterministic: planes
-    come from a seeded RNG, so results are reproducible run to run.
-
-    ``dim`` must equal the actual vector length — validated against the
-    corpus (a mismatch null-pads every plane projection, collapsing ALL
-    vectors into bucket 0: the join silently degenerates to the full
-    n-squared cross product while still returning plausible results).
-    """
-    import numpy as np
-
-    actual = _probe_dim(corpus, vec_col, "lsh_hyperplane_topk")
-    if actual is not None and actual != dim:
-        raise ValueError(
-            f"dim={dim} but corpus vectors have {actual} dimensions"
-        )
-    rng = np.random.default_rng(seed)
-    planes = rng.normal(size=(n_planes, dim))
-
-    def bucket(vec: F.Column) -> F.Column:
-        bits = [
-            F.when(
-                F.aggregate(
-                    F.zip_with(
-                        vec,
-                        F.array(*[F.lit(float(x)) for x in planes[p]]),
-                        lambda a, b: a.cast("double") * b,
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ) > 0,
-                F.lit(1 << p),
-            ).otherwise(F.lit(0))
-            for p in range(n_planes)
-        ]
-        out = bits[0]
-        for b in bits[1:]:
-            out = out + b
-        return out
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_vq"),
-        norm(F.col(vec_col)).alias("_nq"),
-        bucket(F.col(vec_col)).alias("bucket"),
-    )
-    c = spread(corpus).select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("_vc"),
-        norm(F.col(vec_col)).alias("_nc"),
-        bucket(F.col(vec_col)).alias("bucket"),
-    )
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", _cos().alias("cos"))
-    )
-    return _ranked_topk(scored, k)
-
-
 def hard_negative_triplets(
     queries: DataFrame,
     corpus: DataFrame,

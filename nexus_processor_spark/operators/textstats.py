@@ -218,78 +218,6 @@ def fingerprints(
     )
 
 
-def frequent_lines(
-    docs: DataFrame,
-    min_docs: int = 5,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Lines (trimmed, non-empty) appearing in >= ``min_docs`` distinct
-    documents — the C4-style corpus-frequency boilerplate line set
-    (cookie banners, nav text, license footers).
-
-    Output: ``line, n_docs``. One shuffle on the line key; at corpus
-    scale substitute ``xxhash64(line)`` for the key to keep shuffle rows
-    narrow — the set itself is small by construction (a line must repeat
-    across documents to qualify).
-    """
-    lines = docs.select(
-        F.col(id_col),
-        F.explode(F.split(F.col(text_col), "\n")).alias("_raw"),
-    ).select(F.col(id_col), F.trim(F.col("_raw")).alias("line"))
-    return (
-        lines.filter(F.col("line") != "")
-        .groupBy("line")
-        .agg(F.count_distinct(F.col(id_col)).cast("long").alias("n_docs"))
-        .filter(F.col("n_docs") >= F.lit(min_docs))
-    )
-
-
-def strip_frequent_lines(
-    docs: DataFrame,
-    min_docs: int = 5,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Remove corpus-frequent lines from every document, preserving the
-    order of the surviving lines (the C4 boilerplate-removal rewrite).
-
-    The frequent set is computed once and broadcast into a left-anti
-    join against the exploded (doc, pos, line) relation — it is small by
-    construction, so the rewrite costs one explode shuffle plus the
-    order-preserving regroup on ``id_col``. Documents whose every line
-    was boilerplate come back with empty text (kept, so the output is
-    one row per input doc — the caller decides whether to drop empties).
-
-    Output: ``id_col, text`` with boilerplate lines removed.
-    """
-    freq = frequent_lines(docs, min_docs, text_col=text_col, id_col=id_col)
-    exploded = docs.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "_raw"),
-    ).withColumn("line", F.trim(F.col("_raw")))
-    kept = (
-        exploded.filter(F.col("line") != "")
-        .join(F.broadcast(freq.select("line")), "line", "left_anti")
-    )
-    rebuilt = kept.groupBy(id_col).agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "line"))),
-                lambda s: s["line"],
-            ),
-            "\n",
-        ).alias("_clean")
-    )
-    return (
-        docs.select(id_col)
-        .join(rebuilt, id_col, "left")
-        .select(id_col, F.coalesce(F.col("_clean"), F.lit("")).alias(text_col))
-    )
-
-
 def hashed_features(
     df: DataFrame,
     dim: int = 64,

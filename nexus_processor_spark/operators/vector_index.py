@@ -38,17 +38,15 @@ quantizer is ``rebuild_index``: it refits centroids over the current
 corpus and republishes a versioned ``codes-<uuid>`` +
 ``centroids-<uuid>`` PAIR under the same park-then-vacuum discipline
 (pre-swap readers must never see new cells over old cell-partitioned
-codes). ``maintain_index`` dispatches whichever action ``index_stats``
-recommends.
+codes).
 
 Concurrency contract: searches are safe against a concurrent
 ``compact_index`` (they hold whichever manifest they opened, and both
 directories exist until vacuum). MAINTENANCE is single-writer:
-``append_to_index``, ``compact_index``, ``rebuild_index``,
-``maintain_index`` and ``vacuum_index`` must not
-run concurrently with each other — an append racing a compaction can
-commit its rows into the pre-swap directory, where the republished
-manifest never sees them. Serialize maintenance (one writer), and run
+``append_to_index``, ``compact_index``, ``rebuild_index`` and
+``vacuum_index`` must not run concurrently with each other — an append
+racing a compaction can commit its rows into the pre-swap directory,
+where the republished manifest never sees them. Serialize maintenance (one writer), and run
 ``vacuum_index`` only after in-flight readers of the old tier have
 drained (a grace period in a long-running service).
 
@@ -403,41 +401,6 @@ def rebuild_index(
         centroids.unpersist()
     _publish_manifest(path, manifest)
     return index_stats(spark, path)
-
-
-def maintain_index(
-    spark: SparkSession,
-    path: str,
-    corpus: DataFrame | None = None,
-    *,
-    vacuum: bool = False,
-) -> dict:
-    """One-call maintenance loop: read :func:`index_stats`, EXECUTE its
-    ``recommendation`` (``"compact"`` → :func:`compact_index`;
-    ``"rebuild"`` → :func:`rebuild_index`, which needs the
-    full-precision ``corpus`` — without one it degrades to a compaction
-    if accretion also crossed its cliff, else no-ops, and says so),
-    optionally :func:`vacuum_index` afterwards (only safe when no
-    reader opened the index pre-swap — a batch pipeline between jobs,
-    not a live service). Returns ``{"recommendation", "action",
-    "stats"}`` with post-action stats. Single-writer like every
-    maintenance op here."""
-    before = index_stats(spark, path)
-    rec = before["recommendation"]
-    if rec == "rebuild":
-        if corpus is not None:
-            action, stats = "rebuild", rebuild_index(corpus, path)
-        elif before["files_per_cell_max"] >= FILES_COMPACT_CLIFF:
-            action, stats = "compact_no_corpus", compact_index(spark, path)
-        else:
-            action, stats = "skipped_no_corpus", before
-    elif rec == "compact":
-        action, stats = "compact", compact_index(spark, path)
-    else:
-        action, stats = "none", before
-    if vacuum and action in ("rebuild", "compact", "compact_no_corpus"):
-        vacuum_index(spark, path)
-    return {"recommendation": rec, "action": action, "stats": stats}
 
 
 def vacuum_index(spark: SparkSession, path: str) -> list[str]:

@@ -14,42 +14,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: list[str],
-    *,
-    n_salt: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-resistant equi-join: fan the small side out ``n_salt`` ways.
-
-    A hot key concentrates its big-side rows on one reducer; salting
-    splits each key into ``n_salt`` synthetic sub-keys (big side hashed,
-    small side replicated) so the hot key spreads over ``n_salt`` tasks.
-    Same rows out as a plain join for the supported ``how`` values. Outer
-    variants that preserve unmatched SMALL-side rows ('right', 'full')
-    would replicate each unmatched small row once per salt — silently
-    duplicated output — so they're rejected. AQE's skew-join handles
-    *sort-merge* skew automatically; this helper is for the cases AQE
-    can't re-split (aggregation feeding joins, deliberate
-    pre-partitioning).
-    """
-    allowed = {"inner", "left", "leftouter", "left_outer", "left_semi",
-               "leftsemi", "left_anti", "leftanti"}
-    if how.lower() not in allowed:
-        raise ValueError(
-            f"salted_join does not support how={how!r}: unmatched small-side "
-            f"rows would be replicated {n_salt}x. Use one of {sorted(allowed)}."
-        )
-    salt = F.pmod(F.hash(*[F.col(c) for c in big.columns]), F.lit(n_salt))
-    bs = big.withColumn("_salt", salt)
-    ss = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
-    )
-    return bs.join(ss, [*on, "_salt"], how).drop("_salt")
-
-
 def spread(df: DataFrame, parallelism: int | None = None) -> DataFrame:
     """Round-robin repartition to the session's default parallelism (or
     ``parallelism``) when the current layout has fewer partitions."""

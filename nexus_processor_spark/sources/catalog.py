@@ -161,99 +161,6 @@ def read_table(
     return spark.read.option("basePath", f"{root}/{table}").parquet(f"{root}/{table}")
 
 
-def compact_table(
-    spark: SparkSession,
-    root: str,
-    table: str,
-    *,
-    target_records_per_file: int = MAX_EVENTS_PER_FILE,
-) -> int:
-    """Small-file compaction: rewrite a table into right-sized files.
-
-    Streaming appends and per-run ingests accumulate small files; scan
-    cost at 100 TB is dominated by file-open overhead once files shrink
-    below a row group. Rewrite goes through a temp dir then an atomic-ish
-    swap (overwrite) — with an Iceberg/Delta catalog this becomes
-    ``rewrite_data_files``/``OPTIMIZE``. Returns the file count after.
-    """
-    import shutil
-
-    df = read_table(spark, root, table)
-    _, parts = TABLES[table]
-    # Cluster rows by the partition key so each partition value lands in
-    # as few files as maxRecordsPerFile allows (unpartitioned: single
-    # stream, still split by the record cap).
-    df = df.repartition(*parts) if parts else df.coalesce(1)
-    tmp = f"{root}/_compact_{table}"
-    writer = (df.write.mode("overwrite")
-              .option("maxRecordsPerFile", target_records_per_file))
-    if parts:
-        writer = writer.partitionBy(*parts)
-    writer.parquet(tmp)
-    final = f"{root}/{table}"
-    shutil.rmtree(final)
-    shutil.move(tmp, final)
-    out = read_table(spark, root, table)
-    return out.inputFiles().__len__()
-
-
-def upsert_table(
-    spark: SparkSession,
-    df: DataFrame,
-    root: str,
-    table: str,
-    keys: list[str],
-) -> None:
-    """MERGE-style upsert without a transactional catalog: keep existing
-    rows whose key is absent from ``df`` (left-anti), union the new rows,
-    rewrite. With Delta/Iceberg on the classpath this is ``MERGE INTO``;
-    the anti-join+union emulation has the same row-level semantics minus
-    snapshot isolation (callers serialize writers per table).
-    """
-    import shutil
-
-    existing = read_table(spark, root, table)
-    keep = existing.join(df.select(*keys).distinct(), keys, "left_anti")
-    merged = keep.unionByName(df.select(*existing.columns))
-    _, parts = TABLES[table]
-    tmp = f"{root}/_upsert_{table}"
-    writer = merged.write.mode("overwrite")
-    if parts:
-        writer = writer.partitionBy(*parts)
-    writer.parquet(tmp)
-    final = f"{root}/{table}"
-    shutil.rmtree(final)
-    shutil.move(tmp, final)
-
-
-def delete_from_table(
-    spark: SparkSession,
-    root: str,
-    table: str,
-    keys_df: DataFrame,
-    keys: list[str],
-) -> int:
-    """Row-level delete (takedown/GDPR path): rewrite the table without
-    rows matching ``keys_df``. Returns rows removed. Same rewrite-and-swap
-    mechanics as :func:`upsert_table`; with Delta/Iceberg this is
-    ``DELETE FROM``."""
-    import shutil
-
-    existing = read_table(spark, root, table)
-    kept = existing.join(keys_df.select(*keys).distinct(), keys, "left_anti")
-    before = existing.count()
-    _, parts = TABLES[table]
-    tmp = f"{root}/_delete_{table}"
-    writer = kept.write.mode("overwrite")
-    if parts:
-        writer = writer.partitionBy(*parts)
-    writer.parquet(tmp)
-    final = f"{root}/{table}"
-    shutil.rmtree(final)
-    shutil.move(tmp, final)
-    return before - read_table(spark, root, table).count()
-
-
 def ingest_routed(
     spark: SparkSession,
     paths: Iterable[str],

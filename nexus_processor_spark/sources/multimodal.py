@@ -210,59 +210,6 @@ def extract_audio_features(
     )
 
 
-RESIZED_SCHEMA = StructType([
-    StructField("media_id", LongType(), False),
-    StructField("out_h", IntegerType(), True),
-    StructField("out_w", IntegerType(), True),
-    StructField("pixels", ArrayType(FloatType()), True),
-])
-
-
-def resize_images(
-    media: DataFrame,
-    out_h: int = 4,
-    out_w: int = 4,
-    *,
-    fake_decode: bool = False,
-) -> DataFrame:
-    """Decode -> block-mean resize to a fixed (out_h, out_w) luma grid,
-    Arrow-batched — the normalize-resolution step before batching images
-    into a training shard. Pure-numpy area resampling (split the source
-    grid into out_h x out_w blocks via linspace edges, mean each block),
-    so the operator needs no codec beyond the shared decode gate and is
-    byte-deterministic for a given payload.
-
-    Output: ``(media_id, out_h, out_w, pixels row-major array<float>)``.
-    Map-only: no shuffle at any scale; null payloads pass through null.
-    """
-    decode = _decode_image_fake if fake_decode else _decode_image_real
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = []
-            for media_id, payload in zip(batch["media_id"], batch["payload"]):
-                if payload is None:
-                    out.append((media_id, None, None, None))
-                    continue
-                img = decode(bytes(payload)).astype(np.float64)
-                h, w = img.shape
-                ye = np.linspace(0, h, out_h + 1).astype(int)
-                xe = np.linspace(0, w, out_w + 1).astype(int)
-                px = [
-                    float(img[ye[i]:ye[i + 1], xe[j]:xe[j + 1]].mean())
-                    for i in range(out_h) for j in range(out_w)
-                ]
-                out.append((int(media_id), out_h, out_w,
-                            np.asarray(px, dtype=np.float32).tolist()))
-            yield pd.DataFrame(
-                out, columns=["media_id", "out_h", "out_w", "pixels"]
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        run, schema=RESIZED_SCHEMA
-    )
-
-
 def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Video frame-sampling plumbing: one row per sampled timestamp.
 

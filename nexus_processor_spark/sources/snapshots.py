@@ -642,67 +642,3 @@ def expire_snapshots(table_path: str, *, keep_last: int = 2) -> list[int]:
     for v in expired:
         _remove_manifest(table_path, v)
     return expired
-
-
-def merge_into(
-    spark: SparkSession,
-    table_path: str,
-    source: DataFrame,
-    key_col: str,
-    *,
-    when_matched: str = "update",
-    when_not_matched: str = "insert",
-    matched_delete_condition=None,
-    stats_cols: tuple[str, ...] = (),
-    version: int | None = None,
-) -> int | None:
-    """SQL-MERGE clause semantics over the snapshot machinery, in ONE
-    commit: ``when_matched`` = "update" (source row replaces the target
-    row) or "ignore" (target wins); ``when_not_matched`` = "insert" or
-    "ignore" (unknown keys dropped); ``matched_delete_condition`` (a
-    boolean Column over source columns) deletes matched keys instead of
-    updating them — the clause tombstone-style CDC can't express
-    without a separate feed.
-
-    With the default update+insert clauses this IS
-    :func:`upsert_snapshot` and delegates directly (no extra work).
-    Any non-default clause needs to know which source keys exist in the
-    target: ONE skinny key-projection semi/anti split of the
-    batch-sized source (the table side scans only ``key_col``), then
-    the same single copy-on-write commit. Returns the committed
-    version (None = replayed pinned version)."""
-    from pyspark.sql import functions as F
-
-    if when_matched not in ("update", "ignore"):
-        raise ValueError(f"when_matched={when_matched!r}")
-    if when_not_matched not in ("insert", "ignore"):
-        raise ValueError(f"when_not_matched={when_not_matched!r}")
-    plain = (when_matched == "update" and when_not_matched == "insert"
-             and matched_delete_condition is None)
-    if plain:
-        return upsert_snapshot(
-            spark, table_path, source, key_col,
-            stats_cols=stats_cols, version=version,
-        )
-    tgt_keys = read_snapshot(spark, table_path).select(key_col)
-    matched = source.join(tgt_keys, key_col, "semi")
-    unmatched = source.join(tgt_keys, key_col, "anti")
-    deletes = None
-    if matched_delete_condition is not None:
-        deletes = matched.filter(matched_delete_condition).select(key_col)
-        matched = matched.filter(~matched_delete_condition)
-    parts = []
-    if when_matched == "update":
-        parts.append(matched)
-    if when_not_matched == "insert":
-        parts.append(unmatched)
-    if not parts:
-        # deletes-only merge: an empty same-schema updates frame
-        parts.append(source.filter(F.lit(False)))
-    updates = parts[0]
-    for p in parts[1:]:
-        updates = updates.unionByName(p)
-    return upsert_snapshot(
-        spark, table_path, updates, key_col,
-        stats_cols=stats_cols, version=version, delete_keys=deletes,
-    )

@@ -81,11 +81,6 @@ def load_events_time_range(
     return push_time_range(raw, start_time, end_time)
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    use = names or TESTDATA_TABLES
-    return {n: load_table(spark, sf_dir, n) for n in use}
-
-
 def ts_epoch_sql(probe_dir: str = "/root/testdata/sf0.01") -> str:
     """DuckDB expression for ``events.ts`` as epoch SECONDS (double) —
     encoding-aware, mirroring ``functions.core.event_seconds``.

@@ -183,7 +183,7 @@ def trigger_spec(*, trigger_seconds: int | None = None) -> dict[str, object]:
 
 def write_kafka_batch(
     events: DataFrame, *, brokers: str, topic: str
-) -> None:  # pragma: no cover - needs Kafka + package
+) -> None:
     """Bulk Kafka write (S14, reference sre:227-238)."""
     (marshal_kafka(events).write.format("kafka")
      .options(**kafka_options(brokers=brokers, topic=topic)).save())

@@ -13,29 +13,12 @@ reference behavior to match — SURVEY.md §7.3)."""
 
 from __future__ import annotations
 
-from decimal import Decimal
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_WATERMARK_UNITS = {
-    "second": 1.0, "seconds": 1.0, "minute": 60.0, "minutes": 60.0,
-    "hour": 3600.0, "hours": 3600.0, "day": 86400.0, "days": 86400.0,
-}
-
-
-def _duration(seconds: float, what: str) -> str:
-    """Spark duration string for an exact-decimal positive second count
-    (``0.5 seconds`` parses; ``int()`` would truncate it to an invalid
-    zero — the pitfall funnel_join's Decimal expansion exists for)."""
-    if not seconds > 0:
-        raise ValueError(f"{what} must be positive, got {seconds}")
-    return f"{Decimal(repr(float(seconds))):f} seconds"
-
-
 def _whole_seconds(seconds: float, what: str) -> int:
-    """Validated integral second count for the operators whose interval
-    ids divide whole-second epochs — fractional widths are rejected
+    """Validated integral second count for the interval-id arithmetic,
+    which divides whole-second epochs — fractional widths are rejected
     loudly instead of silently truncated."""
     n = int(seconds)
     if n != seconds or n <= 0:
@@ -44,47 +27,6 @@ def _whole_seconds(seconds: float, what: str) -> int:
             f"interval-id arithmetic, got {seconds}"
         )
     return n
-
-
-def _watermark_seconds(watermark: str) -> float | None:
-    """Best-effort parse of a '<n> <unit>' watermark string (None when
-    the form isn't recognized — Spark validates the real thing)."""
-    parts = watermark.strip().split()
-    if len(parts) != 2:
-        return None
-    try:
-        n = float(parts[0])
-    except ValueError:
-        return None
-    unit = _WATERMARK_UNITS.get(parts[1].lower())
-    return None if unit is None else n * unit
-
-
-def session_counts(
-    events: DataFrame,
-    gap_seconds: float,
-    *,
-    time_col: str = "event_time",
-    key_col: str = "user_id",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Per-key session aggregation via ``session_window`` — the streaming
-    twin of ``operators.asof.sessionize`` (same gap semantics: a session
-    extends while consecutive events arrive within ``gap_seconds``).
-    Output: key, session bounds, event count."""
-    win = F.session_window(
-        F.col(time_col), _duration(gap_seconds, "gap_seconds"))
-    return (
-        events.withWatermark(time_col, watermark)
-        .groupBy(win.alias("w"), F.col(key_col))
-        .agg(F.count(F.lit(1)).alias("event_count"))
-        .select(
-            key_col,
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "event_count",
-        )
-    )
 
 
 def windowed_counts(
@@ -113,196 +55,5 @@ def windowed_counts(
             F.col("w.end").alias("interval_end"),
             bank_col,
             "event_count",
-        )
-    )
-
-
-def sliding_counts(
-    events: DataFrame,
-    window_seconds: float,
-    slide_seconds: float,
-    *,
-    time_col: str = "event_time",
-    bank_col: str = "bank",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Per-(window, bank) counts over OVERLAPPING windows — the smoothed
-    monitoring view (e.g. 1h windows advancing every 10 min): each event
-    lands in ``window/slide`` windows, trading ``window/slide`` x state
-    and output volume for update latency. ``slide`` must divide
-    ``window`` (Spark's constraint for aligned window sets).
-
-    Semantics twin: each sliding window [k*slide, k*slide + window) count
-    equals the sum of the tumbling slide-width buckets it spans — pinned
-    by tests against the batch ``floor(t/N)`` operator.
-    """
-    w = _whole_seconds(window_seconds, "window_seconds")
-    s = _whole_seconds(slide_seconds, "slide_seconds")
-    if w % s != 0:
-        raise ValueError(f"slide {s}s must divide window {w}s")
-    win = F.window(F.col(time_col), f"{w} seconds", f"{s} seconds")
-    return (
-        events.withWatermark(time_col, watermark)
-        .groupBy(win.alias("w"), F.col(bank_col))
-        .agg(F.count(F.lit(1)).alias("event_count"))
-        .select(
-            (F.unix_timestamp("w.start") / s).cast("long").alias("slide_index"),
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            bank_col,
-            "event_count",
-        )
-    )
-
-
-def dedup_stream(
-    events: DataFrame,
-    *,
-    key_cols: tuple[str, ...] = ("event_id",),
-    time_col: str = "event_time",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming exact dedup at ingest: first arrival wins; later rows
-    with the same key are dropped for as long as the key stays inside the
-    watermark horizon. State is evicted past the watermark, so memory is
-    O(keys per horizon) — bounded forever — instead of O(stream), which is
-    what lets exact dedup run continuously in front of a 100 TB corpus
-    build. Batch twin (and test anchor): ``dropDuplicates(key_cols)``.
-    """
-    return events.withWatermark(time_col, watermark).dropDuplicatesWithinWatermark(
-        list(key_cols)
-    )
-
-
-def funnel_join(
-    first: DataFrame,
-    second: DataFrame,
-    *,
-    key_col: str = "user_id",
-    time_col: str = "event_time",
-    within_seconds: float = 3600.0,
-    watermark: str = "10 minutes",
-    how: str = "inner",
-) -> DataFrame:
-    """Stream-stream join: a ``first`` event followed by a ``second``
-    event with the same key within ``within_seconds`` — the
-    funnel/attribution shape (signup -> purchase, impression -> click).
-
-    ``how="leftOuter"`` emits ABANDONMENT rows too: a first-side event
-    whose horizon expires unmatched surfaces once the watermark passes
-    ``first_time + within_seconds`` (null second_time/lag) — the
-    "started the funnel, never finished" stream. Outer emission is
-    watermark-driven, so results for unmatched rows arrive late by
-    construction, and only time-bound conditions make it legal.
-
-    Both sides carry watermarks and the join condition bounds the event
-    times against each other, which is what lets Spark EVICT buffered
-    state: a first-side row can be dropped once the second-side watermark
-    passes ``first.time + within_seconds``, so state is
-    O(rows per horizon) forever — an unbounded stream never accumulates
-    an unbounded join buffer. Without the time-range predicate Spark
-    would (correctly) refuse the stream-stream join as unbounded-state.
-
-    Output: key, first_time, second_time, lag_seconds.
-    """
-    a = first.select(
-        F.col(key_col).alias("k"), F.col(time_col).alias("first_time")
-    ).withWatermark("first_time", watermark)
-    b = second.select(
-        F.col(key_col).alias("k2"), F.col(time_col).alias("second_time")
-    ).withWatermark("second_time", watermark)
-    cond = (
-        (F.col("k") == F.col("k2"))
-        & (F.col("second_time") >= F.col("first_time"))
-        # Decimal expansion, not int() or float repr: int() truncates a
-        # 0.5 s horizon to zero, and float repr emits scientific
-        # notation (INTERVAL 1e-05 SECONDS fails to parse)
-        & (F.col("second_time")
-           <= F.col("first_time")
-           + F.expr(
-               f"INTERVAL {Decimal(repr(float(within_seconds))):f} SECONDS"))
-    )
-    return a.join(b, cond, how).select(
-        F.col("k").alias(key_col),
-        "first_time",
-        "second_time",
-        # double-epoch subtraction keeps the sub-second fraction the
-        # fractional within_seconds horizon admits (unix_timestamp
-        # truncates to whole seconds)
-        (F.col("second_time").cast("double")
-         - F.col("first_time").cast("double")).alias("lag_seconds"),
-    )
-
-
-def enrich_stream(
-    events: DataFrame,
-    dim: DataFrame,
-    *,
-    key_col: str = "bank",
-    how: str = "left",
-) -> DataFrame:
-    """Stream-static enrichment: join each micro-batch against a (small)
-    static dimension, broadcast so the probe stays map-side — the
-    streaming twin of the reference's J1 pulse-time enrichment
-    (spark_events_by_time.py:179-184) for a live event feed.
-
-    Stream-static joins are stateless (no watermark, no stream-side
-    buffering — only the current micro-batch joins), so this adds zero
-    state at any stream volume; Spark re-reads the static side per batch,
-    which also picks up slowly-changing dimension updates for free.
-    """
-    return events.join(F.broadcast(dim), key_col, how)
-
-
-def windowed_unique_counts(
-    events: DataFrame,
-    interval_seconds: float,
-    *,
-    time_col: str = "event_time",
-    key_col: str = "user_id",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Distinct actors per tumbling window, streaming.
-
-    Structured Streaming rejects ``count(distinct)`` in stateful aggs, so
-    the standard composition is used: ``dropDuplicatesWithinWatermark``
-    on (window-bucket, key) collapses repeats first (state = one row per
-    live (bucket, key), evicted past the watermark), then a plain
-    windowed count counts survivors. Two stateful stages, both
-    watermark-bounded. Batch twin (test anchor):
-    ``groupBy(floor(t/N)).agg(countDistinct(key))``.
-
-    The dedup state is evicted ``watermark`` behind the max observed
-    event time, NOT at bucket end — with an interval longer than the
-    watermark, a key could repeat inside one bucket after its dedup row
-    was evicted and be counted twice. That configuration is rejected
-    loudly: the watermark must cover the interval.
-    """
-    n = _whole_seconds(interval_seconds, "interval_seconds")
-    wm = _watermark_seconds(watermark)
-    if wm is not None and wm < n:
-        raise ValueError(
-            f"watermark ({watermark}) must be >= interval_seconds ({n}s): "
-            "the (bucket, key) dedup state would be evicted mid-bucket "
-            "and repeats would overcount uniques"
-        )
-    deduped = (
-        events
-        .withColumn(
-            "_bucket",
-            F.floor(F.unix_timestamp(F.col(time_col)) / F.lit(n)).cast("long"),
-        )
-        .withWatermark(time_col, watermark)
-        .dropDuplicatesWithinWatermark(["_bucket", key_col])
-    )
-    win = F.window(F.col(time_col), f"{n} seconds")
-    return (
-        deduped.groupBy(win.alias("w"))
-        .agg(F.count(F.lit(1)).alias("unique_count"))
-        .select(
-            (F.unix_timestamp("w.start") / n).cast("long").alias("interval"),
-            F.col("w.start").alias("interval_start"),
-            F.col("w.end").alias("interval_end"),
-            "unique_count",
         )
     )

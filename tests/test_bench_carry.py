@@ -7,6 +7,8 @@ budget-skipped in the current run are carried from the prior artifact
 with a provenance marker, and sections that DID run are never
 overwritten by stale data.
 """
+from pathlib import Path
+
 import bench
 
 
@@ -294,3 +296,47 @@ def test_twin_modulus_keeps_twins_in_the_next_batch_at_any_size():
                        (20_000, 3_000), (5_000_000, 1_000_000)):
         m = bench.twin_modulus(docs, vecs)
         assert m % 40 == 1 and m <= vecs and m < docs
+
+
+class _FakeFrame:
+    """Stands in for a synthesized DataFrame: its writer leaves a row
+    count and the _SUCCESS marker a finished Spark write leaves."""
+
+    def __init__(self, rows):
+        self.rows = rows
+        self.write = self
+
+    def mode(self, _):
+        return self
+
+    def option(self, *_):
+        return self
+
+    def parquet(self, path):
+        Path(path).mkdir(parents=True)
+        (Path(path) / "rows").write_text(str(self.rows))
+        (Path(path) / "_SUCCESS").touch()
+
+
+def test_synth_set_of_another_size_is_regenerated_apart(monkeypatch, tmp_path):
+    """A down-sized sweep's data set is never read as a full-size one:
+    asking for another row count writes a new set at its own path and
+    leaves the finished one alone."""
+    monkeypatch.setattr(bench, "_BENCHDATA", tmp_path)
+    monkeypatch.setattr(bench, "_note", lambda *_: None)
+    small = f"{bench._data_dir('docsbig', 20_000)}/documents.parquet"
+    full = f"{bench._data_dir('docsbig', 2_000_000)}/documents.parquet"
+    bench._synth_once(small, lambda: _FakeFrame(20_000))
+    bench._synth_once(full, lambda: _FakeFrame(2_000_000))
+    assert small != full
+    assert (Path(small) / "rows").read_text() == "20000"
+    assert (Path(full) / "rows").read_text() == "2000000"
+    # a finished set of the asked size is reused, not rewritten
+    bench._synth_once(full, lambda: _FakeFrame(-1))
+    assert (Path(full) / "rows").read_text() == "2000000"
+    # every synthesized set the sweep reads is keyed by its row count
+    for path, rows in ((bench.BIG_DIR, bench.BIG_ROWS),
+                       (bench.SNAP_DIR, bench.BIG_ROWS),
+                       (bench.DOCS_DIR, bench.DOCS_ROWS),
+                       (bench.VEC_DIR, bench.VEC_ROWS)):
+        assert path.endswith(f"-{rows}"), path

@@ -1,44 +1,10 @@
-"""Boilerplate detection/removal + LM scoring + semantic dedup tests."""
+"""Boilerplate phrase detection + LM scoring + semantic dedup tests."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from nexus_processor_spark.operators import pipeline, similarity, textstats
-
-FOOTER = "all rights reserved"
-NAV = "home | about | contact"
-
-
-@pytest.fixture(scope="module")
-def lined_docs(spark):
-    rows = [
-        (0, f"{NAV}\nunique zero body\n{FOOTER}"),
-        (1, f"{NAV}\nfirst doc text here\nmore first text\n{FOOTER}"),
-        (2, f"{NAV}\nsecond doc body\n{FOOTER}"),
-        (3, f"only original content\nno shared lines at all"),
-        (4, f"{FOOTER}\n{FOOTER}"),  # all-boilerplate doc
-        (5, f"  {FOOTER}  \nwhitespace trims to the shared line"),
-    ]
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_frequent_lines_finds_shared(lined_docs):
-    freq = {r.line: r.n_docs for r in
-            textstats.frequent_lines(lined_docs, 3).collect()}
-    # FOOTER is in docs 0,1,2,4,5 (doc 4 twice counts once) = 5 docs
-    assert freq == {FOOTER: 5, NAV: 3}
-
-
-def test_strip_frequent_lines_preserves_order_and_docs(lined_docs):
-    out = {r.doc_id: r.text for r in
-           textstats.strip_frequent_lines(lined_docs, 3).collect()}
-    assert len(out) == 6  # every input doc comes back
-    assert out[1] == "first doc text here\nmore first text"
-    assert out[3] == "only original content\nno shared lines at all"
-    assert out[4] == ""  # fully boilerplate
-    assert out[5] == "whitespace trims to the shared line"
+from nexus_processor_spark.operators import pipeline, similarity
 
 
 def test_boilerplate_phrases_counts(spark):

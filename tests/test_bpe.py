@@ -1,12 +1,9 @@
-"""BPE tokenizer training/encoding: the four implementations (driver
-dict, Spark loop, pandas encode, native encode) agree with each other
-and with the documented greedy/tiebreak semantics; the rank-priority
-encode is property-pinned to sequential merge replay."""
+"""BPE tokenizer training/encoding: the driver trainer and the native
+encoder follow the documented greedy/tiebreak semantics, and encoding
+partitions each document's characters."""
 
 from __future__ import annotations
 
-from hypothesis import given, settings
-from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from nexus_processor_spark.operators import bpe
@@ -44,23 +41,6 @@ def test_merge_pair_col_matches_python(spark):
         assert got[w] == bpe._merge_word(list(w), "a", "a"), w
 
 
-def test_train_spark_equals_driver(spark):
-    df = _df(spark)
-    via_spark = [
-        tuple(r) for r in bpe.bpe_train_spark(bpe.word_counts(df), 5).collect()
-    ]
-    via_driver = [
-        tuple(r) for r in bpe.bpe_train(df, 5, max_words=None).collect()
-    ]
-    assert via_spark == via_driver
-    assert len(via_driver) == 5
-    ranks = [m[0] for m in via_driver]
-    assert ranks == [0, 1, 2, 3, 4]
-    # counts are non-increasing only per tie-class, but every chosen
-    # pair must have been the argmax at its step: spot-pin step 0
-    assert via_driver[0][4] >= via_driver[1][4]
-
-
 def test_train_exhausts_when_no_pairs_left(spark):
     df = spark.createDataFrame([(0, "ab ab ab")], "doc_id long, text string")
     merges = bpe.bpe_train(df, 10, max_words=None).collect()
@@ -68,18 +48,15 @@ def test_train_exhausts_when_no_pairs_left(spark):
     assert [(m.left_sym, m.right_sym) for m in merges] == [("a", "b")]
 
 
-def test_encode_pandas_equals_native(spark):
+def test_encode_native_partitions_each_doc(spark):
     df = _df(spark)
     merges = bpe.bpe_train(df, 5, max_words=None)
     pairs = [
         (r.left_sym, r.right_sym) for r in merges.orderBy("merge_rank").collect()
     ]
-    a = sorted(tuple(r) for r in bpe.bpe_encode(df, merges).collect())
-    b = sorted(tuple(r) for r in bpe.encode_native(df, pairs).collect())
-    assert a == b
-    assert len(a) == len(CORPUS)
+    by_id = {r[0]: r for r in bpe.encode_native(df, pairs).collect()}
+    assert len(by_id) == len(CORPUS)
     # segmentation is a partition of each doc's characters
-    by_id = {r[0]: r for r in a}
     for doc_id, text in CORPUS:
         pieces = by_id[doc_id][1]
         assert "".join(pieces) == text.replace(" ", "")
@@ -91,7 +68,8 @@ def test_encode_skips_empty_tokens(spark):
         [(0, "  ab  ab "), (1, "ab")], "doc_id long, text string"
     )
     merges = bpe.bpe_train(df, 1, max_words=None)
-    got = {r.doc_id: r.pieces for r in bpe.bpe_encode(df, merges).collect()}
+    pairs = [(r.left_sym, r.right_sym) for r in merges.collect()]
+    got = {r.doc_id: r.pieces for r in bpe.encode_native(df, pairs).collect()}
     assert got == {0: ["ab", "ab"], 1: ["ab"]}
 
 
@@ -103,32 +81,3 @@ def test_max_words_cap_is_deterministic(spark):
     assert capped == again
     # the cap changes counts but never the schema/rank structure
     assert [m[0] for m in capped] == [m[0] for m in full] == [0, 1, 2]
-
-
-@settings(max_examples=200, deadline=None)
-@given(
-    word=st.text(alphabet="ab c", min_size=0, max_size=14),
-    seed=st.integers(0, 10_000),
-)
-def test_priority_encode_equals_sequential_replay(word, seed):
-    """encode_word's lowest-rank-first loop must equal applying the
-    merges one by one in rank order — for merge tables actually
-    learnable from a corpus (the equivalence argument relies on that:
-    later merges only create adjacencies involving their own symbol)."""
-    import random
-
-    rng = random.Random(seed)
-    corpus_words = [
-        "".join(rng.choice("abc") for _ in range(rng.randint(1, 8)))
-        for _ in range(12)
-    ]
-    counts = [(w, rng.randint(1, 5)) for w in sorted(set(corpus_words))]
-    merges = bpe.train_dict(counts, n_merges=6)
-    ranks = {(l, r): k for k, l, r, _, _ in merges}
-
-    target = [w for w in word.split(" ") if w]
-    for w in target:
-        seq = list(w)
-        for _, l, r, _, _ in merges:
-            seq = bpe._merge_word(seq, l, r)
-        assert bpe.encode_word(w, ranks) == seq, (w, merges)

@@ -88,8 +88,8 @@ def test_ingest_routed_end_to_end(spark, tmp_path):
     assert catalog.read_table(spark, root, "events").count() == 4
 
 
-def test_chunked_write_and_compaction(spark, tmp_path):
-    """S7/file sizing: maxRecordsPerFile splits; compaction merges back."""
+def test_chunked_write_splits_files(spark, tmp_path):
+    """S7/file sizing: maxRecordsPerFile splits a table's files."""
     p = tmp_path / "run.json"
     p.write_text(json.dumps(fixture_tree()))
     df = nexus.ingest_table(spark, [str(p)], "events")
@@ -97,48 +97,7 @@ def test_chunked_write_and_compaction(spark, tmp_path):
     catalog.write_table(df, root, "events", max_records_per_file=1)
     ev = catalog.read_table(spark, root, "events")
     assert len(ev.inputFiles()) >= 4  # one row per file
-    n_files = catalog.compact_table(spark, root, "events")
-    assert n_files < 4
-    assert catalog.read_table(spark, root, "events").count() == 4
-
-
-def test_upsert_table(spark, tmp_path):
-    p = tmp_path / "run.json"
-    p.write_text(json.dumps(fixture_tree()))
-    df = nexus.ingest_table(spark, [str(p)], "events")
-    root = str(tmp_path / "lake")
-    catalog.write_table(df, root, "events")
-    # new version of event_idx 0/1 (weight bumped) + a brand-new row
-    from pyspark.sql import functions as F
-
-    updates = df.filter(F.col("event_idx") < 2).withColumn(
-        "event_weight", F.lit(9.0)
-    ).unionByName(
-        df.filter(F.col("event_idx") == 3).withColumn("event_idx", F.lit(99).cast("long"))
-    )
-    catalog.upsert_table(spark, updates, root, "events",
-                         keys=["run_id", "bank", "event_idx"])
-    back = catalog.read_table(spark, root, "events")
-    assert back.count() == 5  # 4 original - 2 replaced + 2 new versions + 1 new
-    got = {r.event_idx: r.event_weight for r in back.collect()}
-    assert got[0] == 9.0 and got[1] == 9.0  # updated
-    assert got[2] == 1.0 and got[3] == 1.0  # untouched
-    assert 99 in got                          # inserted
-
-
-def test_delete_from_table(spark, tmp_path):
-    p = tmp_path / "run.json"
-    p.write_text(json.dumps(fixture_tree()))
-    df = nexus.ingest_table(spark, [str(p)], "events")
-    root = str(tmp_path / "lake")
-    catalog.write_table(df, root, "events")
-    victims = spark.createDataFrame([(100,), (103,)], "event_id long")
-    removed = catalog.delete_from_table(spark, root, "events", victims,
-                                        keys=["event_id"])
-    assert removed == 2
-    left = {r.event_id for r in
-            catalog.read_table(spark, root, "events").collect()}
-    assert left == {101, 102}
+    assert ev.count() == 4
 
 
 def test_writes_are_zstd(spark, tmp_path):

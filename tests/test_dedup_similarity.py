@@ -505,28 +505,3 @@ def test_cluster_representatives_argmax_tiebreak_singletons(spark):
     assert out[1].rep_id == 2 and out[1].rep_n_chars == 30
     assert out[1].n_members == 3
     assert out[7].rep_id == 7 and out[7].n_members == 1
-
-
-def test_lsh_plan_properties():
-    """Band planner: budget respected, s-curve midpoint tracks the
-    target threshold, and asymmetric error weights move the plan in
-    the right direction (FN-averse -> lower midpoint: catch more)."""
-    from nexus_processor_spark.operators.dedup import lsh_plan
-
-    for t in (0.5, 0.7, 0.9):
-        p = lsh_plan(t, 128)
-        assert p["bands"] * p["rows_per_band"] <= 128
-        assert abs(p["s_mid"] - t) < 0.12, (t, p)
-    fn_averse = lsh_plan(0.8, 128, false_negative_weight=5.0)
-    fp_averse = lsh_plan(0.8, 128, false_positive_weight=5.0)
-    assert fn_averse["s_mid"] < fp_averse["s_mid"]
-    assert fn_averse["fn_mass"] <= fp_averse["fn_mass"]
-    # the shipped curation default (16 bands x 2 rows) corresponds to a
-    # low-threshold plan: the planner should pick >=2-row bands only
-    # once the target is meaningfully above its s_mid (~0.18)
-    loose = lsh_plan(0.2, 32)
-    assert loose["rows_per_band"] >= 1
-    import pytest
-
-    with pytest.raises(ValueError):
-        lsh_plan(1.5)

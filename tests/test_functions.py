@@ -10,6 +10,7 @@ from nexus_processor_spark.functions.core import (
     make_run_id,
     run_id_from_filename,
     run_id_to_filename,
+    to_attribute_map,
     try_parse_numeric,
 )
 from nexus_processor_spark.functions.text import (
@@ -61,6 +62,21 @@ def test_try_parse_numeric(spark):
     df = spark.createDataFrame([("1.5",), ("junk",), (None,)], "v string")
     vals = [r.n for r in df.select(try_parse_numeric("v").alias("n")).collect()]
     assert vals == [1.5, None, None]
+
+
+def test_to_attribute_map_drops_nulls_and_strips_prefix(spark):
+    """F6/F7: the bag keeps non-null values as strings, under keys with
+    the prefix stripped (the build/filter/strip that q_attribute_maps
+    spells inline)."""
+    df = spark.createDataFrame([("click", 7)], "t string, k long")
+    bag = df.select(to_attribute_map(
+        "attr_",
+        ("attr_type", F.col("t")),
+        ("attr_k", F.col("k")),
+        ("attr_missing", F.lit(None).cast("string")),
+        ("plain", F.lit(1.5)),
+    ).alias("m")).first().m
+    assert bag == {"type": "click", "k": "7", "plain": "1.5"}
 
 
 def test_word_shingles_edges(spark):

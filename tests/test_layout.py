@@ -5,7 +5,7 @@ import json
 
 from pyspark.sql import functions as F
 
-from nexus_processor_spark.plans.layout import salted_join, spread
+from nexus_processor_spark.plans.layout import spread
 from nexus_processor_spark.sources import catalog, nexus
 from nexus_processor_spark.streaming import replay
 
@@ -18,35 +18,6 @@ def test_spread_raises_partition_count(spark):
     # already-wide inputs pass through untouched
     wide = spark.range(1000).repartition(16)
     assert spread(wide, parallelism=8) is wide
-
-
-def test_salted_join_same_rows_as_plain(spark):
-    # 90% of big rows share one hot key — the salting target.
-    big = spark.range(10_000).select(
-        F.when(F.col("id") % 10 != 0, "hot").otherwise("cold").alias("k"),
-        F.col("id").alias("v"),
-    )
-    small = spark.createDataFrame([("hot", 1), ("cold", 2)], "k string, dim int")
-    plain = big.join(small, ["k"]).groupBy("k", "dim").count()
-    salted = salted_join(big, small, ["k"]).groupBy("k", "dim").count()
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
-def test_salted_join_left_keeps_unmatched(spark):
-    big = spark.createDataFrame([("a", 1), ("b", 2)], "k string, v int")
-    small = spark.createDataFrame([("a", 10)], "k string, dim int")
-    rows = {r.k: r.dim for r in salted_join(big, small, ["k"], how="left").collect()}
-    assert rows == {"a": 10, "b": None}
-
-
-def test_salted_join_rejects_small_side_preserving_outer(spark):
-    import pytest
-
-    big = spark.createDataFrame([("a", 1)], "k string, v int")
-    small = spark.createDataFrame([("a", 10), ("z", 99)], "k string, dim int")
-    for how in ("right", "full", "outer", "full_outer"):
-        with pytest.raises(ValueError, match="salted_join does not support"):
-            salted_join(big, small, ["k"], how=how)
 
 
 def test_event_micros_negative_nanos_consistent(spark):

@@ -1,6 +1,5 @@
 from __future__ import annotations
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -39,34 +38,6 @@ def test_hll_approx_distinct_within_tolerance(spark):
     assert abs(row.approx - row.exact) <= max(3, 0.1 * row.exact)
 
 
-@pytest.fixture()
-def clustered(spark):
-    rng = np.random.default_rng(11)
-    centers = rng.normal(size=(4, 16)) * 5
-    rows = []
-    for i in range(200):
-        c = i % 4
-        v = centers[c] + rng.normal(scale=0.3, size=16)
-        rows.append((i, [float(x) for x in v]))
-    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-
-def test_lsh_hyperplane_recall(clustered):
-    """Bucketed ANN recovers most of brute-force top-3 on clustered data
-    (same-cluster vectors land in the same sign-pattern bucket)."""
-    queries = clustered.filter("vec_id < 8")
-    exact = similarity.brute_force_topk(queries, clustered, k=3)
-    approx = similarity.lsh_hyperplane_topk(
-        queries, clustered, k=3, dim=16, n_planes=4
-    )
-    e = {(r.query_id, r.vec_id) for r in exact.collect()}
-    a = {(r.query_id, r.vec_id) for r in approx.collect()}
-    recall = len(e & a) / len(e)
-    assert recall >= 0.7, f"recall {recall}"
-    # and the approximate search compared far fewer pairs than n^2
-    assert all(r.cos is not None for r in approx.collect())
-
-
 def test_recall_at_k_counts_overlap_and_keeps_empty_queries(spark):
     from nexus_processor_spark.operators.similarity import recall_at_k
 
@@ -86,8 +57,7 @@ def test_recall_at_k_counts_overlap_and_keeps_empty_queries(spark):
 
 def test_dim_and_subspace_validation(spark):
     """Wrong assumed dimensions fail loudly instead of silently
-    degrading: LSH bucket collapse (dim mismatch) and PQ subvector
-    truncation (dim not a multiple of m) both raise."""
+    degrading: PQ subvector truncation (dim not a multiple of m) raises."""
     import pytest
 
     from nexus_processor_spark.operators import similarity
@@ -96,15 +66,10 @@ def test_dim_and_subspace_validation(spark):
         [(i, [float(i), 1.0, 0.5, -1.0]) for i in range(8)],
         "vec_id long, embedding array<double>",
     )
-    with pytest.raises(ValueError, match="dimensions"):
-        similarity.lsh_hyperplane_topk(vecs, vecs, dim=64)
     with pytest.raises(ValueError, match="multiple of m"):
         similarity.pq_codebooks(vecs, m=3)
     with pytest.raises(ValueError, match="multiple of m"):
         similarity.pq_encode(vecs, similarity.pq_codebooks(vecs, m=4), m=8)
-    # matching dims still run
-    out = similarity.lsh_hyperplane_topk(vecs, vecs, k=2, dim=4, n_planes=2)
-    assert out.count() > 0
 
 
 def test_kmeans_parallel_init_string_ids(spark):

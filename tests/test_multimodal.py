@@ -28,29 +28,6 @@ def test_fake_decode_features_deterministic(spark, media):
     assert 0.0 <= out1[1].mean_luma <= 255.0
 
 
-def test_resize_images_block_mean(spark, media):
-    import hashlib
-
-    import numpy as np
-
-    out = {r.media_id: r for r in
-           multimodal.resize_images(media, 4, 4, fake_decode=True).collect()}
-    assert out[3].pixels is None           # null payload propagates
-    r1 = out[1]
-    assert (r1.out_h, r1.out_w) == (4, 4) and len(r1.pixels) == 16
-    # pin against a direct numpy reference on the deterministic fake
-    seed = int.from_bytes(hashlib.sha256(b"payload-one").digest()[:4], "big")
-    img = np.random.default_rng(seed).integers(
-        0, 256, size=(8, 8), dtype=np.uint8).astype(np.float64)
-    expected = [
-        np.float32(img[2 * i:2 * i + 2, 2 * j:2 * j + 2].mean())
-        for i in range(4) for j in range(4)
-    ]
-    assert r1.pixels == pytest.approx(expected)
-    # global mean is preserved by equal-block area resampling
-    assert np.mean(r1.pixels) == pytest.approx(img.mean())
-
-
 def test_real_decode_is_gated(spark, media):
     """With codec libs absent the real path fails with a clear ImportError
     naming the library; with them present it decodes (skip — not this

@@ -173,31 +173,3 @@ def test_histogram_rollup_percentile_accuracy_and_mergeability(spark):
     )
     assert sorted(map(tuple, merged.collect())) == \
         sorted(map(tuple, hist.collect()))
-
-
-def test_backfill_range_rebuilds_only_inside_buckets(spark):
-    """Corrupt the rollup inside a window, backfill it, and match the
-    clean rebuild; buckets outside the window must be passed through
-    (not recomputed) even though the corrupted input would poison them."""
-    ev = load_table(spark, "/root/testdata/sf0.001", "events").select(
-        event_seconds("ts").alias("absolute_time"),
-        F.col("event_type").alias("bank"),
-        F.col("user_id").alias("pulse_index"),
-    )
-    clean = rollup.build_interval_rollup(ev, 3600.0)
-    ivs = sorted(r["interval"] for r in
-                 clean.select("interval").distinct().collect())
-    lo_iv, hi_iv = ivs[3], ivs[10]
-    t0, t1 = lo_iv * 3600.0, hi_iv * 3600.0
-
-    # corrupt: drop every event in [t0, t1) from the maintained rollup
-    corrupted = rollup.build_interval_rollup(
-        ev.filter(~((F.col("absolute_time") >= t0)
-                    & (F.col("absolute_time") < t1))), 3600.0)
-
-    repaired = rollup.backfill_range(corrupted, ev, 3600.0, t0, t1)
-    served_r = sorted(map(tuple, rollup.serve_count_by_interval(
-        repaired, 3600.0).collect()))
-    served_c = sorted(map(tuple, rollup.serve_count_by_interval(
-        clean, 3600.0).collect()))
-    assert served_r == served_c

@@ -280,23 +280,6 @@ def test_cusum_matches_textbook_recursion(spark):
     assert expected and min(expected) >= 25   # flags only after the shift
 
 
-def test_schema_diff_detects_drift(spark):
-    from nexus_processor_spark.operators import profile
-
-    a = spark.createDataFrame([(1, "x", 1.0)], "id long, name string, score double")
-    b = spark.sql("SELECT CAST(1 AS BIGINT) id, CAST(2 AS INT) score, 'y' extra")
-    got = {r.column: r for r in profile.schema_diff(a, b).collect()}
-    assert set(got) == {"id", "name", "score", "extra"}
-    # literal-derived id is non-nullable, row-derived id is nullable
-    assert got["id"].status == "nullability_changed"
-    assert got["name"].status == "removed"
-    assert got["extra"].status == "added"
-    assert got["score"].status == "type_changed"
-    assert (got["score"].type_a, got["score"].type_b) == ("double", "int")
-    # identical schemas -> empty diff
-    assert profile.schema_diff(a, a).count() == 0
-
-
 def test_hashed_features_and_dense_assembly(spark):
     import hashlib
 

@@ -381,52 +381,6 @@ def test_catalog_snapshot_sort_by_records_prunable_stats(spark, tmp_path):
     assert got.count() == 0
 
 
-def test_merge_into_clause_semantics(spark, tmp_path):
-    """when_matched=ignore keeps target rows; when_not_matched=ignore
-    drops unknown keys; matched_delete_condition removes keys - all in
-    one commit each."""
-    from pyspark.sql import functions as F
-
-    t = str(tmp_path / "m")
-    base = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "id long, v string")
-    snap.write_snapshot(base, t, mode="overwrite", stats_cols=("id",))
-    src = spark.createDataFrame(
-        [(2, "B"), (3, "DEL"), (9, "new")], "id long, v string")
-
-    # insert-only: matched keys keep their target values
-    snap.merge_into(spark, t, src, "id", when_matched="ignore")
-    got = dict(map(tuple, snap.read_snapshot(spark, t).collect()))
-    assert got == {1: "a", 2: "b", 3: "c", 9: "new"}
-
-    # update-only with a matched-delete clause; unknown keys dropped
-    src2 = spark.createDataFrame(
-        [(2, "B2"), (3, "DEL"), (77, "x")], "id long, v string")
-    snap.merge_into(
-        spark, t, src2, "id", when_not_matched="ignore",
-        matched_delete_condition=F.col("v") == "DEL",
-    )
-    got = dict(map(tuple, snap.read_snapshot(spark, t).collect()))
-    assert got == {1: "a", 2: "B2", 9: "new"}
-
-    # default clauses delegate to the plain upsert
-    v = snap.merge_into(
-        spark, t, spark.createDataFrame([(5, "e")], "id long, v string"),
-        "id")
-    assert v is not None
-    assert dict(map(tuple, snap.read_snapshot(spark, t).collect())) \
-        == {1: "a", 2: "B2", 5: "e", 9: "new"}
-
-    # deletes-only merge (both clauses ignore)
-    snap.merge_into(
-        spark, t, spark.createDataFrame([(9, "DEL")], "id long, v string"),
-        "id", when_matched="ignore", when_not_matched="ignore",
-        matched_delete_condition=F.col("v") == "DEL",
-    )
-    assert dict(map(tuple, snap.read_snapshot(spark, t).collect())) \
-        == {1: "a", 2: "B2", 5: "e"}
-
-
 def test_evolve_rename_is_metadata_only(spark, tmp_path):
     """Rename commits a manifest, touches no data file, and reads the
     old physical column under the new logical name — across appends

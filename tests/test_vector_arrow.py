@@ -28,72 +28,80 @@ def _collect_sorted(df, *keys):
     return [tuple(r) for r in df.orderBy(*keys).collect()]
 
 
-def test_quantize_arrow_matches_native(emb):
+def assert_native_and_arrow_are_equal_collect(
+        native, arrow, keys, approx=(), abs_tol=0.0):
+    """The native HOF form and the Arrow kernel of one operator return
+    the same columns and, ordered by ``keys``, the same non-empty rows:
+    exact on every column, except that the float columns in ``approx``
+    may differ by ``abs_tol`` (and are null exactly where the other
+    side is null)."""
+    assert native.columns == arrow.columns
+    n = [r.asDict() for r in native.orderBy(*keys).collect()]
+    a = [r.asDict() for r in arrow.orderBy(*keys).collect()]
+    assert len(n) == len(a) > 0
+    for rn, ra in zip(n, a):
+        for c in approx:
+            if rn[c] is None:
+                assert ra[c] is None, (c, rn, ra)
+            else:
+                assert rn[c] == pytest.approx(ra[c], abs=abs_tol), (c, rn, ra)
+        exact = [c for c in native.columns if c not in approx]
+        assert [rn[c] for c in exact] == [ra[c] for c in exact], (rn, ra)
+
+
+def _quantize(spark, emb):
     native = emb.select(
         "vec_id",
         vector.quant_scale(F.col("embedding")).alias("scale"),
         vector.quantize_int8(F.col("embedding")).alias("q8"),
         vector.l2_normalize(F.col("embedding")).alias("unit"),
     )
-    arrow = vector_arrow.quantize_arrow(emb)
-    n = _collect_sorted(native, "vec_id")
-    a = _collect_sorted(arrow, "vec_id")
-    assert len(n) == len(a) == 201
-    for rn, ra in zip(n, a):
-        assert rn[0] == ra[0]
-        assert rn[1] == pytest.approx(ra[1], abs=0)  # scale exact
-        assert rn[2] == ra[2]  # int8 codes exact (incl. None row)
-        if rn[3] is None:
-            assert ra[3] is None
-        else:
-            assert rn[3] == pytest.approx(ra[3], abs=1e-12)
+    return native, vector_arrow.quantize_arrow(emb)
 
 
-def test_kmeans_assign_arrow_matches_native(emb):
+def _kmeans_assign(spark, emb):
     cents = emb.filter(F.col("vec_id") < 8)
-    native = _collect_sorted(similarity.kmeans_assign(emb, cents), "vec_id")
-    arrow = _collect_sorted(vector_arrow.kmeans_assign_arrow(emb, cents), "vec_id")
-    assert [r[:2] for r in native] == [r[:2] for r in arrow]  # same centroid
-    for rn, ra in zip(native, arrow):
-        assert rn[2] == pytest.approx(ra[2], abs=1e-9)
+    return (similarity.kmeans_assign(emb, cents),
+            vector_arrow.kmeans_assign_arrow(emb, cents))
 
 
-def test_knn_graph_arrow_matches_native(spark, emb):
+def _knn_graph(spark, emb):
     nz = emb.filter(F.col("vec_id") < 200)  # native nulls zero-norm cos
-    native = _collect_sorted(
-        similarity.knn_graph(nz, 3), "query_id", "rank"
-    )
-    arrow = _collect_sorted(
-        vector_arrow.knn_graph_arrow(nz, 3), "query_id", "rank"
-    )
-    assert [r[:2] + r[3:] for r in native] == [r[:2] + r[3:] for r in arrow]
-    for rn, ra in zip(native, arrow):
-        assert rn[2] == pytest.approx(ra[2], abs=1e-9)
+    return similarity.knn_graph(nz, 3), vector_arrow.knn_graph_arrow(nz, 3)
 
 
-def test_semantic_dedup_arrow_matches_native(emb):
+def _semantic_dedup(spark, emb):
     cents = emb.filter(F.col("vec_id") < 8)
-    native = sorted(
-        tuple(r) for r in similarity.semantic_dedup(emb, cents, 0.55).collect()
-    )
-    arrow = sorted(
-        tuple(r)
-        for r in vector_arrow.semantic_dedup_arrow(emb, cents, 0.55).collect()
-    )
-    assert native == arrow and len(native) > 0
+    return (similarity.semantic_dedup(emb, cents, 0.55),
+            vector_arrow.semantic_dedup_arrow(emb, cents, 0.55))
 
 
-def test_pq_encode_arrow_matches_native(spark):
-    from nexus_processor_spark.operators import similarity, vector_arrow
+def _pq_encode(spark, emb):
     from nexus_processor_spark.sources.tables import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     cb = similarity.pq_codebooks(emb.filter(F.col("vec_id") < 8), 4)
-    native = {r.vec_id: r.codes
-              for r in similarity.pq_encode(emb, cb, 4).collect()}
-    arrow = {r.vec_id: r.codes
-             for r in vector_arrow.pq_encode_arrow(emb, cb, 4).collect()}
-    assert native == arrow and len(native) > 0
+    return (similarity.pq_encode(emb, cb, 4),
+            vector_arrow.pq_encode_arrow(emb, cb, 4))
+
+
+# twin -> (builder of (native, arrow), sort keys, approximate columns,
+# their absolute tolerance). Scale and int8 codes are exact.
+_TWINS = {
+    "quantize": (_quantize, ("vec_id",), ("unit",), 1e-12),
+    "kmeans_assign": (_kmeans_assign, ("vec_id",), ("dist",), 1e-9),
+    "knn_graph": (_knn_graph, ("query_id", "rank"), ("cos",), 1e-9),
+    "semantic_dedup": (_semantic_dedup, ("vec_id",), (), 0.0),
+    "pq_encode": (_pq_encode, ("vec_id",), (), 0.0),
+}
+
+
+@pytest.mark.parametrize("twin", sorted(_TWINS))
+def test_native_and_arrow_twins_agree(spark, emb, twin):
+    build, keys, approx, abs_tol = _TWINS[twin]
+    native, arrow = build(spark, emb)
+    assert_native_and_arrow_are_equal_collect(
+        native, arrow, keys, approx=approx, abs_tol=abs_tol)
 
 
 def test_ivf_pq_topk_accepts_preencoded(spark):
@@ -532,51 +540,3 @@ def test_rebuild_index_retrains_and_parks_tiers(spark, emb, tmp_path):
                                candidates=20)
     assert _collect_sorted(post, "query_id", "rank") == _collect_sorted(
         want, "query_id", "rank")
-
-
-@pytest.mark.slow
-def test_maintain_index_executes_recommendation(
-        spark, emb, tmp_path, monkeypatch):
-    """maintain_index (round 11) closes the stats->action loop: it
-    EXECUTES whatever index_stats recommends — none at healthy dials,
-    compact at the accretion cliff, rebuild at the skew cliff (given a
-    corpus; degrading with an explicit action tag without one)."""
-    from nexus_processor_spark.operators import vector_index
-
-    clean = emb.filter("vec_id < 60")
-    cents = clean.filter("vec_id < 4")
-    path = str(tmp_path / "vidx_mt")
-    vector_index.build_ivf_int8_index(
-        clean.filter("vec_id < 40"), cents, path)
-    out = vector_index.maintain_index(spark, path)
-    assert (out["recommendation"], out["action"]) == ("ok", "none")
-
-    # accrete files, then lower the compact cliff onto the measured dial
-    vector_index.append_to_index(
-        clean.filter("vec_id >= 40 AND vec_id < 60"), path)
-    st = vector_index.index_stats(spark, path)
-    monkeypatch.setattr(
-        vector_index, "FILES_COMPACT_CLIFF", st["files_per_cell_max"])
-    out = vector_index.maintain_index(spark, path, vacuum=True)
-    assert (out["recommendation"], out["action"]) == (
-        "compact", "compact")
-    assert out["stats"]["files_per_cell_max"] == 1
-    manifest, _, _ = vector_index.open_index(spark, path)
-    assert manifest["stale_dirs"] == []  # vacuum=True reclaimed it
-
-    # skew cliff: rebuild needs the corpus; without one (and accretion
-    # back under its cliff post-compaction) it reports the skip
-    st = vector_index.index_stats(spark, path)
-    monkeypatch.setattr(
-        vector_index, "SKEW_REBUILD_CLIFF", st["cell_skew"])
-    out = vector_index.maintain_index(spark, path)
-    assert (out["recommendation"], out["action"]) == (
-        "rebuild", "skipped_no_corpus")
-    out = vector_index.maintain_index(spark, path, clean, vacuum=True)
-    assert (out["recommendation"], out["action"]) == (
-        "rebuild", "rebuild")
-    assert out["stats"]["rows"] == 60
-    manifest, _, _ = vector_index.open_index(spark, path)
-    assert manifest["codes_dir"].startswith("codes-")
-    assert manifest["centroids_dir"].startswith("centroids-")
-    assert manifest["stale_dirs"] == []
