@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from nexus_processor_spark.functions.vector import dot, norm
+from nexus_processor_spark.operators import vector_arrow
 from nexus_processor_spark.plans.layout import spread
 
 def _cos() -> F.Column:
@@ -244,52 +245,6 @@ def cosine_near_dup_pairs(
     )
 
 
-def kmeans_assign(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-) -> DataFrame:
-    """One Lloyd assignment step (the IVF-index training primitive):
-    each corpus vector gets its nearest centroid by squared L2.
-
-    Centroids broadcast (there are k of them, never data-scale), so the
-    scoring pass is map-side over the corpus; the argmin is a
-    ``min(struct(dist, centroid_id))`` groupBy — map-side partial min
-    combines k candidate rows per vector down before the one shuffle on
-    ``id_col``. Distances round to ``round_digits`` with a centroid-id
-    tiebreak, so the assignment is deterministic cross-engine. Iterating
-    to full k-means = alternate this with a centroid-mean groupBy.
-
-    Output: ``id_col``, centroid_id, dist.
-    """
-    c = centroids.select(
-        F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("_cv")
-    )
-    sq = F.zip_with(
-        F.col(vec_col),
-        F.col("_cv"),
-        lambda x, y: (x.cast("double") - y.cast("double"))
-        * (x.cast("double") - y.cast("double")),
-    )
-    dist = F.round(F.aggregate(sq, F.lit(0.0), lambda acc, d: acc + d), round_digits)
-    pairs = (
-        spread(corpus)
-        .crossJoin(F.broadcast(c))
-        .select(F.col(id_col), F.col("centroid_id"), dist.alias("dist"))
-    )
-    best = pairs.groupBy(id_col).agg(
-        F.min(F.struct("dist", "centroid_id")).alias("_m")
-    )
-    return best.select(
-        id_col,
-        F.col("_m.centroid_id").alias("centroid_id"),
-        F.col("_m.dist").alias("dist"),
-    )
-
-
 def kmeans_fit(
     corpus: DataFrame,
     k: int = 8,
@@ -307,11 +262,11 @@ def kmeans_fit(
     ``id_col`` rows (reproducible without a driver RNG; the
     oracle-checked form), ``init="parallel"`` runs the k-means||
     oversampling pass (``kmeans_parallel_init``) for better-spread seeds
-    on clustered data — then alternates the broadcast-assign E-step
-    (`kmeans_assign`) with a centroid-mean M-step. Each iteration is two
-    shuffles (argmin groupBy + mean groupBy) over (id, dist) pairs — the
-    vectors themselves move only through the broadcast, so iteration cost
-    at 100 TB is k·dim per row of map-side math, not a data-scale join.
+    on clustered data — then alternates the map-only assign E-step
+    (``vector_arrow.kmeans_assign_arrow``: k centroids in the task
+    closure) with a centroid-mean M-step shuffle. The vectors never move
+    for the assignment, so iteration cost at 100 TB is k·dim per row of
+    map-side math, not a data-scale join.
     The per-iteration ``persist``/``count`` materialization keeps Spark
     from replaying the whole iteration chain each pass (lineage doubles
     otherwise) — the same pattern as `dedup.dup_clusters`.
@@ -354,7 +309,7 @@ def kmeans_fit(
     last = None
     try:
         for _ in range(iters):
-            assigned = kmeans_assign(
+            assigned = vector_arrow.kmeans_assign_arrow(
                 vecs,
                 centroids.select(
                     F.col("centroid_id").alias(id_col),
@@ -469,63 +424,6 @@ def _sq_l2(a: F.Column, b: F.Column, round_digits: int) -> F.Column:
                    round_digits)
 
 
-def pq_encode(
-    corpus: DataFrame,
-    codebooks: DataFrame,
-    m: int = 4,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-) -> DataFrame:
-    """PQ-encode the corpus: each row becomes ``m`` small integer codes
-    (nearest per-subspace centroid by squared L2; round + code-id tiebreak
-    keeps the argmin deterministic cross-engine).
-
-    Codebooks broadcast (m·k rows); scoring is map-side; the only shuffle
-    is the per-(row, sub) argmin groupBy, carrying m rows per vector.
-
-    Output: (id, codes array<int> ordered by subspace).
-
-    Dimension must be a multiple of ``m`` (validated, same rule as
-    :func:`pq_codebooks`).
-    """
-    d = _probe_dim(corpus, vec_col, "pq_encode")
-    if d is not None and (d < m or d % m != 0):
-        raise ValueError(
-            f"vector dim {d} must be a positive multiple of m={m}"
-        )
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    sublen = (F.size(v) / F.lit(m)).cast("int")
-    cb = F.broadcast(codebooks)
-    pairs = (
-        spread(corpus).select(F.col(id_col), v.alias("_v"),
-                              sublen.alias("_sl"))
-        .crossJoin(cb)
-        .select(
-            id_col, "sub", "code_id",
-            _sq_l2(
-                F.slice(F.col("_v"), F.col("sub") * F.col("_sl") + 1, F.col("_sl")),
-                F.col("centroid"), round_digits,
-            ).alias("dist"),
-        )
-    )
-    best = pairs.groupBy(id_col, "sub").agg(
-        F.min(F.struct("dist", "code_id")).alias("_m")
-    )
-    return (
-        best.groupBy(id_col)
-        .agg(F.array_sort(
-            F.collect_list(F.struct(F.col("sub"), F.col("_m.code_id").alias("code")))
-        ).alias("sc"))
-        .select(
-            id_col,
-            F.transform(F.col("sc"), lambda s: s.getField("code").cast("int"))
-            .alias("codes"),
-        )
-    )
-
-
 def pq_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -548,13 +446,15 @@ def pq_topk(
 
     ``encoded`` supplies the pre-computed ``(id, codes)`` index (same
     contract as :func:`ivf_pq_topk` — encoding is ingest-time work);
-    default re-encodes natively for oracle exactness.
+    default encodes with ``vector_arrow.pq_encode_arrow``.
 
     Output: query_id, vec_id, adist, rank (ascending distance).
     """
-    enc = encoded if encoded is not None else pq_encode(
-        corpus, codebooks, m, id_col=id_col, vec_col=vec_col,
-        round_digits=round_digits)
+    enc = encoded
+    if enc is None:
+        enc = vector_arrow.pq_encode_arrow(
+            corpus, codebooks, m, id_col=id_col, vec_col=vec_col,
+            round_digits=round_digits)
     qv = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     sublen = (F.size(qv) / F.lit(m)).cast("int")
     lut = (
@@ -604,10 +504,9 @@ def ivf_pq_topk(
     pruning (IVF) composed with asymmetric-distance PQ scoring (ADC).
 
     ``encoded`` supplies a pre-computed ``(id, codes)`` table (e.g. the
-    persisted index, or ``vector_arrow.pq_encode_arrow``'s output — the
-    scale path: encoding dominates end-to-end cost and the Arrow kernel
-    is ~30x the interpreted HOF form). Default re-encodes natively for
-    oracle exactness.
+    persisted index — encoding is ingest-time work and dominates
+    end-to-end cost); default encodes with
+    ``vector_arrow.pq_encode_arrow``.
 
     The corpus side is its PQ codes plus a cell id; the candidate space
     is cut twice before any arithmetic: the (sub, code) broadcast-join of
@@ -619,10 +518,11 @@ def ivf_pq_topk(
 
     Output: query_id, vec_id, adist, rank (ascending approx distance).
     """
-    enc = encoded if encoded is not None else pq_encode(
-        corpus, codebooks, m, id_col=id_col, vec_col=vec_col,
-        round_digits=round_digits,
-    )
+    enc = encoded
+    if enc is None:
+        enc = vector_arrow.pq_encode_arrow(
+            corpus, codebooks, m, id_col=id_col, vec_col=vec_col,
+            round_digits=round_digits)
     cells = corpus.select(F.col(id_col), F.col(cell_col).alias("_cell"))
     enc = enc.join(cells, id_col)
     qv = F.transform(F.col(vec_col), lambda x: x.cast("double"))
@@ -661,93 +561,6 @@ def ivf_pq_topk(
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
-    )
-
-
-def knn_graph(
-    corpus: DataFrame,
-    k: int = 5,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "label",
-) -> DataFrame:
-    """k-nearest-neighbor graph of the WHOLE corpus (every vector is a
-    query), blocked by coarse cell — the primitive under semantic dedup,
-    graph clustering, and diversity sampling of a training corpus.
-
-    Same cell-equi-join shape as ``ivf_topk`` but with the corpus on both
-    sides: candidate generation never leaves the cell, so the pair space
-    is sum(|cell|²) not n² — with the corpus partitioned by cell on disk,
-    each cell's block joins co-located. No broadcast (both sides are
-    data-scale); the top-k is one window over the cell-join output,
-    shuffled by query id.
-
-    Output: ``query_id, vec_id, cos, rank`` (neighbors exclude self).
-    """
-    q, c = _sides(corpus, corpus, id_col, vec_col, cell_col)
-    scored = (
-        c.join(q, "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", _cos().alias("cos"))
-    )
-    return _ranked_topk(scored, k)
-
-
-def semantic_dedup(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    threshold: float,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    persist_assign: bool = True,
-) -> DataFrame:
-    """SemDeDup-style embedding dedup: cluster the corpus to broadcast
-    centroids, then inside each cluster drop every vector that has a
-    LOWER-id neighbor with cosine >= ``threshold``.
-
-    The keep-lowest-id rule (vs the paper's keep-farthest-from-centroid)
-    makes the survivor set a pure function of the pair relation — one
-    anti-join, no iteration, deterministic cross-engine. Pair generation
-    is cluster-blocked exactly like ``cosine_near_dup_pairs``: the n²
-    term is bounded by the largest cluster, never the corpus; the
-    centroid assignment is a broadcast crossJoin + map-side argmin
-    (``kmeans_assign``), so the only data-scale shuffles are the cell
-    self-join and the final anti-join on ``id_col``.
-
-    Output: surviving ``id_col, centroid_id`` (one row per kept vector).
-    """
-    assign = kmeans_assign(corpus, centroids, id_col=id_col, vec_col=vec_col)
-    tagged = corpus.join(assign.select(id_col, "centroid_id"), id_col)
-    if persist_assign:
-        # Three plan branches read the tagged projection (both pair sides
-        # + the survivor anti-join); unpersisted, each re-runs the
-        # centroid-assignment argmin over the whole corpus (measured 3x
-        # slower). Primed eagerly so the branches don't race the first
-        # fill. At warehouse scale, checkpoint the assignment to the lake
-        # instead and share it across dedup runs.
-        tagged = tagged.persist()
-        tagged.count()
-    a = tagged.select(
-        F.col(id_col).alias("id_a"), F.col("centroid_id").alias("cell"),
-        F.col(vec_col).alias("_vq"), norm(F.col(vec_col)).alias("_nq"),
-    )
-    b = tagged.select(
-        F.col(id_col).alias("id_b"), F.col("centroid_id").alias("cell"),
-        F.col(vec_col).alias("_vc"), norm(F.col(vec_col)).alias("_nc"),
-    )
-    dropped = (
-        a.join(b, "cell")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_b", _cos().alias("cos"))
-        .filter(F.col("cos") >= F.lit(threshold))
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
-    )
-    return (
-        tagged.join(dropped, id_col, "left_anti")
-        .select(id_col, "centroid_id")
     )
 
 
@@ -813,7 +626,7 @@ def kmeans_parallel_init(
     ever shuffles or collects.
 
     Returns (centroid_id 0..k-1, centroid array<double>) ready to feed
-    ``kmeans_fit(init_centroids=...)`` / ``kmeans_assign``.
+    ``vector_arrow.kmeans_assign_arrow``.
     """
     import numpy as np
 
@@ -837,7 +650,7 @@ def kmeans_parallel_init(
             cand_df = vecs.sparkSession.createDataFrame(
                 [(i, v) for i, v in cand.items()], cand_schema,
             )
-            assigned = kmeans_assign(
+            assigned = vector_arrow.kmeans_assign_arrow(
                 vecs, cand_df, id_col=id_col, vec_col="v"
             )
             total = assigned.agg(F.sum("dist").alias("s")).collect()[0]["s"]
@@ -863,7 +676,8 @@ def kmeans_parallel_init(
         )
         weights = {
             r["centroid_id"]: r["n"]
-            for r in kmeans_assign(vecs, cand_df, id_col=id_col, vec_col="v")
+            for r in vector_arrow.kmeans_assign_arrow(
+                vecs, cand_df, id_col=id_col, vec_col="v")
             .groupBy("centroid_id").agg(F.count(F.lit(1)).alias("n"))
             .collect()
         }
@@ -1096,12 +910,12 @@ def ivf_multiprobe_topk(
     ``cells`` supplies a PRE-BUILT ``(id, cell)`` assignment (the
     persisted index — at ingest time in production, so a search never
     pays the corpus assignment; bench annbench measures exactly this
-    split). Default re-assigns with :func:`kmeans_assign`.
+    split). By default the corpus is assigned to the trained centroid
+    cells here with ``vector_arrow.kmeans_assign_arrow`` (at ingest time
+    in production — partition the store by cell and the probe equi-join
+    prunes to nprobe partitions per query).
 
-    The corpus is assigned to trained centroid cells with
-    :func:`kmeans_assign` (at ingest time in production — partition the
-    store by cell and the probe equi-join prunes to nprobe partitions
-    per query). Queries rank the SAME rounded squared-L2 with the same
+    Queries rank the SAME rounded squared-L2 with the same
     centroid-id tiebreak, take their ``nprobe`` best cells, and the
     broadcast (query x probe) relation equi-joins the corpus on cell:
     never a corpus shuffle, never a pair space beyond the probed lists.
@@ -1110,7 +924,7 @@ def ivf_multiprobe_topk(
     :func:`ivf_topk`, directly comparable via :func:`recall_at_k`.
     """
     if cells is None:
-        cells = kmeans_assign(
+        cells = vector_arrow.kmeans_assign_arrow(
             corpus, centroids, id_col=id_col, vec_col=vec_col,
             round_digits=round_digits,
         ).select(id_col, F.col("centroid_id").alias("cell"))
@@ -1241,16 +1055,13 @@ def cluster_balanced_sample(
     production, same contract as ``ivf_multiprobe_topk(cells=...)``).
 
     Scale shape: one corpus assignment pass (dense centroid matrix in
-    the task closure via the Arrow kernel, or the broadcast-join native
-    form), then one window per cell that a partial WindowGroupLimit
-    cuts to ``cells x per_cell`` rows before the final shuffle — the
-    corpus never sorts globally.
+    the task closure via the Arrow kernel), then one window per cell
+    that a partial WindowGroupLimit cuts to ``cells x per_cell`` rows
+    before the final shuffle — the corpus never sorts globally.
 
     Output: ``(id_col, centroid_id, pick_rank)``.
     """
     if assigned is None:
-        from nexus_processor_spark.operators import vector_arrow
-
         assigned = vector_arrow.kmeans_assign_arrow(
             corpus, centroids, id_col=id_col, vec_col=vec_col)
     h = F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string")))
@@ -1300,8 +1111,6 @@ def int8_rerank_topk(
     :func:`recall_at_k`.
     """
     import numpy as np
-
-    from nexus_processor_spark.operators import vector_arrow
 
     if codes is None:
         codes = vector_arrow.pack_int8_codes(
@@ -1375,7 +1184,7 @@ def ivf_int8_rerank_topk(
     ~1.0 at C=50).
 
     ``cells`` / ``codes`` supply the PRE-BUILT index: ``cells`` is
-    ``(id_col, cell)`` (default: :func:`kmeans_assign` on
+    ``(id_col, cell)`` (default: ``vector_arrow.kmeans_assign_arrow`` on
     ``centroids``); ``codes`` is ``(id_col, code, cell)`` — the
     persisted packed tier with its partition column (default: pack +
     join, ingest work a search never pays in production).
@@ -1389,10 +1198,8 @@ def ivf_int8_rerank_topk(
     """
     import numpy as np
 
-    from nexus_processor_spark.operators import vector_arrow
-
     if cells is None:
-        cells = kmeans_assign(
+        cells = vector_arrow.kmeans_assign_arrow(
             corpus, centroids, id_col=id_col, vec_col=vec_col,
             round_digits=round_digits,
         ).select(id_col, F.col("centroid_id").alias("cell"))

@@ -5,17 +5,22 @@ Spark's higher-order array functions (``transform``/``aggregate``/
 never enter whole-stage codegen. At dim 4 that's noise; at dim 64 over
 millions of vectors it dominates (measured on the 1M x 64 vecbench:
 int8-quantize 34 s native HOF vs ~1-2 s here; nearest-of-32 assignment
-18 s vs <2 s). These kernels run the same math as one numpy/BLAS call
+18 s vs <1 s). These kernels run the same math as one numpy/BLAS call
 per Arrow batch via ``mapInPandas``/``applyInPandas`` — the documented
 exception to "UDFs are the slow path": Arrow amortizes the Python
 boundary to per-batch, and numpy beats the interpreted JVM loop.
 
-Semantics match the native expressions in ``functions.vector`` /
-``operators.similarity``: float64 math, HALF_UP rounding (numpy's
-``round`` is banker's — ``_round_half_up`` mirrors Spark), id
-tiebreaks. The native forms remain the oracle-exactness path (their
-sequential fold accumulation is reproducible in DuckDB SQL); these are
-the scale path, pinned equal by ``tests/test_vector_arrow.py``.
+They are the only implementation of nearest-centroid assignment, PQ
+encoding, the cell-blocked kNN graph and SemDeDup; the registry's
+DuckDB oracle SQL is their reference (``tests/test_vector_arrow.py``
+runs both on an edge-case corpus). Semantics: float64 math, HALF_UP
+rounding (numpy's ``round`` is banker's — ``_round_half_up`` mirrors
+Spark and DuckDB), squared-L2 sums accumulated left to right over the
+dimensions (``aggregate``'s and ``list_sum``'s order, so rounded
+distances are exact by construction), a NULL cosine wherever a vector
+has zero norm, id tiebreaks. ``quantize_arrow`` keeps a native twin
+(``functions.vector``'s column builders, live in ``int8_topk`` and
+curation) and is pinned equal to it.
 """
 
 from __future__ import annotations
@@ -25,7 +30,9 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType, DoubleType, IntegerType, LongType, StructField, StructType,
+)
 
 
 def _round_half_up(x: np.ndarray, digits: int = 0) -> np.ndarray:
@@ -49,6 +56,39 @@ def _round_half_up(x: np.ndarray, digits: int = 0) -> np.ndarray:
 
 def _mat(col: pd.Series) -> np.ndarray:
     return np.array(col.tolist(), dtype=np.float64)
+
+
+def _nearest(v: np.ndarray, cmat: np.ndarray, digits: int):
+    """Index of the nearest row of ``cmat`` for every row of ``v`` and
+    its rounded squared-L2 distance. Candidates are scanned in row
+    order with strict-less updates, so a rounded tie keeps the lowest
+    row — callers order ``cmat`` by id.
+
+    The squares are summed over axis 0 of the transposed (d, n) batch:
+    numpy adds the d rows one after another, the order of Spark's
+    ``aggregate`` fold and DuckDB's ``list_sum``, so distances are
+    bit-equal to the SQL reference before rounding. (``sum(axis=1)``
+    on the (n, d) batch sums pairwise instead, and is slower.)"""
+    vt = np.ascontiguousarray(v.T)
+    best_d = np.full(len(v), np.inf)
+    best_j = np.zeros(len(v), dtype=np.int64)
+    for j in range(len(cmat)):
+        sq = vt - cmat[j][:, None]
+        sq *= sq
+        d = _round_half_up(sq.sum(axis=0), digits)
+        upd = d < best_d
+        best_d[upd] = d[upd]
+        best_j[upd] = j
+    return best_j, best_d
+
+
+def _unit_rows(v: np.ndarray) -> np.ndarray:
+    """Rows scaled to unit norm; a zero-norm row becomes all-NaN, so
+    every cosine it takes part in is NaN (emitted as NULL, like the
+    SQL reference's division by a zero norm)."""
+    n = np.sqrt((v * v).sum(axis=1))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return v / n[:, None]
 
 
 def quantize_arrow(
@@ -93,36 +133,38 @@ def kmeans_assign_arrow(
     vec_col: str = "embedding",
     round_digits: int = 6,
 ) -> DataFrame:
-    """Arrow twin of ``similarity.kmeans_assign``: nearest centroid by
-    squared L2, distances rounded with a centroid-id tiebreak.
+    """One Lloyd assignment step (the IVF-index training primitive):
+    each corpus vector gets its nearest centroid by squared L2, the
+    distance rounded to ``round_digits`` with a centroid-id tiebreak, so
+    the assignment is deterministic cross-engine.
 
     The centroid table is tiny by definition (k rows) — it collects to a
     dense k x d matrix shipped in the task closure (the numpy analog of
-    the broadcast join), so the corpus pass is map-only: per batch, k
-    difference-square reductions in centroid-id order with strict-less
-    updates, which keeps the lowest id on rounded ties.
+    a broadcast join), so the corpus pass is map-only. Ids keep their
+    types: ``id_col`` takes the corpus's, ``centroid_id`` the
+    centroids'.
+
+    Output: ``id_col``, centroid_id, dist.
     """
     rows = sorted(
         centroids.select(id_col, vec_col).collect(), key=lambda r: r[id_col]
     )
-    ids = np.array([r[id_col] for r in rows], dtype=np.int64)
+    ids = np.array([r[id_col] for r in rows])
     cmat = np.array([list(r[vec_col]) for r in rows], dtype=np.float64)
-    schema = f"{id_col} long, centroid_id long, dist double"
+    schema = StructType([
+        StructField(id_col, corpus.schema[id_col].dataType),
+        StructField("centroid_id", centroids.schema[id_col].dataType),
+        StructField("dist", DoubleType()),
+    ])
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            v = _mat(b[vec_col])
-            best_d = np.full(len(v), np.inf)
-            best_i = np.zeros(len(v), dtype=np.int64)
-            for j in range(len(ids)):  # id order → ties keep lowest id
-                diff = v - cmat[j]
-                d = _round_half_up((diff * diff).sum(axis=1), round_digits)
-                upd = d < best_d
-                best_d[upd] = d[upd]
-                best_i[upd] = ids[j]
+            if not len(b):
+                continue
+            best_j, best_d = _nearest(_mat(b[vec_col]), cmat, round_digits)
             yield pd.DataFrame({
                 id_col: b[id_col].to_numpy(),
-                "centroid_id": best_i,
+                "centroid_id": ids[best_j],
                 "dist": best_d,
             })
 
@@ -138,48 +180,59 @@ def knn_graph_arrow(
     cell_col: str = "label",
     round_digits: int = 6,
 ) -> DataFrame:
-    """Arrow twin of ``similarity.knn_graph``: per-cell all-pairs cosine
-    top-k as ONE BLAS gram matrix per cell (``applyInPandas`` over the
-    cell grouping — same shuffle as the native cell equi-join, but the
-    pair scoring is U @ U.T instead of per-pair interpreted folds).
+    """k-nearest-neighbor graph of the WHOLE corpus (every vector is a
+    query), blocked by coarse cell — the primitive under semantic dedup,
+    graph clustering, and diversity sampling of a training corpus.
 
-    Cells must fit in a task (the same bound the native cell join's
-    window already imposes); output matches the native op: ``query_id,
-    vec_id, cos, rank`` with rounded-cosine, id tiebreak ranking.
+    Per-cell all-pairs cosine top-k as ONE BLAS gram matrix per cell
+    (``applyInPandas`` over the cell grouping): the pair space is
+    sum(|cell|²), never n², and cells must fit in a task. Ranking is by
+    rounded cosine descending with a neighbor-id tiebreak; a zero-norm
+    vector has a NULL cosine to everyone and ranks after every non-null
+    neighbor.
+
+    Output: ``query_id, vec_id, cos, rank`` (neighbors exclude self).
     """
-    schema = "query_id long, vec_id long, cos double, rank long"
+    id_type = corpus.schema[id_col].dataType
+    schema = StructType([
+        StructField("query_id", id_type),
+        StructField("vec_id", id_type),
+        StructField("cos", DoubleType()),
+        StructField("rank", LongType()),
+    ])
 
     def kernel(g: pd.DataFrame) -> pd.DataFrame:
-        v = _mat(g[vec_col])
-        ids = g[id_col].to_numpy(dtype=np.int64)
-        n = np.sqrt((v * v).sum(axis=1))
-        with np.errstate(divide="ignore", invalid="ignore"):
-            u = v / n[:, None]
-        u[n == 0] = 0.0
-        s = _round_half_up(u @ u.T, round_digits)
-        np.fill_diagonal(s, -np.inf)  # exclude self
-        m = len(ids)
+        m = len(g)
         kk = min(k, m - 1)
         if kk <= 0:
             return pd.DataFrame(
-                {"query_id": [], "vec_id": [], "cos": [], "rank": []}
-            )
-        # rank by (-cos, vec_id): lexsort is stable, last key primary
-        order = np.lexsort((np.broadcast_to(ids, (m, m)), -s), axis=1)
+                {"query_id": [], "vec_id": [], "cos": [], "rank": []})
+        ids = g[id_col].to_numpy()
+        u = _unit_rows(_mat(g[vec_col]))
+        s = _round_half_up(u @ u.T, round_digits)
+        # rank by (self last, NULL last, -cos, vec_id): lexsort is
+        # stable and its LAST key is the primary one
+        null = np.isnan(s)
+        neg = np.where(null, 0.0, -s)
+        self_ = np.eye(m, dtype=bool)
+        id_rank = np.empty(m, dtype=np.int64)
+        id_rank[np.argsort(ids, kind="stable")] = np.arange(m)
+        order = np.lexsort(
+            (np.broadcast_to(id_rank, (m, m)), neg, null, self_), axis=1)
         top = order[:, :kk]
-        qid = np.repeat(ids, kk)
-        nbr = ids[top.ravel()]
-        cos = s[np.repeat(np.arange(m), kk), top.ravel()]
-        rank = np.tile(np.arange(1, kk + 1, dtype=np.int64), m)
-        return pd.DataFrame(
-            {"query_id": qid, "vec_id": nbr, "cos": cos, "rank": rank}
-        )
+        rows = np.repeat(np.arange(m), kk)
+        cos = s[rows, top.ravel()]
+        return pd.DataFrame({
+            "query_id": ids[rows],
+            "vec_id": ids[top.ravel()],
+            "cos": np.where(np.isnan(cos), None, cos),
+            "rank": np.tile(np.arange(1, kk + 1, dtype=np.int64), m),
+        })
 
     return (
         corpus.select(id_col, vec_col, cell_col)
         .groupBy(cell_col)
         .applyInPandas(lambda _, g: kernel(g), schema)
-        .filter(F.col("cos") != float("-inf"))
     )
 
 
@@ -192,15 +245,20 @@ def semantic_dedup_arrow(
     vec_col: str = "embedding",
     round_digits: int = 6,
 ) -> DataFrame:
-    """Arrow twin of ``similarity.semantic_dedup``: assignment via
-    ``kmeans_assign_arrow``, then each cluster's drop set from ONE gram
-    matrix (``applyInPandas`` over the cluster grouping) instead of a
-    per-pair interpreted fold join.
+    """SemDeDup-style embedding dedup: cluster the corpus to the
+    centroids (``kmeans_assign_arrow``), then inside each cluster drop
+    every vector that has a LOWER-id cluster-mate at rounded cosine >=
+    ``threshold``.
 
-    A vector is dropped when some lower-id cluster-mate sits at rounded
-    cosine >= ``threshold`` — with ids sorted, that's an upper-triangle
-    any() per column. Output matches the native op: surviving
-    ``id_col, centroid_id``.
+    The keep-lowest-id rule (vs the paper's keep-farthest-from-centroid)
+    makes the survivor set a pure function of the pair relation —
+    deterministic cross-engine. Each cluster's drop set comes from ONE
+    gram matrix (``applyInPandas`` over the cluster grouping): with ids
+    sorted, a drop is an upper-triangle any() per column, and the n²
+    term is bounded by the largest cluster, never the corpus. A
+    zero-norm vector has no cosine, so it neither drops nor is dropped.
+
+    Output: surviving ``id_col, centroid_id`` (one row per kept vector).
     """
     assign = kmeans_assign_arrow(
         corpus, centroids, id_col=id_col, vec_col=vec_col,
@@ -209,15 +267,12 @@ def semantic_dedup_arrow(
     tagged = corpus.select(id_col, vec_col).join(
         assign.select(id_col, "centroid_id"), id_col
     )
-    schema = f"{id_col} long, centroid_id long"
+    schema = StructType(
+        [assign.schema[id_col], assign.schema["centroid_id"]])
 
     def kernel(g: pd.DataFrame) -> pd.DataFrame:
         g = g.sort_values(id_col, ignore_index=True)
-        v = _mat(g[vec_col])
-        n = np.sqrt((v * v).sum(axis=1))
-        with np.errstate(divide="ignore", invalid="ignore"):
-            u = v / n[:, None]
-        u[n == 0] = 0.0
+        u = _unit_rows(_mat(g[vec_col]))
         # drop j when any i<j (strict upper triangle, ids ascending)
         # sits at rounded cosine >= t. The gram matrix is computed in
         # COLUMN BLOCKS: a full n x n materialization plus rounding
@@ -233,11 +288,10 @@ def semantic_dedup_arrow(
         for j0 in range(1, m, block):
             j1 = min(j0 + block, m)
             s = _round_half_up(u @ u[j0:j1].T, round_digits)
-            ge = s >= threshold
+            ge = s >= threshold  # NaN (zero norm) compares False
             ge &= rows[:, None] < np.arange(j0, j1)[None, :]
             dropped[j0:j1] = ge.any(axis=0)
-        keep = g.loc[~dropped, [id_col, "centroid_id"]]
-        return keep
+        return g.loc[~dropped, [id_col, "centroid_id"]]
 
     return tagged.groupBy("centroid_id").applyInPandas(
         lambda _, g: kernel(g), schema
@@ -253,11 +307,19 @@ def pq_encode_arrow(
     vec_col: str = "embedding",
     round_digits: int = 6,
 ) -> DataFrame:
-    """Arrow twin of ``similarity.pq_encode``: per-subspace nearest-code
-    argmin as one numpy pass per batch (same rounded HALF_UP distances,
-    same code-id tiebreak — pinned equal by tests). The codebook table is
-    m·k tiny rows; it ships dense in the task closure. Map-only: the
-    native form's per-(row, sub) argmin shuffle disappears entirely."""
+    """PQ-encode the corpus: each vector becomes ``m`` small integer
+    codes, the nearest per-subspace codebook centroid by squared L2
+    (rounded, code-id tiebreak — deterministic cross-engine).
+
+    The codebook table (``sub, code_id, centroid``; m·k tiny rows)
+    ships dense in the task closure, so encoding is map-only: one
+    numpy pass per Arrow batch. A vector whose dim is not a positive
+    multiple of ``m``, or whose subvectors are not the codebooks'
+    length, fails the batch loudly instead of encoding a truncated
+    vector.
+
+    Output: (``id_col``, codes array<int> ordered by subspace).
+    """
     rows = codebooks.select("sub", "code_id", "centroid").collect()
     by_sub: dict[int, list] = {}
     for r in rows:
@@ -272,28 +334,36 @@ def pq_encode_arrow(
         cids.append(np.array([r["code_id"] for r in rs], dtype=np.int64))
         cmats.append(np.array([list(r["centroid"]) for r in rs],
                               dtype=np.float64))
-    schema = f"{id_col} long, codes array<int>"
+    sublens = {c.shape[1] for c in cmats}
+    if len(sublens) != 1:
+        raise ValueError(f"codebook subvector lengths differ: {sublens}")
+    sl = sublens.pop()
+    schema = StructType([
+        StructField(id_col, corpus.schema[id_col].dataType),
+        StructField("codes", ArrayType(IntegerType())),
+    ])
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
+            if not len(b):
+                continue
             v = _mat(b[vec_col])
-            n, d = v.shape
-            sl = d // m
-            codes = np.zeros((n, m), dtype=np.int64)
+            d = v.shape[1] if v.ndim == 2 else 0
+            if d < m or d % m:
+                raise ValueError(
+                    f"vector dim {d} must be a positive multiple of m={m}")
+            if d != m * sl:
+                raise ValueError(
+                    f"vector dim {d} does not match the codebooks' "
+                    f"subvector length {sl} x m={m}")
+            codes = np.zeros((len(v), m), dtype=np.int32)
             for s in subs:
-                subv = v[:, s * sl:(s + 1) * sl]
-                best_d = np.full(n, np.inf)
-                best_i = np.zeros(n, dtype=np.int64)
-                for j in range(len(cids[s])):  # id order → ties keep lowest
-                    diff = subv - cmats[s][j]
-                    dd = _round_half_up((diff * diff).sum(axis=1), round_digits)
-                    upd = dd < best_d
-                    best_d[upd] = dd[upd]
-                    best_i[upd] = cids[s][j]
-                codes[:, s] = best_i
+                best_j, _ = _nearest(
+                    v[:, s * sl:(s + 1) * sl], cmats[s], round_digits)
+                codes[:, s] = cids[s][best_j]
             yield pd.DataFrame({
                 id_col: b[id_col].to_numpy(),
-                "codes": [row.astype(np.int32).tolist() for row in codes],
+                "codes": list(codes),
             })
 
     return corpus.select(id_col, vec_col).mapInPandas(kernel, schema)

@@ -100,8 +100,8 @@ def build_ivf_int8_index(
     round_digits: int = 6,
 ) -> dict:
     """Ingest-time index build: assign every corpus vector to its
-    nearest centroid (``similarity.kmeans_assign`` — the oracle-exact
-    rounded-L2 + id tiebreak), pack its int8 code (64 B/vector at
+    nearest centroid (``vector_arrow.kmeans_assign_arrow`` — the
+    oracle-exact rounded-L2 + id tiebreak), pack its int8 code (64 B/vector at
     dim 64), and write the codes parquet PARTITIONED BY CELL so the
     search-time probe union prunes partitions. One corpus pass; the
     shuffle is the ``partitionBy`` write clustering (unavoidable — it
@@ -111,7 +111,7 @@ def build_ivf_int8_index(
     dim = similarity._probe_dim(corpus, vec_col, "build_ivf_int8_index")
     if dim is None:
         raise ValueError("cannot index an empty/all-null corpus")
-    cells = similarity.kmeans_assign(
+    cells = vector_arrow.kmeans_assign_arrow(
         corpus, centroids, id_col=id_col, vec_col=vec_col,
         round_digits=round_digits,
     ).select(id_col, F.col("centroid_id").alias("cell"))
@@ -197,12 +197,12 @@ def append_to_index(
     rewritten. Returns the number of vectors appended. Searches pick
     the new vectors up immediately — same layout, same oracle
     semantics as a from-scratch build over the union (test-pinned)."""
-    from nexus_processor_spark.operators import similarity, vector_arrow
+    from nexus_processor_spark.operators import vector_arrow
 
     spark = new_vectors.sparkSession
     manifest, centroids, _ = open_index(spark, path)
     id_col, vec_col = manifest["id_col"], manifest["vec_col"]
-    cells = similarity.kmeans_assign(
+    cells = vector_arrow.kmeans_assign_arrow(
         new_vectors, centroids, id_col=id_col, vec_col=vec_col,
         round_digits=manifest["round_digits"],
     ).select(id_col, F.col("centroid_id").alias("cell"))
@@ -369,7 +369,7 @@ def rebuild_index(
     # count/write discipline, ADVICE r9)
     centroids = centroids.select(id_col, vec_col).persist()
     try:
-        cells = similarity.kmeans_assign(
+        cells = vector_arrow.kmeans_assign_arrow(
             corpus, centroids, id_col=id_col, vec_col=vec_col,
             round_digits=manifest["round_digits"],
         ).select(id_col, F.col("centroid_id").alias("cell"))

@@ -75,8 +75,7 @@ def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic seed centroids (vec_id < 8) — how an IVF cell map is
     trained before `ivf_topk` serves from it. Served from the Arrow
     kernel (dense centroid matrix in the task closure, one numpy pass per
-    batch; 22x on vecbench), equality-pinned to
-    ``similarity.kmeans_assign`` by ``tests/test_vector_arrow.py``."""
+    batch; 18x over the former interpreted HOF form on vecbench)."""
     from nexus_processor_spark.operators import vector_arrow
 
     emb = _emb(spark, sf_dir)
@@ -108,8 +107,7 @@ def q_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization encode: every corpus vector becomes PQ_M
     nearest-subspace-centroid codes (codebooks seeded from vec_id <
     N_CENTROIDS for cross-engine determinism). Served from the Arrow
-    kernel — exact integer codes, pinned equal to the native encode by
-    ``tests/test_vector_arrow.py``; 18x on vecbench."""
+    kernel: map-only, one numpy pass per batch."""
     from nexus_processor_spark.operators import vector_arrow
 
     emb = _emb(spark, sf_dir)
@@ -135,18 +133,14 @@ def q_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed FAISS-style pipeline: coarse-cell (IVF) pruning, then
     ADC scoring over PQ codes — each query pays lookups only inside its
     own inverted list. The PQ encode step — the corpus-wide hot loop —
-    runs through the Arrow kernel (``pq_encode_arrow``, exact integer
-    codes pinned equal to the native encode; 18x on vecbench); the small
-    per-list ADC scoring stays native."""
-    from nexus_processor_spark.operators import vector_arrow
-
+    runs through the Arrow kernel (``pq_encode_arrow``); the small
+    per-list ADC scoring is JVM-side joins."""
     emb = _emb(spark, sf_dir)
     cb = similarity.pq_codebooks(
         emb.filter(F.col("vec_id") < N_CENTROIDS), PQ_M
     )
     return similarity.ivf_pq_topk(
-        emb.filter(F.col("vec_id") < N_QUERIES), emb, cb, TOP_K, PQ_M,
-        encoded=vector_arrow.pq_encode_arrow(emb, cb, PQ_M),
+        emb.filter(F.col("vec_id") < N_QUERIES), emb, cb, TOP_K, PQ_M
     )
 
 
@@ -158,8 +152,8 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide kNN graph (every vector a query), cell-blocked — the
     candidate structure under semantic dedup / diversity sampling.
     Served from the Arrow kernel: one BLAS gram matrix per cell via
-    ``applyInPandas`` (~100x over the per-pair interpreted fold on
-    vecbench), equality-pinned to ``similarity.knn_graph``."""
+    ``applyInPandas`` (34x over the former per-pair interpreted fold on
+    vecbench); zero-norm vectors score NULL and rank last."""
     from nexus_processor_spark.operators import vector_arrow
 
     return vector_arrow.knn_graph_arrow(_emb(spark, sf_dir), KNN_K)
@@ -169,8 +163,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style survivors: cluster to the seeded centroids, drop
     any vector with a lower-id cluster-mate at cosine >= threshold.
     Served from the Arrow kernel: one gram matrix per cluster via
-    ``applyInPandas`` (ids-only output — exactly equal to the native
-    form by construction, pinned by ``tests/test_vector_arrow.py``)."""
+    ``applyInPandas`` (ids-only output)."""
     from nexus_processor_spark.operators import vector_arrow
 
     emb = _emb(spark, sf_dir)
@@ -255,7 +248,7 @@ def q_sim_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_sim_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe IVF top-k: corpus assigned to trained coarse cells
-    (kmeans_assign on the seed centroids), each query scanning its
+    (kmeans_assign_arrow on the seed centroids), each query scanning its
     nprobe=2 nearest cells — the recall dial between single-probe IVF
     and brute force. Broadcast (query x probe) relation, cell equi-join,
     no corpus shuffle beyond the one-time cell assignment."""
@@ -345,7 +338,7 @@ _TOPK = """
 def _lloyd_assign(cents: str) -> str:
     """Nearest-centroid assignment CTE body against centroid relation
     ``cents`` (centroid_id, cv) — round-6 distance, centroid-id tiebreak,
-    mirroring operators.similarity.kmeans_assign."""
+    mirroring vector_arrow.kmeans_assign_arrow."""
     dist = (
         "round(list_sum(list_transform(generate_series(1, len(e.v)), "
         "i -> (e.v[i] - c.cv[i]) * (e.v[i] - c.cv[i]))), 6)"
@@ -854,8 +847,8 @@ CBAL_PER_CELL = 25
 
 
 def q_cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Topic-balanced subsample: nearest-cell assignment (same Arrow
-    kernel as kmeans_assign, equality-pinned to the native form) then a
+    """Topic-balanced subsample: nearest-cell assignment (the Arrow
+    kernel the kmeans_assign query serves) then a
     deterministic per-cell quota in salted-md5 order — the
     diversity-stratified selection step of a pretraining mix."""
     emb = _emb(spark, sf_dir)

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from nexus_processor_spark.functions.core import event_seconds
+from nexus_processor_spark.functions.core import event_seconds, to_attribute_map
 from nexus_processor_spark.operators import prefix, timeslice
 from nexus_processor_spark.sources.tables import load_events_time_range, load_table
 
@@ -264,21 +264,20 @@ def q_interval_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_attribute_maps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F6/F7: key-value attribute bags — build a map from typed fields,
-    filter out nulls, strip a key prefix. The map itself isn't hashable
+    """F6/F7: key-value attribute bags — ``to_attribute_map`` builds a
+    map from typed fields, filters out nulls, strips a key prefix. The map itself isn't hashable
     downstream (pandas canonicalizers choke on dict cells), so the query
     serializes the map as its sorted entry list joined ``k=v,...`` — same
     information, deterministic, and SQL-expressible for the oracle."""
     ev = load_table(spark, sf_dir, "events")
-    bag = F.create_map(
-        F.lit("attr_type"), F.col("event_type"),
-        F.lit("attr_k"), F.get_json_object("props", "$.k"),
-        F.lit("attr_missing"), F.lit(None).cast("string"),
+    bag = to_attribute_map(
+        "attr_",
+        ("attr_type", F.col("event_type")),
+        ("attr_k", F.get_json_object("props", "$.k")),
+        ("attr_missing", F.lit(None).cast("string")),
     )
-    cleaned = F.map_filter(bag, lambda _, v: v.isNotNull())
-    stripped = F.transform_keys(cleaned, lambda k, _: F.regexp_replace(k, "^attr_", ""))
     # array_sort over struct<key,value> orders by key — deterministic entry order.
-    entries = F.array_sort(F.map_entries(stripped))
+    entries = F.array_sort(F.map_entries(bag))
     serialized = F.array_join(
         F.transform(entries, lambda x: F.concat(x["key"], F.lit("="), x["value"])), ","
     )

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from nexus_processor_spark.operators import pipeline, similarity
+from nexus_processor_spark.operators import pipeline, vector_arrow
 
 
 def test_boilerplate_phrases_counts(spark):
@@ -46,7 +46,7 @@ def test_semantic_dedup_drops_near_duplicates(spark):
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
     cents = emb.filter(F.col("vec_id") < 2)
-    out = similarity.semantic_dedup(emb, cents, 0.9)
+    out = vector_arrow.semantic_dedup_arrow(emb, cents, 0.9)
     survivors = sorted(r.vec_id for r in out.collect())
     assert survivors == [0, 1, 4]
 
@@ -54,7 +54,7 @@ def test_semantic_dedup_drops_near_duplicates(spark):
 def test_knn_graph_every_vector_is_a_query(spark):
     rows = [(i, [float(i == j) for j in range(4)], i % 2) for i in range(6)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-    out = similarity.knn_graph(emb, 2)
+    out = vector_arrow.knn_graph_arrow(emb, 2)
     got = out.groupBy("query_id").count().collect()
     assert len(got) == 6  # all 6 vectors got neighbor lists
     assert all(r["count"] == 2 for r in got)

@@ -5,7 +5,7 @@ import math
 import numpy as np
 import pytest
 
-from nexus_processor_spark.operators import dedup, similarity
+from nexus_processor_spark.operators import dedup, similarity, vector_arrow
 
 
 @pytest.fixture()
@@ -236,7 +236,7 @@ def test_pq_encode_seeds_code_to_themselves(embeddings):
     cb = similarity.pq_codebooks(seeds, 2)
     assert cb.count() == 6  # 3 seeds x 2 subspaces
     enc = {r.vec_id: r.codes for r in
-           similarity.pq_encode(seeds, cb, 2).collect()}
+           vector_arrow.pq_encode_arrow(seeds, cb, 2).collect()}
     assert enc == {0: [0, 0], 1: [1, 1], 2: [2, 2]}
 
 
@@ -261,7 +261,9 @@ def test_pq_adc_topk_exact_when_codebook_covers_corpus(embeddings):
 
 
 def test_kmeans_assign_nearest_and_ties(spark):
-    from nexus_processor_spark.operators.similarity import kmeans_assign
+    from nexus_processor_spark.operators.vector_arrow import (
+        kmeans_assign_arrow,
+    )
 
     emb = spark.createDataFrame(
         [
@@ -274,7 +276,7 @@ def test_kmeans_assign_nearest_and_ties(spark):
         "vec_id long, embedding array<double>",
     )
     cents = emb.filter("vec_id < 2")
-    rows = {r.vec_id: r for r in kmeans_assign(emb, cents).collect()}
+    rows = {r.vec_id: r for r in kmeans_assign_arrow(emb, cents).collect()}
     assert len(rows) == 5  # every vector assigned exactly once
     assert rows[0].centroid_id == 0 and rows[0].dist == 0.0
     assert rows[2].centroid_id == 0 and rows[2].dist == 1.0
@@ -390,7 +392,7 @@ def test_kmeans_fit_parallel_init_beats_id_seeding(spark):
     vecs = _clustered_vecs(spark)
 
     def inertia(centroids):
-        a = similarity.kmeans_assign(
+        a = vector_arrow.kmeans_assign_arrow(
             vecs, centroids.select(
                 F.col("centroid_id").alias("vec_id"),
                 F.col("centroid").alias("embedding"),

@@ -57,19 +57,33 @@ def test_recall_at_k_counts_overlap_and_keeps_empty_queries(spark):
 
 def test_dim_and_subspace_validation(spark):
     """Wrong assumed dimensions fail loudly instead of silently
-    degrading: PQ subvector truncation (dim not a multiple of m) raises."""
+    degrading: a dim that is not a positive multiple of m raises, and
+    PQ encoding never codes a truncated vector — a batch whose dim is
+    below m, not a multiple of m, or longer than the codebooks were cut
+    for fails."""
     import pytest
 
-    from nexus_processor_spark.operators import similarity
+    from nexus_processor_spark.operators import similarity, vector_arrow
 
-    vecs = spark.createDataFrame(
-        [(i, [float(i), 1.0, 0.5, -1.0]) for i in range(8)],
-        "vec_id long, embedding array<double>",
-    )
+    def vecs(dim):
+        return spark.createDataFrame(
+            [(i, [float((i * 7 + j) % 5) for j in range(dim)])
+             for i in range(8)],
+            "vec_id long, embedding array<double>")
+
     with pytest.raises(ValueError, match="multiple of m"):
-        similarity.pq_codebooks(vecs, m=3)
-    with pytest.raises(ValueError, match="multiple of m"):
-        similarity.pq_encode(vecs, similarity.pq_codebooks(vecs, m=4), m=8)
+        similarity.pq_codebooks(vecs(4), m=3)
+    cb8 = similarity.pq_codebooks(vecs(8), m=8)
+    with pytest.raises(Exception, match="vector dim 4 must be a positive "
+                                        "multiple of m=8"):
+        vector_arrow.pq_encode_arrow(vecs(4), cb8, m=8).collect()
+    cb = similarity.pq_codebooks(vecs(8).filter("vec_id < 4"), m=4)
+    assert vector_arrow.pq_encode_arrow(vecs(8), cb, 4).count() == 8
+    with pytest.raises(Exception, match="vector dim 10 must be a positive "
+                                        "multiple of m=4"):
+        vector_arrow.pq_encode_arrow(vecs(10), cb, 4).collect()
+    with pytest.raises(Exception, match="vector dim 12 does not match"):
+        vector_arrow.pq_encode_arrow(vecs(12), cb, 4).collect()
 
 
 def test_kmeans_parallel_init_string_ids(spark):

@@ -34,7 +34,6 @@ KEEP: dict[str, str] = {
     "sources.catalog.ingest_routed": "S19/S13 file routing into tables",
     "functions.core.event_timestamp": "T6 long-ns to timestamp for streams",
     "functions.core.run_id_from_filename": "F5 run id from a file name",
-    "functions.core.to_attribute_map": "F6/F7 attribute maps",
     "operators.timeslice.pulse_times": "W1 pulse ordinals",
     "streaming.windows.windowed_counts": "T6 tumbling windows + watermark",
     "streaming.replay.write_kafka_batch": "S14 Kafka sink (connector-gated)",

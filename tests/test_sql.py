@@ -60,9 +60,15 @@ def test_engine_sql_functions_match_column_builders(spark):
     from pyspark.sql import functions as F
 
     from nexus_processor_spark.functions.core import (
+        event_micros,
         event_seconds,
+        interval_bounds,
         interval_floor,
         make_run_id,
+    )
+    from nexus_processor_spark.operators.pipeline import (
+        hash_sample,
+        hex_threshold,
     )
     from nexus_processor_spark.sql import register_engine_functions
 
@@ -73,14 +79,32 @@ def test_engine_sql_functions_match_column_builders(spark):
     df.createOrReplaceTempView("ts_probe")
     sql_rows = spark.sql(
         "SELECT event_seconds(ts) AS s, event_micros(ts) AS us, "
-        "interval_floor(event_seconds(ts), 3600.0) AS b FROM ts_probe"
+        "interval_floor(event_seconds(ts), 3600.0) AS b, "
+        "interval_start(interval_floor(event_seconds(ts), 3600.0), 3600.0)"
+        " AS lo, "
+        "interval_end(interval_floor(event_seconds(ts), 3600.0), 3600.0)"
+        " AS hi FROM ts_probe ORDER BY ts"
     ).collect()
-    col_rows = df.select(
+    b = interval_floor(event_seconds("ts"), 3600.0)
+    lo, hi = interval_bounds(b, 3600.0)
+    col_rows = df.orderBy("ts").select(
         event_seconds("ts").alias("s"),
-        interval_floor(event_seconds("ts"), 3600.0).alias("b"),
+        event_micros("ts").alias("us"),
+        b.alias("b"), lo.alias("lo"), hi.alias("hi"),
     ).collect()
-    assert [r.s for r in sql_rows] == [r.s for r in col_rows]
-    assert [r.b for r in sql_rows] == [r.b for r in col_rows]
+    for c in ("s", "us", "b", "lo", "hi"):
+        assert [r[c] for r in sql_rows] == [r[c] for r in col_rows], c
+
+    # md5-threshold sampling: the SQL keep flag selects exactly the rows
+    # pipeline.hash_sample keeps, at several fractions
+    keys = df.select(F.col("ts").cast("string").alias("k"))
+    for frac in (0.25, 0.5, 0.75):
+        kept = {r.k for r in hash_sample(keys, frac, key_col="k").collect()}
+        flags = spark.sql(
+            "SELECT CAST(ts AS STRING) AS k, hash_sample_keep("
+            f"CAST(ts AS STRING), '{hex_threshold(frac)}') AS keep "
+            "FROM ts_probe").collect()
+        assert {r.k for r in flags if r.keep} == kept, frac
 
     r = spark.sql(
         "SELECT make_run_id('ARCS', 1234) AS rid, "

@@ -1,26 +1,31 @@
-"""Arrow numpy kernels must agree with the native HOF expressions —
+"""The Arrow vector kernels against their references: the registry's
+DuckDB oracle SQL for the jobs that have one implementation, and the
+native column builders for the quantize projection that keeps two —
 same math, same rounding (HALF_UP), same id tiebreaks."""
 
 from __future__ import annotations
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from nexus_processor_spark import queries as registry
 from nexus_processor_spark.functions import vector
 from nexus_processor_spark.operators import similarity, vector_arrow
+
+# deterministic pseudo-random 16-dim floats incl. a negative-heavy and
+# an exact-half case (q = x/scale*127 hits .5 for x = scale/254*k), and
+# a zero vector (id 200: null q8/unit, null cosines)
+_EMB_ROWS = [
+    (i, [((i * 31 + j * 17) % 101 - 50) / 50.0 for j in range(16)], i % 7)
+    for i in range(200)
+] + [(200, [0.0] * 16, 3)]
 
 
 @pytest.fixture(scope="module")
 def emb(spark):
-    # deterministic pseudo-random 16-dim floats incl. a negative-heavy and
-    # an exact-half case (q = x/scale*127 hits .5 for x = scale/254*k)
-    rows = []
-    for i in range(200):
-        v = [((i * 31 + j * 17) % 101 - 50) / 50.0 for j in range(16)]
-        rows.append((i, v, i % 7))
-    rows.append((200, [0.0] * 16, 3))  # zero vector: null q8/unit natively
     return spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
+        _EMB_ROWS, "vec_id long, embedding array<float>, label int"
     )
 
 
@@ -28,28 +33,92 @@ def _collect_sorted(df, *keys):
     return [tuple(r) for r in df.orderBy(*keys).collect()]
 
 
-def assert_native_and_arrow_are_equal_collect(
-        native, arrow, keys, approx=(), abs_tol=0.0):
-    """The native HOF form and the Arrow kernel of one operator return
-    the same columns and, ordered by ``keys``, the same non-empty rows:
-    exact on every column, except that the float columns in ``approx``
-    may differ by ``abs_tol`` (and are null exactly where the other
-    side is null)."""
-    assert native.columns == arrow.columns
-    n = [r.asDict() for r in native.orderBy(*keys).collect()]
-    a = [r.asDict() for r in arrow.orderBy(*keys).collect()]
-    assert len(n) == len(a) > 0
-    for rn, ra in zip(n, a):
+def assert_rows_are_equal(
+        got, want, keys, approx=(), abs_tol=0.0):
+    """Two results, each ``(columns, rows as dicts)``, have the same
+    columns and, ordered by ``keys``, the same non-empty rows: exact on
+    every column, except that the float columns in ``approx`` may
+    differ by ``abs_tol`` (and are null exactly where the other side is
+    null)."""
+    (gcols, grows), (wcols, wrows) = got, want
+    assert gcols == wcols
+    order = lambda r: tuple(r[k] for k in keys)  # noqa: E731
+    g, w = sorted(grows, key=order), sorted(wrows, key=order)
+    assert len(g) == len(w) > 0
+    exact = [c for c in gcols if c not in approx]
+    for rg, rw in zip(g, w):
         for c in approx:
-            if rn[c] is None:
-                assert ra[c] is None, (c, rn, ra)
+            if rw[c] is None:
+                assert rg[c] is None, (c, rg, rw)
             else:
-                assert rn[c] == pytest.approx(ra[c], abs=abs_tol), (c, rn, ra)
-        exact = [c for c in native.columns if c not in approx]
-        assert [rn[c] for c in exact] == [ra[c] for c in exact], (rn, ra)
+                assert rg[c] == pytest.approx(rw[c], abs=abs_tol), (c, rg, rw)
+        assert [rg[c] for c in exact] == [rw[c] for c in exact], (rg, rw)
 
 
-def _quantize(spark, emb):
+def _spark_rows(df):
+    return df.columns, [r.asDict() for r in df.collect()]
+
+
+# registry query -> (sort keys, approximate columns, their absolute
+# tolerance). Ids, ranks and codes are exact.
+_ORACLE_CHECKED = {
+    "kmeans_assign": (("vec_id",), ("dist",), 1e-9),
+    "knn_graph": (("query_id", "rank"), ("cos",), 1e-9),
+    "semantic_dedup": (("vec_id",), (), 0.0),
+    "pq_encode": (("vec_id",), (), 0.0),
+    "pq_topk": (("query_id", "rank"), ("adist",), 1e-9),
+    "ivf_pq_topk": (("query_id", "rank"), ("adist",), 1e-9),
+    "kmeans_fit": (("centroid_id",), ("centroid_mass",), 1e-9),
+    "sim_ivf_multiprobe": (("query_id", "rank"), ("cos",), 1e-9),
+}
+
+
+@pytest.fixture(scope="module")
+def emb_dir(tmp_path_factory):
+    """The edge-case corpus as the registry's ``embeddings`` table."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path_factory.mktemp("emb_sf")
+    ids, vecs, labels = zip(*_EMB_ROWS)
+    pq.write_table(pa.table({
+        "vec_id": pa.array(ids, pa.int64()),
+        "embedding": pa.array(vecs, pa.list_(pa.float32())),
+        "label": pa.array(labels, pa.int32()),
+    }), d / "embeddings.parquet")
+    return str(d)
+
+
+@pytest.mark.parametrize("name", sorted(_ORACLE_CHECKED))
+def test_registry_kernels_match_duckdb_oracle(spark, emb_dir, name):
+    """Each vector job the Arrow kernels serve, run as its registry
+    query on the edge-case corpus — zero vector included — equals the
+    registry's DuckDB oracle SQL on the same file."""
+    keys, approx, abs_tol = _ORACLE_CHECKED[name]
+    got = _spark_rows(registry.queries()[name](spark, emb_dir))
+    con = duckdb.connect()
+    con.execute("CREATE VIEW embeddings AS SELECT * FROM "
+                f"'{emb_dir}/embeddings.parquet'")
+    cur = con.execute(registry.oracle_sql()[name])
+    cols = [c[0] for c in cur.description]
+    want = cols, [dict(zip(cols, r)) for r in cur.fetchall()]
+    assert_rows_are_equal(got, want, keys, approx=approx, abs_tol=abs_tol)
+
+
+def test_knn_graph_zero_vector_has_null_cosine_ranked_last(spark):
+    """A zero-norm cell-mate has no cosine: it ranks after the real
+    neighbor instead of winning rank 1 with a 0.0 score."""
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0], 0), (2, [-1.0, 0.1], 0), (3, [0.0, 0.0], 0)],
+        "vec_id long, embedding array<double>, label int")
+    got = {(r.query_id, r.rank): (r.vec_id, r.cos)
+           for r in vector_arrow.knn_graph_arrow(emb, 2).collect()}
+    assert got[(1, 1)] == (2, pytest.approx(-0.995037))
+    assert got[(1, 2)] == (3, None)
+    assert got[(3, 1)] == (1, None) and got[(3, 2)] == (2, None)
+
+
+def _quantize(emb):
     native = emb.select(
         "vec_id",
         vector.quant_scale(F.col("embedding")).alias("scale"),
@@ -59,49 +128,22 @@ def _quantize(spark, emb):
     return native, vector_arrow.quantize_arrow(emb)
 
 
-def _kmeans_assign(spark, emb):
-    cents = emb.filter(F.col("vec_id") < 8)
-    return (similarity.kmeans_assign(emb, cents),
-            vector_arrow.kmeans_assign_arrow(emb, cents))
-
-
-def _knn_graph(spark, emb):
-    nz = emb.filter(F.col("vec_id") < 200)  # native nulls zero-norm cos
-    return similarity.knn_graph(nz, 3), vector_arrow.knn_graph_arrow(nz, 3)
-
-
-def _semantic_dedup(spark, emb):
-    cents = emb.filter(F.col("vec_id") < 8)
-    return (similarity.semantic_dedup(emb, cents, 0.55),
-            vector_arrow.semantic_dedup_arrow(emb, cents, 0.55))
-
-
-def _pq_encode(spark, emb):
-    from nexus_processor_spark.sources.tables import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    cb = similarity.pq_codebooks(emb.filter(F.col("vec_id") < 8), 4)
-    return (similarity.pq_encode(emb, cb, 4),
-            vector_arrow.pq_encode_arrow(emb, cb, 4))
-
-
-# twin -> (builder of (native, arrow), sort keys, approximate columns,
-# their absolute tolerance). Scale and int8 codes are exact.
+# jobs that keep a live native form beside the Arrow kernel -> (builder
+# of (native, arrow), sort keys, approximate columns, their absolute
+# tolerance). The quantize column builders are live in ``int8_topk``
+# and curation; scale and int8 codes are exact.
 _TWINS = {
     "quantize": (_quantize, ("vec_id",), ("unit",), 1e-12),
-    "kmeans_assign": (_kmeans_assign, ("vec_id",), ("dist",), 1e-9),
-    "knn_graph": (_knn_graph, ("query_id", "rank"), ("cos",), 1e-9),
-    "semantic_dedup": (_semantic_dedup, ("vec_id",), (), 0.0),
-    "pq_encode": (_pq_encode, ("vec_id",), (), 0.0),
 }
 
 
 @pytest.mark.parametrize("twin", sorted(_TWINS))
-def test_native_and_arrow_twins_agree(spark, emb, twin):
+def test_native_and_arrow_twins_agree(emb, twin):
     build, keys, approx, abs_tol = _TWINS[twin]
-    native, arrow = build(spark, emb)
-    assert_native_and_arrow_are_equal_collect(
-        native, arrow, keys, approx=approx, abs_tol=abs_tol)
+    native, arrow = build(emb)
+    assert_rows_are_equal(
+        _spark_rows(arrow), _spark_rows(native), keys,
+        approx=approx, abs_tol=abs_tol)
 
 
 def test_ivf_pq_topk_accepts_preencoded(spark):
@@ -311,7 +353,7 @@ def test_ivf_int8_rerank_restricts_to_probed_cells(emb):
     cents = clean.filter("vec_id < 4")
     cells = {
         r.vec_id: r.centroid_id
-        for r in similarity.kmeans_assign(clean, cents).collect()
+        for r in vector_arrow.kmeans_assign_arrow(clean, cents).collect()
     }
     got = similarity.ivf_int8_rerank_topk(
         q, clean, cents, 5, nprobe=1, candidates=20).collect()
