@@ -1073,8 +1073,8 @@ def run_ops(spark) -> dict[str, object]:
 def run_vecs(spark) -> dict[str, object]:
     """Vector-pipeline throughput at data scale, vectors/s:
 
-    * ``vector_quantize`` — int8 + unit-normalize projections, the
-      map-only storage-shrink pass (1M x 64-dim), native and Arrow.
+    * ``vector_quantize_arrow`` — int8 + unit-normalize projections,
+      the map-only storage-shrink pass (1M x 64-dim).
     * ``kmeans_assign_arrow`` — nearest-of-32 centroids, the IVF
       training E-step (1M x 32 x 64 distance evals).
     * ``knn_graph_arrow`` — cell-blocked all-pairs top-5 on a 50K slice
@@ -1089,26 +1089,13 @@ def run_vecs(spark) -> dict[str, object]:
     """
     from pyspark.sql import functions as F
 
-    from nexus_processor_spark.functions import vector
     from nexus_processor_spark.operators import similarity, vector_arrow
 
     ensure_big_vecs(spark)
     emb = spark.read.parquet(f"{VEC_DIR}/embeddings.parquet")
     knn_rows = 50_000
     sem_rows = 200_000
-    v = F.col("embedding")
-    # The quantize projection has a live native form (functions.vector,
-    # pinned equal by tests/test_vector_arrow.py): transform/aggregate
-    # lambdas evaluate interpreted per element, so at dim 64 the Arrow
-    # path wins by an order of magnitude — both are measured so the gap
-    # stays visible.
     shapes = {
-        "vector_quantize": lambda: emb.select(
-            "vec_id",
-            vector.quant_scale(v).alias("scale"),
-            vector.quantize_int8(v).alias("q8"),
-            vector.l2_normalize(v).alias("unit"),
-        ),
         "vector_quantize_arrow": lambda: vector_arrow.quantize_arrow(emb),
         "kmeans_assign_arrow": lambda: vector_arrow.kmeans_assign_arrow(
             emb, emb.filter(F.col("vec_id") < 32)
@@ -1211,8 +1198,8 @@ def run_ann(spark) -> dict[str, object]:
     # the production int8 shape: binary-packed codes built at ingest
     # (64 B/vector — the 8x-shrunk scan tier), float32-GEMM integer
     # candidate scan, exact float re-rank of the top-C only. int8_scan
-    # above is the oracle-exactness form; this is the one that must beat
-    # brute-force qps at >= nprobe_16 recall.
+    # above is the same candidate scan with C = k and no re-rank; this
+    # is the one that must beat brute-force qps at >= nprobe_16 recall.
     codes = vector_arrow.pack_int8_codes(nemb).localCheckpoint(eager=True)
     for cand in (50, 100):
         add(f"int8_rerank_cand{cand}", lambda: similarity.int8_rerank_topk(
@@ -1231,7 +1218,7 @@ def run_ann(spark) -> dict[str, object]:
         add(f"ivf_int8_nprobe{nprobe}_cand100",
             lambda: similarity.ivf_int8_rerank_topk(
                 nq, nemb, ncents, k, nprobe=nprobe, candidates=100,
-                cells=cells_n, codes=codes_c))
+                codes=codes_c))
     # composed IVF-PQ, the FAISS recipe end to end: per-subspace
     # codebooks TRAINED on a 5k sample (seed-based codebooks measured
     # recall ~0.1 — quantization error on random seeds is as big as the
@@ -1335,7 +1322,7 @@ def run_ann_1m(spark) -> dict[str, object]:
         add(f"ivf_int8_nprobe{nprobe}_cand100",
             lambda: similarity.ivf_int8_rerank_topk(
                 nq, nemb, ncents, k, nprobe=nprobe, candidates=100,
-                cells=cells_n, codes=codes_c))
+                codes=codes_c))
     # the PERSISTED tier (operators/vector_index): packed codes parquet
     # partitioned by cell on disk — the probe-union isin partition-
     # prunes, so the candidate scan READS ~nprobe/64 of the index bytes
@@ -1354,7 +1341,7 @@ def run_ann_1m(spark) -> dict[str, object]:
         # is the number.
         mem_build = lambda: sink(similarity.ivf_int8_rerank_topk(  # noqa: E731
             nq, nemb, ncents, k, nprobe=48, candidates=100,
-            cells=cells_n, codes=codes_c))
+            codes=codes_c))
         disk_build = lambda: sink(vector_index.search(  # noqa: E731
             spark, nq, nemb, idx_dir, k, nprobe=48, candidates=100))
         measure(mem_build)

@@ -3,8 +3,8 @@
 ``zip_with`` + ``aggregate`` keep the math in the JVM with a sequential
 (index-order) double accumulator, so results are deterministic and
 reproducible by an oracle that sums in index order. For very wide vectors
-or k-selection-heavy workloads, swap in the Arrow-batched pandas kernel in
-``operators.similarity`` — same semantics, amortized numpy.
+or k-selection-heavy workloads, swap in the Arrow-batched numpy kernels in
+``operators.vector_arrow`` — same semantics, amortized numpy.
 """
 
 from __future__ import annotations

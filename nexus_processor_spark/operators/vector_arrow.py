@@ -11,16 +11,22 @@ exception to "UDFs are the slow path": Arrow amortizes the Python
 boundary to per-batch, and numpy beats the interpreted JVM loop.
 
 They are the only implementation of nearest-centroid assignment, PQ
-encoding, the cell-blocked kNN graph and SemDeDup; the registry's
-DuckDB oracle SQL is their reference (``tests/test_vector_arrow.py``
-runs both on an edge-case corpus). Semantics: float64 math, HALF_UP
-rounding (numpy's ``round`` is banker's — ``_round_half_up`` mirrors
-Spark and DuckDB), squared-L2 sums accumulated left to right over the
-dimensions (``aggregate``'s and ``list_sum``'s order, so rounded
-distances are exact by construction), a NULL cosine wherever a vector
-has zero norm, id tiebreaks. ``quantize_arrow`` keeps a native twin
-(``functions.vector``'s column builders, live in ``int8_topk`` and
-curation) and is pinned equal to it.
+encoding, the cell-blocked kNN graph, SemDeDup and the int8 search
+tier's numpy steps; the registry's DuckDB oracle SQL is their reference
+(``tests/test_vector_arrow.py`` runs both on an edge-case corpus).
+Semantics: float64 math, HALF_UP rounding (numpy's ``round`` is
+banker's — ``_round_half_up`` mirrors Spark and DuckDB), squared-L2
+sums accumulated left to right over the dimensions (``aggregate``'s and
+``list_sum``'s order, so rounded distances are exact by construction),
+a NULL cosine wherever a vector has zero norm, id tiebreaks.
+
+The int8 tier has one quantizer (``quantize_int8_rows``: every numpy
+int8 code in the package), one packed at-rest form
+(``pack_int8_codes``, and ``pack_int8_cell_codes`` for the
+cell-partitioned IVF tier) and one candidate scan
+(``int8_candidates_arrow``). ``quantize_arrow`` keeps a native twin,
+``functions.vector``'s column builders, which are the reference side of
+curation's ``_sem_tables``; the two are pinned equal.
 """
 
 from __future__ import annotations
@@ -30,8 +36,10 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType, DoubleType, IntegerType, LongType, StructField, StructType,
+    ArrayType, BinaryType, DoubleType, IntegerType, LongType, StructField,
+    StructType,
 )
 
 
@@ -91,6 +99,18 @@ def _unit_rows(v: np.ndarray) -> np.ndarray:
         return v / n[:, None]
 
 
+def quantize_int8_rows(v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Symmetric int8 codes of the rows of ``v``: round-HALF-UP of
+    ``x / max|x| * 127``, the rule ``functions.vector.quantize_int8``
+    spells as columns. Returns ``(codes, scale)``, codes as float64; an
+    all-zero row has scale 0 and no code (its codes are NaN), so
+    callers keep ``scale > 0``. An empty input (a collect of no rows
+    gives a 1-D one) returns empty arrays."""
+    scale = np.abs(v).max(axis=1) if len(v) else np.zeros(0)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return _round_half_up(v / scale[:, None] * 127.0), scale
+
+
 def quantize_arrow(
     df: DataFrame,
     *,
@@ -108,10 +128,9 @@ def quantize_arrow(
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             v = _mat(b[vec_col])
-            scale = np.abs(v).max(axis=1)
+            q8, scale = quantize_int8_rows(v)
             ok = scale > 0
             with np.errstate(divide="ignore", invalid="ignore"):
-                q8 = _round_half_up(v / scale[:, None] * 127.0)
                 n = np.sqrt((v * v).sum(axis=1))
                 unit = _round_half_up(v / n[:, None], digits)
             yield pd.DataFrame({
@@ -123,6 +142,18 @@ def quantize_arrow(
             })
 
     return df.select(id_col, vec_col).mapInPandas(kernel, schema)
+
+
+def _centroid_matrix(
+    centroids: DataFrame, id_col: str, vec_col: str
+) -> tuple[np.ndarray, np.ndarray]:
+    """The (tiny) centroid table collected as (ids, dense k x d matrix),
+    rows in id order so a rounded-distance tie keeps the lowest id."""
+    rows = sorted(
+        centroids.select(id_col, vec_col).collect(), key=lambda r: r[id_col]
+    )
+    ids = np.array([r[id_col] for r in rows])
+    return ids, np.array([list(r[vec_col]) for r in rows], dtype=np.float64)
 
 
 def kmeans_assign_arrow(
@@ -146,11 +177,7 @@ def kmeans_assign_arrow(
 
     Output: ``id_col``, centroid_id, dist.
     """
-    rows = sorted(
-        centroids.select(id_col, vec_col).collect(), key=lambda r: r[id_col]
-    )
-    ids = np.array([r[id_col] for r in rows])
-    cmat = np.array([list(r[vec_col]) for r in rows], dtype=np.float64)
+    ids, cmat = _centroid_matrix(centroids, id_col, vec_col)
     schema = StructType([
         StructField(id_col, corpus.schema[id_col].dataType),
         StructField("centroid_id", centroids.schema[id_col].dataType),
@@ -378,110 +405,67 @@ def pack_int8_codes(
     """Symmetric-int8 codes packed into ONE ``binary`` cell per vector —
     the at-rest form of the 4x/8x-shrunk scan corpus (64 bytes per
     64-dim vector instead of 512 float64 bytes): what a 100 TB vector
-    store actually persists for its quantized search tier. Quantization
-    math is identical to ``functions.vector.quantize_int8`` /
-    ``quantize_arrow`` (round-HALF-UP of ``x / max|x| * 127``); all-zero
-    vectors have no scale and are dropped, matching the native filter.
-    Map-only: no shuffle, one numpy pass per Arrow batch."""
+    store actually persists for its quantized search tier. Codes come
+    from :func:`quantize_int8_rows`; null and all-zero vectors have no
+    code and are dropped. Map-only: no shuffle, one numpy pass per
+    Arrow batch. Output: ``(id_col, code)``."""
     schema = f"{id_col} long, code binary"
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            v = _mat(b[vec_col])
-            scale = np.abs(v).max(axis=1)
-            ok = scale > 0
-            with np.errstate(divide="ignore", invalid="ignore"):
-                q8 = _round_half_up(v / scale[:, None] * 127.0)
-            ids = b[id_col].to_numpy(dtype=np.int64)
-            keep = np.flatnonzero(ok)
-            yield pd.DataFrame({
-                id_col: ids[keep],
-                "code": [q8[i].astype(np.int8).tobytes() for i in keep],
-            })
+            yield _pack_batch(b, id_col, vec_col)[0]
 
-    return df.select(id_col, vec_col).mapInPandas(kernel, schema)
+    return (df.where(F.col(vec_col).isNotNull()).select(id_col, vec_col)
+            .mapInPandas(kernel, schema))
 
 
-def int8_candidates_arrow(
-    codes: DataFrame,
-    query_ids: np.ndarray,
-    query_codes: np.ndarray,
-    candidates: int,
-    *,
-    id_col: str = "vec_id",
+def _pack_batch(
+    b: pd.DataFrame, id_col: str, vec_col: str
+) -> tuple[pd.DataFrame, np.ndarray]:
+    """One batch's packed codes ``(id_col, code)`` with all-zero vectors
+    dropped, and the float vectors of the rows kept."""
+    v = _mat(b[vec_col])
+    q8, scale = quantize_int8_rows(v)
+    keep = np.flatnonzero(scale > 0)
+    return pd.DataFrame({
+        id_col: b[id_col].to_numpy(dtype=np.int64)[keep],
+        "code": [q8[i].astype(np.int8).tobytes() for i in keep],
+    }), v[keep]
+
+
+def pack_int8_cell_codes(
+    corpus: DataFrame,
+    centroids: DataFrame,
+    id_col: str,
+    vec_col: str,
+    round_digits: int,
 ) -> DataFrame:
-    """Per-partition top-``candidates`` by exact INTEGER int8 dot
-    product against every query — the candidate-generation scan of
-    :func:`operators.similarity.int8_rerank_topk`.
-
-    The packed corpus batch unpacks to an (n, d) int8 matrix and scores
-    via ONE float32 BLAS GEMM: every int8 product sum is an integer
-    < 2^24 for d <= 1024, so float32 accumulation is EXACT integer
-    arithmetic at 2x the float64 GEMM rate (dims above 1024 fall back
-    to float64, exact to 2^53). Selection order is the composite key
-    ``score * 2^32 - vec_id`` — deterministic on score ties, so the
-    per-partition top-C provably contains each partition's true
-    (score DESC, vec_id ASC) top-C and the downstream global window
-    reproduces the oracle's candidate set bit-for-bit. Requires
-    0 <= vec_id < 2^31 (asserted) for the composite to order correctly.
-
-    Emits ``candidates`` rows per (partition batch, query): with P
-    Arrow batches the downstream global top-C window sees P*C rows per
-    query — thousands, regardless of corpus size.
-    """
-    n_q, dim = query_codes.shape
-    acc = np.float32 if dim <= 1024 else np.float64
-    q_t = np.ascontiguousarray(query_codes.T.astype(acc))
-    qid = query_ids.astype(np.int64)
-    schema = "query_id long, vec_id long, score_q long"
+    """The packed tier of an IVF-int8 index in one map-only pass: each
+    vector's packed code (as :func:`pack_int8_codes`) and its coarse
+    cell, the nearest centroid by :func:`kmeans_assign_arrow`'s rule.
+    Output ``(id_col, code, cell)``: the rows of ``pack_int8_codes``
+    joined to the assignment on id, so null and all-zero vectors are
+    dropped; ``cell`` keeps the centroids' id type."""
+    cids, cmat = _centroid_matrix(centroids, id_col, vec_col)
+    schema = StructType([
+        StructField(id_col, LongType()),
+        StructField("code", BinaryType()),
+        StructField("cell", centroids.schema[id_col].dataType),
+    ])
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             if not len(b):
                 continue
-            ids = b[id_col].to_numpy(dtype=np.int64)
-            if ids.size and (ids.min() < 0 or ids.max() >= 1 << 31):
-                raise ValueError(
-                    "int8_candidates_arrow needs 0 <= vec_id < 2^31 "
-                    "for the deterministic tiebreak composite")
-            mat = np.frombuffer(
-                b"".join(b["code"].tolist()), dtype=np.int8
-            ).reshape(ids.size, -1)
-            scores = mat.astype(acc) @ q_t  # exact integers (see above)
-            scores_i64 = scores.astype(np.int64)
-            # a query vector living in this batch must NEVER surface as
-            # its own candidate: mask the EMITTED score too, not just
-            # the selection composite — when the batch has <= candidates
-            # rows every row is emitted, and a real (maximal) self score
-            # would win a global top-C slot downstream and silently
-            # shrink the candidate set to C-1
-            self_mask = ids[:, None] == qid[None, :]
-            scores_i64[self_mask] = np.iinfo(np.int64).min
-            comp = scores_i64 * np.int64(1 << 32)
-            comp -= ids[:, None]
-            # select on NEGATED comp with masked rows forced to int64
-            # MAX, not min: negating int64 min wraps back to int64 min
-            # (two's complement), which would make masked rows the
-            # SMALLEST of -comp — argpartition would pick the self row
-            # FIRST, wasting one of the batch's emission slots (the
-            # batch then contributes C-1 real candidates and the
-            # "per-partition top-C contains the true top-C" guarantee
-            # silently breaks for the self-containing batch)
-            neg = np.negative(comp)
-            neg[self_mask] = np.iinfo(np.int64).max
-            top = min(candidates, ids.size)
-            idx = np.argpartition(neg, top - 1, axis=0)[:top]
-            yield pd.DataFrame({
-                "query_id": np.repeat(qid, top),
-                "vec_id": ids[idx].ravel(order="F"),
-                "score_q": np.take_along_axis(
-                    scores_i64, idx, axis=0).ravel(order="F"),
-            })
+            out, v = _pack_batch(b, id_col, vec_col)
+            out["cell"] = cids[_nearest(v, cmat, round_digits)[0]]
+            yield out
 
-    return codes.select(id_col, "code").mapInPandas(kernel, schema)
+    return (corpus.where(F.col(vec_col).isNotNull()).select(id_col, vec_col)
+            .mapInPandas(kernel, schema))
 
 
-def int8_candidates_cells_arrow(
+def int8_candidates_arrow(
     codes: DataFrame,
     query_ids: np.ndarray,
     query_codes: np.ndarray,
@@ -490,26 +474,35 @@ def int8_candidates_cells_arrow(
     candidates: int,
     *,
     id_col: str = "vec_id",
-    cell_col: str = "cell",
 ) -> DataFrame:
-    """Cell-restricted variant of :func:`int8_candidates_arrow` — the
-    candidate scan of ``similarity.ivf_int8_rerank_topk``: each query
-    sees only corpus rows whose coarse cell is among its probed cells.
+    """Per-batch top-``candidates`` corpus rows for every query by exact
+    INTEGER int8 dot product — the one candidate scan of the int8
+    searches in ``operators.similarity``.
 
-    ``cell_ids`` is the sorted union of every query's probed cells;
-    ``allowed`` is a ``(len(cell_ids), n_queries)`` bool matrix —
-    ``allowed[c, j]`` says query ``j`` probes ``cell_ids[c]``. The
-    caller pre-filters ``codes`` to ``cell_ids`` (an ``isin`` the
-    scan's partition pruning eats when the packed tier is written
-    partitioned by cell), so the GEMM only ever touches probed rows;
-    the mask handles the per-query difference WITHIN the union.
+    ``codes`` is the packed tier ``(id_col, code, cell)``. A query sees
+    only rows whose cell it probes: ``cell_ids`` are the probed cells
+    and ``allowed`` is a ``(len(cell_ids), n_queries)`` bool matrix —
+    ``allowed[c, j]`` says query ``j`` probes ``cell_ids[c]``. A flat
+    scan is the same call with every row in one cell that every query
+    probes. Callers pre-filter ``codes`` to ``cell_ids`` (an ``isin``
+    that partition pruning eats when the tier is written partitioned by
+    cell), so the GEMM only touches probed rows; the mask handles the
+    per-query difference within the union.
 
-    Ineligible and self rows mask BOTH the emitted score and the
-    selection composite to int64 min — a batch smaller than
-    ``candidates`` emits every row, and a masked row must neither
-    surface with a real score nor consume a downstream top-C slot
-    (callers drop score_q == int64 min). Selection order and the
-    vec_id < 2^31 requirement match :func:`int8_candidates_arrow`.
+    The batch unpacks to an (n, d) int8 matrix and scores via ONE
+    float32 BLAS GEMM: every int8 product sum is an integer < 2^24 for
+    d <= 1024, so float32 accumulation is EXACT integer arithmetic at
+    2x the float64 GEMM rate (dims above 1024 fall back to float64,
+    exact to 2^53). Selection order is (score DESC, id ASC), through
+    the composite ``score * 2^32 - r`` where ``r`` is the id's rank in
+    the batch: exact for every long id, so each batch's emission
+    contains its true top-C and the downstream window reproduces the
+    oracle's candidate set bit for bit. Rows a query may not see (an
+    unprobed cell, or the query's own row) are never emitted.
+
+    Emits up to ``candidates`` rows per (batch, query): with P batches
+    the downstream global top-C window sees at most P*C rows per query.
+    Output: ``query_id, vec_id, score_q`` (all long).
     """
     n_q, dim = query_codes.shape
     if allowed.shape != (cell_ids.size, n_q):
@@ -519,10 +512,9 @@ def int8_candidates_cells_arrow(
     acc = np.float32 if dim <= 1024 else np.float64
     q_t = np.ascontiguousarray(query_codes.T.astype(acc))
     qid = query_ids.astype(np.int64)
-    cells_sorted = np.sort(cell_ids.astype(np.int64))
     order = np.argsort(cell_ids.astype(np.int64), kind="stable")
+    cells_sorted = cell_ids.astype(np.int64)[order]
     allowed_sorted = np.ascontiguousarray(allowed[order])
-    masked = np.iinfo(np.int64).min
     schema = "query_id long, vec_id long, score_q long"
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -530,44 +522,33 @@ def int8_candidates_cells_arrow(
             if not len(b):
                 continue
             ids = b[id_col].to_numpy(dtype=np.int64)
-            if ids.size and (ids.min() < 0 or ids.max() >= 1 << 31):
-                raise ValueError(
-                    "int8_candidates_cells_arrow needs 0 <= vec_id < "
-                    "2^31 for the deterministic tiebreak composite")
-            row_cells = b[cell_col].to_numpy(dtype=np.int64)
-            pos = np.searchsorted(cells_sorted, row_cells)
-            pos_c = np.minimum(pos, cells_sorted.size - 1)
-            known = cells_sorted[pos_c] == row_cells
-            # (n, n_q) eligibility: row i scored for query j only when
-            # its cell is one of j's probes (unknown cell: no query)
-            elig = np.where(
-                known[:, None], allowed_sorted[pos_c], False)
+            row_cells = b["cell"].to_numpy(dtype=np.int64)
+            pos = np.minimum(
+                np.searchsorted(cells_sorted, row_cells),
+                cells_sorted.size - 1)
+            # (n, n_q): row i is dead for query j when its cell is not
+            # one of j's probes, or when it is j's own row
+            dead = ~allowed_sorted[pos]
+            dead[cells_sorted[pos] != row_cells] = True
+            dead |= ids[:, None] == qid[None, :]
             mat = np.frombuffer(
                 b"".join(b["code"].tolist()), dtype=np.int8
             ).reshape(ids.size, -1)
-            scores = mat.astype(acc) @ q_t  # exact integers
-            scores_i64 = scores.astype(np.int64)
-            dead = ~elig
-            dead |= ids[:, None] == qid[None, :]
-            scores_i64[dead] = masked
-            comp = scores_i64 * np.int64(1 << 32)
-            comp -= ids[:, None]
-            # as in int8_candidates_arrow: select on -comp with dead
-            # rows at int64 MAX (negating int64 min wraps to itself —
-            # dead rows would otherwise sort FIRST and fill the whole
-            # selection wherever they outnumber live ones, which here
-            # they routinely do: every non-probed (row, query) pair is
-            # dead)
-            neg = np.negative(comp)
+            scores = (mat.astype(acc) @ q_t).astype(np.int64)  # exact
+            rank = np.empty(ids.size, dtype=np.int64)
+            rank[np.argsort(ids, kind="stable")] = np.arange(ids.size)
+            # select the C smallest of -(score * 2^32 - rank); dead rows
+            # sit at int64 max, after every live row
+            neg = rank[:, None] - scores * np.int64(1 << 32)
             neg[dead] = np.iinfo(np.int64).max
             top = min(candidates, ids.size)
             idx = np.argpartition(neg, top - 1, axis=0)[:top]
+            live = ~np.take_along_axis(dead, idx, axis=0)
+            qcol = np.broadcast_to(np.arange(n_q), idx.shape)
             yield pd.DataFrame({
-                "query_id": np.repeat(qid, top),
-                "vec_id": ids[idx].ravel(order="F"),
-                "score_q": np.take_along_axis(
-                    scores_i64, idx, axis=0).ravel(order="F"),
+                "query_id": qid[qcol[live]],
+                "vec_id": ids[idx[live]],
+                "score_q": np.take_along_axis(scores, idx, axis=0)[live],
             })
 
-    return codes.select(id_col, "code", cell_col).mapInPandas(
-        kernel, schema)
+    return codes.select(id_col, "code", "cell").mapInPandas(kernel, schema)

@@ -100,24 +100,19 @@ def build_ivf_int8_index(
     round_digits: int = 6,
 ) -> dict:
     """Ingest-time index build: assign every corpus vector to its
-    nearest centroid (``vector_arrow.kmeans_assign_arrow`` — the
-    oracle-exact rounded-L2 + id tiebreak), pack its int8 code (64 B/vector at
-    dim 64), and write the codes parquet PARTITIONED BY CELL so the
-    search-time probe union prunes partitions. One corpus pass; the
-    shuffle is the ``partitionBy`` write clustering (unavoidable — it
-    IS the index). Returns the manifest dict."""
+    nearest centroid and pack its int8 code (64 B/vector at dim 64) in
+    one map-only pass (``vector_arrow.pack_int8_cell_codes`` — the
+    oracle-exact rounded-L2 + id tiebreak), and write the codes parquet
+    PARTITIONED BY CELL so the search-time probe union prunes
+    partitions. The shuffle is the ``partitionBy`` write clustering
+    (unavoidable — it IS the index). Returns the manifest dict."""
     from nexus_processor_spark.operators import similarity, vector_arrow
 
     dim = similarity._probe_dim(corpus, vec_col, "build_ivf_int8_index")
     if dim is None:
         raise ValueError("cannot index an empty/all-null corpus")
-    cells = vector_arrow.kmeans_assign_arrow(
-        corpus, centroids, id_col=id_col, vec_col=vec_col,
-        round_digits=round_digits,
-    ).select(id_col, F.col("centroid_id").alias("cell"))
-    codes = vector_arrow.pack_int8_codes(
-        corpus, id_col=id_col, vec_col=vec_col
-    ).join(cells, id_col)
+    codes = vector_arrow.pack_int8_cell_codes(
+        corpus, centroids, id_col, vec_col, round_digits)
     # cluster by cell BEFORE the partitioned write: without it every
     # shuffle partition emits one file into every cell directory
     # (k_cells x shuffle.partitions small files — measured as the
@@ -173,15 +168,12 @@ def search(
 
     manifest, centroids, codes = open_index(spark, path)
     id_col = manifest["id_col"]
-    # cells live in the codes frame itself; pass them through so the
-    # operator never recomputes the assignment
-    cells = codes.select(id_col, "cell")
     return similarity.ivf_int8_rerank_topk(
         queries, corpus, centroids, k,
         nprobe=nprobe, candidates=candidates,
         id_col=id_col, vec_col=manifest["vec_col"],
         round_digits=manifest["round_digits"],
-        cells=cells, codes=codes,
+        codes=codes,
     )
 
 
@@ -202,13 +194,8 @@ def append_to_index(
     spark = new_vectors.sparkSession
     manifest, centroids, _ = open_index(spark, path)
     id_col, vec_col = manifest["id_col"], manifest["vec_col"]
-    cells = vector_arrow.kmeans_assign_arrow(
-        new_vectors, centroids, id_col=id_col, vec_col=vec_col,
-        round_digits=manifest["round_digits"],
-    ).select(id_col, F.col("centroid_id").alias("cell"))
-    codes = vector_arrow.pack_int8_codes(
-        new_vectors, id_col=id_col, vec_col=vec_col
-    ).join(cells, id_col)
+    codes = vector_arrow.pack_int8_cell_codes(
+        new_vectors, centroids, id_col, vec_col, manifest["round_digits"])
     # materialize ONCE before counting and writing: with a
     # non-deterministic source, recomputing the plan for the write
     # could append a different row set than the one counted (ADVICE
@@ -369,13 +356,8 @@ def rebuild_index(
     # count/write discipline, ADVICE r9)
     centroids = centroids.select(id_col, vec_col).persist()
     try:
-        cells = vector_arrow.kmeans_assign_arrow(
-            corpus, centroids, id_col=id_col, vec_col=vec_col,
-            round_digits=manifest["round_digits"],
-        ).select(id_col, F.col("centroid_id").alias("cell"))
-        codes = vector_arrow.pack_int8_codes(
-            corpus, id_col=id_col, vec_col=vec_col
-        ).join(cells, id_col)
+        codes = vector_arrow.pack_int8_cell_codes(
+            corpus, centroids, id_col, vec_col, manifest["round_digits"])
         new_codes = f"codes-{uuid.uuid4().hex}"
         new_cents = f"centroids-{uuid.uuid4().hex}"
         (codes.repartition("cell").sortWithinPartitions(id_col)

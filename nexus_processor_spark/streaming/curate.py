@@ -532,9 +532,10 @@ def _sem_tables_arrow(
     bands*planes bucket dots are ONE float64 GEMM per Arrow batch
     (every product sum is an integer <= dim*127*32767 ~ 2.7e8 << 2^53,
     so float64 accumulation is exact integer arithmetic), and the
-    quantization is ``_round_half_up`` — the same HALF_UP the native
-    ``quantize_int8`` rounds with. This is the serving path; the
-    native form remains the oracle-exactness twin.
+    quantization is ``vector_arrow.quantize_int8_rows`` — the same
+    HALF_UP rule the native ``quantize_int8`` spells as columns. This
+    is the serving path; the native form remains the oracle-exactness
+    twin.
 
     ``probes`` > 0 enables LSH MULTIPROBE: per band, the ``probes``
     alternate buckets obtained by flipping the least-confident plane
@@ -548,7 +549,7 @@ def _sem_tables_arrow(
     import numpy as np
 
     from nexus_processor_spark.operators.vector_arrow import (
-        _mat, _round_half_up)
+        _mat, quantize_int8_rows)
 
     w = np.array(
         _sem_weights(bands, planes, dim), dtype=np.float64
@@ -572,14 +573,12 @@ def _sem_tables_arrow(
                 lambda v: v is not None and len(v) == dim)]
             if not len(keep):
                 continue
-            ids = keep[id_col].to_numpy(dtype=np.int64)
-            mat = _mat(keep[embedding_col])
-            scale = np.abs(mat).max(axis=1)
+            q8, scale = quantize_int8_rows(_mat(keep[embedding_col]))
             ok = scale > 0
             if not ok.any():
                 continue
-            ids, mat, scale = ids[ok], mat[ok], scale[ok]
-            q8 = _round_half_up(mat / scale[:, None] * 127.0)
+            ids = keep[id_col].to_numpy(dtype=np.int64)[ok]
+            q8 = q8[ok]
             na = (q8 * q8).sum(axis=1).astype(np.int64)
             dots = q8 @ w_t  # exact integers in float64 (see docstring)
             bits = (dots > 0).reshape(len(ids), bands, planes)

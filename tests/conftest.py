@@ -42,3 +42,15 @@ def spark(tmp_path_factory):
     })
     yield s
     s.stop()
+
+
+def assert_md5_and_xxhash64_are_equal_collect(build):
+    """``build(hash_fn)`` under the md5 scheme (the oracle-checkable
+    default) and under xxhash64 (the scale dial) returns the same
+    columns and the same rows. Returns the md5 side's rows, sorted, for
+    the caller's own expectations."""
+    md5, xx = build("md5"), build("xxhash64")
+    assert md5.columns == xx.columns
+    rows = sorted(map(tuple, md5.collect()))
+    assert rows == sorted(map(tuple, xx.collect()))
+    return rows

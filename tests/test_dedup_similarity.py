@@ -4,6 +4,7 @@ import math
 
 import numpy as np
 import pytest
+from conftest import assert_md5_and_xxhash64_are_equal_collect
 
 from nexus_processor_spark.operators import dedup, similarity, vector_arrow
 
@@ -54,12 +55,10 @@ def test_minhash_hash_fn_same_verified_pairs(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     expected = {(g * 10 + a, g * 10 + b)
                 for g in range(5) for a in range(3) for b in range(3) if a < b}
-    got = {}
-    for fn in ("md5", "xxhash64"):
-        got[fn] = {(r.id_a, r.id_b)
-                   for r in dedup.minhash_dedup_pairs(
-                       docs, threshold=0.9, hash_fn=fn).collect()}
-    assert got["md5"] == got["xxhash64"] == expected
+    rows = assert_md5_and_xxhash64_are_equal_collect(
+        lambda fn: dedup.minhash_dedup_pairs(
+            docs, threshold=0.9, hash_fn=fn).select("id_a", "id_b"))
+    assert set(rows) == expected
 
 
 def test_lsh_max_bucket_caps_fanout(docs):

@@ -254,6 +254,18 @@ def test_knn_graph_and_semantic_dedup_avoid_cartesian(spark):
     assert "FlatMapGroupsInPandas" in plan
 
 
+def test_sim_int8_topk_scores_in_the_arrow_kernel(spark):
+    """The int8 scan scores through the packed-code candidate kernel:
+    no broadcast nested-loop (query x corpus) join and no interpreted
+    ``zip_with`` lambda dot anywhere in the plan."""
+    from nexus_processor_spark.queries.similarity_q import q_sim_int8_topk
+
+    plan = explain.executed_plan(q_sim_int8_topk(spark, SF))
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "zip_with" not in plan and "lambdafunction" not in plan
+    assert "MapInPandas" in plan
+
+
 def test_disjunctive_revenue_stays_hash_join(spark):
     """Q19's OR-of-ANDs predicate: Catalyst must extract the common
     ``l_partkey = p_partkey`` conjunct as the equi-join key and keep the

@@ -5,6 +5,7 @@ edges — everything the SQL oracle replay can't isolate."""
 
 from __future__ import annotations
 
+from conftest import assert_md5_and_xxhash64_are_equal_collect
 from pyspark.sql import functions as F
 
 from nexus_processor_spark.operators import spans
@@ -76,7 +77,9 @@ def test_excise_rebuild(spark):
 
 
 def test_hash_scheme_parity(spark):
-    assert _spans(spark, 4, hash_fn="xxhash64") == _spans(spark, 4)
+    assert_md5_and_xxhash64_are_equal_collect(
+        lambda fn: spans.dup_spans(_df(spark), 4, hash_fn=fn).select(
+            "doc_id", "span_start", "span_end"))
 
 
 def test_within_doc_repetition(spark):

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pytest
+from conftest import assert_md5_and_xxhash64_are_equal_collect
 from pyspark.sql import functions as F
 
 from nexus_processor_spark.operators import dedup
@@ -489,12 +490,9 @@ def test_xxhash64_scale_dial_same_decisions(spark):
         [(1, LONG_A), (2, LONG_A), (3, NEAR_A), (4, OTHER), (5, "short")],
         "doc_id long, text string",
     )
-    want = {r.doc_id: (r.keep, r.drop_reason)
-            for r in curate.curate_batch(batch, None).collect()}
-    got = {r.doc_id: (r.keep, r.drop_reason)
-           for r in curate.curate_batch(
-               batch, None, hash_fn="xxhash64").collect()}
-    assert got == want
+    assert_md5_and_xxhash64_are_equal_collect(
+        lambda fn: curate.curate_batch(batch, None, hash_fn=fn).select(
+            "doc_id", "keep", "drop_reason"))
 
     kept = spark.createDataFrame([(1, LONG_A)], "doc_id long, text string")
     state = curate._survivor_state(

@@ -128,10 +128,11 @@ def _quantize(emb):
     return native, vector_arrow.quantize_arrow(emb)
 
 
-# jobs that keep a live native form beside the Arrow kernel -> (builder
-# of (native, arrow), sort keys, approximate columns, their absolute
-# tolerance). The quantize column builders are live in ``int8_topk``
-# and curation; scale and int8 codes are exact.
+# jobs that keep a native form beside the Arrow kernel -> (builder of
+# (native, arrow), sort keys, approximate columns, their absolute
+# tolerance). The quantize column builders are the reference side of
+# curation's ``_sem_tables``; every int8 search quantizes through
+# ``vector_arrow.quantize_int8_rows``. Scale and int8 codes are exact.
 _TWINS = {
     "quantize": (_quantize, ("vec_id",), ("unit",), 1e-12),
 }
@@ -218,24 +219,85 @@ def test_int8_rerank_recall_beats_raw_int8_topk(emb):
     assert r_rerank >= 0.9
 
 
-def test_int8_candidates_rejects_oversized_ids(spark):
-    """The deterministic tiebreak composite needs 0 <= id < 2^31; out-of-
-    range ids must fail loudly, never misorder silently."""
+def _flat_candidates(codes, qids, q8, candidates):
+    """The candidate kernel as a flat scan: every row in cell 0, which
+    every query probes."""
     import numpy as np
 
-    big = spark.createDataFrame(
-        [(1 << 40, bytes([1] * 8))], "vec_id long, code binary")
-    cand = vector_arrow.int8_candidates_arrow(
-        big, np.array([0]), np.ones((1, 8)), 5)
-    with pytest.raises(Exception, match="2\\^31"):
-        cand.collect()
+    return vector_arrow.int8_candidates_arrow(
+        codes.withColumn("cell", F.lit(0)), qids, q8,
+        np.zeros(1, dtype=np.int64), np.ones((1, len(qids)), dtype=bool),
+        candidates)
+
+
+def _int8_searches(q, corpus, cents, k, candidates):
+    """The three int8 searches, each as (query_id, vec_id) in rank
+    order; the IVF one probes every cell of ``cents``."""
+    outs = {
+        "int8_topk": similarity.int8_topk(q, corpus, k),
+        "int8_rerank_topk": similarity.int8_rerank_topk(
+            q, corpus, k, candidates=candidates),
+        "ivf_int8_rerank_topk": similarity.ivf_int8_rerank_topk(
+            q, corpus, cents, k, nprobe=cents.count(),
+            candidates=candidates),
+    }
+    return {name: [(r.query_id, r.vec_id)
+                   for r in df.orderBy("query_id", "rank").collect()]
+            for name, df in outs.items()}
+
+
+def test_int8_searches_rank_any_long_id(spark):
+    """Score ties rank by id ascending for every long id — negative and
+    >= 2^31 included — in all three int8 searches, with the whole
+    corpus in one Arrow batch so the candidate kernel's in-batch
+    selection decides the ties."""
+    tied = [-(1 << 40), -5, 3, 1 << 31, 1 << 40]
+    rows = [(i, [1.0, 0.5, 0.0, 0.0]) for i in tied]
+    rows += [(i, [0.0, 0.0, 1.0, 0.5]) for i in (-7, 11, 1 << 35)]
+    corpus = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>").coalesce(1)
+    q = spark.createDataFrame(
+        [(1 << 45, [1.0, 0.5, 0.0, 0.0])],
+        "vec_id long, embedding array<double>")
+    cents = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 0.0, 1.0, 0.0])],
+        "vec_id long, embedding array<double>")
+    want = [(1 << 45, i) for i in tied[:3]]
+    got = _int8_searches(q, corpus, cents, 3, 3)
+    assert got == dict.fromkeys(got, want)
+
+
+def test_int8_searches_empty_and_all_zero_queries(spark, emb):
+    """An empty query set and an all-zero one (no scale, so no code)
+    give each int8 search an empty frame with its usual schema."""
+    clean = emb.filter("vec_id < 100")
+    cents = clean.filter("vec_id < 4")
+    zero = spark.createDataFrame(
+        [(300, [0.0] * 16)], "vec_id long, embedding array<float>")
+    schemas = {
+        "int8_topk": "struct<query_id:bigint,vec_id:bigint,"
+                     "score_q:bigint,rank:bigint>",
+        "int8_rerank_topk": "struct<query_id:bigint,vec_id:bigint,"
+                            "cos:double,rank:bigint>",
+    }
+    schemas["ivf_int8_rerank_topk"] = schemas["int8_rerank_topk"]
+    for q in (clean.limit(0), zero):
+        outs = {
+            "int8_topk": similarity.int8_topk(q, clean, 5),
+            "int8_rerank_topk": similarity.int8_rerank_topk(q, clean, 5),
+            "ivf_int8_rerank_topk": similarity.ivf_int8_rerank_topk(
+                q, clean, cents, 5),
+        }
+        for name, df in outs.items():
+            assert df.schema.simpleString() == schemas[name], name
+            assert df.collect() == [], name
 
 
 def test_int8_candidates_self_row_score_masked_in_small_batch(spark, emb):
     """An Arrow batch SMALLER than ``candidates`` that contains a query
-    vector emits every row — the self row must carry the int64-min
-    sentinel score, never its real (maximal) dot, or it wins a global
-    top-C slot downstream and silently shrinks the candidate set."""
+    vector emits every row but the query's own: a self row with its
+    real (maximal) dot would win a global top-C slot downstream and
+    silently shrink the candidate set."""
     import numpy as np
 
     clean = emb.filter("vec_id < 10").coalesce(1)  # one 10-row batch
@@ -244,14 +306,8 @@ def test_int8_candidates_self_row_score_masked_in_small_batch(spark, emb):
     q8 = np.array([
         [round(x / max(abs(v) for v in qrow.embedding) * 127)
          for x in qrow.embedding]])
-    out = vector_arrow.int8_candidates_arrow(
-        codes, np.array([3]), q8, candidates=50).collect()
-    assert len(out) == 10  # batch < candidates: all rows emitted
-    self_rows = [r for r in out if r.vec_id == 3]
-    assert self_rows and all(
-        r.score_q == np.iinfo(np.int64).min for r in self_rows)
-    assert all(r.score_q > np.iinfo(np.int64).min
-               for r in out if r.vec_id != 3)
+    out = _flat_candidates(codes, np.array([3]), q8, 50).collect()
+    assert sorted(r.vec_id for r in out) == [i for i in range(10) if i != 3]
 
 
 def test_int8_rerank_self_row_does_not_consume_candidate_slot(emb):
@@ -271,7 +327,7 @@ def test_int8_rerank_self_row_does_not_consume_candidate_slot(emb):
 
 def test_int8_candidates_selection_survives_negative_score_majority(emb):
     """Regression for the argpartition negation overflow: -int64min
-    wraps to int64min, so masked (self) rows sorted FIRST in the old
+    wraps to int64min, so masked (self) rows once sorted FIRST in the
     -comp selection — with a batch bigger than ``candidates`` the self
     row consumed one emission slot and the batch contributed only C-1
     real candidates. The kernel's per-batch emission must be the true
@@ -285,8 +341,7 @@ def test_int8_candidates_selection_survives_negative_score_majority(emb):
     scale = max(abs(v) for v in qrow.embedding)
     q8 = np.array([
         [round(x / scale * 127) for x in qrow.embedding]], dtype=float)
-    out = vector_arrow.int8_candidates_arrow(
-        codes, np.array([3]), q8, candidates=10).collect()
+    out = _flat_candidates(codes, np.array([3]), q8, 10).collect()
     emitted = {(r.vec_id, r.score_q) for r in out}
     # driver-side truth: int8 dots of every non-self row, top 10
     rows = clean.collect()
@@ -305,10 +360,10 @@ def test_int8_candidates_selection_survives_negative_score_majority(emb):
 
 
 def test_int8_candidates_cells_masks_unprobed_and_orders_correctly(spark):
-    """The cell-restricted kernel: rows outside a query's probed cells
-    never surface with a real score, and the selection is the true
-    top-C over the probed rows even when dead pairs are the majority
-    (the exact shape that exposed the negation overflow)."""
+    """The cell restriction: rows outside a query's probed cells are
+    never emitted, and the selection is the true top-C over the probed
+    rows even when dead pairs are the majority (the exact shape that
+    exposed the negation overflow)."""
     import numpy as np
 
     rows = []
@@ -320,16 +375,13 @@ def test_int8_candidates_cells_masks_unprobed_and_orders_correctly(spark):
     q8 = np.array([[127.0, 127.0, 127.0, 127.0]])
     cell_ids = np.array([2], dtype=np.int64)   # probe ONLY cell 2
     allowed = np.array([[True]])
-    out = vector_arrow.int8_candidates_cells_arrow(
+    out = vector_arrow.int8_candidates_arrow(
         codes.coalesce(1), qids, q8, cell_ids, allowed, 3).collect()
-    masked = np.iinfo(np.int64).min
-    live = [(r.vec_id, r.score_q) for r in out if r.score_q != masked]
     # cell 2 rows: vec_id 2,10,18,26,34 with codes (i%9)-4
     want = sorted(
         [(i, int(((i % 9) - 4) * 127 * 4)) for i in range(40) if i % 8 == 2],
         key=lambda t: (-t[1], t[0]))[:3]
-    assert sorted(live) == sorted(want)
-    assert all(r.vec_id % 8 == 2 for r in out if r.score_q != masked)
+    assert sorted((r.vec_id, r.score_q) for r in out) == sorted(want)
 
 
 def test_ivf_int8_rerank_full_probe_equals_flat_rerank(emb):
