@@ -1210,10 +1210,8 @@ def run_ann(spark) -> dict[str, object]:
     # NORMALIZED corpus (probe selection must live in the same space as
     # the cell assignment), at ingest time, outside the timed window.
     ncents = nemb.filter(F.col("vec_id") < 64)
-    cells_n = vector_arrow.kmeans_assign_arrow(nemb, ncents).select(
-        "vec_id", F.col("centroid_id").alias("cell")
-    ).localCheckpoint(eager=True)
-    codes_c = codes.join(cells_n, "vec_id").localCheckpoint(eager=True)
+    codes_c = vector_arrow.pack_int8_cell_codes(
+        nemb, ncents, "vec_id", "embedding", 6).localCheckpoint(eager=True)
     for nprobe in (16, 32):
         add(f"ivf_int8_nprobe{nprobe}_cand100",
             lambda: similarity.ivf_int8_rerank_topk(
@@ -1306,11 +1304,9 @@ def run_ann_1m(spark) -> dict[str, object]:
         "configs": configs,
     }
     ncents = nemb.filter(F.col("vec_id") < 64)
-    cells_n = vector_arrow.kmeans_assign_arrow(nemb, ncents).select(
-        "vec_id", F.col("centroid_id").alias("cell")
-    ).localCheckpoint(eager=True)
     codes = vector_arrow.pack_int8_codes(nemb).localCheckpoint(eager=True)
-    codes_c = codes.join(cells_n, "vec_id").localCheckpoint(eager=True)
+    codes_c = vector_arrow.pack_int8_cell_codes(
+        nemb, ncents, "vec_id", "embedding", 6).localCheckpoint(eager=True)
     add("int8_rerank_cand100", lambda: similarity.int8_rerank_topk(
         nq, nemb, k, candidates=100, codes=codes))
     # nprobe 32 = the half-corpus dial position; 48 = the measured

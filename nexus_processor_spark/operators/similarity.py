@@ -1124,7 +1124,6 @@ def ivf_int8_rerank_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_digits: int = 6,
-    cells: DataFrame | None = None,
     codes: DataFrame | None = None,
 ) -> DataFrame:
     """IVF cells COMPOSED with the packed-int8 rerank tier (VERDICT r8
@@ -1145,10 +1144,8 @@ def ivf_int8_rerank_topk(
 
     ``codes`` supplies the PRE-BUILT index: ``(id_col, code, cell)``,
     the persisted packed tier with its partition column. By default it
-    is built here, ingest work a search never pays in production: from
-    ``cells``, a pre-built ``(id_col, cell)`` assignment, when given,
-    else by ``vector_arrow.pack_int8_cell_codes`` on ``centroids``.
-    ``cells`` is read only to build ``codes``.
+    is built here by ``vector_arrow.pack_int8_cell_codes`` on
+    ``centroids``, ingest work a search never pays in production.
 
     Probe selection replays :func:`ivf_multiprobe_topk`'s exact
     semantics (rounded squared-L2, centroid-id tiebreak, Spark-side
@@ -1158,13 +1155,8 @@ def ivf_int8_rerank_topk(
     rank — comparable to every other top-k via :func:`recall_at_k`.
     """
     if codes is None:
-        codes = (
-            vector_arrow.pack_int8_cell_codes(
-                corpus, centroids, id_col, vec_col, round_digits)
-            if cells is None else
-            vector_arrow.pack_int8_codes(
-                corpus, id_col=id_col, vec_col=vec_col).join(cells, id_col)
-        )
+        codes = vector_arrow.pack_int8_cell_codes(
+            corpus, centroids, id_col, vec_col, round_digits)
     probes = _nearest_cells(
         queries, centroids, nprobe, id_col, vec_col, round_digits
     ).select("query_id", "cell")

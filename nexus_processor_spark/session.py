@@ -13,6 +13,14 @@ so every entry point gets the same tuned configuration:
 * Arrow on for the few pandas-interchange boundaries (ingest, vector UDFs).
 * ZSTD parquet output, honoring the reference's documented intent
   (SURVEY.md §4 notes the reference's doc/code discrepancy here).
+* DataFrame debugging off. PySpark otherwise wraps every ``Column``
+  method and ``functions.*`` call in an origin capture (a conf read, a
+  stack walk and several py4j round trips per call), roughly doubling
+  the py4j traffic of building a query. The trade-off: a runtime error's
+  DataFrame query context loses its Python call-site fragment. The
+  setting is static, so it is a launch conf; pass
+  ``extra_confs={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+  to ``get_spark`` to restore the call sites.
 """
 
 from __future__ import annotations
@@ -68,6 +76,8 @@ DEFAULT_CONFS: dict[str, str] = {
 LAUNCH_CONFS: dict[str, str] = {
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     "spark.ui.enabled": "false",
+    # no per-call origin capture while building queries (module docstring)
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

@@ -65,6 +65,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from nexus_processor_spark.sources.tables import _footer_schema
+
 _MANIFEST_RE = re.compile(r"^manifest\.(\d+)\.json$")
 
 
@@ -293,6 +295,36 @@ def evolve_schema(
         # lost a race with a concurrent commit: re-derive and retry
 
 
+def _write_observed(
+    df: DataFrame, path: str, stats_cols: tuple[str, ...]
+) -> dict:
+    """Write ``df`` as parquet under ``path`` and return the min/max of
+    each ``stats_cols`` column, observed by the write job itself (no
+    read-back, no second job). The manifest is JSON: only natively
+    representable stat types are kept (prune compares with the same
+    semantics); a timestamp/decimal column records no stats (= never
+    pruned)."""
+    if not stats_cols:
+        df.write.mode("overwrite").parquet(path)
+        return {}
+    from pyspark.sql import functions as F
+
+    from nexus_processor_spark.plans.metrics import with_row_metrics
+
+    observed, obs = with_row_metrics(df, f"commit-{uuid.uuid4().hex}", *[
+        a for c in stats_cols
+        for a in (F.min(c).alias(f"_lo_{c}"), F.max(c).alias(f"_hi_{c}"))
+    ])
+    observed.write.mode("overwrite").parquet(path)
+    row = obs.get
+    return {
+        c: [row[f"_lo_{c}"], row[f"_hi_{c}"]]
+        for c in stats_cols
+        if all(isinstance(v, (int, float, str, type(None)))
+               for v in (row[f"_lo_{c}"], row[f"_hi_{c}"]))
+    }
+
+
 def write_snapshot(
     df: DataFrame,
     table_path: str,
@@ -318,11 +350,11 @@ def write_snapshot(
     the skipped attempt stays orphaned and invisible.
 
     ``stats_cols`` records per-directory min/max for the named columns
-    in the manifest (one delta-sized aggregate scan of the freshly
-    written directory; appends inherit earlier directories' stats from
-    the previous manifest). ``read_snapshot(prune=...)`` uses them to
-    skip whole directories on read — the manifest-level file skipping
-    of the Iceberg/Delta design, executed here.
+    in the manifest (observed by the write job itself; appends inherit
+    earlier directories' stats from the previous manifest).
+    ``read_snapshot(prune=...)`` uses them to skip whole directories on
+    read — the manifest-level file skipping of the Iceberg/Delta design,
+    executed here.
     """
     _require_local(table_path)
     if mode not in ("append", "overwrite"):
@@ -331,26 +363,8 @@ def write_snapshot(
         return None
     os.makedirs(table_path, exist_ok=True)
     commit_dir = f"data/{uuid.uuid4().hex}"
-    df.write.mode("overwrite").parquet(os.path.join(table_path, commit_dir))
-    new_stats = {}
-    if stats_cols:
-        from pyspark.sql import functions as F
-
-        spark = df.sparkSession
-        written = spark.read.parquet(os.path.join(table_path, commit_dir))
-        row = written.agg(*[
-            a for c in stats_cols
-            for a in (F.min(c).alias(f"_lo_{c}"), F.max(c).alias(f"_hi_{c}"))
-        ]).first()
-        new_stats = {
-            c: [row[f"_lo_{c}"], row[f"_hi_{c}"]]
-            for c in stats_cols
-            # manifest is JSON: only natively-representable stat types
-            # (prune compares with the same semantics); a timestamp/
-            # decimal column simply records no stats (= never pruned)
-            if all(isinstance(v, (int, float, str, type(None)))
-                   for v in (row[f"_lo_{c}"], row[f"_hi_{c}"]))
-        }
+    new_stats = _write_observed(
+        df, os.path.join(table_path, commit_dir), stats_cols)
 
     while True:
         prev = current_version(table_path)
@@ -556,26 +570,17 @@ def upsert_snapshot(
             )
         commit_dir = f"data/{uuid.uuid4().hex}"
         full = os.path.join(table_path, commit_dir)
-        merged.write.mode("overwrite").parquet(full)
-        written = spark.read.parquet(full)
-        row = written.agg(*[
-            a for c in stats_cols
-            for a in (F.min(c).alias(f"_lo_{c}"), F.max(c).alias(f"_hi_{c}"))
-        ]).first()
+        new_stats = _write_observed(merged, full, stats_cols)
         v = version if version is not None else prev + 1
         manifest = {
             "version": v,
             "mode": "upsert",
-            "schema": written.schema.jsonValue(),
+            # the schema a reader of the written files sees
+            "schema": _footer_schema(spark, full).jsonValue(),
             "data_dirs": untouched + [commit_dir],
             "stats": {
                 **{d: stats[d] for d in untouched if d in stats},
-                commit_dir: {
-                    c: [row[f"_lo_{c}"], row[f"_hi_{c}"]]
-                    for c in stats_cols
-                    if all(isinstance(v, (int, float, str, type(None)))
-                           for v in (row[f"_lo_{c}"], row[f"_hi_{c}"]))
-                },
+                commit_dir: new_stats,
             },
         }
         prev_cmap = m.get("column_map", {})

@@ -6,9 +6,18 @@ concat, scripts/extract_events_by_time.py:64-108; multi-path
 with one declarative reader. Predicate pushdown and column pruning are
 Catalyst's job — callers just ``.filter``/``.select`` and the parquet scan
 receives ``PushedFilters``/``ReadSchema``.
+
+Every read carries an explicit schema, derived on the driver from the
+parquet footer Spark's own inference would read (``_read``). A read
+without one launches a Spark job just to read that footer, before the
+query it feeds has run; the reference likewise reads with fixed,
+explicit schemas.
 """
 
 from __future__ import annotations
+
+import json
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,43 +32,119 @@ TESTDATA_TABLES = (
 # physical int64, which Spark only reads with the nanosAsLong legacy flag
 # (runtime-settable). Harmless for µs-timestamp files.
 _NANOS_FLAG = "spark.sql.legacy.parquet.nanosAsLong"
+_NTZ_FLAG = "spark.sql.parquet.inferTimestampNTZ.enabled"
+# the Spark schema a Spark writer stores in the parquet footer
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def _long_ts_schema(schema: StructType) -> StructType:
-    return StructType([
-        StructField("ts", LongType(), f.nullable) if f.name == "ts" else f
-        for f in schema.fields
-    ])
+def _nullable(t):
+    """A Spark type's JSON form with every level nullable, as a file
+    source reads it (Spark's ``asNullable``)."""
+    if isinstance(t, list):
+        return [_nullable(x) for x in t]
+    if not isinstance(t, dict):
+        return t
+    return {k: True if k in ("nullable", "containsNull", "valueContainsNull")
+            else v if k == "metadata" else _nullable(v)
+            for k, v in t.items()}
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str,
-               *, normalize_time: bool = True) -> DataFrame:
-    """Load one testdata table; ``events.ts`` arrives as long nanoseconds.
+def _footer_file(path: str) -> str:
+    """The file Spark's schema inference reads: ``path`` itself, or the
+    first data file of the directory in path order (``_``/``.`` names
+    are metadata, not data)."""
+    if "://" in path:
+        raise ValueError(f"tables are read from local paths only, got {path!r}")
+    if not os.path.isdir(path):
+        return path
+    names = sorted(n for n in os.listdir(path) if not n.startswith(("_", ".")))
+    if not names:
+        raise FileNotFoundError(f"no parquet data files under {path}")
+    first = os.path.join(path, names[0])
+    if os.path.isdir(first):
+        raise ValueError(f"partitioned table layouts are not read here: {first}")
+    return first
+
+
+def _footer_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, from one footer
+    read on the driver instead of a Spark job: the Spark schema a Spark
+    writer stored, else the converted parquet schema under the session's
+    ``nanosAsLong`` (TIMESTAMP(NANOS) reads as long) and
+    ``inferTimestampNTZ`` settings."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    arrow = pq.read_schema(_footer_file(path))
+    stored = (arrow.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if stored is not None:
+        schema = json.loads(stored)
+    else:
+        if spark.conf.get(_NANOS_FLAG, "false").lower() == "true":
+            arrow = pa.schema([
+                pa.field(f.name, pa.int64())
+                if pa.types.is_timestamp(f.type) and f.type.unit == "ns" else f
+                for f in arrow])
+        ntz = spark.conf.get(_NTZ_FLAG, "true").lower() == "true"
+        schema = from_arrow_schema(arrow, prefer_timestamp_ntz=ntz).jsonValue()
+    return StructType.fromJson(_nullable(schema))
+
+
+def _read(spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame:
+    """``spark.read.parquet(path)`` with an explicit schema — the
+    footer-derived one unless the caller passes its own — so building
+    the read runs no Spark job."""
+    if schema is None:
+        schema = _footer_schema(spark, path)
+    return spark.read.schema(schema).parquet(path)
+
+
+def _events(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, bool]:
+    """``events`` with ``ts`` as a long in its stored unit, and whether
+    that unit is µs.
 
     The corpus has shipped ``ts`` in two encodings across rounds: parquet
     TIMESTAMP(NANOS) physical int64 (read as long via ``nanosAsLong`` —
     already the contract) and plain ``timestamp[us]`` (TIMESTAMP_NTZ under
-    Spark 4's NTZ inference). For the µs encoding the file is re-read with
-    an explicit long ``ts`` — the vectorized reader then returns the
-    PHYSICAL int64 microseconds, skipping timestamp decode and any
-    timezone cast (naive-as-UTC by construction, the same convention as
-    the DuckDB oracles' tz-free ``epoch()``) — and one ``*1000`` restores
-    the long-ns contract for every downstream operator.
+    Spark 4's NTZ inference). A µs timestamp is read as a long: the
+    vectorized reader then returns the PHYSICAL int64 microseconds,
+    skipping timestamp decode and any timezone cast (naive-as-UTC by
+    construction, the same convention as the DuckDB oracles' tz-free
+    ``epoch()``); ``_us_to_ns`` restores the long-ns contract.
+    """
+    spark.conf.set(_NANOS_FLAG, "true")
+    path = f"{sf_dir}/events.parquet"
+    schema = _footer_schema(spark, path)
+    us = "ts" in schema.names and isinstance(
+        schema["ts"].dataType, (TimestampType, TimestampNTZType))
+    if us:
+        schema = StructType([
+            StructField("ts", LongType(), f.nullable) if f.name == "ts" else f
+            for f in schema.fields
+        ])
+    return _read(spark, path, schema), us
+
+
+def _us_to_ns(df: DataFrame) -> DataFrame:
+    return df.withColumn("ts", (F.col("ts") * F.lit(1000)).cast("long"))
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str,
+               *, normalize_time: bool = True) -> DataFrame:
+    """Load one testdata table; ``events.ts`` arrives as long nanoseconds
+    (see ``_events``).
 
     ``normalize_time=False`` keeps ``ts`` in its stored encoding — for
     callers that push a range predicate onto the physical column before
-    normalizing (``load_events_time_range``).
+    normalizing.
     """
+    if name == "events" and normalize_time:
+        df, us = _events(spark, sf_dir)
+        return _us_to_ns(df) if us else df
     if name == "events":
         spark.conf.set(_NANOS_FLAG, "true")
-    path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
-    if name == "events" and normalize_time and "ts" in df.columns:
-        t = df.schema["ts"].dataType
-        if isinstance(t, (TimestampType, TimestampNTZType)):
-            df = spark.read.schema(_long_ts_schema(df.schema)).parquet(path)
-            df = df.withColumn("ts", (F.col("ts") * F.lit(1000)).cast("long"))
-    return df
+    return _read(spark, f"{sf_dir}/{name}.parquet")
 
 
 def load_events_time_range(
@@ -71,13 +156,9 @@ def load_events_time_range(
     layouts), then ``ts`` normalized to the long-ns contract."""
     from nexus_processor_spark.operators.timeslice import push_time_range
 
-    raw = load_table(spark, sf_dir, "events", normalize_time=False)
-    t = raw.schema["ts"].dataType
-    if isinstance(t, (TimestampType, TimestampNTZType)):
-        path = f"{sf_dir}/events.parquet"
-        raw = spark.read.schema(_long_ts_schema(raw.schema)).parquet(path)
-        pushed = push_time_range(raw, start_time, end_time, unit="us")
-        return pushed.withColumn("ts", (F.col("ts") * F.lit(1000)).cast("long"))
+    raw, us = _events(spark, sf_dir)
+    if us:
+        return _us_to_ns(push_time_range(raw, start_time, end_time, unit="us"))
     return push_time_range(raw, start_time, end_time)
 
 

@@ -44,6 +44,24 @@ def spark(tmp_path_factory):
     s.stop()
 
 
+def count_jobs(spark, fn):
+    """Run ``fn()`` in a job group of its own; return its result and
+    the number of Spark jobs it launched. The status store is filled
+    by an asynchronous listener, so the count is read after the
+    listener bus has drained."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def assert_md5_and_xxhash64_are_equal_collect(build):
     """``build(hash_fn)`` under the md5 scheme (the oracle-checkable
     default) and under xxhash64 (the scale dial) returns the same

@@ -62,7 +62,6 @@ KEEP: dict[str, str] = {
     "plans.explain.has_pushed_filter": "test hook: plan inspection",
     "plans.explain.scan_columns": "test hook: plan inspection",
     "streaming.state_store._cache_clear": "test hook: state-store cache",
-    "plans.metrics.with_row_metrics": "observe() wrapper awaiting a caller",
 }
 
 

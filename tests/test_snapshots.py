@@ -210,6 +210,22 @@ def test_manifest_stats_prune_directories(spark, tmp_path):
     assert snap.read_snapshot(spark, t).count() == 30
 
 
+def test_commit_stats_are_observed_by_the_write_job(spark, tmp_path):
+    """Manifest min/max come from the write job itself: a commit with
+    stats launches exactly the jobs of the same commit without them."""
+    from conftest import count_jobs
+
+    df = _df(spark, 0, 50)
+    _, plain = count_jobs(
+        spark, lambda: snap.write_snapshot(df, str(tmp_path / "plain")))
+    t = str(tmp_path / "stats")
+    _, observed = count_jobs(
+        spark, lambda: snap.write_snapshot(df, t, stats_cols=("id", "v")))
+    assert observed == plain
+    m = snap._read_manifest(t, 0)
+    assert list(m["stats"].values()) == [{"id": [0, 49], "v": [0, 98]}]
+
+
 def test_stats_less_directories_are_kept_conservatively(spark, tmp_path):
     """A directory committed without stats can't be proven disjoint, so
     a pruned read keeps it — pruning is an optimization, never a filter."""

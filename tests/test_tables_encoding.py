@@ -5,12 +5,22 @@ from nanos-physical to µs timestamps."""
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql.types import LongType
 
-from nexus_processor_spark.sources.tables import load_table
+from nexus_processor_spark.sources.tables import TESTDATA_TABLES, _read, load_table
+
+_CORPORA = {
+    "perfbench-sf0.01": os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "perfbench", "data", "sf0.01"),
+    "sf0.001": "/root/testdata/sf0.001",
+}
 
 _ROWS = {
     "event_id": [1, 2, 3],
@@ -63,6 +73,53 @@ def test_load_events_timestamp_nanos_parquet(spark, tmp_path):
     assert isinstance(df.schema["ts"].dataType, LongType)
     got = [r.ts for r in df.orderBy("event_id").collect()]
     assert got == [us * 1000 for us in _TS_US]
+
+
+def _assert_inferred_schema(spark, path):
+    """The footer-derived read schema is the one Spark infers."""
+    assert _read(spark, path).schema == spark.read.parquet(path).schema
+
+
+@pytest.mark.parametrize("corpus", sorted(_CORPORA))
+def test_read_schema_matches_inference_on_corpus(spark, corpus):
+    """Every corpus table, incl. the list<float> embeddings and the
+    µs/NTZ timestamps."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    for name in TESTDATA_TABLES:
+        _assert_inferred_schema(spark, f"{_CORPORA[corpus]}/{name}.parquet")
+
+
+@pytest.mark.parametrize("ts_type", ["int64", "ns", "us"])
+def test_read_schema_matches_inference_per_ts_encoding(spark, tmp_path, ts_type):
+    ts = [us * 1000 for us in _TS_US]
+    arr = {
+        "int64": pa.array(ts, type=pa.int64()),
+        "ns": pa.array(ts, type=pa.timestamp("ns")),
+        "us": pa.array(pd.to_datetime(_TS_US, unit="us"), type=pa.timestamp("us")),
+    }[ts_type]
+    path = str(tmp_path / "events.parquet")
+    _write_events(path, arr)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    _assert_inferred_schema(spark, path)
+
+
+def test_read_schema_matches_inference_on_spark_written_dir(spark, tmp_path):
+    """A multi-part directory Spark wrote (its schema sits in the
+    footer's row metadata; ``_SUCCESS`` is not a data file)."""
+    from nexus_processor_spark.sources import synth
+
+    path = str(tmp_path / "events.parquet")
+    synth.synth_events(spark, 200, partitions=3).write.parquet(path)
+    assert os.path.exists(os.path.join(path, "_SUCCESS"))
+    assert len([n for n in os.listdir(path) if n.endswith(".parquet")]) == 3
+    _assert_inferred_schema(spark, path)
+    df = load_table(spark, str(tmp_path), "events")
+    assert df.count() == 200
+
+
+def test_read_rejects_non_local_path(spark):
+    with pytest.raises(ValueError, match="local"):
+        _read(spark, "s3a://bucket/events.parquet")
 
 
 def test_load_events_time_range_all_encodings(spark, tmp_path):
