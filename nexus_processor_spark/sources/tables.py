@@ -91,13 +91,10 @@ def _footer_schema(spark: SparkSession, path: str) -> StructType:
     return StructType.fromJson(_nullable(schema))
 
 
-def _read(spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame:
-    """``spark.read.parquet(path)`` with an explicit schema — the
-    footer-derived one unless the caller passes its own — so building
-    the read runs no Spark job."""
-    if schema is None:
-        schema = _footer_schema(spark, path)
-    return spark.read.schema(schema).parquet(path)
+def _read(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the footer-derived schema, so
+    building the read runs no Spark job."""
+    return spark.read.schema(_footer_schema(spark, path)).parquet(path)
 
 
 def _events(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, bool]:
@@ -123,27 +120,19 @@ def _events(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, bool]:
             StructField("ts", LongType(), f.nullable) if f.name == "ts" else f
             for f in schema.fields
         ])
-    return _read(spark, path, schema), us
+    return spark.read.schema(schema).parquet(path), us
 
 
 def _us_to_ns(df: DataFrame) -> DataFrame:
     return df.withColumn("ts", (F.col("ts") * F.lit(1000)).cast("long"))
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str,
-               *, normalize_time: bool = True) -> DataFrame:
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table; ``events.ts`` arrives as long nanoseconds
-    (see ``_events``).
-
-    ``normalize_time=False`` keeps ``ts`` in its stored encoding — for
-    callers that push a range predicate onto the physical column before
-    normalizing.
-    """
-    if name == "events" and normalize_time:
+    (see ``_events``)."""
+    if name == "events":
         df, us = _events(spark, sf_dir)
         return _us_to_ns(df) if us else df
-    if name == "events":
-        spark.conf.set(_NANOS_FLAG, "true")
     return _read(spark, f"{sf_dir}/{name}.parquet")
 
 

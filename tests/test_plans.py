@@ -148,10 +148,11 @@ def test_push_time_range_reaches_parquet_scan(spark):
     a filter over the normalized (projected) column can only be a
     DataFilter."""
     from nexus_processor_spark.operators import timeslice
-    from nexus_processor_spark.sources.tables import load_table
+    from nexus_processor_spark.sources.tables import _events
 
-    ev = load_table(spark, SF, "events", normalize_time=False)
-    pushed = timeslice.push_time_range(ev, 1704844800.0, 1705708800.0)
+    ev, us = _events(spark, SF)
+    pushed = timeslice.push_time_range(
+        ev, 1704844800.0, 1705708800.0, unit="us" if us else "ns")
     assert explain.has_pushed_filter(pushed, "GreaterThanOrEqual(ts")
     assert explain.has_pushed_filter(pushed, "LessThan(ts")
 
